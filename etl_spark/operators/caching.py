@@ -1,41 +1,85 @@
-"""Session-scoped keyed DataFrame cache — the ONE sanctioned way to
-hold a persisted frame across plan-builder calls.
+"""Session-scoped driver state — the ONE registry for anything a plan
+builder keeps across calls.
 
-A bare ``.persist()`` inside a registered builder leaks: every call
-stacks another copy in storage memory, and nothing ever unpersists it
-(a builder returns a lazy plan, so it cannot unpersist before the
-caller's action). The pattern that works — grown independently in the
-dedup posting-list index and the LSH band table, now extracted — is a
-module-level dict keyed on ``(applicationId, sf_dir)``:
+A single dict, ``name -> {(applicationId, key) -> (value, release)}``,
+behind one get-or-build path, holds three kinds of value:
 
-* ``applicationId`` is stable for the session's lifetime; keying on
-  ``id(spark)`` would let CPython hand a recycled id to a NEW session
-  and return a frame bound to a stopped one.
-* Reuse only while ``storageLevel.useMemory`` still holds — an
-  external ``spark.catalog.clearCache()`` (bench reps do this between
-  timings) silently unpersists, and a stale reuse would run every
-  consumer uncached while looking cached.
-* Persist + ``count()`` BEFORE handing the frame to multi-consumer
-  plans: Spark has no cross-plan ReusedExchange, so an unmaterialized
-  "cached" frame recomputes its whole upstream once per consumer.
+* **persisted frames** (``session_cached``): ``build()`` is persisted
+  and counted BEFORE it reaches multi-consumer plans — Spark has no
+  cross-plan ReusedExchange, so an unmaterialized "cached" frame
+  recomputes its whole upstream once per consumer. Reused only while
+  ``storageLevel.useMemory`` holds: an external
+  ``spark.catalog.clearCache()`` (bench reps do this) silently
+  unpersists, and a stale reuse would run every consumer uncached
+  while looking cached.
+* **checkpointed frames** (``session_checkpointed``): a DISK_ONLY
+  ``localCheckpoint`` — lineage truncated, survives ``clearCache()``.
+* **memos** (``session_memo``): plain-Python values (trained weights,
+  centroids, learned merges) and table directories. At most
+  ``MEMO_BOUND`` entries per name; the oldest is dropped first.
 
-``tests/test_registry_hygiene.py`` enforces the complement: every raw
-``.persist()`` call site outside this module must pair with an
-``unpersist()`` in the same function (the try/finally iterative-ML
-shape) — builders that need cross-call persistence come here.
+Keys carry ``applicationId``, stable for the session's lifetime;
+keying on ``id(spark)`` would let CPython hand a recycled id to a NEW
+session and return a value bound to a stopped one.
+
+One eviction rule: a value's ``release`` (unpersist, free the
+checkpoint blocks, remove the table directory) runs exactly when
+``evict`` removes its entry. An entry dropped by the memo bound is NOT
+released — a lazy frame handed out earlier may still read from it.
+
+``tests/test_registry_hygiene.py`` fences the complement: a raw
+``.persist()`` outside this module must pair with an ``unpersist()``
+in the same function, and no plans module may hold a module-level
+memo dict of its own.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Hashable
+from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-# cache name -> {(applicationId, sf_dir): persisted DataFrame}
-_CACHES: dict[str, dict[tuple[str, str], DataFrame]] = {}
+T = TypeVar("T")
 
-# cache name -> {(applicationId, sf_dir): localCheckpointed DataFrame}
-_CHECKPOINTS: dict[str, dict[tuple[str, str], DataFrame]] = {}
+#: Entries kept per memo name (one contract drive touches ~4 sf_dirs).
+MEMO_BOUND = 8
+
+# name -> {(applicationId, key): (value, release or None)}
+_REGISTRY: dict[str, dict[tuple, tuple[Any, Callable | None]]] = {}
+# every name session_memo has registered: evict_session_memos' scope
+_MEMOS: set[str] = set()
+
+
+def _unpersist(df: DataFrame) -> None:
+    df.unpersist()
+
+
+def _held(value: Any, release: Callable[[Any], None] | None) -> bool:
+    """False only for a persisted frame that something outside this
+    module (``clearCache()``) already unpersisted."""
+    return release is not _unpersist or value.storageLevel.useMemory
+
+
+def _get_or_build(
+    name: str,
+    spark: SparkSession,
+    key: Hashable,
+    build: Callable[[], T],
+    release: Callable[[T], None] | None,
+    bound: int | None = None,
+) -> T:
+    entries = _REGISTRY.setdefault(name, {})
+    k = (spark.sparkContext.applicationId, key)
+    hit = entries.get(k)
+    if hit is not None and _held(*hit):
+        return hit[0]
+    entries.pop(k, None)  # a stale (externally unpersisted) frame
+    value = build()
+    while bound is not None and len(entries) >= bound:
+        entries.pop(next(iter(entries)))  # dropped, NOT released
+    entries[k] = (value, release)
+    return value
 
 
 def session_cached(
@@ -55,16 +99,13 @@ def session_cached(
     corpus-swap pattern) must evict between corpora; keying on a data
     fingerprint was considered and rejected — listing files per call
     would put a driver-side FS scan on every cached hit."""
-    cache = _CACHES.setdefault(name, {})
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = cache.get(key)
-    if cached is not None and cached.storageLevel.useMemory:
-        return cached
-    cache.pop(key, None)  # evict stale/unpersisted entries
-    df = build().persist()
-    df.count()  # materialize before multi-consumer reuse
-    cache[key] = df
-    return df
+
+    def persisted() -> DataFrame:
+        df = build().persist()
+        df.count()  # materialize before multi-consumer reuse
+        return df
+
+    return _get_or_build(name, spark, sf_dir, persisted, _unpersist)
 
 
 def session_checkpointed(
@@ -91,24 +132,35 @@ def session_checkpointed(
       the consumer query, not an artifact rebuild — the same contract
       a written table would give.
 
-    DISK_ONLY so the pinned blocks cost no executor storage memory.
-    ``evict`` releases the blocks EAGERLY (it unpersists the
-    checkpointed RDD itself, then drops the reference) — relying on
-    the ContextCleaner alone would leave the disk blocks pinned until
-    a driver GC happens to collect the frame, which in a long session
-    can be arbitrarily late."""
+    DISK_ONLY so the pinned blocks cost no executor storage memory;
+    ``evict`` frees them eagerly via ``_release_checkpoint``."""
     from pyspark import StorageLevel
 
-    cache = _CHECKPOINTS.setdefault(name, {})
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    df = build().localCheckpoint(
-        eager=True, storageLevel=StorageLevel.DISK_ONLY
+    return _get_or_build(
+        name, spark, sf_dir,
+        lambda: build().localCheckpoint(
+            eager=True, storageLevel=StorageLevel.DISK_ONLY
+        ),
+        _release_checkpoint,
     )
-    cache[key] = df
-    return df
+
+
+def session_memo(
+    name: str,
+    spark: SparkSession,
+    key: Hashable,
+    build: Callable[[], T],
+    release: Callable[[T], None] | None = None,
+) -> T:
+    """Return the memoized ``build()`` for (``name``, session, ``key``)
+    — a plain-Python value (trained weights, centroids, merges) or a
+    table directory. ``release`` runs when ``evict`` removes the entry
+    (e.g. removing the directory), never when the ``MEMO_BOUND`` FIFO
+    drops it. Memos survive ``clearCache()``; bench harnesses clear
+    them with ``evict_session_memos()`` so every rep pays its own
+    training."""
+    _MEMOS.add(name)
+    return _get_or_build(name, spark, key, build, release, MEMO_BOUND)
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -128,72 +180,46 @@ def _release_checkpoint(df: DataFrame) -> None:
 
 
 def evict(name: str | None = None) -> None:
-    """Unpersist and drop cached entries — for ``name`` only, or every
-    cache when ``name`` is None. Test fixtures and fuzz harnesses that
-    swap the underlying corpus call this so a stale index bound to the
-    previous fixture can't be reused.
+    """Remove and release every entry — for ``name`` only, or every
+    registered name when ``name`` is None. Test fixtures and fuzz
+    harnesses that swap the underlying corpus call this so a stale
+    index bound to the previous fixture can't be reused.
 
     A non-None ``name`` that was never registered raises ``KeyError``:
-    a caller passing a name always intends a registered cache, and a
+    a caller passing a name always intends a registered entry, and a
     silent no-op on a typo would leave the exact stale-index hazard
     this module exists to prevent while appearing to have evicted it.
     """
-    if name is not None and name not in _CACHES and name not in _CHECKPOINTS:
+    if name is not None and name not in _REGISTRY:
         raise KeyError(
             f"evict({name!r}): no such cache; registered = "
-            f"{sorted(_CACHES) + sorted(_CHECKPOINTS)}"
+            f"{sorted(_REGISTRY)}"
         )
-    caches = (
-        [_CACHES[name]] if name in _CACHES else []
-    ) if name is not None else list(_CACHES.values())
-    for cache in caches:
-        for df in cache.values():
-            df.unpersist()
-        cache.clear()
-    ckpts = (
-        [_CHECKPOINTS[name]] if name is not None and name in _CHECKPOINTS
-        else [] if name is not None else list(_CHECKPOINTS.values())
-    )
-    for cache in ckpts:
-        for df in cache.values():
-            _release_checkpoint(df)
-        cache.clear()
+    for entries in _REGISTRY.values() if name is None else [_REGISTRY[name]]:
+        while entries:
+            value, release = entries.popitem()[1]
+            if release is not None:
+                release(value)
 
 
 def evict_session_memos() -> None:
-    """Clear the driver-side Python memos that survive
-    ``spark.catalog.clearCache()`` — trained-model/centroid/vtable
-    state keyed per session (r11, verdict item: min-of-N bench reps of
-    the IVF/logreg/BPE/lakehouse families otherwise time rep 1 with
-    training and reps 2+ without it, so per-query warm numbers
-    silently exclude training). Bench harnesses call this wherever
-    they call ``clearCache()``; cross-QUERY sharing within one rep —
-    the legitimate optimization — is untouched because the memo
-    repopulates on first use inside the rep.
-
-    Lazy imports: plans modules import this module at import time.
-    ``io._ROW_COUNTS`` (one int per table: the partition-count
-    heuristic) is deliberately NOT cleared — it is sizing metadata,
-    not a computed result."""
-    from etl_spark.plans import bpe, lakehouse, ml, ml_train
-
-    ml._TRAINED_CENTS.clear()
-    ml_train._TRAIN_CACHE.clear()
-    bpe._LEARN_CACHE.clear()
-    lakehouse._VTABLE_CACHE.clear()
-    lakehouse._DVTABLE_CACHE.clear()
+    """Evict every name registered through ``session_memo`` — the
+    driver-side state that survives ``spark.catalog.clearCache()`` —
+    and leave cached and checkpointed frames in place. Bench harnesses
+    call this wherever they call ``clearCache()``, so min-of-N reps do
+    not time rep 1 with training and reps 2+ without it; cross-query
+    sharing within one rep is untouched because the memo repopulates
+    on first use inside the rep."""
+    for name in _MEMOS:
+        evict(name)
 
 
 def live_caches() -> dict[str, int]:
-    """Cache name -> number of still-held entries (test hook).
-    Persisted caches count entries that still hold storage memory;
-    checkpoint caches count held references — their DISK_ONLY blocks
-    are live exactly while the entry exists, because ``evict`` now
-    unpersists the checkpointed RDD eagerly on removal."""
-    out = {
-        name: sum(1 for df in entries.values() if df.storageLevel.useMemory)
-        for name, entries in _CACHES.items()
+    """Registered name -> number of entries still held (test and
+    bench hook). A persisted frame counts only while it still holds
+    storage memory; checkpoints and memos count while their entry
+    exists, which is exactly while their release has not run."""
+    return {
+        name: sum(1 for entry in entries.values() if _held(*entry))
+        for name, entries in _REGISTRY.items()
     }
-    for name, entries in _CHECKPOINTS.items():
-        out[name] = out.get(name, 0) + len(entries)
-    return out

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_spark.io import load
+from etl_spark.operators.caching import session_cached, session_memo
 from etl_spark.plans.llm_text import BPE_ISH_PATTERN
 from etl_spark.plans.registry import register
 
@@ -202,18 +203,20 @@ def _apply_merge(sym: DataFrame, a: str, b: str) -> DataFrame:
     return merged
 
 
-#: Memoized learned merges per (appId, sf_dir): the fertility query
-#: reuses the learn query's result instead of re-running the loop.
-#: Stores only PLAIN PYTHON rows (merge list + vocab-sized per-word
-#: subword counts), never DataFrames — caching the final checkpointed
-#: frame would pin its RDD blocks (and transitively every
-#: intermediate checkpoint it references) for the life of the
-#: session. Both cached values are vocab-bounded (Heaps' law), so the
-#: per-(appId, sf_dir) entry is a few hundred KB, not a block pin.
-_LEARN_CACHE: dict = {}
-
-
 def _learn(spark: SparkSession, sf_dir: str):
+    """``_run_merges`` memoized per (session, sf_dir): the fertility
+    query reuses the learn query's result instead of re-running the
+    loop. The memo holds only PLAIN PYTHON rows, never DataFrames —
+    caching the final checkpointed frame would pin its RDD blocks (and
+    transitively every intermediate checkpoint it references) for the
+    life of the session. Both values are vocab-bounded (Heaps' law):
+    a few hundred KB per entry, not a block pin."""
+    return session_memo(
+        "bpe_merges", spark, sf_dir, lambda: _run_merges(spark, sf_dir)
+    )
+
+
+def _run_merges(spark: SparkSession, sf_dir: str):
     """Run BPE_MERGES merge iterations; returns (merge list
     [(rank, a, b, total)], seg rows [(w, n_sub)] — the final
     segmentation's per-word subword counts). The corpus is scanned
@@ -222,9 +225,6 @@ def _learn(spark: SparkSession, sf_dir: str):
     traffic is the 1-row winning pair (config-bounded). Intermediate
     checkpoints are released by the ContextCleaner as soon as the
     loop rebinds ``sym`` — nothing outlives this call."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _LEARN_CACHE:
-        return _LEARN_CACHE[key]
     sym = _sym0(_word_types(spark, sf_dir)).localCheckpoint(eager=True)
     merges = []
     for k in range(1, BPE_MERGES + 1):
@@ -243,10 +243,7 @@ def _learn(spark: SparkSession, sf_dir: str):
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_sub"))
         .collect()  # vocab-bounded by construction
     ]
-    while len(_LEARN_CACHE) >= 8:  # FIFO bound: one contract drive
-        _LEARN_CACHE.pop(next(iter(_LEARN_CACHE)))  # touches ~4 sf_dirs
-    _LEARN_CACHE[key] = (merges, seg_rows)
-    return _LEARN_CACHE[key]
+    return merges, seg_rows
 
 
 @register(
@@ -335,8 +332,6 @@ def _fertility_oracle_sql() -> str:
     tags=("text", "llm", "tokenizer", "bpe"),
 )
 def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_spark.operators.caching import session_cached
-
     _merges, seg_rows = _learn(spark, sf_dir)
     # vocab-sized frame rebuilt from the cached plain rows; persisted
     # via the sanctioned registry so repeated runs skip the driver->

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from etl_spark.etl.merge import latest_wins_merge
 from etl_spark.io import load
+from etl_spark.operators.caching import session_memo
 from etl_spark.plans.registry import register
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -709,9 +710,6 @@ def pipeline_incremental_refresh(
 
 #: Number of commits the bridge builds: v0 = init, then two merges.
 VT_VERSIONS = 3
-#: One immutable versioned table per (session, sf_dir); FIFO-bounded
-#: like the other session memos.
-_VTABLE_CACHE: dict = {}
 
 
 def _vt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -733,6 +731,34 @@ def _vt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _memo_table(spark: SparkSession, sf_dir: str, flavor: str, fill):
+    """The versioned table ``fill(table)`` commits, built once per
+    (session, sf_dir) as the ``lakehouse_<flavor>table`` memo. Each
+    build gets a FRESH unique /tmp directory (never an rmtree'd prior
+    one): after the memo bound drops an entry, or under xdist workers
+    sharing a session, a previously returned LAZY frame may still read
+    the old build's files. Only an explicit ``evict`` removes the
+    directory; a dropped entry's is /tmp debris."""
+    import hashlib
+    import pathlib
+    import shutil
+    import tempfile
+
+    def build() -> pathlib.Path:
+        app = spark.sparkContext.applicationId
+        tag = hashlib.md5(f"{flavor}|{app}|{sf_dir}".encode()).hexdigest()
+        table = pathlib.Path(
+            tempfile.mkdtemp(prefix=f"etl_spark_{flavor}table_{tag[:12]}_")
+        )
+        fill(table)
+        return table
+
+    return session_memo(
+        f"lakehouse_{flavor}table", spark, sf_dir, build,
+        release=shutil.rmtree,
+    )
+
+
 def _built_vtable(spark: SparkSession, sf_dir: str):
     """Build (once per session+sf_dir) a real manifest-committed
     versioned table under /tmp from three deterministic event batches
@@ -740,39 +766,20 @@ def _built_vtable(spark: SparkSession, sf_dir: str):
     its path. Bounded materialization in the registry's sanctioned
     sense: the artifact IS the subject of the query (time travel needs
     committed files), and each commit writes only touched buckets."""
-    import hashlib
-    import pathlib
-    import tempfile
-
     from etl_spark.etl.versioned import (
         init_versioned_table,
         merge_versioned_table,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _VTABLE_CACHE:
-        return _VTABLE_CACHE[key]
-    # A FRESH unique directory per build (never rmtree a prior one):
-    # after FIFO eviction or under xdist workers sharing a session, a
-    # previously returned LAZY frame may still reference the old
-    # build's files mid-read — deleting them would fail its jobs.
-    # Leftovers are crash/eviction debris in /tmp, bounded by the
-    # FIFO cap and reclaimed by tmp cleanup, never by a live reader's
-    # files vanishing. (ADVICE r9, lakehouse.py _built_vtable.)
-    tag = hashlib.md5("|".join(key).encode()).hexdigest()[:12]
-    table = pathlib.Path(
-        tempfile.mkdtemp(prefix=f"etl_spark_vtable_{tag}_")
-    )
-    recs = _vt_records(spark, sf_dir)
-    init_versioned_table(recs.filter(F.col("event_id") % 3 == 0), table)
-    for k in range(1, VT_VERSIONS):
-        merge_versioned_table(
-            spark, table, recs.filter(F.col("event_id") % 3 == k)
-        )
-    while len(_VTABLE_CACHE) >= 8:
-        _VTABLE_CACHE.pop(next(iter(_VTABLE_CACHE)))
-    _VTABLE_CACHE[key] = table
-    return table
+    def fill(table) -> None:
+        recs = _vt_records(spark, sf_dir)
+        init_versioned_table(recs.filter(F.col("event_id") % 3 == 0), table)
+        for k in range(1, VT_VERSIONS):
+            merge_versioned_table(
+                spark, table, recs.filter(F.col("event_id") % 3 == k)
+            )
+
+    return _memo_table(spark, sf_dir, "v", fill)
 
 
 def _vt_checksum_oracle_sql() -> str:
@@ -878,21 +885,15 @@ def lakehouse_time_travel_checksums(
 # compaction, every commit's served view hash-checked.
 # --------------------------------------------------------------------------
 
-_DVTABLE_CACHE: dict = {}
-
-
-def _built_dv_table(spark: SparkSession, sf_dir: str):
-    """Build (once per session+sf_dir) a versioned table exercising
-    the FULL merge-on-read lifecycle: v0 init (batch0), v1 merge
-    (batch1), v2 equality-DELETE of every served 'error'-typed row
-    (O(matched keys): pointers verbatim + one delete file), v3 merge
-    (batch2 — keys whose batch2 row is NEWER than their delete bound
-    resurrect, the Iceberg sequence rule; the rest stay deleted), v4
+def _built_delete_lifecycle(
+    spark: SparkSession, sf_dir: str, flavor: str, bound: str
+):
+    """The five-commit merge-on-read lifecycle under the delete
+    ``bound`` (etl/versioned.py): v0 init (batch0), v1 merge (batch1),
+    v2 equality-DELETE of every served 'error'-typed row (O(matched
+    keys): pointers verbatim + one delete file), v3 merge (batch2 —
+    which deleted keys resurrect is what ``bound`` decides), v4
     compaction (delete files folded away, content-identical)."""
-    import hashlib
-    import pathlib
-    import tempfile
-
     from etl_spark.etl.versioned import (
         compact_versioned_deletes,
         delete_from_versioned_table,
@@ -900,29 +901,28 @@ def _built_dv_table(spark: SparkSession, sf_dir: str):
         merge_versioned_table,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DVTABLE_CACHE:
-        return _DVTABLE_CACHE[key]
-    # fresh unique dir per build — same live-reader rationale as
-    # _built_vtable above (ADVICE r9)
-    tag = hashlib.md5(("dv|" + "|".join(key)).encode()).hexdigest()[:12]
-    table = pathlib.Path(
-        tempfile.mkdtemp(prefix=f"etl_spark_dvtable_{tag}_")
-    )
-    recs = _vt_records(spark, sf_dir)
-    init_versioned_table(recs.filter(F.col("event_id") % 3 == 0), table)
-    merge_versioned_table(
-        spark, table, recs.filter(F.col("event_id") % 3 == 1)
-    )
-    delete_from_versioned_table(spark, table, "repo_dir = 'error'")
-    merge_versioned_table(
-        spark, table, recs.filter(F.col("event_id") % 3 == 2)
-    )
-    compact_versioned_deletes(spark, table)
-    while len(_DVTABLE_CACHE) >= 8:
-        _DVTABLE_CACHE.pop(next(iter(_DVTABLE_CACHE)))
-    _DVTABLE_CACHE[key] = table
-    return table
+    def fill(table) -> None:
+        recs = _vt_records(spark, sf_dir)
+        init_versioned_table(recs.filter(F.col("event_id") % 3 == 0), table)
+        merge_versioned_table(
+            spark, table, recs.filter(F.col("event_id") % 3 == 1)
+        )
+        delete_from_versioned_table(
+            spark, table, "repo_dir = 'error'", bound=bound
+        )
+        merge_versioned_table(
+            spark, table, recs.filter(F.col("event_id") % 3 == 2)
+        )
+        compact_versioned_deletes(spark, table)
+
+    return _memo_table(spark, sf_dir, flavor, fill)
+
+
+def _built_dv_table(spark: SparkSession, sf_dir: str):
+    """The lifecycle under the extract_ts bound: at v3, keys whose
+    batch2 row is NEWER than their delete bound resurrect (the Iceberg
+    sequence rule); the rest stay deleted."""
+    return _built_delete_lifecycle(spark, sf_dir, "dv", "extract_ts")
 
 
 def _dv_checksum_oracle_sql() -> str:
@@ -1071,50 +1071,12 @@ def lakehouse_equality_delete_checksums(
 # re-insert resurrects, extract_ts order notwithstanding.
 # --------------------------------------------------------------------------
 
-_SEQTABLE_CACHE: dict = {}
-
-
 def _built_seq_table(spark: SparkSession, sf_dir: str):
-    """Like ``_built_dv_table`` but the DELETE uses ``bound="commit"``
-    (etl/versioned.py): v0 init (batch0), v1 merge (batch1), v2
-    commit-bound equality delete of every served 'error' row, v3
-    merge (batch2 — EVERY re-delivered deleted key resurrects, even
-    with an extract_ts older than its deleted row's; keys batch2 does
-    not re-deliver stay deleted), v4 compaction."""
-    import hashlib
-    import pathlib
-    import tempfile
-
-    from etl_spark.etl.versioned import (
-        compact_versioned_deletes,
-        delete_from_versioned_table,
-        init_versioned_table,
-        merge_versioned_table,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEQTABLE_CACHE:
-        return _SEQTABLE_CACHE[key]
-    tag = hashlib.md5(("seq|" + "|".join(key)).encode()).hexdigest()[:12]
-    table = pathlib.Path(
-        tempfile.mkdtemp(prefix=f"etl_spark_seqtable_{tag}_")
-    )
-    recs = _vt_records(spark, sf_dir)
-    init_versioned_table(recs.filter(F.col("event_id") % 3 == 0), table)
-    merge_versioned_table(
-        spark, table, recs.filter(F.col("event_id") % 3 == 1)
-    )
-    delete_from_versioned_table(
-        spark, table, "repo_dir = 'error'", bound="commit"
-    )
-    merge_versioned_table(
-        spark, table, recs.filter(F.col("event_id") % 3 == 2)
-    )
-    compact_versioned_deletes(spark, table)
-    while len(_SEQTABLE_CACHE) >= 8:
-        _SEQTABLE_CACHE.pop(next(iter(_SEQTABLE_CACHE)))
-    _SEQTABLE_CACHE[key] = table
-    return table
+    """Like ``_built_dv_table`` but the DELETE uses ``bound="commit"``:
+    at v3 EVERY re-delivered deleted key resurrects, even with an
+    extract_ts older than its deleted row's; keys batch2 does not
+    re-deliver stay deleted."""
+    return _built_delete_lifecycle(spark, sf_dir, "seq", "commit")
 
 
 def _seq_checksum_oracle_sql() -> str:

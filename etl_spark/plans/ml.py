@@ -52,7 +52,7 @@ from etl_spark.plans.llm_similarity import (
     dot,
     quantize,
 )
-from etl_spark.operators.caching import session_cached
+from etl_spark.operators.caching import session_cached, session_memo
 from etl_spark.plans.registry import register
 
 K_CLUSTERS = 8
@@ -573,32 +573,24 @@ N_PROBE = 2
 # prove the result is block-size-invariant.
 PAIR_BLOCK_ROWS = 1024
 
-#: Session memo of the one-step-trained coarse quantizer's centroids
-#: (k × dim lattice ints — config-sized driver state, same class as
-#: lakehouse._VTABLE_CACHE). Three registered queries train the
-#: IDENTICAL quantizer (first-K seeds over _quantized, deterministic
-#: collect order), so before r10 each one re-ran the seed collect +
-#: assignment scan + k×dim update (≈2 corpus passes apiece).
-_TRAINED_CENTS: dict = {}
-
-
 def trained_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The session's first-K one-Lloyd-step coarse quantizer (memoized
     per (session, sf_dir); always recomputed from parquet in a fresh
-    process)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cents = _TRAINED_CENTS.get(key)
-    if cents is None:
+    process). Three registered queries train this IDENTICAL quantizer
+    (first-K seeds over _quantized, deterministic collect order), so
+    the memo spares each of them the seed collect + assignment scan +
+    k×dim update (≈2 corpus passes apiece)."""
+
+    def build() -> list[list[float]]:
         emb = _quantized(spark, sf_dir)
         # Two bounded passes share the scan (seed collect + update).
         emb.persist()
         try:
-            cents = _one_step_centroids(emb)
+            return _one_step_centroids(emb)
         finally:
             emb.unpersist()
-        while len(_TRAINED_CENTS) >= 8:
-            _TRAINED_CENTS.pop(next(iter(_TRAINED_CENTS)))
-        _TRAINED_CENTS[key] = cents
+
+    cents = session_memo("ivf_centroids", spark, sf_dir, build)
     return [list(c) for c in cents]
 
 

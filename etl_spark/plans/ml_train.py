@@ -66,6 +66,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark.io import load
+from etl_spark.operators.caching import (
+    session_cached,
+    session_checkpointed,
+    session_memo,
+)
 from etl_spark.plans.llm_dedup import (
     _H60_SQL,
     PREFIX_JACCARD_T,
@@ -241,11 +246,6 @@ def _train_oracle_sql(
     """
 
 
-#: Memoized trained model per (appId, sf_dir): the lift query reuses
-#: the train query's weights instead of re-running the gradient jobs.
-_TRAIN_CACHE: dict = {}
-
-
 def _bucket(t):
     return (
         F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("bigint")
@@ -265,7 +265,6 @@ def dup_label_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-filter join tree used to be (PLANS.md Exchange receipt),
     and the artifact survives clearCache between bench reps exactly
     like a written table would."""
-    from etl_spark.operators.caching import session_checkpointed
     from etl_spark.plans.llm_dedup import dedup_prefix_filter_pairs
 
     def build() -> DataFrame:
@@ -290,7 +289,6 @@ def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, dl, y, buckets) — hashed once, label read from the
     materialized label artifact (dup_label_frame), persisted via the
     sanctioned session cache (training rescans it 2T+1 times)."""
-    from etl_spark.operators.caching import session_cached
 
     def build() -> DataFrame:
         dup_docs = dup_label_frame(spark, sf_dir)
@@ -345,16 +343,24 @@ def _train(
     and per-iteration rates (see _logreg_ctes)."""
     # feats is fetched OUTSIDE the memo so a bench-rep clearCache()
     # re-persists it via session_cached; only the (deterministic)
-    # weight history and count are memoized.
+    # weight history and count are memoized — the lift query reuses
+    # the train query's weights instead of re-running the gradient jobs.
     feats = _features(spark, sf_dir)
     grad_src = feats.filter("tr") if train_only else feats
-    key = (
-        spark.sparkContext.applicationId, sf_dir, train_only,
-        l2_shift, lr_schedule,
+    hist, n = session_memo(
+        "logreg_weights", spark, (sf_dir, train_only, l2_shift, lr_schedule),
+        lambda: _descend(grad_src, l2_shift, lr_schedule),
     )
-    if key in _TRAIN_CACHE:
-        hist, n = _TRAIN_CACHE[key]
-        return hist, feats, n
+    return hist, feats, n
+
+
+def _descend(
+    grad_src: DataFrame,
+    l2_shift: int | None,
+    lr_schedule: tuple[int, ...] | None,
+):
+    """The LOGREG_ITERS batch-gradient steps over ``grad_src``; returns
+    (weights history [w_0..w_T], n)."""
     lrs = lr_schedule or (LOGREG_LR,) * LOGREG_ITERS
     n = grad_src.count()  # 1 scalar (frame itself already materialized)
     w = [0] * HASH_DIM
@@ -384,10 +390,7 @@ def _train(
                 if prev[j]:
                     w[j] -= math.floor(prev[j] / float(2 ** l2_shift))
         hist.append(list(w))
-    while len(_TRAIN_CACHE) >= 8:  # FIFO bound (plain lists, but keep
-        _TRAIN_CACHE.pop(next(iter(_TRAIN_CACHE)))  # it bounded anyway)
-    _TRAIN_CACHE[key] = (hist, n)
-    return hist, feats, n
+    return hist, n
 
 
 @register(

@@ -346,14 +346,17 @@ def test_vtable_rebuild_never_deletes_a_live_readers_files(spark):
     gets a fresh unique directory: evict, rebuild, then collect the
     OLD frame — it must still read its own files."""
     from etl_spark.etl.versioned import read_versioned_table
-    from etl_spark.plans.lakehouse import _VTABLE_CACHE, _built_vtable
+    from etl_spark.operators.caching import _REGISTRY
+    from etl_spark.plans.lakehouse import _built_vtable
     from tests.conftest import SF_DIR
 
     t1 = _built_vtable(spark, SF_DIR)
     old_frame = read_versioned_table(spark, t1)  # lazy, files on disk
     n_before = old_frame.count()
 
-    _VTABLE_CACHE.clear()  # simulate FIFO eviction / xdist churn
+    # simulate the memo bound dropping the entry (which never runs its
+    # release) / xdist churn
+    _REGISTRY["lakehouse_vtable"].clear()
     t2 = _built_vtable(spark, SF_DIR)
     assert t2 != t1, "rebuild must land in a fresh directory"
 

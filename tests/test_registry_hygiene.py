@@ -158,22 +158,94 @@ def test_session_cache_evict_unknown_name_raises(spark):
     evict()  # idempotent on empty caches
 
 
-def test_evict_session_memos_clears_trained_state():
-    # r11 verdict item 4: the driver-side Python memos (trained
-    # models, centroids, vtables) survive spark.catalog.clearCache(),
-    # so bench harnesses must have a hook that evicts them between
-    # reps — otherwise warm reps silently exclude training.
-    from etl_spark.operators.caching import evict_session_memos
-    from etl_spark.plans import bpe, lakehouse, ml, ml_train
+def test_plans_hold_no_module_level_memo_dicts():
+    """Driver-side session state lives in ONE registry
+    (``operators.caching``: ``session_memo`` for plain values and
+    table directories), where eviction reaches it by construction. A
+    module-level ``{}`` / ``dict()`` in a plans module is the shape
+    every hand-rolled memo took — and the shape a hand-written
+    eviction list eventually misses."""
+    import ast
+    from pathlib import Path
 
-    ml._TRAINED_CENTS["probe"] = [[1]]
-    ml_train._TRAIN_CACHE["probe"] = ([(0, 0.0)], 1)
-    bpe._LEARN_CACHE["probe"] = ([], [])
-    lakehouse._VTABLE_CACHE["probe"] = object()
-    lakehouse._DVTABLE_CACHE["probe"] = object()
-    evict_session_memos()
-    assert not ml._TRAINED_CENTS
-    assert not ml_train._TRAIN_CACHE
-    assert not bpe._LEARN_CACHE
-    assert not lakehouse._VTABLE_CACHE
-    assert not lakehouse._DVTABLE_CACHE
+    # the query table itself: filled at import time, not session state
+    allowed = {("registry.py", "REGISTRY")}
+    plans = Path(__file__).resolve().parent.parent / "etl_spark" / "plans"
+    offenders = []
+    for path in sorted(plans.glob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign):
+                targets, value = [node.target], node.value
+            else:
+                continue
+            empty_dict = (isinstance(value, ast.Dict) and not value.keys) or (
+                isinstance(value, ast.Call)
+                and isinstance(value.func, ast.Name)
+                and value.func.id == "dict"
+                and not value.args
+                and not value.keywords
+            )
+            for name in map(ast.unparse, targets):
+                if empty_dict and (path.name, name) not in allowed:
+                    offenders.append(f"plans/{path.name}:{node.lineno} {name}")
+    assert not offenders, (
+        "module-level dict in a plans module — hold session state via "
+        "operators.caching.session_memo:\n" + "\n".join(offenders)
+    )
+
+
+def test_evict_session_memos_clears_trained_state(spark):
+    # Driver-side memos (trained weights, centroids, learned merges,
+    # versioned tables) survive spark.catalog.clearCache(), so bench
+    # harnesses evict them between reps — otherwise warm reps silently
+    # exclude training. Eviction covers every name session_memo has
+    # registered, so there is no list for a new memo to be missing from.
+    from etl_spark.operators import caching
+
+    released = []
+    value = caching.session_memo(
+        "hygiene_memo", spark, "k", lambda: [1], release=released.append
+    )
+    assert caching.session_memo(
+        "hygiene_memo", spark, "k", lambda: [2]
+    ) is value  # a hit never rebuilds
+    caching.session_memo("hygiene_memo2", spark, ("k", 2), lambda: {})
+    memos = set(caching._MEMOS)
+    assert {"hygiene_memo", "hygiene_memo2"} <= memos
+    assert caching.live_caches()["hygiene_memo"] == 1
+
+    caching.evict_session_memos()
+    live = caching.live_caches()
+    assert {name: live[name] for name in memos} == dict.fromkeys(memos, 0)
+    assert released == [[1]]
+
+
+def test_memo_bound_drops_oldest_without_release(spark):
+    # The FIFO bound must never run a release: a lazy frame handed out
+    # earlier may still read a dropped versioned table's files. Only
+    # evict() releases.
+    from etl_spark.operators.caching import (
+        MEMO_BOUND,
+        evict,
+        live_caches,
+        session_memo,
+    )
+
+    released = []
+    for k in range(MEMO_BOUND + 2):
+        session_memo(
+            "hygiene_fifo", spark, k, lambda k=k: k, release=released.append
+        )
+    assert live_caches()["hygiene_fifo"] == MEMO_BOUND
+    assert released == []
+    rebuilt = []
+    session_memo(
+        "hygiene_fifo", spark, 0, lambda: rebuilt.append(0) or 0,
+        release=released.append,
+    )
+    assert rebuilt == [0], "the oldest key was dropped, so it rebuilds"
+    evict("hygiene_fifo")
+    assert sorted(released) == [0] + list(range(3, MEMO_BOUND + 2))
+    assert live_caches()["hygiene_fifo"] == 0

@@ -219,10 +219,11 @@ def test_time_travel_checksums_survive_vacuum(spark):
     with pytest.raises(Exception):
         read_versioned_table(spark, table, version=0).collect()
     # rebuild for any later consumer in this session: the cached table
-    # is now vacuumed; drop the memo so the next build starts fresh
-    from etl_spark.plans.lakehouse import _VTABLE_CACHE
+    # is now vacuumed; evict the memo so the next build starts fresh
+    from etl_spark.operators.caching import evict
 
-    _VTABLE_CACHE.clear()
+    evict("lakehouse_vtable")
+    assert not table.exists(), "evict must remove the table directory"
 
 
 def test_equality_delete_merge_on_read(spark, tmp_path):
@@ -648,3 +649,10 @@ def test_commit_seq_lifecycle_differs_from_ts_flavor_nonvacuously(spark):
         "commit-bound resurrection must strictly exceed ts-bound "
         f"(ts={len(back_ts)}, seq={len(back_seq)})"
     )
+    # eviction releases the tables: every memo is reached, so both
+    # lifecycle directories are removed
+    from etl_spark.operators.caching import evict_session_memos
+
+    evict_session_memos()
+    assert not seq_table.exists()
+    assert not ts_table.exists()

@@ -15,6 +15,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
+from etl_spark.operators.caching import evict, evict_session_memos  # noqa: E402
 from etl_spark.plans import REGISTRY  # noqa: E402
 from etl_spark.session import get_spark, tune_session  # noqa: E402
 
@@ -58,13 +59,22 @@ MANUAL_TAIL_MARKER = "## Another decade up"
 REPS = 3
 
 
+def _evict(spark) -> None:
+    """Cold caches for every rep: the catalog cache, the session
+    registry, and the memos (trained models, centroids, tables) that
+    survive clearCache — the same eviction as perfbench/run.py."""
+    spark.catalog.clearCache()
+    evict()
+    evict_session_memos()
+
+
 def main() -> None:
     spark = tune_session(get_spark("scaling-probe"))
     spark.sparkContext.setLogLevel("ERROR")
     # JIT warm-up on the smallest sf so sf0.001 isn't charged for it.
     for name, _ in PROBES:
         REGISTRY[name].builder(spark, SFS[0][1]).count()
-    spark.catalog.clearCache()
+    _evict(spark)
 
     results: dict[str, list[float]] = {}
     for name, _ in PROBES:
@@ -72,7 +82,7 @@ def main() -> None:
         for _, sf_dir in SFS:
             best = None
             for _ in range(REPS):
-                spark.catalog.clearCache()
+                _evict(spark)
                 t0 = time.perf_counter()
                 REGISTRY[name].builder(spark, sf_dir).count()
                 el = time.perf_counter() - t0
