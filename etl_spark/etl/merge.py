@@ -24,7 +24,10 @@ same touched-files-only cost shape: the table is partitioned by
      overwrite).
 
 Per-merge cost is O(|batch| + |touched buckets|), never O(|table|) —
-the plain-parquet twin of Delta/Iceberg MERGE file skipping. At 100 TB
+the plain-parquet twin of Delta/Iceberg MERGE file skipping. The batch
+side holds to it too: ``load_extraction`` lists and reads only the new
+``<ts>``'s run files (plus one stat per repo directory to resolve the
+``<zone>/*/<ts>`` glob), never the earlier extractions. At 100 TB
 you raise N_MERGE_BUCKETS so a bucket is a few files; the batch
 usually touches a small subset and the rest of the table is neither
 read nor written (fenced by the untouched-bucket-mtime test).
@@ -32,17 +35,12 @@ read nor written (fenced by the untouched-bucket-mtime test).
 
 from __future__ import annotations
 
-import glob
 import pathlib
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_spark.etl.pipeline import (
-    load_workflow_runs,
-    snapshot_latest,
-    to_records,
-)
+from etl_spark.etl.pipeline import _read_runs, snapshot_latest, to_records
 
 # Bucket count for the materialized snapshot table. Small here so the
 # tests exercise multi-bucket layouts; at scale this is sized so one
@@ -96,17 +94,10 @@ def load_extraction(
     spark: SparkSession, workflows_dir: pathlib.Path, extract_ts: str
 ) -> DataFrame:
     """Record rows of ONE ``<ts>`` extraction across all repos — the
-    merge's batch side. The glob targets the ts directory, so only the
-    new partition's files are even LISTED (file-level pruning; the
-    full-zone scan in load_workflow_runs never runs)."""
-    runs = load_workflow_runs(spark, workflows_dir)
-    if not glob.glob(str(workflows_dir / "*" / extract_ts / "runs" / "*.json")):
-        return to_records(runs).filter(F.lit(False))
-    # Reuse the shared reader for schema + path-column parity, then
-    # prune: with one <ts> the filter is on a path-derived column, so
-    # pushdown happens at planning (input_file_name regexp), and the
-    # extraction is small by definition — the batch side of the merge.
-    return to_records(runs.filter(F.col("extract_ts") == extract_ts))
+    merge's batch side. The shared reader's roots are that ``<ts>``'s
+    ``runs`` directories, so Spark lists and reads only the new
+    extraction's files; earlier extractions are never opened."""
+    return to_records(_read_runs(spark, workflows_dir, extract_ts))
 
 
 def _bucketed(records: DataFrame) -> DataFrame:

@@ -4,8 +4,8 @@ The reference computes its derived view with a newest-first directory
 walk and a seen-set (main.py:144-176); here the same semantics are a
 DataFrame plan over the whole raw zone:
 
-    read all <root>/*/<ts>/runs/*.json (S12/S13: one multi-path scan,
-        partitions recovered from file paths)
+    read every <root>/*/<ts>/runs directory (S12/S13: one multi-root
+        scan of the *.json files, partitions recovered from file paths)
     → latest-snapshot-wins window dedup per (repo, run file) (S14)
     → 9-column flatten with nested repository.name (S15/S16)
     → deterministic total order (repo asc, ts desc, filename desc)
@@ -24,9 +24,14 @@ Fidelity fine print honored (SURVEY.md §2.4):
   the reference crashes (StopIteration in write_csv, main.py:21);
   this engine writes a header-only CSV.
 
-Scale: the window dedup shuffles once on (repo, file_id) — exactly
-the key the data is already laid out by; at 100 TB the raw zone
-would be `repo=*/extract_ts=*` hive partitions and the scan would
+Scale: the scan's roots are the `runs` DIRECTORIES, not the files in
+them. Spark lists its roots every time it builds a frame, in a Spark
+job with one task per root once there are more than 32; with one root
+per run file that job ran on every build, one task per file. One root
+per (repo, <ts>) keeps the listing on the driver; _read_runs says
+where that stops. The window dedup shuffles once on (repo, file_id) —
+exactly the key the data is already laid out by; at 100 TB the raw
+zone would be `repo=*/extract_ts=*` hive partitions and the scan would
 prune on both. The coalesce(1) is export-only (a CSV handed to a
 human); the deduped snapshot itself stays distributed.
 """
@@ -77,16 +82,22 @@ RECORD_COLUMNS = (
 _PATH_RE = r"/([^/]+)/([^/]+)/runs/([^/]+)\.json$"
 
 
-def load_workflow_runs(spark: SparkSession, workflows_dir: pathlib.Path) -> DataFrame:
-    """One scan over every extraction of every repo (S12/S13/S15).
+def _read_runs(spark: SparkSession, workflows_dir: pathlib.Path, ts: str) -> DataFrame:
+    """The raw zone's one reader: every run file under
+    ``<zone>/*/<ts>/runs``, with repo_dir, extract_ts and file_id
+    recovered from the file path. ``ts="*"`` reads every extraction.
 
-    The union-across-repos and the newest-first ordering of the
-    reference are replaced by a single multi-path read plus partition
-    columns recovered from the file path; ordering becomes a logical
-    concern (window in snapshot_latest, orderBy at export).
+    Spark gets the ``runs`` directories as roots and keeps their
+    ``*.json`` files (``pathGlobFilter``), so a frame build lists one
+    root per (repo, <ts>) instead of one per run file. While there are
+    at most 32 roots (the default
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold``) Spark
+    lists them on the driver, with no Spark job. Past that it lists in
+    parallel again: one job per frame build, one task per directory
+    rather than one per file.
     """
-    pattern = str(workflows_dir / "*" / "*" / "runs" / "*.json")
-    if not glob.glob(pattern):
+    roots = str(workflows_dir / "*" / ts / "runs")
+    if not glob.glob(roots):
         # Build from a COPY of the fields: StructType.add mutates in
         # place and would permanently pollute the module-level schema.
         empty_schema = T.StructType(
@@ -101,11 +112,23 @@ def load_workflow_runs(spark: SparkSession, workflows_dir: pathlib.Path) -> Data
     path = F.input_file_name()
     return (
         spark.read.schema(RUN_SCHEMA)
-        .json(pattern)
+        .option("pathGlobFilter", "*.json")
+        .json(roots)
         .withColumn("repo_dir", F.regexp_extract(path, _PATH_RE, 1))
         .withColumn("extract_ts", F.regexp_extract(path, _PATH_RE, 2))
         .withColumn("file_id", F.regexp_extract(path, _PATH_RE, 3))
     )
+
+
+def load_workflow_runs(spark: SparkSession, workflows_dir: pathlib.Path) -> DataFrame:
+    """One scan over every extraction of every repo (S12/S13/S15).
+
+    The union-across-repos and the newest-first ordering of the
+    reference are replaced by a single multi-root read plus partition
+    columns recovered from the file path; ordering becomes a logical
+    concern (window in snapshot_latest, orderBy at export).
+    """
+    return _read_runs(spark, workflows_dir, "*")
 
 
 def snapshot_latest(runs: DataFrame) -> DataFrame:

@@ -6,10 +6,10 @@ sandbox actually has.
 The batch pipeline (etl/pipeline.py) re-reads the WHOLE raw zone and
 re-runs the dedup window every time a new extraction lands. This twin
 treats the same directory layout as an unbounded source:
-``spark.readStream.json`` over ``<zone>/*/<ts>/runs/*.json`` discovers
-new extraction files as they land (checkpointed file index — each file
-is processed exactly once), recovers the partition columns from
-``_metadata.file_path`` (the streaming-safe analog of
+``spark.readStream.json`` over the ``<zone>/*/<ts>/runs`` directories
+discovers new extraction files as they land (checkpointed file index —
+each file is processed exactly once), recovers the partition columns
+from ``_metadata.file_path`` (the streaming-safe analog of
 ``input_file_name``), and maintains each (repo_dir, file_id) key's
 newest observation in the state store via applyInPandasWithState —
 O(1) state per run, O(new files) work per trigger, instead of
@@ -67,15 +67,20 @@ def stream_workflow_runs(
     max_files_per_trigger: int = 4,
 ) -> DataFrame:
     """S12/S13/S15 as an unbounded scan: the streaming twin of
-    load_workflow_runs — same glob, same schema, same path-derived
-    partition columns, but files are discovered incrementally and
-    each is read exactly once per checkpoint."""
-    pattern = str(workflows_dir / "*" / "*" / "runs" / "*.json")
+    load_workflow_runs — same ``runs``-directory roots and
+    ``pathGlobFilter``, same schema, same path-derived partition
+    columns, but files are discovered incrementally and each is read
+    exactly once per checkpoint. The source re-lists its roots on
+    every trigger, so directory roots keep that listing on the driver
+    (while there are at most 32 of them) instead of a Spark job with
+    one task per run file."""
+    roots = str(workflows_dir / "*" / "*" / "runs")
     path = F.col("_metadata.file_path")
     return (
         spark.readStream.schema(RUN_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(pattern)
+        .option("pathGlobFilter", "*.json")
+        .json(roots)
         .withColumn("repo_dir", F.regexp_extract(path, _PATH_RE, 1))
         .withColumn("extract_ts", F.regexp_extract(path, _PATH_RE, 2))
         .withColumn("file_id", F.regexp_extract(path, _PATH_RE, 3))

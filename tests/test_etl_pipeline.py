@@ -11,6 +11,7 @@ import pathlib
 
 from etl_spark.etl.pipeline import (
     export_csv,
+    load_workflow_runs,
     run_pipeline,
     snapshot_records,
 )
@@ -192,3 +193,25 @@ def test_export_csv_empty_zone_writes_header_only(spark, tmp_path):
     assert out.read_text() == (
         "id,repo,name,head_sha,status,conclusion,created_at,updated_at,run_started_at\n"
     )
+
+
+def test_building_the_runs_frame_runs_no_listing_job(spark, tmp_path):
+    # 3 repos x 2 extractions x 6 runs: 36 run files, past Spark's
+    # parallel-discovery threshold of 32 roots, in 6 runs directories.
+    # File-level roots made every frame build launch a listing job
+    # with one task per file; directory roots are listed on the driver.
+    for repo in ("repo_a", "repo_b", "repo_c"):
+        for ts in ("20250101-000000Z", "20250102-000000Z"):
+            for i in range(6):
+                write_run(tmp_path, repo, ts, make_run(i, repo))
+    sc = spark.sparkContext
+    group = f"build-runs-frame-{tmp_path.name}"
+    sc.setJobGroup(group, "build the runs frame, no action")
+    try:
+        runs = load_workflow_runs(spark, tmp_path)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert len(runs.inputFiles()) == 36

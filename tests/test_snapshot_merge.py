@@ -6,6 +6,7 @@ bucket partitions the batch touches."""
 from __future__ import annotations
 
 import pathlib
+from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
 
@@ -137,6 +138,28 @@ def test_empty_extraction_is_a_noop(spark, tmp_path):
 # --------------------------------------------------------------------------
 # The scale contract: touched-buckets-only read AND write.
 # --------------------------------------------------------------------------
+
+
+def test_load_extraction_scans_only_its_own_files(spark, tmp_path):
+    # The batch side of the merge lists and reads ONE <ts>'s run files:
+    # an earlier extraction's files are not in the scan at all (a
+    # row filter on the path-derived extract_ts would still read them),
+    # and a stray non-JSON file in a runs directory is not either.
+    zone = tmp_path / "zone"
+    t1, t2 = "20250101-000000Z", "20250102-000000Z"
+    for i in range(3):
+        write_run(zone, "repo_1", t1, make_run(i, "repo_1"))
+    write_run(zone, "repo_2", t1, make_run(1, "repo_2"))
+    write_run(zone, "repo_1", t2, make_run(1, "repo_1", status="completed"))
+    write_run(zone, "repo_2", t2, make_run(5, "repo_2"))
+    (zone / "repo_1" / t2 / "runs" / "notes.txt").write_text("not a run")
+    for ts in (t1, t2):
+        want = {str(p) for p in zone.glob(f"*/{ts}/runs/*.json")}
+        got = {
+            urlparse(f).path
+            for f in load_extraction(spark, zone, ts).inputFiles()
+        }
+        assert got == want, ts
 
 
 def test_merge_reads_and_rewrites_only_touched_buckets(spark, tmp_path):
