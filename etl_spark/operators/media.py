@@ -16,6 +16,11 @@ Scale notes: this is a narrow map (no shuffle); batch size is governed
 by spark.sql.execution.arrow.maxRecordsPerBatch, and the iterator form
 of mapInPandas keeps peak memory to one batch per core regardless of
 partition size — the shape that survives 100 TB of payload bytes.
+
+Each codec exists once, as a module function. The mapInPandas stages
+call those same functions on the workers (the module is registered
+for by-value pickling below), so the driver-side property tests cover
+exactly the code the workers run.
 """
 
 from __future__ import annotations
@@ -23,14 +28,23 @@ from __future__ import annotations
 import hashlib
 import io
 import struct
+import sys
 import wave
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# The worker stages below call this module's own codecs (build_png,
+# raster_gray, pcm_mean, ...). cloudpickle ships a module-level function
+# by reference, and a worker resolves that reference by importing
+# etl_spark, which fails when the driver runs from another cwd.
+# Registering the module ships its functions by value with the closure.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes int, n_frames int, frame_signature string, "
@@ -110,8 +124,6 @@ def pcm_mean(pcm: bytes, sample_width: int) -> float:
         return 0.0
     if sample_width == 1:
         return sum(pcm) / len(pcm)  # 8-bit WAV PCM is unsigned
-    import struct
-
     n = len(pcm) // sample_width
     if sample_width == 2:
         vals = struct.unpack(f"<{n}h", pcm[: n * 2])
@@ -125,6 +137,29 @@ def pcm_mean(pcm: bytes, sample_width: int) -> float:
     return sum(vals) / n
 
 
+def wav_pcm(payload: bytes) -> tuple:
+    """Parse a RIFF/WAVE container with the stdlib ``wave`` codec:
+    (``wave`` params namedtuple, PCM frame bytes). A malformed
+    container raises ``wave.Error``."""
+    with wave.open(io.BytesIO(payload), "rb") as w:
+        return w.getparams(), w.readframes(w.getnframes())
+
+
+def decode_wav(payload: bytes) -> dict:
+    """Decode summary for a WAV payload: header fields, the decoded
+    sample mean (``pcm_mean``) and the md5 of the PCM bytes."""
+    params, pcm = wav_pcm(payload)
+    return {
+        "mime": "audio/wav",
+        "n_channels": params.nchannels,
+        "sample_rate": params.framerate,
+        "sample_width": params.sampwidth,
+        "n_samples": params.nframes,
+        "mean_sample": pcm_mean(pcm, params.sampwidth),
+        "pcm_md5": hashlib.md5(pcm).hexdigest(),
+    }
+
+
 def decode_payload(payload: bytes) -> dict:
     """Decode a media payload: REAL codec where the stdlib has one
     (WAV via ``wave``, DEFLATE via ``zlib``), deterministic byte-math
@@ -134,18 +169,7 @@ def decode_payload(payload: bytes) -> dict:
     payload = bytes(payload)
     mime = sniff_mime(payload)
     if mime == "audio/wav":
-        with wave.open(io.BytesIO(payload), "rb") as w:
-            n = w.getnframes()
-            pcm = w.readframes(n)
-            return {
-                "mime": mime,
-                "n_channels": w.getnchannels(),
-                "sample_rate": w.getframerate(),
-                "sample_width": w.getsampwidth(),
-                "n_samples": n,
-                "mean_sample": pcm_mean(pcm, w.getsampwidth()),
-                "pcm_md5": hashlib.md5(pcm).hexdigest(),
-            }
+        return decode_wav(payload)
     if mime == "image/bmp":
         return decode_bmp(payload)
     if mime == "image/png":
@@ -188,24 +212,10 @@ def fake_features(payload: bytes) -> tuple[int, int, str, float]:
 def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """documents-with-payload → per-doc feature rows via mapInPandas."""
 
-    # Self-contained closure: no references to module-level symbols, so
-    # cloudpickle ships it by value and workers need no etl_spark on
-    # their PYTHONPATH (the driver process may run from any cwd).
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        import pandas as _pd
-
-        def _feats(payload: bytes) -> tuple[int, int, str, float]:
-            n_bytes = len(payload)
-            n_frames = n_bytes // 256 + 1
-            signature = _hashlib.md5(payload[::64]).hexdigest()
-            mean_byte = (sum(payload) / n_bytes) if n_bytes else 0.0
-            return n_bytes, n_frames, signature, mean_byte
-
         for pdf in it:
-            feats = [_feats(p) for p in pdf[payload_col]]
-            yield _pd.DataFrame(
+            feats = [fake_features(p) for p in pdf[payload_col]]
+            yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
                     "n_bytes": [f[0] for f in feats],
@@ -260,10 +270,6 @@ def sample_frames(
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        import pandas as _pd
-
         for pdf in it:
             ids, idxs, sizes, md5s = [], [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
@@ -274,13 +280,13 @@ def sample_frames(
                     ids.append(doc_id)
                     idxs.append(idx)
                     sizes.append(len(frame))
-                    md5s.append(_hashlib.md5(frame).hexdigest())
-            yield _pd.DataFrame(
+                    md5s.append(hashlib.md5(frame).hexdigest())
+            yield pd.DataFrame(
                 {
-                    "doc_id": _pd.Series(ids, dtype="int64"),
-                    "frame_idx": _pd.Series(idxs, dtype="int32"),
-                    "frame_bytes": _pd.Series(sizes, dtype="int32"),
-                    "frame_md5": _pd.Series(md5s, dtype="object"),
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "frame_idx": pd.Series(idxs, dtype="int32"),
+                    "frame_bytes": pd.Series(sizes, dtype="int32"),
+                    "frame_md5": pd.Series(md5s, dtype="object"),
                 }
             )
 
@@ -310,25 +316,21 @@ def resize_payload(
     binary-derived features out, constant output size)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        import pandas as _pd
-
         for pdf in it:
             orig, md5s = [], []
             for payload in pdf[payload_col]:
                 payload = bytes(payload)
                 orig.append(len(payload))
                 resized = payload[:target_bytes].ljust(target_bytes, b"\x00")
-                md5s.append(_hashlib.md5(resized).hexdigest())
-            yield _pd.DataFrame(
+                md5s.append(hashlib.md5(resized).hexdigest())
+            yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
-                    "orig_bytes": _pd.Series(orig, dtype="int32"),
-                    "new_bytes": _pd.Series(
+                    "orig_bytes": pd.Series(orig, dtype="int32"),
+                    "new_bytes": pd.Series(
                         [target_bytes] * len(orig), dtype="int32"
                     ),
-                    "resized_md5": _pd.Series(md5s, dtype="object"),
+                    "resized_md5": pd.Series(md5s, dtype="object"),
                 }
             )
 
@@ -355,53 +357,12 @@ def decode_audio(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     has, with a real (if humble) codec in the decode slot."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import io as _io
-        import struct as _struct
-        import wave as _wave
-
-        import pandas as _pd
-
-        def _mean(pcm: bytes, width: int) -> float:
-            # Self-contained twin of pcm_mean (workers can't import
-            # etl_spark); the driver-vs-worker parity test pins them.
-            if not pcm:
-                return 0.0
-            if width == 1:
-                return sum(pcm) / len(pcm)
-            n = len(pcm) // width
-            if width == 2:
-                vals = _struct.unpack(f"<{n}h", pcm[: n * 2])
-            elif width == 4:
-                vals = _struct.unpack(f"<{n}i", pcm[: n * 4])
-            else:
-                vals = [
-                    int.from_bytes(pcm[i : i + 3], "little", signed=True)
-                    for i in range(0, n * 3, 3)
-                ]
-            return sum(vals) / n
-
         for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                with _wave.open(_io.BytesIO(bytes(payload)), "rb") as w:
-                    n = w.getnframes()
-                    pcm = w.readframes(n)
-                    channels = w.getnchannels()
-                    rate = w.getframerate()
-                    width = w.getsampwidth()
-                rows.append(
-                    (
-                        doc_id,
-                        "audio/wav",
-                        channels,
-                        rate,
-                        n,
-                        _mean(pcm, width),
-                        _hashlib.md5(pcm).hexdigest(),
-                    )
-                )
-            yield _pd.DataFrame(
+            rows = [
+                {"doc_id": doc_id, **decode_wav(bytes(payload))}
+                for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col])
+            ]
+            yield pd.DataFrame(
                 rows,
                 columns=[
                     "doc_id", "mime", "n_channels", "sample_rate",
@@ -436,37 +397,21 @@ def decode_deflate(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     shuffles."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import zlib as _zlib
-
-        import pandas as _pd
-
         for pdf in it:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
                 payload = bytes(payload)
-                raw, mime = None, "application/octet-stream"
-                # Inlined sniff_mime zlib branch (closure stays
-                # self-contained for workers): CMF low nibble 0x8 =
-                # deflate, high nibble <= 7 = any valid window size,
-                # header pair % 31 == 0.
-                if (
-                    len(payload) >= 2
-                    and (payload[0] & 0x0F) == 0x08
-                    and (payload[0] >> 4) <= 7
-                    and (payload[0] << 8 | payload[1]) % 31 == 0
-                ):
+                raw, mime = payload, "application/octet-stream"
+                if sniff_mime(payload) == "application/zlib":
                     try:
-                        raw = _zlib.decompress(payload)
+                        raw = zlib.decompress(payload)
                         mime = "application/zlib"
-                    except _zlib.error:
-                        raw = None
-                if raw is None:
-                    raw = payload
+                    except zlib.error:
+                        pass  # sniff false positive: fingerprint raw bytes
                 rows.append(
-                    (doc_id, mime, len(raw), _hashlib.md5(raw).hexdigest())
+                    (doc_id, mime, len(raw), hashlib.md5(raw).hexdigest())
                 )
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 rows,
                 columns=["doc_id", "mime", "decoded_bytes", "decoded_md5"],
             ).astype({"doc_id": "int64", "decoded_bytes": "int64"})
@@ -478,23 +423,19 @@ def decode_deflate(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
 
-def with_deflate_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
-    """Fixture builder: attach a zlib-DEFLATE-compressed payload of
-    the document's utf-8 bytes (stdlib zlib encoder, default level —
-    a genuine compressed stream, not byte math)."""
+def _with_payload(
+    docs: DataFrame, src: str, spread: bool, encode: Callable[[bytes], bytes]
+) -> DataFrame:
+    """Fixture-builder skeleton: each non-NULL ``src`` text becomes
+    the payload ``encode(text.encode("utf-8"))``, built in a narrow
+    Arrow map next to its doc_id."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib as _zlib
-
-        import pandas as _pd
-
         for pdf in it:
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        _zlib.compress(t.encode("utf-8")) for t in pdf[src]
-                    ],
+                    "payload": [encode(t.encode("utf-8")) for t in pdf[src]],
                 }
             )
 
@@ -509,49 +450,21 @@ def with_deflate_payload(docs: DataFrame, src: str = "text", spread: bool = True
     return out.mapInPandas(batches, schema="doc_id bigint, payload binary")
 
 
+def with_deflate_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
+    """Fixture builder: attach a zlib-DEFLATE-compressed payload of
+    the document's utf-8 bytes (stdlib zlib encoder, default level —
+    a genuine compressed stream, not byte math)."""
+    return _with_payload(docs, src, spread, zlib.compress)
+
+
 def with_wav_payload(docs: DataFrame, pcm_from: str = "text", spread: bool = True) -> DataFrame:
     """Fixture builder: attach a real WAV container whose 8-bit mono
     PCM samples are the document's utf-8 bytes (deterministic, so the
     decoded features replay in SQL from the text). Container bytes are
-    assembled by the stdlib ``wave`` ENCODER inside the batch — the
-    payload column carries genuine WAV files, not byte math."""
-    _rate = WAV_SAMPLE_RATE  # plain-int local -> pickled by value
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import wave as _wave
-
-        import pandas as _pd
-
-        def _wav(pcm: bytes) -> bytes:
-            buf = _io.BytesIO()
-            with _wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(1)
-                w.setframerate(_rate)  # captured by value: stays
-                # in sync with build_wav without importing etl_spark
-                w.writeframes(pcm)
-            return buf.getvalue()
-
-        for pdf in it:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        _wav(t.encode("utf-8")) for t in pdf[pcm_from]
-                    ],
-                }
-            )
-
-    out = docs.select("doc_id", pcm_from).where(F.col(pcm_from).isNotNull())
-    if spread:
-        # Single-file scans plateau decode parallelism (one parquet
-        # file -> one input partition at bench SFs; SCALING.md's sf1
-        # note). Spread the TEXT before payload construction so the
-        # decode map runs on every core while payloads still never
-        # cross an Exchange.
-        out = out.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return out.mapInPandas(batches, schema="doc_id bigint, payload binary")
+    assembled by the stdlib ``wave`` ENCODER (``build_wav``) inside the
+    batch — the payload column carries genuine WAV files, not byte
+    math."""
+    return _with_payload(docs, pcm_from, spread, build_wav)
 
 
 # Analysis frame length for audio feature extraction: 160 samples =
@@ -580,58 +493,50 @@ def frame_audio_energy(df: DataFrame, payload_col: str = "payload") -> DataFrame
     only the 5-column feature rows continue. Per-frame math is a
     numpy reshape + einsum over the whole clip, not a Python loop
     per frame."""
-    _FRAME = AUDIO_FRAME  # captured by value; workers can't import us
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import wave as _wave
-
-        import numpy as _np
-        import pandas as _pd
-
         cols = ["doc_id", "frame_idx", "frame_n", "frame_sum", "frame_sq"]
 
         for pdf in it:
             out = []
             for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                with _wave.open(_io.BytesIO(bytes(payload)), "rb") as w:
-                    if w.getsampwidth() != 1:
-                        # Loud, not wrong: treating 16/24/32-bit PCM
-                        # bytes as samples would frame interleaved
-                        # half-words into garbage energies (the BMP
-                        # sniff/decode-agreement lesson applied here).
-                        raise ValueError(
-                            "frame_audio_energy expects 8-bit PCM, got "
-                            f"sample width {w.getsampwidth()}"
-                        )
-                    pcm = w.readframes(w.getnframes())
+                params, pcm = wav_pcm(bytes(payload))
+                if params.sampwidth != 1:
+                    # Loud, not wrong: treating 16/24/32-bit PCM
+                    # bytes as samples would frame interleaved
+                    # half-words into garbage energies (the BMP
+                    # sniff/decode-agreement lesson applied here).
+                    raise ValueError(
+                        "frame_audio_energy expects 8-bit PCM, got "
+                        f"sample width {params.sampwidth}"
+                    )
                 n = len(pcm)
                 if n == 0:
                     continue
-                s = _np.frombuffer(pcm, dtype=_np.uint8).astype(_np.int64) - 128
-                n_frames = -(-n // _FRAME)
-                padded = _np.zeros(n_frames * _FRAME, dtype=_np.int64)
+                s = np.frombuffer(pcm, dtype=np.uint8).astype(np.int64) - 128
+                n_frames = -(-n // AUDIO_FRAME)
+                padded = np.zeros(n_frames * AUDIO_FRAME, dtype=np.int64)
                 padded[:n] = s  # zero-pad: pads add 0 to sum and sq
-                grid = padded.reshape(n_frames, _FRAME)
+                grid = padded.reshape(n_frames, AUDIO_FRAME)
                 fsum = grid.sum(axis=1)
-                fsq = _np.einsum("ij,ij->i", grid, grid)
-                fn = _np.full(n_frames, _FRAME, dtype=_np.int64)
-                fn[-1] = n - (n_frames - 1) * _FRAME
+                fsq = np.einsum("ij,ij->i", grid, grid)
+                fn = np.full(n_frames, AUDIO_FRAME, dtype=np.int64)
+                fn[-1] = n - (n_frames - 1) * AUDIO_FRAME
                 out.append(
-                    _pd.DataFrame(
+                    pd.DataFrame(
                         {
-                            "doc_id": _np.full(n_frames, doc_id, dtype=_np.int64),
-                            "frame_idx": _np.arange(n_frames, dtype=_np.int32),
-                            "frame_n": fn.astype(_np.int32),
+                            "doc_id": np.full(n_frames, doc_id, dtype=np.int64),
+                            "frame_idx": np.arange(n_frames, dtype=np.int32),
+                            "frame_n": fn.astype(np.int32),
                             "frame_sum": fsum,
                             "frame_sq": fsq,
                         }
                     )
                 )
             yield (
-                _pd.concat(out, ignore_index=True)
+                pd.concat(out, ignore_index=True)
                 if out
-                else _pd.DataFrame(columns=cols).astype(
+                else pd.DataFrame(columns=cols).astype(
                     {
                         "doc_id": "int64",
                         "frame_idx": "int32",
@@ -708,16 +613,16 @@ def build_bmp(gray: bytes, width: int = BMP_WIDTH) -> bytes:
     return file_header + info_header + b"".join(rows)
 
 
-def decode_bmp(payload: bytes) -> dict:
+def bmp_gray(payload: bytes) -> tuple[int, int, bytes]:
     """Parse an uncompressed 24-bit BMP: header walk, bottom-up (or
     top-down when biHeight < 0) row un-flip, padding strip, integer
     ITU-R 601 luma per pixel ((299R + 587G + 114B) // 1000 — exact
-    integer math, equal to the byte value on gray pixels). Returns
-    the decode summary; ``luma_md5`` is over the TOP-DOWN row-major
-    luma bytes, the orientation a downstream vision model consumes.
-    Fails LOUDLY on a malformed container (sniff_mime verified the
-    header, so a parse error here is corruption, not a false sniff).
-    """
+    integer math, equal to the byte value on gray pixels): (width,
+    height, TOP-DOWN row-major luma bytes), the orientation a
+    downstream vision model consumes. The rows decode as one
+    (h, row_size) uint8 matrix, so the un-flip, padding strip and BGR
+    dot product are array ops, not per-pixel Python. Fails LOUDLY on a
+    malformed or unsupported container."""
     magic, file_size, _, _, offset = struct.unpack_from("<2sIHHI", payload, 0)
     (dib_size, width, height, _planes, bpp, compression) = struct.unpack_from(
         "<IiiHHI", payload, 14
@@ -729,24 +634,34 @@ def decode_bmp(payload: bytes) -> dict:
     top_down = height < 0
     height = abs(height)
     row_size = (width * 3 + 3) & ~3
-    luma = bytearray(width * height)
-    for out_y in range(height):
-        src_y = out_y if top_down else height - 1 - out_y
-        base = offset + src_y * row_size
-        row = payload[base : base + width * 3]
-        for x in range(width):
-            b, g, r = row[3 * x], row[3 * x + 1], row[3 * x + 2]
-            luma[out_y * width + x] = (299 * r + 587 * g + 114 * b) // 1000
-    luma = bytes(luma)
+    px = np.frombuffer(
+        payload, dtype=np.uint8, count=height * row_size, offset=offset
+    ).reshape(height, row_size)[:, : width * 3].reshape(height, width, 3)
+    if not top_down:
+        px = px[::-1]
+    bgr = px.astype(np.int64)
+    luma = (299 * bgr[:, :, 2] + 587 * bgr[:, :, 1] + 114 * bgr[:, :, 0]) // 1000
+    return width, height, luma.astype(np.uint8).tobytes()
+
+
+def _raster_summary(mime: str, bpp: int, w: int, h: int, gray: bytes) -> dict:
+    """The decode summary every raster decoder returns (one row of
+    BMP_DECODE_SCHEMA without doc_id)."""
     return {
-        "mime": "image/bmp",
-        "width": width,
-        "height": height,
+        "mime": mime,
+        "width": w,
+        "height": h,
         "bpp": bpp,
-        "n_pixels": width * height,
-        "luma_sum": sum(luma),
-        "luma_md5": hashlib.md5(luma).hexdigest(),
+        "n_pixels": w * h,
+        "luma_sum": sum(gray),
+        "luma_md5": hashlib.md5(gray).hexdigest(),
     }
+
+
+def decode_bmp(payload: bytes) -> dict:
+    """Decode summary for a 24-bit BMP (``bmp_gray``); ``luma_md5`` is
+    over the top-down row-major luma bytes."""
+    return _raster_summary("image/bmp", 24, *bmp_gray(payload))
 
 
 def _paeth(a: int, b: int, c: int) -> int:
@@ -912,16 +827,7 @@ def decode_png(payload: bytes) -> dict:
     """Decode summary for an 8-bit grayscale PNG — the compressed-
     raster sibling of decode_bmp: the gray samples ARE the luminance,
     so the summary matches decode_bmp's for the same pixel grid."""
-    w, h, gray = png_gray(payload)
-    return {
-        "mime": "image/png",
-        "width": w,
-        "height": h,
-        "bpp": 8,
-        "n_pixels": w * h,
-        "luma_sum": sum(gray),
-        "luma_md5": hashlib.md5(gray).hexdigest(),
-    }
+    return _raster_summary("image/png", 8, *png_gray(payload))
 
 
 def _lzw_encode(data: bytes, min_code: int) -> bytes:
@@ -1153,477 +1059,73 @@ def gif_gray(payload: bytes) -> tuple[int, int, bytes]:
 def decode_gif(payload: bytes) -> dict:
     """Decode summary for an 8-bit gray GIF — the LZW sibling of
     decode_png/decode_bmp: same pixel grid, same summary."""
-    w, h, gray = gif_gray(payload)
-    return {
-        "mime": "image/gif",
-        "width": w,
-        "height": h,
-        "bpp": 8,
-        "n_pixels": w * h,
-        "luma_sum": sum(gray),
-        "luma_md5": hashlib.md5(gray).hexdigest(),
-    }
+    return _raster_summary("image/gif", 8, *gif_gray(payload))
 
 
 def with_bmp_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
-    """Fixture builder: attach a REAL 24-bit BMP whose gray pixel grid
-    is the document's utf-8 bytes, BMP_WIDTH pixels per row (trailing
-    partial row dropped by the encoder). Narrow Arrow map; requires
-    ``length(src) >= BMP_WIDTH`` upstream."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import pandas as _pd
-
-        _W = BMP_WIDTH
-
-        def _bmp(gray: bytes) -> bytes:
-            # Self-contained twin of build_bmp (workers can't import
-            # etl_spark); tests pin driver-vs-worker byte parity.
-            h = len(gray) // _W
-            gray = gray[: _W * h]
-            pad = (-( _W * 3)) % 4
-            data = ( _W * 3 + pad) * h
-            head = _struct.pack("<2sIHHI", b"BM", 54 + data, 0, 0, 54)
-            dib = _struct.pack(
-                "<IiiHHIIiiII", 40, _W, h, 1, 24, 0, data, 2835, 2835, 0, 0
-            )
-            rows = [
-                b"".join(
-                    bytes((v, v, v)) for v in gray[y * _W : (y + 1) * _W]
-                )
-                + b"\x00" * pad
-                for y in range(h - 1, -1, -1)
-            ]
-            return head + dib + b"".join(rows)
-
-        for pdf in it:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        _bmp(t.encode("utf-8")) for t in pdf[src]
-                    ],
-                }
-            )
-
-    out = docs.select("doc_id", src).where(F.col(src).isNotNull())
-    if spread:
-        # Single-file scans plateau decode parallelism (one parquet
-        # file -> one input partition at bench SFs; SCALING.md's sf1
-        # note). Spread the TEXT before payload construction so the
-        # decode map runs on every core while payloads still never
-        # cross an Exchange.
-        out = out.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return out.mapInPandas(batches, schema="doc_id bigint, payload binary")
+    """Fixture builder: attach a REAL 24-bit BMP (``build_bmp``) whose
+    gray pixel grid is the document's utf-8 bytes, BMP_WIDTH pixels
+    per row (trailing partial row dropped by the encoder). Narrow
+    Arrow map; requires ``length(src) >= BMP_WIDTH`` upstream."""
+    return _with_payload(docs, src, spread, build_bmp)
 
 
 def with_png_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
-    """Fixture builder: attach a REAL 8-bit grayscale PNG whose pixel
-    grid is the document's utf-8 bytes, BMP_WIDTH pixels per row
-    (same grid contract as with_bmp_payload, so the two containers
-    hold the SAME image). Narrow Arrow map; requires
-    ``length(src) >= BMP_WIDTH`` upstream."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-        import zlib as _zlib
-
-        import pandas as _pd
-
-        _W = BMP_WIDTH
-
-        def _png(gray: bytes) -> bytes:
-            # Self-contained twin of build_png (workers can't import
-            # etl_spark); tests pin driver-vs-worker byte parity.
-            h = len(gray) // _W
-            gray = gray[: _W * h]
-
-            def _ck(tag, data):
-                return (
-                    _struct.pack(">I", len(data)) + tag + data
-                    + _struct.pack(">I", _zlib.crc32(tag + data))
-                )
-
-            def _pth(a, b, c):
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-            raw = bytearray()
-            prev = bytes(_W)
-            for y in range(h):
-                row = gray[y * _W : (y + 1) * _W]
-                ft = y % 5
-                raw.append(ft)
-                for x in range(_W):
-                    left = row[x - 1] if x else 0
-                    if ft == 0:
-                        v = row[x]
-                    elif ft == 1:
-                        v = row[x] - left
-                    elif ft == 2:
-                        v = row[x] - prev[x]
-                    elif ft == 3:
-                        v = row[x] - (left + prev[x]) // 2
-                    else:
-                        v = row[x] - _pth(left, prev[x], prev[x - 1] if x else 0)
-                    raw.append(v & 0xFF)
-                prev = row
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + _ck(b"IHDR", _struct.pack(">IIBBBBB", _W, h, 8, 0, 0, 0, 0))
-                + _ck(b"IDAT", _zlib.compress(bytes(raw)))
-                + _ck(b"IEND", b"")
-            )
-
-        for pdf in it:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        _png(t.encode("utf-8")) for t in pdf[src]
-                    ],
-                }
-            )
-
-    out = docs.select("doc_id", src).where(F.col(src).isNotNull())
-    if spread:
-        # Single-file scans plateau decode parallelism (one parquet
-        # file -> one input partition at bench SFs; SCALING.md's sf1
-        # note). Spread the TEXT before payload construction so the
-        # decode map runs on every core while payloads still never
-        # cross an Exchange.
-        out = out.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return out.mapInPandas(batches, schema="doc_id bigint, payload binary")
+    """Fixture builder: attach a REAL 8-bit grayscale PNG
+    (``build_png``) whose pixel grid is the document's utf-8 bytes,
+    BMP_WIDTH pixels per row (same grid contract as with_bmp_payload,
+    so the two containers hold the SAME image). Narrow Arrow map;
+    requires ``length(src) >= BMP_WIDTH`` upstream."""
+    return _with_payload(docs, src, spread, build_png)
 
 
 def with_gif_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
-    """Fixture builder: attach a REAL GIF89a whose pixel grid is the
-    document's utf-8 bytes (same grid contract as with_bmp_payload /
-    with_png_payload, so all three containers hold the SAME image).
-    The worker closure ships the driver encoder by value (build_gif's
-    pure-function helpers close over nothing module-level), keeping it
-    self-contained; tests pin driver-vs-worker byte parity."""
+    """Fixture builder: attach a REAL GIF89a (``build_gif``) whose
+    pixel grid is the document's utf-8 bytes (same grid contract as
+    with_bmp_payload / with_png_payload, so all three containers hold
+    the SAME image). Narrow Arrow map; requires
+    ``length(src) >= BMP_WIDTH`` upstream."""
+    return _with_payload(docs, src, spread, build_gif)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
 
-        import pandas as _pd
-
-        _W = BMP_WIDTH
-        _GCT = bytes(v for i in range(256) for v in (i, i, i))
-
-        def _lzw(data: bytes) -> bytes:
-            # Self-contained twin of _lzw_encode (min_code = 8): the
-            # decoder-lockstep width simulation, verbatim.
-            clear, end = 256, 257
-            out = bytearray()
-            bb = nb = 0
-
-            def emit(code, width):
-                nonlocal bb, nb
-                bb |= code << nb
-                nb += width
-                while nb >= 8:
-                    out.append(bb & 0xFF)
-                    bb >>= 8
-                    nb -= 8
-
-            table = {bytes([i]): i for i in range(256)}
-            next_code, width = 258, 9
-            dec_next, dec_first = 258, True
-            emit(clear, width)
-
-            def emitted():
-                nonlocal dec_next, dec_first, width
-                if dec_first:
-                    dec_first = False
-                    return
-                dec_next += 1
-                if dec_next == (1 << width) and width < 12:
-                    width += 1
-
-            w = b""
-            for byte in data:
-                wk = w + bytes([byte])
-                if wk in table:
-                    w = wk
-                    continue
-                emit(table[w], width)
-                emitted()
-                if next_code < 4096:
-                    table[wk] = next_code
-                    next_code += 1
-                else:
-                    emit(clear, width)
-                    table = {bytes([i]): i for i in range(256)}
-                    next_code, width = 258, 9
-                    dec_next, dec_first = 258, True
-                w = bytes([byte])
-            if w:
-                emit(table[w], width)
-                emitted()
-            emit(end, width)
-            if nb:
-                out.append(bb & 0xFF)
-            return bytes(out)
-
-        def _gif(gray: bytes) -> bytes:
-            h = len(gray) // _W
-            gray = gray[: _W * h]
-            stream = _lzw(gray)
-            blocks = b"".join(
-                bytes([len(stream[i : i + 255])]) + stream[i : i + 255]
-                for i in range(0, len(stream), 255)
-            ) + b"\x00"
-            return (
-                b"GIF89a"
-                + _struct.pack("<HHBBB", _W, h, 0xF7, 0, 0)
-                + _GCT
-                + _struct.pack("<BHHHHB", 0x2C, 0, 0, _W, h, 0)
-                + bytes([8])
-                + blocks
-                + b"\x3B"
-            )
-
-        for pdf in it:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        _gif(t.encode("utf-8")) for t in pdf[src]
-                    ],
-                }
-            )
-
-    out = docs.select("doc_id", src).where(F.col(src).isNotNull())
-    if spread:
-        out = out.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return out.mapInPandas(batches, schema="doc_id bigint, payload binary")
+def raster_gray(payload: bytes) -> tuple[str, int, int, int, bytes]:
+    """Decode a raster payload, dispatched on magic bytes: (mime, bpp,
+    width, height, top-down row-major luma bytes) from ``png_gray``,
+    ``gif_gray`` or ``bmp_gray``, with every check those decoders make.
+    The one decoder behind decode_image, thumbnail_features and
+    perceptual_hash(pixel_decode=True). Any other payload fails LOUDLY
+    — blindly struct-parsing it as a BMP would produce garbage
+    geometry, not an error."""
+    if payload[:8] == b"\x89PNG\r\n\x1a\n":
+        return ("image/png", 8, *png_gray(payload))
+    if payload[:6] in (b"GIF87a", b"GIF89a"):
+        return ("image/gif", 8, *gif_gray(payload))
+    if payload[:2] == b"BM":
+        return ("image/bmp", 24, *bmp_gray(payload))
+    raise ValueError(
+        f"raster decode expects a BMP or PNG or GIF payload, got {payload[:8]!r}"
+    )
 
 
 def decode_image(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """REAL image decode stage: payloads are genuine raster containers
     — uncompressed 24-bit BMP (``build_bmp``), 8-bit grayscale PNG
     (``build_png``) or LZW-compressed GIF89a (``build_gif``) —
-    dispatched on magic bytes and parsed on the workers: struct header
-    walk + un-flip + integer luma for BMP; chunk walk + zlib inflate +
-    per-row filter reconstruction for PNG; block walk + variable-width
-    LZW for GIF. Narrow map, Arrow batch in/out; the exact stage shape
-    a PIL-backed pipeline has, with the three raster codecs the stdlib
-    plus ~80 lines of LZW can express in the decode slot."""
+    dispatched on magic bytes and parsed on the workers by
+    ``raster_gray``: struct header walk + un-flip + integer luma for
+    BMP; chunk walk + CRC check + zlib inflate + per-row filter
+    reconstruction for PNG; block walk + variable-width LZW for GIF.
+    Narrow map, Arrow batch in/out; the exact stage shape a PIL-backed
+    pipeline has, with the three raster codecs the stdlib plus ~80
+    lines of LZW can express in the decode slot."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import struct as _struct
-        import zlib as _zlib
-
-        import numpy as _np
-        import pandas as _pd
-
-        def _png_gray(payload: bytes) -> tuple:
-            # Self-contained twin of png_gray (workers can't import
-            # etl_spark): chunk walk, inflate, unfilter. Filter
-            # reconstruction is sequential within a row by definition
-            # (Sub/Average/Paeth read the just-reconstructed left
-            # neighbor), so this is a per-pixel loop — rows are
-            # BMP_WIDTH wide, bounded per doc.
-            pos = 8
-            idat = b""
-            w = h = None
-            while pos + 8 <= len(payload):
-                ln, tag = _struct.unpack_from(">I4s", payload, pos)
-                data = payload[pos + 8 : pos + 8 + ln]
-                if tag == b"IHDR":
-                    w, h = _struct.unpack(">II", data[:8])
-                elif tag == b"IDAT":
-                    idat += data
-                elif tag == b"IEND":
-                    break
-                pos += 12 + ln
-            raw = _zlib.decompress(idat)
-            # Vectorized unfilter (operators/media.py::_unfilter_png
-            # twin): None=copy, Sub=cumsum mod 256, Up=wrapping uint8
-            # add; Average/Paeth keep the genuine left-recurrence loop.
-            m = _np.frombuffer(raw, dtype=_np.uint8).reshape(h, w + 1)
-            out = _np.empty((h, w), dtype=_np.uint8)
-            prev = _np.zeros(w, dtype=_np.uint8)
-            for y in range(h):
-                ft = int(m[y, 0])
-                line = m[y, 1:]
-                if ft == 0:
-                    out[y] = line
-                elif ft == 1:
-                    out[y] = _np.cumsum(line, dtype=_np.uint64).astype(
-                        _np.uint8
-                    )
-                elif ft == 2:
-                    out[y] = line + prev
-                else:
-                    li, pl = line.tolist(), prev.tolist()
-                    rec = bytearray(w)
-                    a = 0
-                    for x in range(w):
-                        b = pl[x]
-                        if ft == 3:
-                            a = (li[x] + (a + b) // 2) & 0xFF
-                        else:
-                            c = pl[x - 1] if x else 0
-                            p = a + b - c
-                            pa, pb, pc = (
-                                abs(p - a), abs(p - b), abs(p - c),
-                            )
-                            a = (
-                                li[x]
-                                + (
-                                    a
-                                    if (pa <= pb and pa <= pc)
-                                    else (b if pb <= pc else c)
-                                )
-                            ) & 0xFF
-                        rec[x] = a
-                    out[y] = _np.frombuffer(bytes(rec), dtype=_np.uint8)
-                prev = out[y]
-            return w, h, out.tobytes()
-
-        # base symbol table built once per Arrow batch, copied per
-        # CLEAR — same hot-loop form as operators/media._lzw_decode
-        # (the closure stays self-contained for the worker)
-        _lzw_base = [bytes([i]) for i in range(256)] + [b"", b""]
-
-        def _lzw_dec(data: bytes) -> bytes:
-            # Self-contained twin of _lzw_decode (min_code = 8):
-            # variable-width LSB-first GIF LZW with CLEAR/KwKwK.
-            clear, end = 256, 257
-            pos = bb = nb = 0
-            out = bytearray()
-            table = _lzw_base.copy()
-            append = table.append
-            width, mask, next_code, prev_entry = 9, 511, 258, None
-            while True:
-                while nb < width:
-                    bb |= data[pos] << nb
-                    pos += 1
-                    nb += 8
-                code = bb & mask
-                bb >>= width
-                nb -= width
-                if code >= clear:
-                    if code == clear:
-                        table = _lzw_base.copy()
-                        append = table.append
-                        width, mask = 9, 511
-                        next_code, prev_entry = 258, None
-                        continue
-                    if code == end:
-                        return bytes(out)
-                if prev_entry is None:
-                    prev_entry = table[code]
-                    out += prev_entry
-                    continue
-                entry = (
-                    table[code]
-                    if code < next_code
-                    else prev_entry + prev_entry[:1]
-                )
-                out += entry
-                if next_code < 4096:
-                    append(prev_entry + entry[:1])
-                    next_code += 1
-                    if next_code == (1 << width) and width < 12:
-                        width += 1
-                        mask = (1 << width) - 1
-                prev_entry = entry
-
-        def _gif_gray(payload: bytes) -> tuple:
-            # Self-contained twin of gif_gray (builder always writes
-            # min_code=8, 256-gray GCT, no extensions/interlace).
-            packed = payload[10]
-            pos = 13
-            if packed & 0x80:
-                pos += 3 * (2 << (packed & 0x07))
-            while payload[pos] == 0x21:
-                pos += 2
-                while payload[pos]:
-                    pos += payload[pos] + 1
-                pos += 1
-            _l, _t, w, h, _ip = _struct.unpack_from(
-                "<HHHHB", payload, pos + 1
-            )
-            pos += 11  # descriptor (10) + min-code-size byte
-            stream = bytearray()
-            while payload[pos]:
-                ln = payload[pos]
-                stream += payload[pos + 1 : pos + 1 + ln]
-                pos += ln + 1
-            return w, h, _lzw_dec(bytes(stream))
-
-        def _decode(payload: bytes) -> tuple:
-            if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                w, h, gray = _png_gray(payload)
-                arr = _np.frombuffer(gray, dtype=_np.uint8)
-                return (
-                    "image/png",
-                    w,
-                    h,
-                    8,
-                    w * h,
-                    int(arr.astype(_np.int64).sum()),
-                    _hashlib.md5(gray).hexdigest(),
-                )
-            if payload[:6] in (b"GIF87a", b"GIF89a"):
-                w, h, gray = _gif_gray(payload)
-                arr = _np.frombuffer(gray, dtype=_np.uint8)
-                return (
-                    "image/gif",
-                    w,
-                    h,
-                    8,
-                    w * h,
-                    int(arr.astype(_np.int64).sum()),
-                    _hashlib.md5(gray).hexdigest(),
-                )
-            # Self-contained twin of decode_bmp, vectorized with
-            # numpy (rows decode as a (h, row_size) uint8 matrix; the
-            # BGR->luma dot product and the bottom-up flip are array
-            # ops, not per-pixel Python).
-            offset = _struct.unpack_from("<I", payload, 10)[0]
-            (_ds, w, h, _p, bpp, comp) = _struct.unpack_from(
-                "<IiiHHI", payload, 14
-            )
-            if bpp != 24 or comp != 0:
-                raise ValueError(f"unsupported BMP bpp={bpp} comp={comp}")
-            top_down = h < 0
-            h = abs(h)
-            row_size = (w * 3 + 3) & ~3
-            mat = _np.frombuffer(
-                payload, dtype=_np.uint8, count=h * row_size, offset=offset
-            ).reshape(h, row_size)[:, : w * 3].reshape(h, w, 3)
-            if not top_down:
-                mat = mat[::-1]
-            bgr = mat.astype(_np.int64)
-            luma = (
-                299 * bgr[:, :, 2] + 587 * bgr[:, :, 1] + 114 * bgr[:, :, 0]
-            ) // 1000
-            luma_bytes = luma.astype(_np.uint8).tobytes()
-            return (
-                "image/bmp",
-                w,
-                h,
-                bpp,
-                w * h,
-                int(luma.sum()),
-                _hashlib.md5(luma_bytes).hexdigest(),
-            )
-
         for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                mime, w, h, bpp, npx, lsum, lmd5 = _decode(bytes(payload))
-                rows.append((doc_id, mime, w, h, bpp, npx, lsum, lmd5))
-            yield _pd.DataFrame(
+            rows = [
+                {"doc_id": doc_id, **_raster_summary(*raster_gray(bytes(payload)))}
+                for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col])
+            ]
+            yield pd.DataFrame(
                 rows,
                 columns=[
                     "doc_id", "mime", "width", "height", "bpp",
@@ -1644,14 +1146,14 @@ def decode_image(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 
 
 def thumbnail_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """REAL image transform stage: decode each raster payload (BMP or
-    PNG, dispatched on magic bytes) and 2x2 box-downsample the
-    luminance grid — the thumbnailing/resolution-bucketing step every
-    multimodal training pipeline runs before feature extraction. Odd
-    trailing row/column are cropped (floor semantics); each output
-    pixel is the FLOOR of the mean of its 2x2 block, computed in
-    exact integer arithmetic so the result replays byte-for-byte in
-    SQL. Emits per doc:
+    """REAL image transform stage: decode each raster payload (BMP,
+    PNG or GIF via ``raster_gray``, dispatched on magic bytes) and 2x2
+    box-downsample the luminance grid — the thumbnailing/resolution-
+    bucketing step every multimodal training pipeline runs before
+    feature extraction. Odd trailing row/column are cropped (floor
+    semantics); each output pixel is the FLOOR of the mean of its 2x2
+    block, computed in exact integer arithmetic so the result replays
+    byte-for-byte in SQL. Emits per doc:
 
       out_w, out_h   downsampled geometry
       luma_sum       sum of downsampled pixels (exact)
@@ -1664,109 +1166,21 @@ def thumbnail_features(df: DataFrame, payload_col: str = "payload") -> DataFrame
     strided numpy add (four shifted views), no Python per pixel."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-        import zlib as _zlib
-
-        import numpy as _np
-        import pandas as _pd
-
-        def _gray(payload: bytes) -> "_np.ndarray":
-            # Self-contained raster decode twin (decode_image /
-            # perceptual_hash share the pattern; workers can't import
-            # etl_spark): returns the top-down (h, w) luminance grid.
-            if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                pos, idat, w, h = 8, b"", None, None
-                while pos + 8 <= len(payload):
-                    ln, tag = _struct.unpack_from(">I4s", payload, pos)
-                    data = payload[pos + 8 : pos + 8 + ln]
-                    if tag == b"IHDR":
-                        w, h = _struct.unpack(">II", data[:8])
-                    elif tag == b"IDAT":
-                        idat += data
-                    elif tag == b"IEND":
-                        break
-                    pos += 12 + ln
-                raw = _zlib.decompress(idat)
-                # Vectorized unfilter twin (see _unfilter_png): only
-                # Average/Paeth rows keep the left-recurrence loop.
-                m = _np.frombuffer(raw, dtype=_np.uint8).reshape(h, w + 1)
-                out = _np.empty((h, w), dtype=_np.uint8)
-                prev = _np.zeros(w, dtype=_np.uint8)
-                for y in range(h):
-                    ft = int(m[y, 0])
-                    line = m[y, 1:]
-                    if ft == 0:
-                        out[y] = line
-                    elif ft == 1:
-                        out[y] = _np.cumsum(
-                            line, dtype=_np.uint64
-                        ).astype(_np.uint8)
-                    elif ft == 2:
-                        out[y] = line + prev
-                    else:
-                        li, pl = line.tolist(), prev.tolist()
-                        rec = bytearray(w)
-                        a = 0
-                        for x in range(w):
-                            b = pl[x]
-                            if ft == 3:
-                                a = (li[x] + (a + b) // 2) & 0xFF
-                            else:
-                                c = pl[x - 1] if x else 0
-                                p = a + b - c
-                                pa, pb, pc = (
-                                    abs(p - a), abs(p - b), abs(p - c),
-                                )
-                                a = (
-                                    li[x]
-                                    + (
-                                        a
-                                        if (pa <= pb and pa <= pc)
-                                        else (b if pb <= pc else c)
-                                    )
-                                ) & 0xFF
-                            rec[x] = a
-                        out[y] = _np.frombuffer(
-                            bytes(rec), dtype=_np.uint8
-                        )
-                    prev = out[y]
-                return out.astype(_np.int64)
-            # BMP: header walk, bottom-up un-flip, padding strip,
-            # integer ITU-R 601 luma (exact /1000 floor). Anything
-            # else fails LOUDLY — blindly struct-parsing a non-raster
-            # payload as a BMP would produce garbage geometry, not an
-            # error.
-            if payload[:2] != b"BM":
-                raise ValueError(
-                    "thumbnail_features expects a BMP or PNG payload"
-                )
-            offset = _struct.unpack_from("<I", payload, 10)[0]
-            (_ds, w, h, _p, _bpp, _c) = _struct.unpack_from(
-                "<IiiHHI", payload, 14
-            )
-            row_size = (w * 3 + 3) & ~3
-            mat = _np.frombuffer(
-                payload, dtype=_np.uint8, count=row_size * h, offset=offset
-            ).reshape(h, row_size)[::-1, : w * 3]
-            px = mat.reshape(h, w, 3).astype(_np.int64)
-            return (
-                px[:, :, 2] * 299 + px[:, :, 1] * 587 + px[:, :, 0] * 114
-            ) // 1000
-
         for pdf in it:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                g = _gray(bytes(payload))
-                h2, w2 = g.shape[0] // 2, g.shape[1] // 2
+                _, _, w, h, gray = raster_gray(bytes(payload))
+                h2, w2 = h // 2, w // 2
                 if h2 == 0 or w2 == 0:
                     continue
-                g = g[: h2 * 2, : w2 * 2]
+                g = np.frombuffer(gray, dtype=np.uint8).reshape(h, w)
+                g = g[: h2 * 2, : w2 * 2].astype(np.int64)
                 ds = (
                     g[0::2, 0::2] + g[0::2, 1::2]
                     + g[1::2, 0::2] + g[1::2, 1::2]
                 ) // 4
                 flat = ds.ravel()
-                weights = _np.arange(1, flat.size + 1, dtype=_np.int64)
+                weights = np.arange(1, flat.size + 1, dtype=np.int64)
                 rows.append(
                     (
                         doc_id,
@@ -1776,7 +1190,7 @@ def thumbnail_features(df: DataFrame, payload_col: str = "payload") -> DataFrame
                         int((weights * flat).sum()),
                     )
                 )
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 rows,
                 columns=["doc_id", "out_w", "out_h", "luma_sum", "luma_wsum"],
             ).astype(
@@ -1840,8 +1254,8 @@ def perceptual_hash(
     continues downstream.
 
     ``pixel_decode=True`` IS the real image pipeline: payloads are
-    parsed as BMP containers (the same struct walk as decode_image)
-    and the fingerprint runs over the decoded top-down luminance grid
+    decoded as BMP, PNG or GIF containers (``raster_gray``, the
+    decoder decode_image uses) and the fingerprint runs over the decoded top-down luminance grid
     instead of raw container bytes — headers, padding and bottom-up
     storage order no longer leak into the hash, so the fingerprint is
     a property of the IMAGE, not its serialization. Banding and the
@@ -1851,172 +1265,10 @@ def perceptual_hash(
     header bytes.
     """
 
-    # Plain-int locals: the mapInPandas closure captures these BY VALUE
-    # (free variables pickle with the function), keeping the worker
-    # self-contained — etl_spark is not importable on workers when the
-    # driver runs from another cwd — while single-sourcing the
-    # constants the oracle SQL and tests mirror.
-    _SEG = PHASH_SEGMENTS
-    _STRIDE = PHASH_NOISE_STRIDE
-    _OFF = PHASH_VARIANT_OFFSET
-    _PIXELS = pixel_decode
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-        import zlib as _zlib
+        bit_values = 1 << np.arange(PHASH_SEGMENTS, dtype=np.int64)
 
-        import numpy as _np
-        import pandas as _pd
-
-        _BITS = 1 << _np.arange(_SEG, dtype=_np.int64)
-
-        def _luma(payload: bytes) -> "_np.ndarray":
-            # Inline raster parse (decode_image's twin; closures stay
-            # self-contained for workers): top-down luminance grid,
-            # flattened row-major — the array the fingerprint sees.
-            # Dispatch on magic: PNG (chunk walk + inflate + per-row
-            # unfilter; gray IS luma) or BMP (header walk + un-flip +
-            # integer luma) — so the fingerprint is container-blind.
-            if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                pos, idat, w, h = 8, b"", None, None
-                while pos + 8 <= len(payload):
-                    ln, tag = _struct.unpack_from(">I4s", payload, pos)
-                    data = payload[pos + 8 : pos + 8 + ln]
-                    if tag == b"IHDR":
-                        w, h = _struct.unpack(">II", data[:8])
-                    elif tag == b"IDAT":
-                        idat += data
-                    elif tag == b"IEND":
-                        break
-                    pos += 12 + ln
-                raw = _zlib.decompress(idat)
-                # Vectorized unfilter twin (see _unfilter_png): only
-                # Average/Paeth rows keep the left-recurrence loop.
-                m = _np.frombuffer(raw, dtype=_np.uint8).reshape(h, w + 1)
-                out = _np.empty((h, w), dtype=_np.uint8)
-                prev = _np.zeros(w, dtype=_np.uint8)
-                for y in range(h):
-                    ft = int(m[y, 0])
-                    line = m[y, 1:]
-                    if ft == 0:
-                        out[y] = line
-                    elif ft == 1:
-                        out[y] = _np.cumsum(
-                            line, dtype=_np.uint64
-                        ).astype(_np.uint8)
-                    elif ft == 2:
-                        out[y] = line + prev
-                    else:
-                        li, pl = line.tolist(), prev.tolist()
-                        rec = bytearray(w)
-                        a = 0
-                        for x in range(w):
-                            b = pl[x]
-                            if ft == 3:
-                                a = (li[x] + (a + b) // 2) & 0xFF
-                            else:
-                                c = pl[x - 1] if x else 0
-                                p = a + b - c
-                                pa, pb, pc = (
-                                    abs(p - a), abs(p - b), abs(p - c),
-                                )
-                                a = (
-                                    li[x]
-                                    + (
-                                        a
-                                        if (pa <= pb and pa <= pc)
-                                        else (b if pb <= pc else c)
-                                    )
-                                ) & 0xFF
-                            rec[x] = a
-                        out[y] = _np.frombuffer(
-                            bytes(rec), dtype=_np.uint8
-                        )
-                    prev = out[y]
-                return out.reshape(-1).astype(_np.int64)
-            if payload[:6] in (b"GIF87a", b"GIF89a"):
-                # Self-contained GIF twin (min_code=8 builder contract;
-                # see gif_gray/_lzw_decode).
-                clear, end = 256, 257
-                packed = payload[10]
-                pos = 13
-                if packed & 0x80:
-                    pos += 3 * (2 << (packed & 0x07))
-                while payload[pos] == 0x21:
-                    pos += 2
-                    while payload[pos]:
-                        pos += payload[pos] + 1
-                    pos += 1
-                _l, _t, w, h, _ip = _struct.unpack_from(
-                    "<HHHHB", payload, pos + 1
-                )
-                pos += 11
-                stream = bytearray()
-                while payload[pos]:
-                    ln = payload[pos]
-                    stream += payload[pos + 1 : pos + 1 + ln]
-                    pos += ln + 1
-                data = bytes(stream)
-                p2 = bb = nb = 0
-                outb = bytearray()
-                table = [bytes([i]) for i in range(256)] + [b"", b""]
-                width, next_code, prev = 9, 258, None
-                while True:
-                    while nb < width:
-                        bb |= data[p2] << nb
-                        p2 += 1
-                        nb += 8
-                    code = bb & ((1 << width) - 1)
-                    bb >>= width
-                    nb -= width
-                    if code == clear:
-                        table = [bytes([i]) for i in range(256)] + [b"", b""]
-                        width, next_code, prev = 9, 258, None
-                        continue
-                    if code == end:
-                        break
-                    if prev is None:
-                        outb += table[code]
-                        prev = code
-                        continue
-                    entry = (
-                        table[code]
-                        if code < next_code
-                        else table[prev] + table[prev][:1]
-                    )
-                    outb += entry
-                    if next_code < 4096:
-                        table.append(table[prev] + entry[:1])
-                        next_code += 1
-                        if next_code == (1 << width) and width < 12:
-                            width += 1
-                    prev = code
-                return _np.frombuffer(bytes(outb), dtype=_np.uint8).astype(
-                    _np.int64
-                )
-            offset = _struct.unpack_from("<I", payload, 10)[0]
-            (_ds, w, h, _p, _bpp, _c) = _struct.unpack_from(
-                "<IiiHHI", payload, 14
-            )
-            top_down = h < 0
-            h = abs(h)
-            row_size = (w * 3 + 3) & ~3
-            mat = _np.frombuffer(
-                payload, dtype=_np.uint8, count=h * row_size, offset=offset
-            ).reshape(h, row_size)[:, : w * 3].reshape(h, w, 3)
-            if not top_down:
-                mat = mat[::-1]
-            bgr = mat.astype(_np.int64)
-            return (
-                (
-                    299 * bgr[:, :, 2]
-                    + 587 * bgr[:, :, 1]
-                    + 114 * bgr[:, :, 0]
-                )
-                // 1000
-            ).reshape(-1)
-
-        def _phash(arr: "_np.ndarray") -> int:
+        def _phash(arr: np.ndarray) -> int:
             # One cumsum per payload instead of 60 sliced sums: segment
             # boundaries (s*n)//SEG are exact integer math, so the
             # result is bit-identical to the per-segment loop the
@@ -2025,13 +1277,14 @@ def perceptual_hash(
             # payloads look alike, so they are masked out; registered
             # queries filter length >= SEG and never hit this branch.
             n = len(arr)
-            bounds = (_np.arange(_SEG + 1, dtype=_np.int64) * n) // _SEG
-            csum = _np.concatenate(([0], _np.cumsum(arr)))
+            seg = np.arange(PHASH_SEGMENTS + 1, dtype=np.int64)
+            bounds = (seg * n) // PHASH_SEGMENTS
+            csum = np.concatenate(([0], np.cumsum(arr)))
             ssums = csum[bounds[1:]] - csum[bounds[:-1]]
             slens = bounds[1:] - bounds[:-1]
             total = int(csum[-1])
             bits = ((ssums * n) >= (total * slens)) & (slens > 0)
-            return int(_BITS[bits].sum())
+            return int(bit_values[bits].sum())
 
         for pdf in it:
             ids, hashes = [], []
@@ -2040,20 +1293,16 @@ def perceptual_hash(
                 zip(pdf["doc_id"], pdf[payload_col])
             ):
                 payload = bytes(payload)
-                arr = (
-                    _luma(payload)
-                    if _PIXELS
-                    else _np.frombuffer(payload, dtype=_np.uint8).astype(
-                        _np.int64
-                    )
-                )
+                if pixel_decode:
+                    *_, payload = raster_gray(payload)
+                arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
                 ids.append(doc_id)
                 hashes.append(_phash(arr))
                 reps = 1
                 if noisy_variant:
                     noisy = arr.copy()
-                    noisy[::_STRIDE] += 1
-                    ids.append(doc_id + _OFF)
+                    noisy[::PHASH_NOISE_STRIDE] += 1
+                    ids.append(doc_id + PHASH_VARIANT_OFFSET)
                     hashes.append(_phash(noisy))
                     reps = 2
                 for ci, cname in enumerate(_carry_names):
@@ -2061,7 +1310,7 @@ def perceptual_hash(
             out = {"doc_id": ids, "phash": hashes}
             for ci, cname in enumerate(_carry_names):
                 out[cname] = carried[ci]
-            yield _pd.DataFrame(out)
+            yield pd.DataFrame(out)
 
     _carry_names = tuple(name for name, _ in carry)
     schema = PHASH_SCHEMA + "".join(
@@ -2095,44 +1344,36 @@ def audio_autocorr(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     from the fixture text and normalized ratios downstream are single
     exact divisions. Narrow Arrow map: one row out per clip, the
     payload never shuffles, per-clip work is numpy dot products."""
-    _LAGS = AUTOCORR_LAGS  # captured by value; workers can't import us
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import wave as _wave
-
-        import numpy as _np
-        import pandas as _pd
-
-        cols = ["doc_id", "n_samples", "r0"] + [f"r{L}" for L in _LAGS]
+        cols = ["doc_id", "n_samples", "r0"] + [f"r{L}" for L in AUTOCORR_LAGS]
         dtypes = {c: "int64" for c in cols}
 
         for pdf in it:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                with _wave.open(_io.BytesIO(bytes(payload)), "rb") as w:
-                    if w.getsampwidth() != 1:
-                        raise ValueError(
-                            "audio_autocorr expects 8-bit PCM, got "
-                            f"sample width {w.getsampwidth()}"
-                        )
-                    pcm = w.readframes(w.getnframes())
+                params, pcm = wav_pcm(bytes(payload))
+                if params.sampwidth != 1:
+                    raise ValueError(
+                        "audio_autocorr expects 8-bit PCM, got "
+                        f"sample width {params.sampwidth}"
+                    )
                 n = len(pcm)
                 if n == 0:
                     continue
-                s = _np.frombuffer(pcm, dtype=_np.uint8).astype(_np.int64) - 128
-                row = [int(doc_id), n, int(_np.dot(s, s))]
-                for L in _LAGS:
-                    row.append(int(_np.dot(s[:-L], s[L:])) if n > L else 0)
+                s = np.frombuffer(pcm, dtype=np.uint8).astype(np.int64) - 128
+                row = [int(doc_id), n, int(np.dot(s, s))]
+                for L in AUTOCORR_LAGS:
+                    row.append(int(np.dot(s[:-L], s[L:])) if n > L else 0)
                 rows.append(row)
             yield (
-                _pd.DataFrame(rows, columns=cols)
+                pd.DataFrame(rows, columns=cols)
                 if rows
-                else _pd.DataFrame(columns=cols).astype(dtypes)
+                else pd.DataFrame(columns=cols).astype(dtypes)
             )
 
     return df.mapInPandas(
         batches,
         schema="doc_id bigint, n_samples bigint, r0 bigint, "
-        + ", ".join(f"r{L} bigint" for L in _LAGS),
+        + ", ".join(f"r{L} bigint" for L in AUTOCORR_LAGS),
     )

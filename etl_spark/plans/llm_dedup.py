@@ -219,7 +219,7 @@ def rep_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def shingle_explode(docs: DataFrame, spread: bool = False) -> DataFrame:
+def shingle_explode(docs: DataFrame) -> DataFrame:
     """Unfiltered (doc_id, shingle) rows from a (doc_id, text) frame,
     one per distinct shingle per doc.
 
@@ -227,23 +227,8 @@ def shingle_explode(docs: DataFrame, spread: bool = False) -> DataFrame:
     shingle transform: slice(split(text), ...) inside the lambda would
     re-split the text once per shingle — O(n²) per document in the
     hottest loop of the dedup family.
-
-    ``spread=True`` repartitions the docs first: the testdata ships
-    one parquet file → one input partition, which would serialize the
-    (CPU-heavy) shingle explode on a single core. Both live callers
-    are fed by the rep-collapse groupBy whose shuffle ALREADY
-    distributes the rows — an explicit repartition there was a second
-    full-text exchange doing nothing (r10 opt, guide §2.4 "check
-    explain() for Exchange nodes you did not expect") — so the default
-    is False (r11, ADVICE: a True default silently hands a future
-    collapse-fed caller an extra exchange); a caller reading a raw
-    single-split source should opt in explicitly.
     """
     sh = shingle_array(F.col("toks"))
-    if spread:
-        docs = docs.repartition(
-            docs.sparkSession.sparkContext.defaultParallelism
-        )
     return (
         docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
         .select("doc_id", F.explode(sh).alias("shingle"))
@@ -253,13 +238,8 @@ def shingle_explode(docs: DataFrame, spread: bool = False) -> DataFrame:
 def _raw_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unfiltered (rep_id, shingle) rows over exact-dup
     REPRESENTATIVES — the input every downstream dedup structure
-    (posting lists, signatures, pair joins) builds from.
-
-    spread=False: rep_docs ends in a groupBy(md5(text)) whose shuffle
-    already hash-distributes the representatives across the cluster;
-    re-repartitioning would shuffle every text a second time for the
-    same layout quality."""
-    return shingle_explode(rep_docs(spark, sf_dir), spread=False)
+    (posting lists, signatures, pair joins) builds from."""
+    return shingle_explode(rep_docs(spark, sf_dir))
 
 
 def posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:

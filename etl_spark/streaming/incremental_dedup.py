@@ -76,9 +76,7 @@ def history_index(spark: SparkSession, sf_dir: str, batch_mod: int) -> DataFrame
         .drop("_h")
     )
     return (
-        # spread=False: the rep-collapse groupBy above already
-        # hash-distributed the representatives (see _raw_shingles).
-        shingle_explode(hist_reps, spread=False)
+        shingle_explode(hist_reps)
         .groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("hist_df"))
     )

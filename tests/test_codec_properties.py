@@ -4,7 +4,9 @@ BMP, WAV and DEFLATE): encode/decode must be the identity for
 ARBITRARY inputs, and the vectorized PNG unfilter must agree with an
 independent textbook implementation on ARBITRARY filter assignments,
 not just the encoder's y % 5 cycle. Pure driver-side tests — no
-Spark session — so hypothesis can afford hundreds of examples."""
+Spark session — so hypothesis can afford hundreds of examples. The
+worker stages call these same module functions (shipped by value, see
+tests/test_media_workers.py), so the fences cover the code workers run."""
 
 from __future__ import annotations
 
@@ -21,6 +23,7 @@ from hypothesis import strategies as st
 from etl_spark.operators.media import (
     _paeth,
     _unfilter_png,
+    bmp_gray,
     build_bmp,
     build_png,
     build_wav,
@@ -154,6 +157,40 @@ def test_bmp_top_down_variant_decodes_identically(gray, width):
     rows = [body[y * row_size : (y + 1) * row_size] for y in range(h)]
     flipped = bytes(hdr) + b"".join(reversed(rows))
     assert decode_bmp(flipped) == decode_bmp(payload)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    width=st.integers(min_value=1, max_value=20),
+    height=st.integers(min_value=1, max_value=12),
+    top_down=st.booleans(),
+    data=st.data(),
+)
+def test_bmp_color_luma_matches_per_pixel_reference(width, height, top_down, data):
+    """The vectorized BMP decode must equal a per-pixel textbook loop on
+    ARBITRARY BGR bytes (colour pixels, junk in the row padding, either
+    orientation) — the gray-fixture round trips above only ever see
+    B == G == R, where the luma weights cancel out."""
+    row_size = (width * 3 + 3) & ~3
+    body = data.draw(
+        st.binary(min_size=row_size * height, max_size=row_size * height)
+    )
+    payload = (
+        struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
+        + struct.pack(
+            "<IiiHHIIiiII", 40, width, -height if top_down else height,
+            1, 24, 0, len(body), 2835, 2835, 0, 0,
+        )
+        + body
+    )
+    want = bytearray(width * height)
+    for out_y in range(height):
+        src_y = out_y if top_down else height - 1 - out_y
+        row = body[src_y * row_size : src_y * row_size + width * 3]
+        for x in range(width):
+            b, g, r = row[3 * x], row[3 * x + 1], row[3 * x + 2]
+            want[out_y * width + x] = (299 * r + 587 * g + 114 * b) // 1000
+    assert bmp_gray(payload) == (width, height, bytes(want))
 
 
 # --------------------------------------------------------------------------
