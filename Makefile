@@ -5,7 +5,7 @@
 
 PY ?= python
 
-.PHONY: test contract contract-big contract-sf1 contract-sf1p contract-all spill-probe roundclose bench bench-full fuzz fuzz-skew plans scaling sfbig bench-sfbig run help
+.PHONY: test contract contract-big contract-sf1 contract-sf1p contract-all spill-probe roundclose bench bench-full profile fuzz fuzz-skew plans scaling sfbig bench-sfbig run help
 
 help:
 	@echo "test         - full pytest suite"
@@ -17,6 +17,7 @@ help:
 	@echo "roundclose   - pytest at HEAD + contract-all + bench (the close gate)"
 	@echo "bench        - headline 25-query benchmark (one JSON line)"
 	@echo "bench-full   - full-registry timing sweep"
+	@echo "profile      - traced cold sweep of the headline queries -> PROFILE_r12.json"
 	@echo "plans        - regenerate PLANS.md executed-plan receipts"
 	@echo "scaling      - regenerate SCALING.md cross-SF probes"
 	@echo "sfbig        - build 10x bench-scale data at /tmp/sf1 (key-shifted replication)"
@@ -69,8 +70,17 @@ roundclose: test contract-all bench
 bench:
 	$(PY) bench.py
 
+# bench-full, profile, spill-probe and scaling share tools/harness.py:
+# one session launcher, cold eviction before every rep, arms alternated
+# rep by rep.
 bench-full:
 	$(PY) tools/bench_full.py
+
+# Per-query layer record (jobs, stages, tasks, CPU, single-task stages,
+# stages with a task over 200 ms, shuffle, spill, skew, JIT/Janino
+# compile) from the Spark event log, for bench.py's 25 HEADLINE queries.
+profile:
+	$(PY) tools/harness.py > PROFILE_r12.json
 
 fuzz:
 	$(PY) tools/fuzz_parity.py 10
@@ -84,7 +94,7 @@ fuzz-skew:
 # pool must SPILL (not OOM, not emergency-broadcast) — SCALING.md
 # 'Memory-pressure receipts' documents the tiers and the anatomy.
 spill-probe:
-	cd /tmp && $(PY) $(CURDIR)/tools/spill_probe.py /tmp/sf1 0.3 4
+	cd /tmp && SPARK_GRAFT_CPUS=8 $(PY) $(CURDIR)/tools/spill_probe.py /tmp/sf1 0.3 4
 
 plans:
 	$(PY) tools/plan_audit.py

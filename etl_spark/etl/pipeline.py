@@ -87,7 +87,9 @@ def _read_runs(spark: SparkSession, workflows_dir: pathlib.Path, ts: str) -> Dat
     ``<zone>/*/<ts>/runs``, with repo_dir, extract_ts and file_id
     recovered from the file path. ``ts="*"`` reads every extraction.
 
-    Spark gets the ``runs`` directories as roots and keeps their
+    Spark gets the globbed ``runs`` directories as roots, never the
+    glob itself (a glob root makes Spark probe it for a streaming
+    sink's metadata and log the failed lookup), and keeps their
     ``*.json`` files (``pathGlobFilter``), so a frame build lists one
     root per (repo, <ts>) instead of one per run file. While there are
     at most 32 roots (the default
@@ -96,8 +98,8 @@ def _read_runs(spark: SparkSession, workflows_dir: pathlib.Path, ts: str) -> Dat
     parallel again: one job per frame build, one task per directory
     rather than one per file.
     """
-    roots = str(workflows_dir / "*" / ts / "runs")
-    if not glob.glob(roots):
+    roots = sorted(glob.glob(str(workflows_dir / "*" / ts / "runs")))
+    if not roots:
         # Build from a COPY of the fields: StructType.add mutates in
         # place and would permanently pollute the module-level schema.
         empty_schema = T.StructType(

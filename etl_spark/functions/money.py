@@ -46,18 +46,3 @@ def davg(col: Column, alias: str) -> Column:
     engines, unlike AVG(double)'s order-dependent accumulation.
     """
     return (F.sum(col).cast("double") / F.count(F.lit(1))).alias(alias)
-
-
-# SQL-side equivalents (DuckDB oracle): keep these textual helpers next
-# to the column builders so the two dialects stay in sync.
-
-def sql_dec(expr: str, precision: int = 14, scale: int = 2) -> str:
-    return f"CAST({expr} AS DECIMAL({precision},{scale}))"
-
-
-def sql_one_minus(expr: str) -> str:
-    return f"(CAST(1 AS DECIMAL(4,2)) - CAST({expr} AS DECIMAL(4,2)))"
-
-
-def sql_one_plus(expr: str) -> str:
-    return f"(CAST(1 AS DECIMAL(4,2)) + CAST({expr} AS DECIMAL(4,2)))"

@@ -8,6 +8,10 @@ from __future__ import annotations
 import datetime
 import json
 import pathlib
+from urllib.parse import urlparse
+
+import pytest
+from pyspark.sql.readwriter import DataFrameReader
 
 from etl_spark.etl.pipeline import (
     export_csv,
@@ -95,6 +99,24 @@ def write_run(root: pathlib.Path, repo: str, ts: str, run: dict) -> None:
     p = root / repo / ts / "runs" / f"{run['id']}.json"
     p.parent.mkdir(parents=True, exist_ok=True)
     p.write_text(json.dumps(run))
+
+
+@pytest.fixture
+def json_roots(monkeypatch):
+    """Every root path handed to ``spark.read.json`` during the test."""
+    seen: list[str] = []
+    real = DataFrameReader.json
+
+    def json_spy(self, path, *args, **kwargs):
+        seen.extend([path] if isinstance(path, str) else path)
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "json", json_spy)
+    return seen
+
+
+def input_paths(df) -> set[str]:
+    return {urlparse(f).path for f in df.inputFiles()}
 
 
 def test_snapshot_latest_wins_on_overlapping_timestamps(spark, tmp_path):
@@ -195,7 +217,7 @@ def test_export_csv_empty_zone_writes_header_only(spark, tmp_path):
     )
 
 
-def test_building_the_runs_frame_runs_no_listing_job(spark, tmp_path):
+def test_building_the_runs_frame_runs_no_listing_job(spark, tmp_path, json_roots):
     # 3 repos x 2 extractions x 6 runs: 36 run files, past Spark's
     # parallel-discovery threshold of 32 roots, in 6 runs directories.
     # File-level roots made every frame build launch a listing job
@@ -214,4 +236,8 @@ def test_building_the_runs_frame_runs_no_listing_job(spark, tmp_path):
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    assert len(runs.inputFiles()) == 36
+    assert input_paths(runs) == {str(p) for p in tmp_path.glob("*/*/runs/*.json")}
+    # The runs directories themselves, not a glob over them: Spark
+    # probes a glob root for streaming-sink metadata and logs a
+    # FileNotFoundException stack trace on every frame build.
+    assert json_roots == sorted(str(p) for p in tmp_path.glob("*/*/runs"))

@@ -6,7 +6,6 @@ bucket partitions the batch touches."""
 from __future__ import annotations
 
 import pathlib
-from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
 
@@ -20,7 +19,7 @@ from etl_spark.etl.merge import (
     read_snapshot_table,
 )
 from etl_spark.etl.pipeline import snapshot_records
-from tests.test_etl_pipeline import make_run, write_run
+from tests.test_etl_pipeline import input_paths, json_roots, make_run, write_run  # noqa: F401
 
 
 def _sorted_rows(df):
@@ -140,7 +139,7 @@ def test_empty_extraction_is_a_noop(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 
-def test_load_extraction_scans_only_its_own_files(spark, tmp_path):
+def test_load_extraction_scans_only_its_own_files(spark, tmp_path, json_roots):
     # The batch side of the merge lists and reads ONE <ts>'s run files:
     # an earlier extraction's files are not in the scan at all (a
     # row filter on the path-derived extract_ts would still read them),
@@ -154,12 +153,10 @@ def test_load_extraction_scans_only_its_own_files(spark, tmp_path):
     write_run(zone, "repo_2", t2, make_run(5, "repo_2"))
     (zone / "repo_1" / t2 / "runs" / "notes.txt").write_text("not a run")
     for ts in (t1, t2):
+        json_roots.clear()
         want = {str(p) for p in zone.glob(f"*/{ts}/runs/*.json")}
-        got = {
-            urlparse(f).path
-            for f in load_extraction(spark, zone, ts).inputFiles()
-        }
-        assert got == want, ts
+        assert input_paths(load_extraction(spark, zone, ts)) == want, ts
+        assert json_roots == sorted(str(p) for p in zone.glob(f"*/{ts}/runs")), ts
 
 
 def test_merge_reads_and_rewrites_only_touched_buckets(spark, tmp_path):

@@ -1,20 +1,15 @@
 #!/usr/bin/env python
 """Full-registry timing sweep (round artifact BENCH_FULL_r{N}.json):
-one timed run of EVERY registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1).
+$BENCH_FULL_REPS (default 2) cold reps of EVERY registered query at
+$SPARK_GRAFT_SF_DIR (default: bench scale, as bench.py), through
+tools/harness.py. The min per query is recorded, every rep is kept in
+"queries_reps". Complements bench.py's frozen HEADLINE set; pair with
+tools/bench_delta.py, which divides out the sweep-wide noise scalar
+before applying the 2x bar. BENCH_FULL_r09 and older kept session
+caches warm across reps; the JSON's "eviction" says which kind a sweep
+is, and only sweeps of the same kind compare.
 
-Complements bench.py: the frozen 25-query HEADLINE set stays the
-cross-round comparable; this sweep makes regressions in the other
-~150 queries visible round-over-round. Two reps per query, min
-recorded (min-of-N is the standard noise estimator for wall-clock on
-a shared host: the min approaches the true cost, the spread measures
-interference) — single-rep sweeps produced false >2x movers that took
-manual cross-window forensics to exonerate (round 5's
-sim_nn_within_label). Both reps are kept in "queries_reps" so the
-delta tool can show the spread; pair with tools/bench_delta.py, which
-divides out the sweep-wide noise scalar before applying the 2x bar.
-
-Usage: python tools/bench_full.py > BENCH_FULL_r06.json
+Usage: python tools/bench_full.py > BENCH_FULL_r12.json
 """
 
 from __future__ import annotations
@@ -22,81 +17,35 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from functools import partial
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from harness import Harness  # puts the checkout root on sys.path
 
-from etl_spark.io import SMOKE_SF_DIR, default_sf_dir
-from etl_spark.operators.caching import evict_session_memos
+from etl_spark.io import default_sf_dir
 from etl_spark.plans import REGISTRY
-from etl_spark.session import get_spark, tune_session
 
 
 def main() -> None:
     sf_dir = default_sf_dir()
-    spark = tune_session(get_spark("etl-spark-bench-full"))
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Same warm-up as bench.py: pay JVM/JIT/Arrow init once, off-clock.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for warm in (
-        "q1_pricing_summary",
-        "window_latest_order_per_customer",
-        "sim_nn_within_label",
-        "dedup_minhash_lsh",
-    ):
-        REGISTRY[warm].builder(spark, SMOKE_SF_DIR).count()
-    spark.catalog.clearCache()
-
     reps_n = int(os.environ.get("BENCH_FULL_REPS", "2"))
-    times: dict[str, float] = {}
-    reps: dict[str, list[float]] = {}
-    failures: dict[str, str] = {}
-    for name in sorted(REGISTRY):
-        rep_times = []
-        rows = None
-        for _rep in range(reps_n):
-            # Session caches (session_cached indexes) persist across
-            # reps on purpose: rep 2 then measures the query, not the
-            # index build — which is also what round-over-round
-            # comparisons want. clearCache between QUERIES would
-            # instead couple each query's time to registry order.
-            # Driver-side Python memos (trained models, centroids,
-            # vtables) are the exception (r11, verdict item 4): they
-            # survive even an external clearCache, so without eviction
-            # a warm rep silently excludes training from the quoted
-            # per-query time. Evict them before EVERY rep — each rep
-            # then pays its query's own training, honestly.
-            evict_session_memos()
-            t0 = time.perf_counter()
-            try:
-                rows = REGISTRY[name].builder(spark, sf_dir).count()
-            except Exception as ex:  # record, keep sweeping
-                failures[name] = f"{type(ex).__name__}: {str(ex)[:200]}"
-                break
-            rep_times.append(round(time.perf_counter() - t0, 3))
-        if not rep_times or name in failures:
-            continue
-        reps[name] = rep_times
-        times[name] = min(rep_times)
-        print(
-            f"# {name}: {rows} rows, reps {rep_times} -> {times[name]}s",
-            file=sys.stderr,
-        )
+    with Harness("etl-spark-bench-full") as h:
+        recs = h.sweep({n: partial(REGISTRY[n].builder, h.spark, sf_dir) for n in sorted(REGISTRY)}, reps_n)
 
-    total = round(sum(times.values()), 3)
-    # Shared host: co-tenant load swings wall times 2-3x, so record the
-    # load average alongside — a sweep at load 15 is not comparable to
-    # one at load 2.
+    failures = {n: r[-1]["error"] for n, r in recs.items() if "error" in r[-1]}
+    reps = {n: [x["s"] for x in r] for n, r in recs.items() if n not in failures}
+    times = {n: min(v) for n, v in reps.items()}
     print(
         json.dumps(
             {
                 "metric": "full_registry_total_wall",
-                "value": total,
+                "value": round(sum(times.values()), 3),
                 "unit": "sec",
                 "n_queries": len(times),
                 "reps_per_query": reps_n,
-                "loadavg_1m_5m_15m": [round(x, 2) for x in os.getloadavg()],
+                # Shared host: co-tenant load swings wall times 2-3x, so
+                # a sweep at load 15 is not comparable to one at load 2.
+                "loadavg_1m_5m_15m": h.context.pop("loadavg"),
+                **h.context,
                 "queries": times,
                 "queries_reps": reps,
                 "failures": failures,

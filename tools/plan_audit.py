@@ -3,15 +3,17 @@ queries at bench scale — the receipts behind the module docstrings'
 plan claims (pushdown, broadcast dims, single-shuffle windows, no
 cartesians, codegen coverage).
 
-Run: python tools/plan_audit.py   (writes /root/repo/PLANS.md)
+Run: python tools/plan_audit.py   (writes PLANS.md at the checkout root)
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from etl_spark.plans import REGISTRY  # noqa: E402
 from etl_spark.session import get_spark, tune_session  # noqa: E402
@@ -446,7 +448,7 @@ def main() -> None:
             "```",
             "",
         ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

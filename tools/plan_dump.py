@@ -12,6 +12,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE  # noqa: E402
 from etl_spark.plans import REGISTRY  # noqa: E402
 from etl_spark.session import get_spark, tune_session  # noqa: E402
 
@@ -21,16 +22,7 @@ OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 
 # Headline set + the slowest full-sweep queries (r9 BENCH_FULL minimums).
 DEFAULT = [
-    "q1_pricing_summary", "q6_forecast_revenue", "scan_filter_project",
-    "join_inner_orders_customer", "join_left_customer_orders",
-    "join_broadcast_geo_rollup", "agg_distinct_priority", "agg_rollup_orders",
-    "top_k_orders", "window_latest_order_per_customer", "window_running_spend",
-    "events_tumbling_hourly", "events_sessionize", "text_top_terms",
-    "text_token_stats", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_jaccard_pairs", "sim_topk_cosine", "sim_nn_within_label",
-    "events_asof_click_before_error", "pivot_user_event_counts",
-    "sql_q3_shipping_priority", "window_rolling_30d_spend", "text_langid_ngram",
-    # full-sweep heavy hitters
+    *HEADLINE,
     "ml_kmeans_lloyd", "ml_logreg_train", "dedup_prefix_filter_pairs",
     "sim_knn_join", "mm_phash_clusters", "graph_dup_triangles",
     "customer_rfm_segments", "dedup_minhash_error", "dedup_clusters",

@@ -17,54 +17,50 @@ Corpus: sf0.1 embeddings (2,000 uniform-random vectors — PQ's worst
 case; KS=256 needs >= 256 seed vectors, which sf0.001's 500 provide
 only thinly, so the bench-scale table is used).
 
+The encode is timed through tools/harness.py: min of ENCODE_REPS reps
+per codebook size, the sizes' order reversed between reps.
+
 Usage: python tools/pq_sizing_probe.py   (prints a markdown table)
 """
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
-import sys
-import time
+from functools import partial
 
 import numpy as np
+from harness import ROOT, Harness, best  # puts the checkout root on sys.path
+from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from etl_spark.io import load
+from etl_spark.plans.llm_similarity import DIM, PQ_M, quantize
 
-_SPEC = importlib.util.spec_from_file_location(
-    "test_ivfpq",
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "tests",
-        "test_ivfpq.py",
-    ),
-)
+_SPEC = importlib.util.spec_from_file_location("test_ivfpq", ROOT / "tests" / "test_ivfpq.py")
 tiv = importlib.util.module_from_spec(_SPEC)
 _SPEC.loader.exec_module(tiv)
-
-from etl_spark.io import load  # noqa: E402
-from etl_spark.plans.llm_similarity import DIM, PQ_M, quantize  # noqa: E402
-from etl_spark.session import get_spark, tune_session  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
 
 SF_DIR = os.environ.get("PROBE_SF_DIR", "/root/testdata/sf0.1")
 KS_SWEEP = (16, 64, 256)
 ENCODE_REPS = 3
 
 
-def main() -> None:
-    spark = tune_session(get_spark("pq-sizing-probe"))
-    spark.sparkContext.setLogLevel("ERROR")
-    rows = (
-        load(spark, SF_DIR, "embeddings")
-        .select("vec_id", quantize(F.col("embedding")).alias("q"))
-        .orderBy("vec_id")
-        .collect()
-    )
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    V = np.array([r["q"] for r in rows], dtype=np.int64)
-    spark.stop()
+def replay(ids, V, ks):
+    tiv.PQ_KS = ks  # _replay reads the module global
+    return tiv._replay(ids, V)
 
+
+def main() -> None:
+    with Harness("pq-sizing-probe") as h:
+        emb = load(h.spark, SF_DIR, "embeddings").select("vec_id", quantize(F.col("embedding")).alias("q"))
+        rows = emb.orderBy("vec_id").collect()
+        ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+        V = np.array([r["q"] for r in rows], dtype=np.int64)
+        recs = h.sweep({str(ks): partial(replay, ids, V, ks) for ks in KS_SWEEP}, ENCODE_REPS, action=lambda out: out)
+    times = best(recs)
+
+    print(f"context: {json.dumps(h.context)}")
     print(f"corpus: {len(ids)} vectors ({SF_DIR}), PQ_M={PQ_M}, "
           f"queries {tiv.PQ_QUERY_LO}..{tiv.PQ_QUERY_HI - 1}, "
           f"recall@{tiv.PQ_TOPK} vs global brute force, "
@@ -73,23 +69,12 @@ def main() -> None:
           f"(min of {ENCODE_REPS}) | code bits/vec | codebook ints |")
     print("|---|---|---|---|---|---|")
     for ks in KS_SWEEP:
-        tiv.PQ_KS = ks  # _replay reads the module global
-        best = None
-        for _ in range(ENCODE_REPS):
-            t0 = time.perf_counter()
-            cls, cents, CB, codes = tiv._replay(ids, V)
-            el = time.perf_counter() - t0
-            best = el if best is None else min(best, el)
-        raw, _ = tiv._recall_curve(
-            ids, V, cls, cents, CB, codes, tiv.N_PROBE
-        )
-        rer, _ = tiv._recall_curve(
-            ids, V, cls, cents, CB, codes, tiv.N_PROBE,
-            rerank=5 * tiv.PQ_TOPK,
-        )
+        cls, cents, CB, codes = recs[str(ks)][-1]["out"]
+        raw, _ = tiv._recall_curve(ids, V, cls, cents, CB, codes, tiv.N_PROBE)
+        rer, _ = tiv._recall_curve(ids, V, cls, cents, CB, codes, tiv.N_PROBE, rerank=5 * tiv.PQ_TOPK)
         bits = PQ_M * int(np.ceil(np.log2(ks)))
         print(
-            f"| {ks} | {raw:.3f} | {rer:.3f} | {best:.2f} s "
+            f"| {ks} | {raw:.3f} | {rer:.3f} | {times[str(ks)]:.2f} s "
             f"| {bits} (vs {DIM * 32} raw) | {ks * DIM} |"
         )
 

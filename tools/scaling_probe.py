@@ -5,19 +5,18 @@ QUERY? A plan that is ~flat from sf0.001 to sf0.01 and grows ~linearly
 by sf0.1 is scheduling-overhead-bound locally and data-bound at scale
 — the desired profile. Superlinear growth is the red flag.
 
-Run: python tools/scaling_probe.py   (writes /root/repo/SCALING.md)
+Run: python tools/scaling_probe.py   (rewrites SCALING.md's table at
+the checkout root, through tools/harness.py)
 """
 
 from __future__ import annotations
 
-import sys
-import time
+import json
+from functools import partial
 
-sys.path.insert(0, "/root/repo")
+from harness import ROOT, Harness, best  # puts the checkout root on sys.path
 
-from etl_spark.operators.caching import evict, evict_session_memos  # noqa: E402
-from etl_spark.plans import REGISTRY  # noqa: E402
-from etl_spark.session import get_spark, tune_session  # noqa: E402
+from etl_spark.plans import REGISTRY
 
 SFS = [
     ("sf0.001", "/root/testdata/sf0.001"),
@@ -59,67 +58,17 @@ MANUAL_TAIL_MARKER = "## Another decade up"
 REPS = 3
 
 
-def _evict(spark) -> None:
-    """Cold caches for every rep: the catalog cache, the session
-    registry, and the memos (trained models, centroids, tables) that
-    survive clearCache — the same eviction as perfbench/run.py."""
-    spark.catalog.clearCache()
-    evict()
-    evict_session_memos()
+def ladder(app: str, names: list[str], sfs: list[tuple[str, str]], reps: int) -> tuple[dict, dict]:
+    """The run context, and query -> (min cold seconds, rows) per sf."""
+    with Harness(app) as h:
+        recs = h.sweep({f"{n}@{sf}": partial(REGISTRY[n].builder, h.spark, d) for n in names for sf, d in sfs}, reps)
+    times = best(recs)
+    return h.context, {n: [(times[f"{n}@{sf}"], recs[f"{n}@{sf}"][-1]["out"]) for sf, _ in sfs] for n in names}
 
 
 def main() -> None:
-    spark = tune_session(get_spark("scaling-probe"))
-    spark.sparkContext.setLogLevel("ERROR")
-    # JIT warm-up on the smallest sf so sf0.001 isn't charged for it.
-    for name, _ in PROBES:
-        REGISTRY[name].builder(spark, SFS[0][1]).count()
-    _evict(spark)
-
-    results: dict[str, list[float]] = {}
-    for name, _ in PROBES:
-        times = []
-        for _, sf_dir in SFS:
-            best = None
-            for _ in range(REPS):
-                _evict(spark)
-                t0 = time.perf_counter()
-                REGISTRY[name].builder(spark, sf_dir).count()
-                el = time.perf_counter() - t0
-                best = el if best is None else min(best, el)
-            times.append(best)
-        results[name] = times
-        print(name, [f"{t:.2f}" for t in times])
-
-    out = [
-        "# SCALING — wall time across a 100x data span",
-        "",
-        "Generated by `tools/scaling_probe.py` (min of 3 reps per cell,",
-        "cold caches, local[32]). Reading guide: sf0.001 ~ pure Spark",
-        "job overhead (6k lineitem rows); growth from sf0.01 -> sf0.1",
-        "(10x data) approximates the data-bound slope that would carry",
-        "to cluster scale. A 10x-data / <<10x-time ratio means the",
-        "local numbers are overhead-dominated and the plan's scale",
-        "behavior is governed by its shuffle structure (see PLANS.md),",
-        "not these absolute times.",
-        "",
-        "| query | role | sf0.001 | sf0.01 | sf0.1 | 10x-data slope |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, role in PROBES:
-        a, b, c = results[name]
-        slope = c / b if b > 0 else float("nan")
-        out.append(
-            f"| {name} | {role} | {a:.2f} s | {b:.2f} s | {c:.2f} s "
-            f"| {slope:.1f}x |"
-        )
-    out.append("")
-    # The slope-reading guidance lives in the hand-maintained
-    # "## Reading the three-SF table" section carried forward below.
-    # Preserve the hand-maintained evidence sections (decade-up bench,
-    # skew receipts, heap bisect) that live below the generated table.
-    with open("/root/repo/SCALING.md") as f:
-        old = f.read()
+    path = ROOT / "SCALING.md"
+    old = path.read_text()
     idx = old.find(MANUAL_TAIL_MARKER)
     if idx < 0:
         # Refuse to regenerate rather than silently destroy the
@@ -128,9 +77,37 @@ def main() -> None:
             f"SCALING.md lacks the marker {MANUAL_TAIL_MARKER!r}; "
             "restore it (or the manual tail) before regenerating"
         )
+    context, cells = ladder("scaling-probe", [name for name, _ in PROBES], SFS, REPS)
+    out = [
+        "# SCALING — wall time across a 100x data span",
+        "",
+        "Generated by `tools/scaling_probe.py` (min of 3 cold reps per",
+        "cell, the cells' order reversed between reps, local[cpus] as in",
+        "the run context below). Reading guide: sf0.001 ~ pure Spark",
+        "job overhead (6k lineitem rows); growth from sf0.01 -> sf0.1",
+        "(10x data) approximates the data-bound slope that would carry",
+        "to cluster scale. A 10x-data / <<10x-time ratio means the",
+        "local numbers are overhead-dominated and the plan's scale",
+        "behavior is governed by its shuffle structure (see PLANS.md),",
+        "not these absolute times.",
+        "",
+        f"Run context: `{json.dumps(context)}`",
+        "",
+        "| query | role | sf0.001 | sf0.01 | sf0.1 | 10x-data slope |",
+        "|---|---|---|---|---|---|",
+    ]
+    for name, role in PROBES:
+        (a, _), (b, _), (c, _) = cells[name]
+        slope = c / b if b > 0 else float("nan")
+        out.append(
+            f"| {name} | {role} | {a:.2f} s | {b:.2f} s | {c:.2f} s "
+            f"| {slope:.1f}x |"
+        )
+    out.append("")
+    # The slope-reading guidance lives in the hand-maintained
+    # "## Reading the three-SF table" section carried forward below.
     out.append(old[idx:])
-    with open("/root/repo/SCALING.md", "w") as f:
-        f.write("\n".join(out))
+    path.write_text("\n".join(out))
     print("wrote SCALING.md")
 
 

@@ -14,10 +14,9 @@ plans make ("collapse first, pair second"). A query whose time grows
 FASTER than its corpus-proportional phase predicts is the red flag
 this probe exists to catch.
 
-Prints a markdown table (pasted into SCALING.md's decade section)
-plus per-sf result row counts; min-of-REPS per cell; loadavg
-recorded. Session caches are evicted between scale factors so an
-index built for one corpus can never serve another.
+Prints the run context and a markdown table (pasted into SCALING.md's
+decade section) with per-sf result row counts: min of $PROBE_REPS
+(default 2) cold reps per cell, through tools/harness.py.
 
 Usage: [SPARK_DRIVER_MEMORY=16g] python tools/scaling_probe_big.py \
            [query ...]          (default: the full superlinear list)
@@ -25,15 +24,13 @@ Usage: [SPARK_DRIVER_MEMORY=16g] python tools/scaling_probe_big.py \
 
 from __future__ import annotations
 
+import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from scaling_probe import ladder  # puts the checkout root on sys.path
 
-from etl_spark.operators.caching import evict  # noqa: E402
-from etl_spark.plans import REGISTRY  # noqa: E402
-from etl_spark.session import get_spark, tune_session  # noqa: E402
+from etl_spark.plans import REGISTRY
 
 SFS = [
     ("sf0.1", "/root/testdata/sf0.1"),
@@ -103,41 +100,16 @@ def main() -> None:
     for sf, d in SFS:
         if not os.path.exists(os.path.join(d, "_DONE")) and "testdata" not in d:
             raise SystemExit(f"{sf} corpus missing at {d} (run make_sfbig)")
-    spark = tune_session(get_spark("scaling-probe-big"))
-    spark.sparkContext.setLogLevel("ERROR")
-    # Warm-up at the smallest scale so sf0.1 isn't charged JIT cost.
-    for name in probes:
-        REGISTRY[name].builder(spark, SFS[0][1]).count()
-
-    times: dict[str, list[float]] = {n: [] for n in probes}
-    rows: dict[str, list[int]] = {n: [] for n in probes}
-    for sf, sf_dir in SFS:
-        evict()  # no index built for another corpus may survive
-        spark.catalog.clearCache()
-        for name in probes:
-            best, n = None, 0
-            for _ in range(REPS):
-                t0 = time.perf_counter()
-                n = REGISTRY[name].builder(spark, sf_dir).count()
-                el = time.perf_counter() - t0
-                best = el if best is None else min(best, el)
-            times[name].append(best)
-            rows[name].append(n)
-            print(f"# {sf} {name}: {n} rows, {best:.2f}s", file=sys.stderr)
-
-    print(f"loadavg: {[round(x, 2) for x in os.getloadavg()]}")
+    context, cells = ladder("scaling-probe-big", probes, SFS, REPS)
+    print(f"context: {json.dumps(context)}")
     print(f"reps: {REPS} (min recorded)\n")
     l0, l1, l2 = (sf for sf, _ in SFS)
     print(f"| query | {l0} | {l1} | {l2} | slope {l0}->{l1} "
           f"| slope {l1}->{l2} | rows {l0}/{l1}/{l2} |")
     print("|---|---|---|---|---|---|---|")
     for name in probes:
-        a, b, c = times[name]
-        print(
-            f"| {name} | {a:.2f} s | {b:.2f} s | {c:.2f} s "
-            f"| {b / a:.1f}x | {c / b:.1f}x "
-            f"| {rows[name][0]}/{rows[name][1]}/{rows[name][2]} |"
-        )
+        (a, ra), (b, rb), (c, rc) = cells[name]
+        print(f"| {name} | {a:.2f} s | {b:.2f} s | {c:.2f} s | {b / a:.1f}x | {c / b:.1f}x | {ra}/{rb}/{rc} |")
 
 
 if __name__ == "__main__":

@@ -23,33 +23,26 @@ Constraint levers (all session-creatable, no JVM restart games):
 
 Usage: python tools/spill_probe.py [sf_dir] [fraction] [partitions] [q ...]
        (defaults /tmp/sf1 0.1 4 and the five heaviest queries)
-Writes one line per query: rows, wall, spill bytes (memory/disk),
-and the join operators seen in the executed plan.
+Runs one cold, traced rep per query through tools/harness.py, on a 1g
+heap and $SPARK_GRAFT_CPUS task slots (heap and fraction are passed
+from outside, in PYSPARK_SUBMIT_ARGS). Writes one line per query:
+rows, wall, spill bytes (memory + disk, from the Spark event log) and
+the join operators of the executed plan; then one JSON summary line.
 
-Measured finding (sf1, fraction=0.1, partitions=4): the failure mode
-under EXTREME starvation is not the sort — it is the spill MERGE:
-UnsafeExternalSorter.getSortedIterator opens every spill segment's
-reader at once, each with a >=1 MiB unmanaged heap buffer (the conf
-floor of spark.unsafe.sorter.spill.reader.buffer.size), so hundreds
-of segments x 8 concurrent tasks exhaust the heap OUTSIDE the managed
-pool. The operative lever under AQE is
-spark.sql.adaptive.advisoryPartitionSizeInBytes, NOT the raw
-partition count — raising partitions to 32 alone still OOMs because
-AQE coalesces the shuffle back to its 64 MiB advisory; advisory=8m
-(sized to the starved pool) completes with plain disk spill and
-identical output. See SCALING.md 'Memory-pressure receipts'.
+The measured tiers, and why the operative lever under starvation is
+spark.sql.adaptive.advisoryPartitionSizeInBytes rather than the raw
+partition count: SCALING.md 'Memory-pressure receipts'.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import sys
-import time
+from functools import partial
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from harness import Harness  # puts the checkout root on sys.path
 
-from pyspark.sql import SparkSession  # noqa: E402
+from etl_spark.plans import REGISTRY
 
 QUERIES = [
     "dedup_prefix_filter_pairs",
@@ -58,24 +51,14 @@ QUERIES = [
     "dedup_clusters",
     "pipeline_ingest_triad",
 ]
+JOINS = ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin", "BroadcastNestedLoopJoin", "CartesianProduct")
 
 
-def stage_spill_totals(spark) -> tuple[int, int]:
-    """Cumulative (memoryBytesSpilled, diskBytesSpilled) across all
-    stages, via the UI's REST API (the stable public surface for
-    stage metrics; AppStatusStore's py4j signature is not callable
-    from Python)."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{app_id}/stages", timeout=30
-    ) as r:
-        stages = json.load(r)
-    mem = sum(s.get("memoryBytesSpilled", 0) for s in stages)
-    disk = sum(s.get("diskBytesSpilled", 0) for s in stages)
-    return mem, disk
+def count_and_joins(df) -> tuple[int, list[str]]:
+    """The row count, and the join operators of the executed plan."""
+    rows = df.count()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return rows, [op for op in JOINS if op in plan]
 
 
 def main() -> None:
@@ -83,76 +66,38 @@ def main() -> None:
     fraction = sys.argv[2] if len(sys.argv) > 2 else "0.1"
     partitions = sys.argv[3] if len(sys.argv) > 3 else "4"
     queries = sys.argv[4:] or QUERIES
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", partitions)
-        .config("spark.memory.fraction", fraction)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "true")  # REST API = metric source
-        .config("spark.ui.port", "4059")
-        .appName("spill-probe")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from etl_spark.plans import REGISTRY
-    from etl_spark.session import tune_session
-
-    tune_session(spark)
-    # tune_session may raise shuffle partitions back to bench size —
-    # re-floor AFTER it so the constraint actually holds
-    spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    # The 1g heap is the probe's fixed executor size: the pool the
+    # fraction cuts is a share of it.
+    confs = {"spark.driver.memory": "1g", "spark.memory.fraction": fraction}
+    with Harness("spill-probe", trace=True, confs=confs) as h:
+        # get_spark sizes shuffle partitions to the cores; the
+        # constraint is set after it so that it holds.
+        h.spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        recs = h.sweep({q: partial(REGISTRY[q].builder, h.spark, sf) for q in queries}, 1, count_and_joins)
 
     results = {}
-    for name in queries:
-        m0, d0 = stage_spill_totals(spark)
-        t0 = time.time()
-        df = REGISTRY[name].builder(spark, sf)
-        rows = df.count()
-        wall = time.time() - t0
-        m1, d1 = stage_spill_totals(spark)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        joins = sorted(
-            {
-                op
-                for op in (
-                    "SortMergeJoin",
-                    "ShuffledHashJoin",
-                    "BroadcastHashJoin",
-                    "BroadcastNestedLoopJoin",
-                    "CartesianProduct",
-                )
-                if op in plan
-            }
-        )
-        results[name] = {
-            "rows": rows,
-            "wall_sec": round(wall, 2),
-            "memory_spill_bytes": m1 - m0,
-            "disk_spill_bytes": d1 - d0,
-            "joins": joins,
-        }
-        print(
-            f"{name}: rows={rows} wall={wall:.1f}s "
-            f"mem_spill={(m1 - m0) / 1e6:.1f}MB "
-            f"disk_spill={(d1 - d0) / 1e6:.1f}MB joins={joins}",
-            flush=True,
-        )
-    total_mem = sum(r["memory_spill_bytes"] for r in results.values())
-    total_disk = sum(r["disk_spill_bytes"] for r in results.values())
+    for name, (rec,) in recs.items():
+        if "error" in rec:
+            results[name] = {"error": rec["error"]}
+            print(f"{name}: FAILED {rec['error']}", flush=True)
+            continue
+        (rows, joins), spill = rec["out"], rec["spill_bytes"]
+        results[name] = {"rows": rows, "wall_sec": round(rec["s"], 2), "spill_bytes": spill, "joins": joins}
+        print(f"{name}: rows={rows} wall={rec['s']:.1f}s spill={spill / 1e6:.1f}MB joins={joins}", flush=True)
     print(
         json.dumps(
             {
+                **h.context,
                 "sf": sf,
                 "memory_fraction": float(fraction),
                 "shuffle_partitions": int(partitions),
-                "total_memory_spill_bytes": total_mem,
-                "total_disk_spill_bytes": total_disk,
+                "total_spill_bytes": sum(r.get("spill_bytes", 0) for r in results.values()),
                 "queries": results,
             }
         )
     )
-    spark.stop()
+    if any("error" in r for r in results.values()):
+        sys.exit(1)
 
 
 if __name__ == "__main__":
