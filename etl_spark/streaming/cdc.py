@@ -6,79 +6,48 @@ reference main.py:149-157) but cannot REMOVE a key: real changelogs
 (Debezium, Delta CDF) carry DELETE tombstones, and a consumer must
 keep tombstones in state — dropping a key on delete would let a
 late/redelivered stale upsert resurrect it incorrectly. This operator
-keeps (newest row, is-tombstone) per key and emits every touched key's
-current (row, op) so a downstream sink can upsert op='U' rows and
-delete op='D' keys.
+keeps each key's newest (row, op) as a built-in streaming aggregate,
+``max(struct(ts_us, event_id, value, op))``, and emits every touched
+key's current (row, op) so a downstream sink can upsert op='U' rows
+and delete op='D' keys.
 
-Tiebreak contract matches the batch form exactly: later ts wins, equal
-ts → higher event_id wins; redelivery of an already-applied row is a
-no-op (state compare is deterministic, not arrival-order).
-State is O(1) per key; tombstones stay in state (compaction/TTL is a
-separate retention policy, as in the batch twin's docstring).
+Tiebreak contract matches the batch form exactly: the struct compares
+later ts first, then higher event_id, so equal ts → higher event_id
+wins; redelivery of an already-applied row is a no-op (max is
+deterministic, not arrival-order). ``value`` passes through
+untouched, NaN and null included, as in the batch form. State is O(1)
+per key; tombstones stay in state (compaction/TTL is a separate
+retention policy, as in the batch twin's docstring).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
-
-OUTPUT_SCHEMA = (
-    "user_id bigint, event_id bigint, ts_us bigint, event_ts string,"
-    " value double, op string"
-)
-STATE_SCHEMA = "ts_us bigint, event_id bigint, value double, deleted boolean"
 
 
 def cdc_apply_stream(changelog: DataFrame) -> DataFrame:
     """Maintain per-user latest (row, op) over a changelog stream with
-    columns (user_id, event_id, ts, value, op) where op ∈ {'U','D'}."""
-
-    def update(key, pdf_iter, state):
-        # Self-contained closure (workers may lack repo on PYTHONPATH).
-        import pandas as pd
-
-        if state.exists:
-            best_us, best_id, best_val, deleted = state.get
-        else:
-            best_us, best_id, best_val, deleted = -1, -1, None, False
-        touched = False
-        for pdf in pdf_iter:
-            for ts, eid, val, op in zip(
-                pdf["ts"], pdf["event_id"], pdf["value"], pdf["op"]
-            ):
-                touched = True
-                us = ts.value // 1000
-                if us > best_us or (us == best_us and eid > best_id):
-                    best_us, best_id = int(us), int(eid)
-                    best_val = None if val != val else float(val)
-                    deleted = op == "D"
-        if not touched:
-            return
-        state.update((best_us, best_id, best_val, bool(deleted)))
-        # ts_us carries FULL microsecond precision downstream: the
-        # table sink tiebreaks on it, so its ordering must be exactly
-        # the ordering this state compare used. event_ts (seconds) is
-        # display parity with the batch query only — never compare it.
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "event_id": [best_id],
-                "ts_us": [best_us],
-                "event_ts": [
-                    pd.Timestamp(best_us * 1000).strftime("%Y-%m-%d %H:%M:%S")
-                ],
-                "value": [best_val],
-                "op": ["D" if deleted else "U"],
-            }
+    columns (user_id, event_id, ts, value, op) where op ∈ {'U','D'}.
+    Output: (user_id, event_id, ts_us, event_ts, value, op)."""
+    newest = F.max(
+        F.struct(
+            F.unix_micros("ts").alias("ts_us"), "event_id", "value", "op"
         )
-
-    return changelog.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    ).alias("w")
+    # ts_us carries FULL microsecond precision downstream: the table
+    # sink tiebreaks on it, so its ordering must be exactly the
+    # ordering the aggregate used. event_ts (seconds, session time
+    # zone) is display parity with the batch query only — never
+    # compare it.
+    return changelog.groupBy("user_id").agg(newest).select(
+        "user_id",
+        "w.event_id",
+        "w.ts_us",
+        F.date_format(F.timestamp_micros("w.ts_us"), "yyyy-MM-dd HH:mm:ss")
+        .alias("event_ts"),
+        "w.value",
+        "w.op",
     )
 
 

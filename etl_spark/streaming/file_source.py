@@ -11,15 +11,17 @@ discovers new extraction files as they land (checkpointed file index —
 each file is processed exactly once), recovers the partition columns
 from ``_metadata.file_path`` (the streaming-safe analog of
 ``input_file_name``), and maintains each (repo_dir, file_id) key's
-newest observation in the state store via applyInPandasWithState —
-O(1) state per run, O(new files) work per trigger, instead of
-O(whole zone) per re-run.
+newest observation as a built-in streaming aggregate,
+``max(struct(extract_ts, id, repo, ...))`` — O(1) state per run,
+O(new files) work per trigger, instead of O(whole zone) per re-run.
 
 Winner contract is EXACTLY the batch window's (etl/pipeline.py
 snapshot_latest): highest extract_ts wins; the <ts> strings are
 fixed-width UTC so lexicographic max == chronological max, and one
-(repo_dir, extract_ts, file_id) path exists at most once so no
-further tiebreak is needed. Parity with the batch form on the
+(repo_dir, extract_ts, file_id) path exists at most once, so the
+struct's first field alone decides the max. Field values and types
+pass through as the batch read gives them (a run file without ``id``
+yields a null bigint). Parity with the batch form on the
 overlapping-timestamp golden is pinned row-for-row in
 tests/test_streaming_file_source.py.
 
@@ -38,27 +40,8 @@ import pathlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from etl_spark.etl.pipeline import _PATH_RE, RUN_SCHEMA
-
-# to_records' column order with the dedup key first: the state carries
-# everything except the (repo_dir, file_id) grouping key.
-SNAPSHOT_SCHEMA = (
-    "repo_dir string, file_id string, extract_ts string, id bigint,"
-    " repo string, name string, head_sha string, status string,"
-    " conclusion string, created_at string, updated_at string,"
-    " run_started_at string"
-)
-_STATE_FIELDS = (
-    "extract_ts", "id", "repo", "name", "head_sha", "status",
-    "conclusion", "created_at", "updated_at", "run_started_at",
-)
-STATE_SCHEMA = (
-    "extract_ts string, id bigint, repo string, name string,"
-    " head_sha string, status string, conclusion string,"
-    " created_at string, updated_at string, run_started_at string"
-)
 
 
 def stream_workflow_runs(
@@ -92,64 +75,25 @@ def snapshot_latest_stream(runs: DataFrame) -> DataFrame:
     per (repo_dir, file_id), updated as extraction files arrive.
     Update-mode emission — every batch that touches a key emits the
     key's current winner; the last emission per key IS the snapshot.
+    Output columns: repo_dir, file_id, extract_ts, then to_records'
+    run fields (id, repo, name, ..., run_started_at).
     """
-    flat = runs.select(
-        "repo_dir",
-        "file_id",
-        "extract_ts",
-        "id",
-        F.col("repository.name").alias("repo"),
-        "name",
-        "head_sha",
-        "status",
-        "conclusion",
-        "created_at",
-        "updated_at",
-        "run_started_at",
-    )
-    state_fields = _STATE_FIELDS
-
-    def update(key, pdf_iter, state):
-        # Self-contained closure (workers may lack repo on PYTHONPATH).
-        import pandas as pd
-
-        best = list(state.get) if state.exists else None
-        touched = False
-        for pdf in pdf_iter:
-            for row in pdf.itertuples(index=False):
-                touched = True
-                cand = [
-                    None if v != v else v  # NaN (missing JSON field) -> null
-                    for v in (
-                        row.extract_ts, row.id, row.repo, row.name,
-                        row.head_sha, row.status, row.conclusion,
-                        row.created_at, row.updated_at, row.run_started_at,
-                    )
-                ]
-                # If ANY row in the batch lacked `id`, pandas coerced
-                # the whole int column to float64 — so a present id
-                # reaches here as e.g. 123.0, which mis-types at the
-                # Arrow state-serialization boundary (state schema says
-                # bigint). Restore the integer before it touches state.
-                if cand[1] is not None:
-                    cand[1] = int(cand[1])
-                # Fixed-width UTC <ts>: string max == chronological max.
-                if best is None or cand[0] > best[0]:
-                    best = cand
-        if not touched:
-            return
-        state.update(tuple(best))
-        out = {"repo_dir": [key[0]], "file_id": [key[1]]}
-        for name, val in zip(state_fields, best):
-            out[name] = [val]
-        yield pd.DataFrame(out)
-
-    return flat.groupBy("repo_dir", "file_id").applyInPandasWithState(
-        update,
-        outputStructType=SNAPSHOT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    newest = F.max(
+        F.struct(
+            "extract_ts",
+            "id",
+            F.col("repository.name").alias("repo"),
+            "name",
+            "head_sha",
+            "status",
+            "conclusion",
+            "created_at",
+            "updated_at",
+            "run_started_at",
+        )
+    ).alias("w")
+    return runs.groupBy("repo_dir", "file_id").agg(newest).select(
+        "repo_dir", "file_id", "w.*"
     )
 
 

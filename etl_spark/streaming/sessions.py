@@ -4,14 +4,22 @@ across micro-batches via applyInPandasWithState.
 The batch form (``events_sessionize``, plans/events.py) is a
 gaps-and-islands window over the complete history; the streaming form
 keeps one open session per user in the state store and emits a session
-snapshot whenever it advances — the custom-stateful shape that
-built-in ``session_window`` aggregation generalizes from.
+snapshot whenever it advances.
+
+This module is the engine's one Python state machine outside
+``latest_wins.py``; every other streaming operator is a built-in
+aggregate. Built-in ``session_window`` aggregation does not fit either
+emission contract here: Spark rejects update mode for a streaming
+session window, so it cannot emit the open-session snapshots
+``sessionize_stream`` promises, and in append mode it emits a session
+only once the watermark passes its end, with nothing to say whether a
+gap or the idle timeout closed it (``closed_by``).
 
 State per user is O(1): (session_start_us, last_ts_us, n_events).
 Emission is update-mode: every batch that touches a user emits that
 user's CURRENT session row (plus any sessions the batch closed), so
 the latest snapshot per (user, session_start) is the session's final
-form — the same convergence contract as streaming/stateful.py.
+form.
 
 Ordering contract: events must arrive non-decreasing in event time per
 user ACROSS batches (in-batch disorder is fine — each batch sorts).
@@ -20,6 +28,15 @@ watermark-ordered upstream; the production hardening (buffering
 out-of-order rows in state until the watermark passes, with an
 event-time timeout to flush idle users) hangs off the same state
 machine and is orthogonal to the session logic tested here.
+
+API choice note: Spark 4 also ships the successor API
+``transformWithStateInPandas`` (StatefulProcessor + RocksDB store,
+composite/TTL state, timers). Its Python state-server protocol
+imports ``google.protobuf``, which the pinned runtime does not ship
+(the worker crashes with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE
+on import), so the
+session operators stand on ``applyInPandasWithState`` — same state
+semantics for these single-value-state shapes, no extra dependency.
 """
 
 from __future__ import annotations

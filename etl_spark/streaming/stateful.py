@@ -1,52 +1,26 @@
-"""Custom stateful streaming operator: running per-user counters via
-applyInPandasWithState.
+"""Running per-user counters across micro-batches as a built-in
+streaming aggregate.
 
-This is the escape hatch for stateful logic that windowed aggregation
-can't express (custom accumulators, decaying counters, per-entity
-session machines). State is partitioned by the grouping key and lives
-in the state store — at scale the concerns are: state size per key is
-O(1) here (two longs), the store is checkpointed per micro-batch, and
-a timeout policy (not needed for this demo) bounds idle-key retention.
-
-API choice note: Spark 4 also ships the successor API
-``transformWithStateInPandas`` (StatefulProcessor + RocksDB store,
-composite/TTL state, timers). Verified unavailable HERE: its Python
-state-server protocol imports ``google.protobuf``, which is not in
-this container (the worker crashes with
-STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE on import), so the
-stateful operators stand on ``applyInPandasWithState`` — same state
-semantics for these single-value-state shapes, no extra dependency.
+``groupBy("user_id").agg(count, sum)`` keeps (count, sum) per user in
+the state store — O(1) per key, checkpointed per micro-batch — and in
+update mode emits every touched user's running totals. The streaming
+aggregate runs the same ``count``/``sum`` as the batch ground truth,
+so NaN and null values fold exactly as they do in batch: a NaN makes
+the sum NaN, and a user whose values are all null sums to null.
+Custom state that no built-in aggregate expresses (per-entity session
+machines) lives in ``sessions.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-STATE_SCHEMA = "n bigint, total double"
+from pyspark.sql import functions as F
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:
-    """Per-user running (count, sum(value)) maintained across batches."""
-
-    def update(key, pdf_iter, state):
-        # Self-contained closure (workers may lack repo on PYTHONPATH).
-        import pandas as pd
-
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdf_iter:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    """Per-user running (count, sum(value)) maintained across batches.
+    Output: (user_id, n_events, total_value)."""
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("value").alias("total_value"),
     )

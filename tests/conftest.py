@@ -6,6 +6,7 @@ import duckdb
 import pytest
 
 from etl_spark.io import TABLES
+from etl_spark.operators.caching import evict
 from etl_spark.session import get_spark, tune_session
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -15,6 +16,9 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     s = tune_session(get_spark("etl-spark-tests"))
     yield s
+    # release every session memo, so the versioned-table directories
+    # the run built do not outlive it in the temp dir
+    evict()
 
 
 @pytest.fixture(scope="session")

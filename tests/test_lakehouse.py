@@ -345,6 +345,8 @@ def test_vtable_rebuild_never_deletes_a_live_readers_files(spark):
     frame still references, failing its jobs mid-read. Each build now
     gets a fresh unique directory: evict, rebuild, then collect the
     OLD frame — it must still read its own files."""
+    import shutil
+
     from etl_spark.etl.versioned import read_versioned_table
     from etl_spark.operators.caching import _REGISTRY
     from etl_spark.plans.lakehouse import _built_vtable
@@ -357,9 +359,14 @@ def test_vtable_rebuild_never_deletes_a_live_readers_files(spark):
     # simulate the memo bound dropping the entry (which never runs its
     # release) / xdist churn
     _REGISTRY["lakehouse_vtable"].clear()
-    t2 = _built_vtable(spark, SF_DIR)
-    assert t2 != t1, "rebuild must land in a fresh directory"
+    try:
+        t2 = _built_vtable(spark, SF_DIR)
+        assert t2 != t1, "rebuild must land in a fresh directory"
 
-    # the old lazy frame still reads — its files were not rmtree'd
-    assert old_frame.count() == n_before
-    assert read_versioned_table(spark, t2).count() == n_before
+        # the old lazy frame still reads — its files were not rmtree'd
+        assert old_frame.count() == n_before
+        assert read_versioned_table(spark, t2).count() == n_before
+    finally:
+        # a dropped entry is never released by design: remove its
+        # directory here so the test leaves nothing in the temp dir
+        shutil.rmtree(t1)

@@ -86,6 +86,33 @@ def test_no_unpaired_raw_persist():
     )
 
 
+def test_python_streaming_state_only_where_sanctioned():
+    """Streaming state is a built-in aggregate wherever one fits; a
+    per-row Python state machine (``applyInPandasWithState``) is kept
+    only where the reason is stated here."""
+    from pathlib import Path
+
+    allowed = {
+        # perfbench/stream.py verifies this operator's state-store
+        # layout (value.groupState.{ts_us, event_id, value}).
+        "streaming/latest_wins.py",
+        # Streaming session_window rejects update mode, so it cannot
+        # emit open-session snapshots, and its append mode cannot tell
+        # a gap close from an idle-timeout close (closed_by).
+        "streaming/sessions.py",
+    }
+    pkg = Path(__file__).resolve().parent.parent / "etl_spark"
+    found = {
+        str(path.relative_to(pkg))
+        for path in pkg.rglob("*.py")
+        if "applyInPandasWithState" in path.read_text()
+    }
+    assert found <= allowed, (
+        "applyInPandasWithState outside the sanctioned modules — use a "
+        f"built-in streaming aggregate: {sorted(found - allowed)}"
+    )
+
+
 def test_session_cache_evict_leaves_nothing_live(spark):
     # live_caches() is the observability hook the eviction contract is
     # stated in terms of: after evict(), no entry may still hold

@@ -94,6 +94,37 @@ def test_stream_is_incremental_across_restarts(spark, tmp_path):
     assert merged == want
 
 
+def test_stream_snapshot_keeps_ids_when_a_run_lacks_id(spark, tmp_path):
+    # One micro-batch holds run 8 twice: an older extraction whose file
+    # lacks `id` and a newer one with an id above 2**53 (where a float
+    # round trip loses the last digit), plus run 9 with no `id` at all.
+    # The winners keep exact bigint ids and null for the missing one,
+    # row for row as the batch read gives them.
+    zone = tmp_path / "zone"
+    old, new = "20250101-000000Z", "20250102-000000Z"
+    big_id = 2**53 + 1
+
+    def put(ts, run_id, run):
+        p = zone / "repo_1" / ts / "runs" / f"{run_id}.json"
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_text(json.dumps(run))
+
+    def without_id(run):
+        return {k: v for k, v in run.items() if k != "id"}
+
+    put(old, 8, without_id(make_run(8, "repo_1", status="running")))
+    put(new, 8, {**make_run(8, "repo_1"), "id": big_id})
+    put(new, 9, without_id(make_run(9, "repo_1")))
+    got = run_snapshot_stream(spark, zone, tmp_path / "ckpt")
+    want = {
+        (r["repo_dir"], r["file_id"]): r.asDict()
+        for r in snapshot_records(spark, zone).collect()
+    }
+    assert got == want
+    assert got[("repo_1", "8")]["id"] == big_id
+    assert got[("repo_1", "9")]["id"] is None
+
+
 # --------------------------------------------------------------------------
 # Production sink: the snapshot maintained as a parquet TABLE by a
 # keyed upsert in foreachBatch — parity asserted against the FILES,
