@@ -209,12 +209,12 @@ def fake_features(payload: bytes) -> tuple[int, int, str, float]:
     return n_bytes, n_frames, signature, mean_byte
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """documents-with-payload → per-doc feature rows via mapInPandas."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            feats = [fake_features(p) for p in pdf[payload_col]]
+            feats = [fake_features(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
@@ -229,8 +229,8 @@ def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     # b"" are decoded normally). Without this, `len(None)` would kill
     # the whole task on the first row with a missing payload.
     return (
-        df.select("doc_id", payload_col)
-        .where(F.col(payload_col).isNotNull())
+        df.select("doc_id", "payload")
+        .where(F.col("payload").isNotNull())
         .mapInPandas(batches, schema=FEATURE_SCHEMA)
     )
 
@@ -255,7 +255,6 @@ FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_bytes int, frame_md5 string"
 
 def sample_frames(
     df: DataFrame,
-    payload_col: str = "payload",
     frame_bytes: int = FRAME_BYTES,
     every_n: int = FRAME_SAMPLE_EVERY,
 ) -> DataFrame:
@@ -272,7 +271,7 @@ def sample_frames(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids, idxs, sizes, md5s = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 payload = bytes(payload)
                 n_frames = len(payload) // frame_bytes + 1
                 for idx in range(0, n_frames, every_n):
@@ -292,8 +291,8 @@ def sample_frames(
 
     # NULL payloads: nothing to frame — skip (see extract_features).
     return (
-        df.select("doc_id", payload_col)
-        .where(F.col(payload_col).isNotNull())
+        df.select("doc_id", "payload")
+        .where(F.col("payload").isNotNull())
         .mapInPandas(batches, schema=FRAME_SCHEMA)
     )
 
@@ -307,7 +306,6 @@ RESIZE_SCHEMA = (
 
 def resize_payload(
     df: DataFrame,
-    payload_col: str = "payload",
     target_bytes: int = RESIZE_TARGET_BYTES,
 ) -> DataFrame:
     """Resize stage (stand-in for image resize): truncate payloads over
@@ -318,7 +316,7 @@ def resize_payload(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             orig, md5s = [], []
-            for payload in pdf[payload_col]:
+            for payload in pdf["payload"]:
                 payload = bytes(payload)
                 orig.append(len(payload))
                 resized = payload[:target_bytes].ljust(target_bytes, b"\x00")
@@ -336,8 +334,8 @@ def resize_payload(
 
     # NULL payloads: nothing to resize — skip (see extract_features).
     return (
-        df.select("doc_id", payload_col)
-        .where(F.col(payload_col).isNotNull())
+        df.select("doc_id", "payload")
+        .where(F.col("payload").isNotNull())
         .mapInPandas(batches, schema=RESIZE_SCHEMA)
     )
 
@@ -348,7 +346,7 @@ WAV_DECODE_SCHEMA = (
 )
 
 
-def decode_audio(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_audio(df: DataFrame) -> DataFrame:
     """REAL audio decode stage: payloads are genuine RIFF/WAVE
     containers (see ``build_wav``), parsed on the workers by the
     stdlib ``wave`` codec — header walk, fmt-chunk fields, PCM frame
@@ -360,7 +358,7 @@ def decode_audio(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         for pdf in it:
             rows = [
                 {"doc_id": doc_id, **decode_wav(bytes(payload))}
-                for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col])
+                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
             ]
             yield pd.DataFrame(
                 rows,
@@ -377,8 +375,8 @@ def decode_audio(df: DataFrame, payload_col: str = "payload") -> DataFrame:
             )
 
     return (
-        df.select("doc_id", payload_col)
-        .where(F.col(payload_col).isNotNull())
+        df.select("doc_id", "payload")
+        .where(F.col("payload").isNotNull())
         .mapInPandas(batches, schema=WAV_DECODE_SCHEMA)
     )
 
@@ -388,7 +386,7 @@ DEFLATE_DECODE_SCHEMA = (
 )
 
 
-def decode_deflate(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_deflate(df: DataFrame) -> DataFrame:
     """REAL decompression decode stage: inflate zlib-DEFLATE payloads
     on the workers (stdlib zlib, sniffed by the same header check as
     ``sniff_mime``) and fingerprint the recovered bytes. Non-zlib
@@ -399,7 +397,7 @@ def decode_deflate(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 payload = bytes(payload)
                 raw, mime = payload, "application/octet-stream"
                 if sniff_mime(payload) == "application/zlib":
@@ -417,8 +415,8 @@ def decode_deflate(df: DataFrame, payload_col: str = "payload") -> DataFrame:
             ).astype({"doc_id": "int64", "decoded_bytes": "int64"})
 
     return (
-        df.select("doc_id", payload_col)
-        .where(F.col(payload_col).isNotNull())
+        df.select("doc_id", "payload")
+        .where(F.col("payload").isNotNull())
         .mapInPandas(batches, schema=DEFLATE_DECODE_SCHEMA)
     )
 
@@ -474,7 +472,7 @@ def with_wav_payload(docs: DataFrame, pcm_from: str = "text", spread: bool = Tru
 AUDIO_FRAME = 160
 
 
-def frame_audio_energy(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def frame_audio_energy(df: DataFrame) -> DataFrame:
     """Frame-level audio feature extraction: decode each WAV payload
     (stdlib ``wave``), split the 8-bit PCM into AUDIO_FRAME-sample
     analysis frames, and emit per-frame energy features — the stage a
@@ -499,7 +497,7 @@ def frame_audio_energy(df: DataFrame, payload_col: str = "payload") -> DataFrame
 
         for pdf in it:
             out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 params, pcm = wav_pcm(bytes(payload))
                 if params.sampwidth != 1:
                     # Loud, not wrong: treating 16/24/32-bit PCM
@@ -1107,7 +1105,7 @@ def raster_gray(payload: bytes) -> tuple[str, int, int, int, bytes]:
     )
 
 
-def decode_image(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_image(df: DataFrame) -> DataFrame:
     """REAL image decode stage: payloads are genuine raster containers
     — uncompressed 24-bit BMP (``build_bmp``), 8-bit grayscale PNG
     (``build_png``) or LZW-compressed GIF89a (``build_gif``) —
@@ -1123,7 +1121,7 @@ def decode_image(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         for pdf in it:
             rows = [
                 {"doc_id": doc_id, **_raster_summary(*raster_gray(bytes(payload)))}
-                for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col])
+                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
             ]
             yield pd.DataFrame(
                 rows,
@@ -1139,13 +1137,13 @@ def decode_image(df: DataFrame, payload_col: str = "payload") -> DataFrame:
             )
 
     return (
-        df.select("doc_id", payload_col)
-        .where(F.col(payload_col).isNotNull())
+        df.select("doc_id", "payload")
+        .where(F.col("payload").isNotNull())
         .mapInPandas(batches, schema=BMP_DECODE_SCHEMA)
     )
 
 
-def thumbnail_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def thumbnail_features(df: DataFrame) -> DataFrame:
     """REAL image transform stage: decode each raster payload (BMP,
     PNG or GIF via ``raster_gray``, dispatched on magic bytes) and 2x2
     box-downsample the luminance grid — the thumbnailing/resolution-
@@ -1168,7 +1166,7 @@ def thumbnail_features(df: DataFrame, payload_col: str = "payload") -> DataFrame
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 _, _, w, h, gray = raster_gray(bytes(payload))
                 h2, w2 = h // 2, w // 2
                 if h2 == 0 or w2 == 0:
@@ -1226,7 +1224,6 @@ PHASH_VARIANT_OFFSET = 1_000_000_000
 
 def perceptual_hash(
     docs: DataFrame,
-    payload_col: str = "payload",
     noisy_variant: bool = False,
     carry: tuple[tuple[str, str], ...] = (),
     pixel_decode: bool = False,
@@ -1290,7 +1287,7 @@ def perceptual_hash(
             ids, hashes = [], []
             carried: list[list] = [[] for _ in _carry_names]
             for row_i, (doc_id, payload) in enumerate(
-                zip(pdf["doc_id"], pdf[payload_col])
+                zip(pdf["doc_id"], pdf["payload"])
             ):
                 payload = bytes(payload)
                 if pixel_decode:
@@ -1317,8 +1314,8 @@ def perceptual_hash(
         f", {name} {typ}" for name, typ in carry
     )
     return (
-        docs.select("doc_id", payload_col, *_carry_names)
-        .where(F.col(payload_col).isNotNull())
+        docs.select("doc_id", "payload", *_carry_names)
+        .where(F.col("payload").isNotNull())
         .mapInPandas(batches, schema=schema)
     )
 
@@ -1328,7 +1325,7 @@ def perceptual_hash(
 AUTOCORR_LAGS = (1, 2, 4)
 
 
-def audio_autocorr(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def audio_autocorr(df: DataFrame) -> DataFrame:
     """Clip-level autocorrelation features: decode each WAV payload
     (stdlib ``wave``, 8-bit PCM only — same loud sample-width guard as
     frame_audio_energy) and emit, per clip,
@@ -1351,7 +1348,7 @@ def audio_autocorr(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 
         for pdf in it:
             rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 params, pcm = wav_pcm(bytes(payload))
                 if params.sampwidth != 1:
                     raise ValueError(

@@ -48,158 +48,45 @@ from pyspark.sql import functions as F
 _PROBE_ACCURACY = 1000
 
 
-def _bucket_count(df: DataFrame) -> int:
-    spark = df.sparkSession
-    n = spark.conf.get("etl_spark.rank.buckets", None)
-    if n is None:
-        n = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    return max(1, int(n))
-
-
-def global_rank_cumsum(
+def global_rank(
     df: DataFrame,
-    key: str,
-    tie: str,
+    specs: list[tuple[str, str, str]],
     sums: tuple[str, ...] = (),
-    rn_col: str = "rn",
     n_buckets: int | None = None,
 ) -> tuple[DataFrame, dict]:
-    """Exact global ``row_number()`` (and running sums) ordered by
-    ``(key ASC, tie ASC)``, computed with partitioned windows only.
+    """Exact global ``row_number()`` for each ``(key, tie, rn_col)`` in
+    ``specs``, ordered by ``(key ASC, tie ASC)``, plus running sums
+    ``cum_<c>`` for each ``c`` in ``sums`` in the FIRST spec's order —
+    computed with partitioned windows only.
 
     ``key`` must be non-null numeric (callers encode DESC order by
     negating the key); ``tie`` must be a unique non-null tiebreak so
     the total order — and therefore every rank — is deterministic.
 
-    Returns ``(df_out, totals)`` where ``df_out`` carries ``rn_col``
-    (bigint, 1-based) plus ``cum_<c>`` for each ``c`` in ``sums``, and
-    ``totals`` maps ``"n"`` -> total row count and each ``c`` -> its
-    grand total (Python values, ready to embed as literals).
+    The probe and offset phases are fused across keys (r10 opt, guide
+    §1.2 "don't compute things twice"): every key's boundaries come
+    from ONE ``percentile_approx`` probe row and every key's
+    per-bucket counts and sums from ONE global aggregate
+    (conditional sums, still one config-sized row), so a call costs
+    two actions however many keys it ranks. Rank exactness is
+    bucketing-independent (see module docstring), so ranking several
+    keys in one call is bit-identical to one call per key.
+
+    ``n_buckets`` defaults to ``spark.sql.shuffle.partitions``.
+
+    Returns ``(df_out, totals)``: ``totals["n"]`` is the row count and
+    ``totals[c]`` each summed column's grand total (Python values,
+    ready to embed as literals; ``None`` for an all-null column).
     """
-    n_buckets = n_buckets or _bucket_count(df)
-    # Phase 1 — probe: boundary VALUES collected once, re-embedded as
-    # literals. percentile_approx returns actual data values (same
-    # type as the input), so `>=` comparisons are exact.
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    if qs:
-        probe = df.select(
-            F.percentile_approx(key, qs, _PROBE_ACCURACY).alias("bs")
-        ).first()
-        raw_bounds = (probe["bs"] if probe is not None else None) or []
-    else:
-        raw_bounds = []
-    bounds: list = []
-    for b in raw_bounds:  # dedup ties, drop empty-input Nones
-        if b is not None and (not bounds or b != bounds[-1]):
-            bounds.append(b)
-
-    bucket = reduce(
-        lambda acc, b: acc
-        + F.when(F.col(key) >= F.lit(b), 1).otherwise(0),
-        bounds,
-        F.lit(0),
-    ).alias("__bucket")
-    bucketed = df.select("*", bucket)
-
-    # Phase 2 — offsets: one config-sized aggregate (<= n_buckets
-    # rows) -> exclusive prefix offsets per bucket, embedded as a
-    # literal lookup array indexed by bucket id.
-    stats = (
-        bucketed.groupBy("__bucket")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[F.sum(c).alias(f"__s_{c}") for c in sums],
-        )
-        .collect()
+    n_buckets = n_buckets or max(
+        1, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     )
-    by_bucket = {r["__bucket"]: r for r in stats}
-    n_slots = len(bounds) + 1
-    offsets: dict[str, list] = {"n": []}
-    for c in sums:
-        offsets[c] = []
-    run: dict[str, object] = {"n": 0, **{c: None for c in sums}}
-    for i in range(n_slots):
-        offsets["n"].append(run["n"])
-        row = by_bucket.get(i)
-        run["n"] += row["__n"] if row is not None else 0
-        for c in sums:
-            offsets[c].append(run[c])
-            if row is not None and row[f"__s_{c}"] is not None:
-                run[c] = (
-                    row[f"__s_{c}"]
-                    if run[c] is None
-                    else run[c] + row[f"__s_{c}"]
-                )
-    totals = {"n": run["n"], **{c: run[c] for c in sums}}
-
-    def lookup(vals: list, null_as=None, cast: str | None = None) -> Column:
-        arr = F.array(
-            *[
-                F.lit(v) if v is not None else F.lit(null_as)
-                for v in vals
-            ]
-        )
-        if cast is not None:
-            arr = arr.cast(f"array<{cast}>")
-        return F.element_at(arr, F.col("__bucket") + 1)
-
-    w = Window.partitionBy("__bucket").orderBy(
-        F.col(key).asc(), F.col(tie).asc()
-    )
-    # row_number() is IntegerType; cast BEFORE adding the bigint
-    # offsets so the sum can't wrap int32 (ANSI Spark would error, and
-    # int offsets below 2^31 would otherwise keep the addition 32-bit
-    # even when the global rank exceeds it). row_number itself bounds
-    # a SINGLE bucket at 2^31-1 rows — at that point raise n_buckets
-    # (etl_spark.rank.buckets); boundary ties concentrating more than
-    # 2^31 rows on one key value are the one true limit of this
-    # primitive.
-    out = bucketed.withColumn(
-        rn_col,
-        F.row_number().over(w).cast("bigint")
-        + lookup(offsets["n"], cast="bigint"),
-    )
-    w_cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    for c in sums:
-        # Bucket 0 has no preceding buckets -> its offset slot is
-        # None; coalesce to 0 instead of adding a NULL literal.
-        out = out.withColumn(
-            f"cum_{c}",
-            F.sum(c).over(w_cum) + F.coalesce(lookup(offsets[c]), F.lit(0)),
-        )
-    return out.drop("__bucket"), totals
-
-
-def global_rank_multi(
-    df: DataFrame,
-    specs: list[tuple[str, str, str]],
-    n_buckets: int | None = None,
-) -> tuple[DataFrame, dict]:
-    """Exact global ``row_number()`` for SEVERAL independent sort keys
-    over the same frame, with the probe and offset phases FUSED into
-    one action each (r10 opt, guide §1.2 "don't compute things
-    twice"): ``len(specs)`` sequential ``global_rank_cumsum`` calls
-    cost 2 config-sized actions apiece — a percentile probe plus an
-    offsets aggregate, each a full pass over the input — while this
-    form computes every key's boundaries in ONE ``percentile_approx``
-    probe row and every key's per-bucket counts in ONE global
-    aggregate (``len(specs) × n_buckets`` conditional sums, still one
-    config-sized row). Rank exactness is bucketing-independent (see
-    module docstring), so the output is bit-identical to the chained
-    single-key calls.
-
-    ``specs``: ``(key, tie, rn_col)`` per rank — same contracts as
-    ``global_rank_cumsum`` (non-null numeric key, unique non-null
-    tie). Running sums are not supported here; callers needing
-    ``cum_<c>`` use the single-key form.
-
-    Returns ``(df_out, totals)`` with one ``rn_col`` per spec and
-    ``totals["n"]`` = total row count.
-    """
-    n_buckets = n_buckets or _bucket_count(df)
     qs = [i / n_buckets for i in range(1, n_buckets)]
 
-    # Phase 1 — ONE probe action for all keys.
+    # Phase 1 — ONE probe action for all keys: boundary VALUES
+    # collected once, re-embedded as literals. percentile_approx
+    # returns actual data values (same type as the input), so `>=`
+    # comparisons are exact.
     if qs:
         probe = df.select(
             *[
@@ -234,40 +121,68 @@ def global_rank_multi(
     )
 
     # Phase 2 — ONE offsets action: per-bucket row counts for every
-    # key as conditional sums in a single global aggregate (one
-    # config-sized row of len(specs) × n_slots bigints).
-    count_cols = []
+    # key (and per-bucket sums under the first key) as conditional
+    # sums in a single global aggregate.
+    stat_cols = []
     for j, bounds in enumerate(all_bounds):
         for i in range(len(bounds) + 1):
-            count_cols.append(
-                F.sum(
-                    F.when(F.col(f"__bucket_{j}") == i, 1).otherwise(0)
-                )
-                .cast("bigint")
-                .alias(f"__n_{j}_{i}")
-            )
-    stats = bucketed.agg(*count_cols).first()
+            in_bucket = F.col(f"__bucket_{j}") == i
+            stat_cols.append(F.count(F.when(in_bucket, 1)).alias(f"__n_{j}_{i}"))
+            if j == 0:
+                stat_cols += [
+                    F.sum(F.when(in_bucket, F.col(c))).alias(f"__s_{c}_{i}")
+                    for c in sums
+                ]
+    stats = bucketed.agg(*stat_cols).first()
+
+    def prefix(vals: list) -> tuple[list, object]:
+        # Exclusive running totals of the non-null per-bucket values
+        # (None before the first one), and the grand total.
+        out, acc = [], None
+        for v in vals:
+            out.append(acc)
+            if v is not None:
+                acc = v if acc is None else acc + v
+        return out, acc
+
+    def offset(vals: list, j: int) -> Column:
+        # Literal lookup array indexed by bucket id; a None slot (no
+        # preceding bucket) adds 0 instead of a NULL literal.
+        arr = F.array(*[F.lit(v) for v in vals])
+        return F.coalesce(
+            F.element_at(arr, F.col(f"__bucket_{j}") + 1), F.lit(0)
+        )
 
     out = bucketed
-    total_n = 0
+    totals: dict = {}
     for j, (key, tie, rn_col) in enumerate(specs):
-        n_slots = len(all_bounds[j]) + 1
-        offsets, run = [], 0
-        for i in range(n_slots):
-            offsets.append(run)
-            run += stats[f"__n_{j}_{i}"] or 0
-        total_n = run
+        slots = range(len(all_bounds[j]) + 1)
+        offsets, n = prefix([stats[f"__n_{j}_{i}"] for i in slots])
+        totals["n"] = n or 0
         w = Window.partitionBy(f"__bucket_{j}").orderBy(
             F.col(key).asc(), F.col(tie).asc()
         )
-        arr = F.array(*[F.lit(v) for v in offsets]).cast("array<bigint>")
+        # row_number() is IntegerType; cast BEFORE adding the offsets
+        # so the sum can't wrap int32 (ANSI Spark would error, and int
+        # offsets below 2^31 would otherwise keep the addition 32-bit
+        # even when the global rank exceeds it). row_number itself
+        # bounds a SINGLE bucket at 2^31-1 rows — at that point raise
+        # n_buckets; boundary ties concentrating more than 2^31 rows on
+        # one key value are the one true limit of this primitive.
         out = out.withColumn(
-            rn_col,
-            F.row_number().over(w).cast("bigint")
-            + F.element_at(arr, F.col(f"__bucket_{j}") + 1),
+            rn_col, F.row_number().over(w).cast("bigint") + offset(offsets, j)
         )
+        if j == 0:
+            w_cum = w.rowsBetween(Window.unboundedPreceding, 0)
+            for c in sums:
+                offsets, totals[c] = prefix(
+                    [stats[f"__s_{c}_{i}"] for i in slots]
+                )
+                out = out.withColumn(
+                    f"cum_{c}", F.sum(c).over(w_cum) + offset(offsets, j)
+                )
     out = out.drop(*[f"__bucket_{j}" for j in range(len(specs))])
-    return out, {"n": total_n}
+    return out, totals
 
 
 def ntile_from_rank(rn: Column, n: int, k: int) -> Column:

@@ -333,7 +333,7 @@ def part_price_zscore_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "aggregation", "bi"),
 )
 def customer_revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_spark.operators.ranking import global_rank_cumsum
+    from etl_spark.operators.ranking import global_rank
 
     per_cust = (
         load(spark, sf_dir, "orders")
@@ -345,8 +345,8 @@ def customer_revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the orders scan+agg (ContextCleaner reclaims the blocks).
         .localCheckpoint(eager=True)
     )
-    ranked, totals = global_rank_cumsum(
-        per_cust, key="neg_rev", tie="o_custkey", sums=("rev",), rn_col="rnk"
+    ranked, totals = global_rank(
+        per_cust, [("neg_rev", "o_custkey", "rnk")], sums=("rev",)
     )
     total_rev = F.lit(totals["rev"]).cast("double")
     n_cust = F.lit(totals["n"]).cast("double")
@@ -855,7 +855,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_spark.functions.money import dec
     from etl_spark.operators.ranking import (
-        global_rank_multi,
+        global_rank,
         ntile_from_rank,
     )
 
@@ -874,26 +874,17 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             (-F.col("frequency")).alias("neg_f"),
             (-F.col("monetary")).alias("neg_m"),
         )
-        # customer-cardinality intermediate, re-read by each rank
-        # pass's probe/offset jobs: materialize once (ContextCleaner
-        # reclaims the blocks when the DataFrame is collected). The
-        # chained passes do NOT re-execute earlier windows: a pass's
-        # probe/offset jobs reference only its own key column, so
-        # Catalyst column-pruning drops the prior Window nodes from
-        # those jobs entirely (pinned by
-        # tests/test_ranking.py::test_unreferenced_window_is_pruned);
-        # only the single final job runs all three windows.
+        # customer-cardinality intermediate, re-read by the rank's
+        # probe/offset jobs: materialize once (ContextCleaner reclaims
+        # the blocks when the DataFrame is collected).
         .localCheckpoint(eager=True)
     )
     # ONE probe + ONE offsets action for all three ranks (r10 opt,
-    # guide §1.2): the chained single-key calls cost 2 config-sized
-    # actions apiece (6 total, each a full pass over per_cust); the
-    # fused form computes all boundaries in one probe row and all
-    # per-bucket counts in one aggregate. Ranks are bucketing-
-    # independent, so the scores are bit-identical.
-    ranked, totals = global_rank_multi(
+    # guide §1.2): one call per key would cost 2 config-sized actions
+    # apiece (6 total, each a full pass over per_cust).
+    ranked, totals = global_rank(
         per_cust,
-        specs=[
+        [
             ("neg_r", "o_custkey", "rn_r"),
             ("neg_f", "o_custkey", "rn_f"),
             ("neg_m", "o_custkey", "rn_m"),

@@ -1168,7 +1168,7 @@ LIFT_NEARDUP_T = 0.5
 )
 def curation_quality_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_spark.operators.ranking import (
-        global_rank_cumsum,
+        global_rank,
         ntile_from_rank,
     )
     from etl_spark.plans.llm_dedup import dedup_prefix_filter_pairs
@@ -1203,7 +1203,7 @@ def curation_quality_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
         )
     )
-    ranked, totals = global_rank_cumsum(scored, key="score", tie="doc_id")
+    ranked, totals = global_rank(scored, [("score", "doc_id", "rn")])
     tiled = ranked.select(
         "score", "is_dup",
         ntile_from_rank(F.col("rn"), totals["n"], LIFT_DECILES).alias(

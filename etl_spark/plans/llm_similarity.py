@@ -37,18 +37,6 @@ QUANT = 1000
 DIM = 64
 
 
-def _sim_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Size-derived partition count for the embedding scoring kernels
-    (guide §2.2): ceil(corpus rows / 16384), floor 1 — the flat
-    repartition(defaultParallelism) this replaces paid 32 task
-    launches per pass to score a few thousand vectors at the local
-    scales, while a constant tuned local would serialize a real
-    corpus. Same target as plans/ml.py's EMB_ROWS_PER_PARTITION: the
-    kernels are skinny numpy matmuls, so 16k rows ≈ 8 MB and
-    milliseconds per task."""
-    return adaptive_partitions(spark, sf_dir, "embeddings", 16384)
-
-
 def quantize(col) -> Column:
     """array<float> → array<bigint> via round(double(x) * QUANT).
 
@@ -59,6 +47,50 @@ def quantize(col) -> Column:
     both engines return the same integer.
     """
     return F.transform(col, lambda x: F.round(x.cast("double") * QUANT).cast("bigint"))
+
+
+# Target rows per task for the quantized-embedding kernels. The
+# kernels are skinny numpy matmuls (rows × DIM @ DIM × k), so a task's
+# compute at this size is milliseconds — the constant exists to stop
+# TASK-COUNT overhead from dominating, not to bound memory (16k rows ×
+# 64 dims × 8 B ≈ 8 MB per task). r10 measurement (guide §2.2 "fewer,
+# larger map tasks" / §1.2): the flat repartition(defaultParallelism)
+# put sf0.1's 2,000 vectors in 32 partitions, so every Lloyd iteration
+# paid 32 task launches + 32-block exchanges to do ~2 ms of math.
+# Deriving the partition count from the corpus size (ceil(rows /
+# target), uncapped above so a real corpus still fans out linearly) is
+# the scale-adaptive form the optimization guide asks for.
+EMB_ROWS_PER_PARTITION = 16384
+
+
+def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embeddings as exact-integer vectors, in size-derived partitions."""
+    return (
+        load(spark, sf_dir, "embeddings")
+        .repartition(
+            adaptive_partitions(
+                spark, sf_dir, "embeddings", EMB_ROWS_PER_PARTITION
+            )
+        )
+        .select("vec_id", quantize(F.col("embedding")).alias("q"))
+    )
+
+
+def pick_vectors(
+    df: DataFrame, hi: int | None = None, lo: int | None = None,
+    first: int | None = None,
+) -> list:
+    """The config-sized ``(vec_id, q)`` rows the kernels ship in their
+    closures (queries, seeds, codebook), sorted by vec_id: the ids in
+    ``[lo, hi)`` (``lo`` unbounded when None), or the ``first`` rows in
+    vec_id order."""
+    df = df.select("vec_id", "q")
+    if first is not None:
+        return df.orderBy("vec_id").limit(first).collect()
+    cond = F.col("vec_id") < hi
+    if lo is not None:
+        cond = (F.col("vec_id") >= lo) & cond
+    return sorted(df.filter(cond).collect(), key=lambda r: r["vec_id"])
 
 
 def dot(a, b) -> Column:
@@ -136,16 +168,8 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides (cos is undefined for them; Spark would emit IEEE NaN/Inf
     # where DuckDB nulls the division) — emb_norm_stats is the audit
     # that surfaces such vectors to the pipeline owner.
-    emb = (
-        load(spark, sf_dir, "embeddings")
-        .repartition(_sim_partitions(spark, sf_dir))
-        .select("vec_id", quantize(F.col("embedding")).alias("q"))
-        .filter(dot(F.col("q"), F.col("q")) > 0)
-    )
-    q_rows = sorted(
-        emb.filter(F.col("vec_id") < N_QUERIES).collect(),
-        key=lambda r: r["vec_id"],
-    )
+    emb = _quantized(spark, sf_dir).filter(dot(F.col("q"), F.col("q")) > 0)
+    q_rows = pick_vectors(emb, N_QUERIES)
     query_ids = [r["vec_id"] for r in q_rows]
     query_vecs = [r["q"] for r in q_rows]
 
@@ -436,13 +460,8 @@ def _bucket_column(n_planes: int):
 
 def corpus_planes(spark: SparkSession, sf_dir: str) -> int:
     """Plane count from the corpus cardinality WITHOUT a per-build
-    count job over the data: config override first (the cluster
-    deployment path — table statistics / catalog row counts supply
-    this), then the parquet footer row count (metadata-only, no row
-    scan), then a count() as the last-resort fallback."""
-    n = spark.conf.get("etl_spark.ann.n_vectors", None)
-    if n is not None:
-        return eff_planes(int(n))
+    count job over the data: the parquet footer row count
+    (metadata-only, no row scan), with a count() as the fallback."""
     try:
         import os
 
@@ -468,9 +487,7 @@ def lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         return (
-            load(spark, sf_dir, "embeddings")
-            .repartition(_sim_partitions(spark, sf_dir))
-            .select("vec_id", quantize(F.col("embedding")).alias("q"))
+            _quantized(spark, sf_dir)
             .withColumn("norm", dot(F.col("q"), F.col("q")))
             # Zero-norm vectors excluded from cosine scoring (see
             # sim_topk_cosine).
@@ -588,7 +605,11 @@ def sim_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = corpus_planes(spark, sf_dir)
     emb = (
         load(spark, sf_dir, "embeddings")
-        .repartition(_sim_partitions(spark, sf_dir))
+        .repartition(
+            adaptive_partitions(
+                spark, sf_dir, "embeddings", EMB_ROWS_PER_PARTITION
+            )
+        )
         .select("vec_id", "label", quantize(F.col("embedding")).alias("q"))
     )
     # Deterministic ±1 planes via the shared md5-parity derivation.
@@ -930,7 +951,7 @@ def _pq_d2_sql(a: str, b: str) -> str:
         f"batch pre-prunes to its local top-{PQ_TOPK} per query, so the "
         "only shuffle carries O(batches * queries * k) rows, never the "
         "corpus. All distances are exact BIGINTs on the quantization "
-        "lattice (llm_similarity.py:40-46), so ADC replays bit-identically "
+        "lattice (see llm_similarity.quantize), so ADC replays bit-identically "
         "in the oracle's unrolled SQL.",
     tags=("similarity", "llm", "ann", "pq", "pandas-udf"),
 )
@@ -940,7 +961,9 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The repartition exists for the scoring pass's parallelism; the
     # driver collect below reads the un-shuffled source directly.
-    emb = base.repartition(_sim_partitions(spark, sf_dir))
+    emb = base.repartition(
+        adaptive_partitions(spark, sf_dir, "embeddings", EMB_ROWS_PER_PARTITION)
+    )
     out_schema = "query_id bigint, vec_id bigint, adc_d2 bigint"
     # ONE config-sized driver collect (<= PQ_KS + 4 rows; vec_id
     # pushdown reaches the scan), split driver-side — same discipline
@@ -1119,15 +1142,8 @@ def _jl_oracle_sql() -> str:
     tags=("similarity", "llm", "ann", "projection"),
 )
 def emb_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = (
-        load(spark, sf_dir, "embeddings")
-        .repartition(_sim_partitions(spark, sf_dir))
-        .select("vec_id", quantize(F.col("embedding")).alias("q"))
-    )
-    q_rows = sorted(
-        emb.filter(F.col("vec_id") < N_QUERIES).collect(),
-        key=lambda r: r["vec_id"],
-    )
+    emb = _quantized(spark, sf_dir)
+    q_rows = pick_vectors(emb, N_QUERIES)
     query_ids = [r["vec_id"] for r in q_rows]
     query_vecs = [list(r["q"]) for r in q_rows]
     signs = [list(row) for row in _JL_SIGNS]

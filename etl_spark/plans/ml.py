@@ -47,9 +47,11 @@ from etl_spark.plans.llm_similarity import (
     PQ_TOPK,
     TOP_K,
     _pq_d2_sql,
+    _quantized,
     _vec_cte,
     cosine,
     dot,
+    pick_vectors,
     quantize,
 )
 from etl_spark.operators.caching import session_cached, session_memo
@@ -57,37 +59,6 @@ from etl_spark.plans.registry import register
 
 K_CLUSTERS = 8
 MAX_ITERS = 8
-
-# Target rows per task for the quantized-embedding Arrow kernels. The
-# kernels are skinny numpy matmuls (rows × DIM @ DIM × k), so a task's
-# compute at this size is milliseconds — the constant exists to stop
-# TASK-COUNT overhead from dominating, not to bound memory (16k rows ×
-# 64 dims × 8 B ≈ 8 MB per task). r10 measurement (guide §2.2 "fewer,
-# larger map tasks" / §1.2): the flat repartition(defaultParallelism)
-# put sf0.1's 2,000 vectors in 32 partitions, so every Lloyd iteration
-# paid 32 task launches + 32-block exchanges to do ~2 ms of math —
-# ml_kmeans_lloyd spent ~1 s/iteration on scheduler overhead. Deriving
-# the partition count from the corpus size (ceil(rows / target),
-# uncapped above so a real corpus still fans out linearly) is the
-# scale-adaptive form the optimization guide asks for.
-EMB_ROWS_PER_PARTITION = 16384
-
-def _emb_partitions(spark: SparkSession, sf_dir: str) -> int:
-    from etl_spark.io import adaptive_partitions
-
-    return adaptive_partitions(
-        spark, sf_dir, "embeddings", EMB_ROWS_PER_PARTITION
-    )
-
-
-def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings as exact-integer vectors, in size-derived partitions."""
-    return (
-        load(spark, sf_dir, "embeddings")
-        .repartition(_emb_partitions(spark, sf_dir))
-        .select("vec_id", quantize(F.col("embedding")).alias("q"))
-    )
-
 
 def _assign(
     emb: DataFrame,
@@ -182,19 +153,6 @@ def _assign_partial_sums(
     )
 
 
-def _cluster_stats(assigned: DataFrame, exact: bool) -> DataFrame:
-    # exact=True whenever centroids live on the integer quantization
-    # lattice — the seed step AND every Lloyd iteration (updates are
-    # lattice-rounded), so d2 is integer-valued throughout and the
-    # oracle compares BIGINT. exact=False is the general-float path
-    # for callers with unquantized centroids (none registered today).
-    d2 = F.col("d2").cast("bigint") if exact else F.col("d2")
-    return assigned.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.sum(d2).alias("inertia"),
-    )
-
-
 @register(
     "ml_kmeans_step",
     oracle=f"""
@@ -229,18 +187,21 @@ def _cluster_stats(assigned: DataFrame, exact: bool) -> DataFrame:
         "so assignment is one corpus scan with a numpy matmul per "
         "Arrow batch — no join, no per-pair lambdas; the only shuffle "
         "is the k-row stats aggregate. Distances are exact BIGINTs "
-        "(quantization proof at llm_similarity.py:40-46), so this "
+        "(quantization proof at llm_similarity.quantize), so this "
         "inherently-numeric step is fully oracle-hashable.",
     tags=("ml", "kmeans", "llm", "pandas-udf"),
 )
 def ml_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _quantized(spark, sf_dir)
-    seed_rows = sorted(
-        emb.filter(F.col("vec_id") < K_CLUSTERS).collect(),
-        key=lambda r: r["vec_id"],
+    seeds = _first_k_seeds(emb)
+    # Seeds are lattice points, so every d2 is integer-valued and the
+    # per-batch int64 partials re-aggregate to the oracle's BIGINTs.
+    return (
+        _assign_partial_sums(emb, seeds)
+        .groupBy("cluster")
+        .agg(F.sum("n").alias("n_members"), F.sum("sd2").alias("inertia"))
+        .orderBy("cluster")
     )
-    assigned = _assign(emb, [r["q"] for r in seed_rows])
-    return _cluster_stats(assigned, exact=True).orderBy("cluster")
 
 
 def _lloyd_oracle_sql() -> str:
@@ -343,77 +304,25 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each pass rescans memory, not parquet.
     emb.persist()
     try:
-        seed_rows = sorted(
-            emb.filter(F.col("vec_id") < K_CLUSTERS).collect(),
-            key=lambda r: r["vec_id"],
-        )
-        centroids = [[float(x) for x in r["q"]] for r in seed_rows]
+        centroids = _first_k_seeds(emb)
         prev_inertia = None
         n_iter = 0
         sums = []
         for _ in range(MAX_ITERS):
             n_iter += 1
-            # ONE action per iteration, with the reduction pushed INTO
-            # the assignment kernel (r10 opt, guide §2.3 "aggregate
-            # before you shuffle"): each Arrow batch assigns points and
-            # immediately reduces them to k rows of (n, Σd2, Σq) exact
-            # int64 partials, so the posexplode + exchange downstream
-            # carries batches × k × dim rows instead of corpus × dim
-            # (640k → ~16k at sf0.1; the gap only widens with scale).
-            # The former shape shipped every (vec_id, q, cluster, d2)
-            # row back through Arrow and exploded the full corpus per
-            # iteration. Integer sums are associative, so the partials
-            # re-aggregate to bit-identical totals (same BIGINT the
-            # unrolled oracle computes); ties still break to the first
-            # argmin, same as _assign and the oracle's ORDER BY d2,
-            # cluster.
-            partials = _assign_partial_sums(emb, centroids)
-            sums = (
-                partials.select(
-                    "cluster", "n", "sd2", F.posexplode("sx").alias("pos", "x")
-                )
-                .groupBy("cluster", "pos")
-                .agg(
-                    F.sum("x").alias("sx"),
-                    F.sum("n").alias("n"),
-                    F.sum("sd2").alias("sd2"),
-                )
-                .collect()
-            )
+            sums = _lloyd_sums(emb, centroids)
             inertia = sum(row["sd2"] for row in sums if row["pos"] == 0)
             if prev_inertia is not None and inertia >= prev_inertia:
                 break
             prev_inertia = inertia
-            by_cluster: dict[int, list[float]] = {}
-            for row in sums:
-                vec = by_cluster.setdefault(row["cluster"], [0.0] * len(centroids[0]))
-                # Integer-lattice centroid: round the mean HALF-AWAY in
-                # exact integer arithmetic ((2|sx|+n)//(2n), sign
-                # restored). Keeping centroids on the quantization
-                # lattice keeps every distance, tie-break and inertia an
-                # exact BIGINT through ALL iterations — which is what
-                # lets the full iterative loop be hash-checked against
-                # the unrolled DuckDB oracle (same formula there).
-                sx, cnt = int(row["sx"]), int(row["n"])
-                val = (
-                    (2 * sx + cnt) // (2 * cnt)
-                    if sx >= 0
-                    else -((-2 * sx + cnt) // (2 * cnt))
-                )
-                vec[row["pos"]] = float(val)
-            # Empty clusters keep their previous centroid.
-            centroids = [
-                by_cluster.get(c, centroids[c]) for c in range(K_CLUSTERS)
-            ]
+            centroids = _lattice_update(sums, centroids)
         # The stats of the stopping iteration's assignment are already
         # in hand: the loop's final `sums` collect IS the per-cluster
         # (n_members, inertia) table (any pos row carries n; pos==0
         # carries the cluster's Σd2) — the same numbers the oracle
-        # reads off a{{n_iter}}. The former shape re-ran a full
-        # assignment pass through _cluster_stats at action time just to
-        # recompute them; the convergence channel stays config-sized
-        # (k × dim rows per iteration), nothing data-sized reaches the
-        # driver.
+        # reads off a{{n_iter}}. The convergence channel stays
+        # config-sized (k × dim rows per iteration), nothing data-sized
+        # reaches the driver.
         stats = sorted(
             (
                 (int(r["cluster"]), int(r["n"]), int(r["sd2"]), n_iter)
@@ -611,33 +520,53 @@ def cached_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached("ivf_assigned", spark, sf_dir, build)
 
 
-def _one_step_centroids(
-    emb: DataFrame, seeds: list[list[float]] | None = None
-) -> list[list[float]]:
-    """Seed with the first K vectors (or the given seeds), run one
-    exact Lloyd update.
+def _first_k_seeds(emb: DataFrame) -> list[list[float]]:
+    """The first K vectors by vec_id, the k-means seeds."""
+    return [[float(x) for x in r["q"]] for r in pick_vectors(emb, K_CLUSTERS)]
 
-    Two bounded actions: the K seed vectors (config-sized collect) and
-    the k × dim centroid sums (dimension-bounded aggregate — the same
-    convergence-channel contract as ml_kmeans_lloyd). Empty clusters
-    keep their seed centroid, mirroring the oracle's COALESCE.
+
+def _lloyd_sums(emb: DataFrame, centroids: list[list[float]]) -> list:
+    """One Lloyd assignment as ONE action: the collected
+    ``(cluster, pos, sx, n, sd2)`` rows — per cluster and dimension,
+    the coordinate sum, member count and Σd2.
+
+    The reduction runs INSIDE the assignment kernel (r10 opt, guide
+    §2.3 "aggregate before you shuffle"): each Arrow batch assigns
+    points and immediately reduces them to k rows of exact int64
+    partials, so the posexplode + exchange carries batches × k × dim
+    rows instead of corpus × dim (640k → ~16k at sf0.1; the gap only
+    widens with scale). Integer sums are associative, so the partials
+    re-aggregate to bit-identical totals (the BIGINTs the unrolled
+    oracle computes); ties break to the first argmin, as in ``_assign``
+    and the oracle's ``ORDER BY d2, cluster``. Output is k × dim rows
+    regardless of corpus size — the config-sized convergence channel.
     """
-    if seeds is None:
-        seed_rows = sorted(
-            emb.filter(F.col("vec_id") < K_CLUSTERS).collect(),
-            key=lambda r: r["vec_id"],
-        )
-        seeds = [[float(x) for x in r["q"]] for r in seed_rows]
-    sums = (
-        _assign(emb, seeds)
-        .select("cluster", F.posexplode("q").alias("pos", "x"))
+    return (
+        _assign_partial_sums(emb, centroids)
+        .select("cluster", "n", "sd2", F.posexplode("sx").alias("pos", "x"))
         .groupBy("cluster", "pos")
-        .agg(F.sum("x").alias("sx"), F.count(F.lit(1)).alias("n"))
+        .agg(
+            F.sum("x").alias("sx"),
+            F.sum("n").alias("n"),
+            F.sum("sd2").alias("sd2"),
+        )
         .collect()
     )
-    cents = [list(s) for s in seeds]
+
+
+def _lattice_update(
+    sums: list, centroids: list[list[float]]
+) -> list[list[float]]:
+    """Centroid update from ``_lloyd_sums`` rows: each cluster's mean
+    rounded HALF-AWAY onto the integer quantization lattice in exact
+    integer arithmetic ((2|sx|+n)//(2n), sign restored). Keeping
+    centroids on the lattice keeps every distance, tie-break and
+    inertia an exact BIGINT through ALL iterations — which is what
+    lets the iterative loop be hash-checked against the unrolled
+    DuckDB oracle (same formula there). Empty clusters keep their
+    previous centroid, mirroring the oracle's COALESCE."""
+    cents = [list(c) for c in centroids]
     for row in sums:
-        # Same exact half-away integer rounding as the Lloyd loop.
         sx, cnt = int(row["sx"]), int(row["n"])
         val = (
             (2 * sx + cnt) // (2 * cnt)
@@ -646,6 +575,17 @@ def _one_step_centroids(
         )
         cents[row["cluster"]][row["pos"]] = float(val)
     return cents
+
+
+def _one_step_centroids(
+    emb: DataFrame, seeds: list[list[float]] | None = None
+) -> list[list[float]]:
+    """Seed with the first K vectors (or the given seeds), run one
+    exact Lloyd update: two bounded actions, the K seed vectors
+    (config-sized collect) and the k × dim centroid sums."""
+    if seeds is None:
+        seeds = _first_k_seeds(emb)
+    return _lattice_update(_lloyd_sums(emb, seeds), seeds)
 
 
 def _trained_ctes(pre_ctes: str = "", src: str = "vec",
@@ -773,12 +713,7 @@ def sim_ivf_kmeans_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a second parquet scan.
     icents = [[int(x) for x in c] for c in cents]
     cnorms = [sum(x * x for x in c) for c in icents]
-    qrows = sorted(
-        assigned.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "q")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
+    qrows = pick_vectors(assigned, N_QUERIES)
     probe_rows = []
     for r in qrows:
         qv = [int(x) for x in r["q"]]
@@ -997,8 +932,9 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (inside _one_step_centroids) — grows as sqrt(corpus), i.e.
         # ~30k rows at a billion vectors, never data-sized.
         k = _knn_cells(right.count())
-        seed_rows = right.orderBy("vec_id").limit(k).collect()
-        seeds = [[float(x) for x in r["q"]] for r in seed_rows]
+        seeds = [
+            [float(x) for x in r["q"]] for r in pick_vectors(right, first=k)
+        ]
         cents = _one_step_centroids(right, seeds=seeds)
 
         b_assigned = _assign(right, cents).select("vec_id", "q", "cluster")
@@ -1174,7 +1110,7 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids = pdf["vec_id"].to_numpy()
         Q = np.array(pdf["q"].tolist(), dtype=np.float64)
         # Exact: integer-valued sums below 2^53 (quantization proof
-        # at llm_similarity.py:40-46).
+        # at llm_similarity.quantize).
         norms = (Q * Q).sum(axis=1)
         col = np.arange(len(ids))
         out = []
@@ -1294,11 +1230,10 @@ def pipeline_embed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # share the deduped corpus: persist once.
     dvec.persist()
     try:
-        seed_rows = sorted(
-            dvec.orderBy("vec_id").limit(K_CLUSTERS).collect(),
-            key=lambda r: r["vec_id"],
-        )
-        seeds = [[float(x) for x in r["q"]] for r in seed_rows]
+        seeds = [
+            [float(x) for x in r["q"]]
+            for r in pick_vectors(dvec, first=K_CLUSTERS)
+        ]
         if not seeds:
             return spark.createDataFrame(
                 [],
@@ -1468,21 +1403,8 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str, keep: int) -> DataFrame:
     # Config-sized driver collects, same discipline as sim_pq_adc:
     # the codebook-seed and query vectors ride in the closure,
     # read off the cached assignment rather than a second scan.
-    seed_rows = sorted(
-        assigned.filter(F.col("vec_id") < PQ_KS)
-        .select("vec_id", "q")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    query_rows = sorted(
-        assigned.filter(
-            (F.col("vec_id") >= PQ_QUERY_LO)
-            & (F.col("vec_id") < PQ_QUERY_HI)
-        )
-        .select("vec_id", "q")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
+    seed_rows = pick_vectors(assigned, PQ_KS)
+    query_rows = pick_vectors(assigned, PQ_QUERY_HI, PQ_QUERY_LO)
     if not seed_rows or not query_rows:
         return spark.createDataFrame([], out_schema + ", rnk int")
 

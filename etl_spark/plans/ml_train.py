@@ -563,7 +563,7 @@ def _lift_oracle_sql() -> str:
 )
 def ml_logreg_quality_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_spark.operators.ranking import (
-        global_rank_cumsum,
+        global_rank,
         ntile_from_rank,
     )
 
@@ -572,7 +572,7 @@ def ml_logreg_quality_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         feats.withColumn("zraw", _zraw_col(hist[-1]))
         .select("doc_id", F.expr(_Z_SQL).alias("score"), "y")
     )
-    ranked, totals = global_rank_cumsum(scored, key="score", tie="doc_id")
+    ranked, totals = global_rank(scored, [("score", "doc_id", "rn")])
     tiled = ranked.select(
         "score", "y",
         ntile_from_rank(F.col("rn"), totals["n"], LOGREG_DECILES).alias(
@@ -657,7 +657,7 @@ def _holdout_lift(
     lr_schedule: tuple[int, ...] | None = None,
 ) -> DataFrame:
     from etl_spark.operators.ranking import (
-        global_rank_cumsum,
+        global_rank,
         ntile_from_rank,
     )
 
@@ -670,7 +670,7 @@ def _holdout_lift(
         .withColumn("zraw", _zraw_col(hist[-1]))
         .select("doc_id", F.expr(_Z_SQL).alias("score"), "y")
     )
-    ranked, totals = global_rank_cumsum(held, key="score", tie="doc_id")
+    ranked, totals = global_rank(held, [("score", "doc_id", "rn")])
     tiled = ranked.select(
         "score", "y",
         ntile_from_rank(F.col("rn"), totals["n"], HOLDOUT_TILES).alias(

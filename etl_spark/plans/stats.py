@@ -342,13 +342,13 @@ def stats_mode_tax(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("aggregation", "statistics", "window"),
 )
 def agg_equidepth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_spark.operators.ranking import global_rank_cumsum, ntile_from_rank
+    from etl_spark.operators.ranking import global_rank, ntile_from_rank
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", dec("o_totalprice").alias("price")
     )
-    ranked, totals = global_rank_cumsum(
-        orders, key="o_totalprice", tie="o_orderkey"
+    ranked, totals = global_rank(
+        orders, [("o_totalprice", "o_orderkey", "rn")]
     )
     return (
         ranked.select(

@@ -19,11 +19,15 @@ SECONDS = ("build_s", "action_s", "s", "jit_compile_s", "janino_compile_s", "cpu
 
 
 def test_profile_record_schema(tmp_path):
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF_DIR, SPARK_GRAFT_CPUS="2")
+    # lakehouse_time_travel_checksums registers versioned tables whose
+    # files live in temp directories; leaving the harness must release
+    # them, or every profiled run leaves them behind.
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF_DIR, SPARK_GRAFT_CPUS="2", TMPDIR=str(tmp_path))
     env.pop("PYSPARK_SUBMIT_ARGS", None)
     done = subprocess.run(
-        [sys.executable, str(ROOT / "tools" / "harness.py"), "q1_pricing_summary"],
-        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=240,
+        [sys.executable, str(ROOT / "tools" / "harness.py"), "q1_pricing_summary",
+         "lakehouse_time_travel_checksums"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
     )
     assert done.returncode == 0, done.stderr[-3000:]
     doc = json.loads(done.stdout)
@@ -41,6 +45,8 @@ def test_profile_record_schema(tmp_path):
     for stage in rec["long_task_stages"]:
         assert set(stage) == {"tasks", "max_task_s", "median_task_s"}
         assert stage["max_task_s"] > 0.2 and stage["tasks"] >= 1
+    assert doc["queries"]["lakehouse_time_travel_checksums"]["rows"] > 0
+    assert sorted(p.name for p in tmp_path.glob("etl_spark_*")) == []
 
 
 def test_tools_resolve_the_checkout_from_their_own_path():

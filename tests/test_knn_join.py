@@ -17,7 +17,7 @@ def _brute_force_topk(spark, k):
     """Driver-side exact top-k join (A = even vec_ids, B = odd), same
     quantization / cosine / tiebreak arithmetic as the query."""
     rows = (
-        ml._quantized(spark, SF_DIR)
+        sim._quantized(spark, SF_DIR)
         .select("vec_id", "q")
         .collect()
     )

@@ -10,11 +10,10 @@ from __future__ import annotations
 
 import pytest
 
+from etl_spark.plans.llm_similarity import _quantized
 from etl_spark.plans.ml import (
     K_CLUSTERS,
     _assign,
-    _cluster_stats,
-    _quantized,
     ml_kmeans_lloyd,
     ml_kmeans_step,
 )
@@ -75,7 +74,7 @@ def test_lloyd_inertia_monotone_per_iteration(spark):
 
 
 def test_step_stats_match_assignment(spark):
-    # _cluster_stats is a plain count/sum over the assignment — cross-check
+    # The step's stats are a plain count/sum over the assignment — cross-check
     # against a driver-side recompute on the collected assignment.
     from pyspark.sql import functions as F
 
@@ -234,22 +233,20 @@ def test_quantized_partitions_scale_with_corpus(spark):
     scale the count grows linearly with the corpus."""
     import math
 
-    from etl_spark.plans.ml import (
-        EMB_ROWS_PER_PARTITION,
-        _emb_partitions,
-        _quantized,
-    )
-    from etl_spark.io import load
+    from etl_spark.io import adaptive_partitions, load
+    from etl_spark.plans.llm_similarity import EMB_ROWS_PER_PARTITION
 
     n = load(spark, SF_DIR, "embeddings").count()
     want = max(1, math.ceil(n / EMB_ROWS_PER_PARTITION))
-    assert _emb_partitions(spark, SF_DIR) == want
+    assert (
+        adaptive_partitions(spark, SF_DIR, "embeddings", EMB_ROWS_PER_PARTITION)
+        == want
+    )
     assert _quantized(spark, SF_DIR).rdd.getNumPartitions() == want
     # The heuristic never collapses a real corpus onto one task:
     # exercise adaptive_partitions itself with a seeded large row
     # count (the memo keyed on (app, dir, table) makes this hermetic).
     from etl_spark import io as eio
-    from etl_spark.io import adaptive_partitions
 
     key = (spark.sparkContext.applicationId, "/nonexistent/sf-big", "embeddings")
     eio._ROW_COUNTS[key] = EMB_ROWS_PER_PARTITION * 50

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
-from etl_spark.operators.ranking import global_rank_cumsum, ntile_from_rank
+from etl_spark.operators.ranking import global_rank, ntile_from_rank
 
 
 def _data(spark, n=257):
@@ -26,8 +26,8 @@ def _data(spark, n=257):
 @pytest.mark.parametrize("n_buckets", [1, 7, 64])
 def test_rank_and_cumsum_match_global_window(spark, n_buckets):
     df = _data(spark)
-    got, totals = global_rank_cumsum(
-        df, key="v", tie="id", sums=("w",), n_buckets=n_buckets
+    got, totals = global_rank(
+        df, [("v", "id", "rn")], sums=("w",), n_buckets=n_buckets
     )
     w = Window.orderBy(F.col("v").asc(), F.col("id").asc())
     want = df.select(
@@ -50,7 +50,7 @@ def test_rank_and_cumsum_match_global_window(spark, n_buckets):
 @pytest.mark.parametrize("n,k", [(257, 5), (257, 10), (9, 10), (10, 10), (40, 7)])
 def test_ntile_from_rank_matches_builtin(spark, n, k):
     df = _data(spark, n)
-    got, totals = global_rank_cumsum(df, key="v", tie="id", n_buckets=7)
+    got, totals = global_rank(df, [("v", "id", "rn")], n_buckets=7)
     mine = got.select(
         "id", ntile_from_rank(F.col("rn"), totals["n"], k).alias("t")
     )
@@ -63,14 +63,14 @@ def test_ntile_from_rank_matches_builtin(spark, n, k):
 
 def test_empty_input(spark):
     df = _data(spark).filter(F.lit(False))
-    got, totals = global_rank_cumsum(df, key="v", tie="id", sums=("w",))
+    got, totals = global_rank(df, [("v", "id", "rn")], sums=("w",))
     assert got.count() == 0
     assert totals == {"n": 0, "w": None}
 
 
 def test_single_row(spark):
     df = _data(spark, 1)
-    got, totals = global_rank_cumsum(df, key="v", tie="id", sums=("w",))
+    got, totals = global_rank(df, [("v", "id", "rn")], sums=("w",))
     row = got.collect()[0]
     assert (row["rn"], totals["n"]) == (1, 1)
     assert row["cum_w"] == totals["w"]
@@ -83,7 +83,7 @@ def test_helper_plan_has_no_unpartitioned_window(spark):
     )
 
     df = _data(spark)
-    got, _ = global_rank_cumsum(df, key="v", tie="id", sums=("w",))
+    got, _ = global_rank(df, [("v", "id", "rn")], sums=("w",))
     plan = got._jdf.queryExecution().executedPlan()
     offenders = [
         n.getClass().getSimpleName()
@@ -95,13 +95,12 @@ def test_helper_plan_has_no_unpartitioned_window(spark):
 
 
 def test_unreferenced_window_is_pruned(spark):
-    """Chained multi-key ranking (customer_rfm_segments does three
-    passes) relies on Catalyst dropping an earlier pass's Window node
+    """Re-ranking an already-ranked frame by another key relies on Catalyst dropping an earlier pass's Window node
     from the later pass's probe/offset jobs — those jobs reference
     only their own key column, so they must not pay for (or recompute)
     the previous ranks. Pin that column-pruning behavior here."""
     df = _data(spark)
-    ranked, _ = global_rank_cumsum(df, key="v", tie="id", rn_col="rn_v")
+    ranked, _ = global_rank(df, [("v", "id", "rn_v")])
     probe = ranked.select(
         F.percentile_approx("w", [0.5], 100).alias("bs")
     )
@@ -118,16 +117,14 @@ def test_multi_matches_chained_single_key(spark, n_buckets):
     for all keys) must be bit-identical to chaining single-key calls —
     rank exactness is bucketing-independent, so any divergence is a
     bug in the fusion, not a tolerance question."""
-    from etl_spark.operators.ranking import global_rank_multi
-
     df = _data(spark)
-    fused, totals = global_rank_multi(
+    fused, totals = global_rank(
         df,
-        specs=[("v", "id", "rn_v"), ("w", "id", "rn_w")],
+        [("v", "id", "rn_v"), ("w", "id", "rn_w")],
         n_buckets=n_buckets,
     )
-    a, t1 = global_rank_cumsum(df, key="v", tie="id", rn_col="rn_v")
-    chained, _ = global_rank_cumsum(a, key="w", tie="id", rn_col="rn_w")
+    a, t1 = global_rank(df, [("v", "id", "rn_v")])
+    chained, _ = global_rank(a, [("w", "id", "rn_w")])
     got = {
         r["id"]: (r["rn_v"], r["rn_w"])
         for r in fused.select("id", "rn_v", "rn_w").collect()
@@ -141,14 +138,12 @@ def test_multi_matches_chained_single_key(spark, n_buckets):
 
 
 def test_multi_fuses_probe_and_offsets_into_fewer_jobs(spark):
-    """The point of global_rank_multi: one probe action + one offsets
-    action TOTAL, not one of each per key. AQE may split an action
+    """The point of fusing keys in one global_rank call: one probe
+    action + one offsets action TOTAL, not one of each per key. AQE may split an action
     into sub-jobs, so assert the fused call's job count is (a) no more
     than a SINGLE-key call's (the per-key marginal cost is zero jobs)
     and (b) strictly below the two chained single-key calls it
     replaces."""
-    from etl_spark.operators.ranking import global_rank_multi
-
     df = _data(spark).localCheckpoint(eager=True)
     tracker = spark.sparkContext.statusTracker()
 
@@ -159,23 +154,19 @@ def test_multi_fuses_probe_and_offsets_into_fewer_jobs(spark):
         return len(after - before)
 
     fused = jobs_of(
-        lambda: global_rank_multi(
+        lambda: global_rank(
             df,
-            specs=[("v", "id", "rn_v"), ("w", "id", "rn_w")],
+            [("v", "id", "rn_v"), ("w", "id", "rn_w")],
             n_buckets=7,
         )
     )
     single = jobs_of(
-        lambda: global_rank_cumsum(
-            df, key="v", tie="id", rn_col="rn_v", n_buckets=7
-        )
+        lambda: global_rank(df, [("v", "id", "rn_v")], n_buckets=7)
     )
 
     def chained():
-        a, _ = global_rank_cumsum(
-            df, key="v", tie="id", rn_col="rn_v", n_buckets=7
-        )
-        global_rank_cumsum(a, key="w", tie="id", rn_col="rn_w", n_buckets=7)
+        a, _ = global_rank(df, [("v", "id", "rn_v")], n_buckets=7)
+        global_rank(a, [("w", "id", "rn_w")], n_buckets=7)
 
     assert fused <= single
     assert fused < jobs_of(chained)

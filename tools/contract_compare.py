@@ -1,10 +1,11 @@
 """The ONE implementation of the driver-style result comparison,
-shared by drive_contract.py (full registry) and drive_one.py (single
-query): sorted column names, exact pandas dtypes (the external
-driver's schema check is width-sensitive — int32 vs int64 is a
-mismatch), and str-formatted sorted row tuples (stricter than ==,
-catches int-vs-float drift). Any future change to what counts as a
-pass lands here once and both drivers stay in agreement."""
+shared by drive_contract.py (the registry, or a DRIVE_ONLY slice of
+it), fuzz_parity.py and perfbench's curation verify: sorted column
+names, exact pandas dtypes (the external driver's schema check is
+width-sensitive — int32 vs int64 is a mismatch), and str-formatted
+sorted row tuples (stricter than ==, catches int-vs-float drift). Any
+future change to what counts as a pass lands here once and every
+caller stays in agreement."""
 from __future__ import annotations
 
 

@@ -1,7 +1,11 @@
 """Drive the driver contract exactly as the verification driver would:
 fresh process, its own plain SparkSession (NOT etl_spark.session),
 entry() smoke at sf0.001, then every oracle-paired query at sf0.01
-compared to DuckDB."""
+compared to DuckDB. Each FAIL prints up to 5 mismatching row pairs.
+
+    python tools/drive_contract.py
+    DRIVE_ONLY='sim_*,ml_kmeans_step' python tools/drive_contract.py
+"""
 import os
 import sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -10,6 +14,7 @@ import duckdb
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as E
+from etl_spark.operators.caching import evict
 from tools.contract_compare import compare_result
 
 # Defaults mirror the round driver exactly (local[8], 8 shuffle
@@ -59,17 +64,23 @@ oracles = E.oracle_sql()
 # DRIVE_ONLY=<glob>[,<glob>...] restricts the drive to query names
 # matching ANY listed glob — iteration aid and the perturbed-corpus
 # superlinear slice; full round receipts always run the whole registry.
+# A glob that matches no registered query is a FAIL (a typo must not
+# end in ALL GREEN).
+fail = 0
 only = os.environ.get("DRIVE_ONLY")
 if only:
     import fnmatch
     globs = [g for g in only.split(",") if g]
+    for g in globs:
+        if not fnmatch.filter(qs, g):
+            print(f"FAIL DRIVE_ONLY glob {g!r} matches no registered query")
+            fail += 1
     qs = {
         n: q
         for n, q in qs.items()
         if any(fnmatch.fnmatch(n, g) for g in globs)
     }
     print(f"DRIVE_ONLY={only}: {len(qs)} queries")
-fail = 0
 for name in sorted(qs):
     t0 = time.time()
     try:
@@ -82,12 +93,15 @@ for name in sorted(qs):
         print(f"rows-only {name}: {len(spdf)} rows  ({time.time()-t0:.1f}s)")
         continue
     ddf = con.execute(oracles[name]).df()
-    r = compare_result(spdf, ddf)
+    r = compare_result(spdf, ddf, max_diffs=5)
+    for x, y in r["diffs"]:
+        print(f"  spark={x}\n  duck ={y}")
     status = "OK  " if r["ok"] else "FAIL"
     if not r["ok"]:
         fail += 1
     print(f"{status} {name}: spark={len(spdf)} duck={len(ddf)} cols_ok={r['cols_ok']} "
           f"dtype_ok={r['dtype_ok']} vals_ok={r['val_ok']}  ({time.time()-t0:.1f}s){r['dtype_detail']}")
 
+evict()  # releases the registry's temp directories
 print(f"\n{'ALL GREEN' if fail == 0 else f'{fail} FAILURES'}")
 sys.exit(1 if fail else 0)

@@ -429,6 +429,7 @@ def main() -> None:
                 total_fail += n_fail
             finally:
                 shutil.rmtree(d, ignore_errors=True)
+    evict()
 
     print("FUZZ ALL GREEN" if total_fail == 0 else
           f"FUZZ {total_fail} TOTAL FAILURES")

@@ -100,6 +100,7 @@ class Harness:
     def __exit__(self, *exc) -> None:
         self.context = {"cpus": self.cpus, "loadavg": [round(x, 2) for x in os.getloadavg()],
                         "git_head": git_head(), "eviction": "cold"}
+        evict(self.spark)  # releases the registry's temp directories
         self.spark.stop()  # flushes the event log
         if self.log_dir is not None:
             groups = read_event_log(pathlib.Path(self.log_dir))

@@ -15,6 +15,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from etl_spark.operators.caching import evict  # noqa: E402
 from etl_spark.plans import REGISTRY  # noqa: E402
 from etl_spark.session import get_spark, tune_session  # noqa: E402
 
@@ -451,6 +452,7 @@ def main() -> None:
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
+    evict()
 
 
 if __name__ == "__main__":

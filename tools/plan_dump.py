@@ -13,6 +13,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
+from etl_spark.operators.caching import evict  # noqa: E402
 from etl_spark.plans import REGISTRY  # noqa: E402
 from etl_spark.session import get_spark, tune_session  # noqa: E402
 
@@ -47,6 +48,7 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange mentions)")
+    evict()
 
 
 if __name__ == "__main__":

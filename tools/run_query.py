@@ -47,6 +47,7 @@ def main() -> None:
     if args.name not in REGISTRY:
         sys.exit(f"unknown query {args.name!r}; try --list")
 
+    from etl_spark.operators.caching import evict
     from etl_spark.session import get_spark, tune_session
 
     spark = tune_session(get_spark("run-query"))
@@ -59,6 +60,7 @@ def main() -> None:
     elapsed = time.perf_counter() - t0
     df.show(args.n, truncate=60)
     print(f"{n} rows in {elapsed:.2f}s at {args.sf}")
+    evict()
 
 
 if __name__ == "__main__":
