@@ -17,10 +17,15 @@ by spark.sql.execution.arrow.maxRecordsPerBatch, and the iterator form
 of mapInPandas keeps peak memory to one batch per core regardless of
 partition size — the shape that survives 100 TB of payload bytes.
 
-Each codec exists once, as a module function. The mapInPandas stages
-call those same functions on the workers (the module is registered
-for by-value pickling below), so the driver-side property tests cover
-exactly the code the workers run.
+Each codec exists once, as a module function. The ten payload stages
+(extract_features ... audio_autocorr) share one stage skeleton,
+``_payload_stage``: each stage is a per-payload row function, and the
+skeleton does the select, the Arrow batch loop and the typed output
+frame. A row whose payload is NULL has nothing to decode and is
+skipped in every stage; an empty payload b"" is decoded normally. The
+workers call the same codec functions as the driver (the module is
+registered for by-value pickling below), so the driver-side property
+tests cover exactly the code the workers run.
 """
 
 from __future__ import annotations
@@ -31,7 +36,7 @@ import struct
 import sys
 import wave
 import zlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -209,29 +214,57 @@ def fake_features(payload: bytes) -> tuple[int, int, str, float]:
     return n_bytes, n_frames, signature, mean_byte
 
 
-def extract_features(df: DataFrame) -> DataFrame:
-    """documents-with-payload → per-doc feature rows via mapInPandas."""
+# Pandas dtype of each numeric Spark column type a stage emits; other
+# columns (string, carried timestamps) keep the type pandas infers.
+_PANDAS_DTYPES = {"bigint": "int64", "int": "int32", "double": "float64"}
+
+
+def _columns(schema: str) -> list[str]:
+    """Column names of a ``name type, ...`` schema string."""
+    return [field.split()[0] for field in schema.split(",")]
+
+
+def _payload_stage(
+    df: DataFrame,
+    schema: str,
+    rows: Callable[[int, bytes], Iterable[tuple]],
+    carry: tuple[tuple[str, str], ...] = (),
+) -> DataFrame:
+    """The payload-stage skeleton: a narrow Arrow map that calls
+    ``rows(doc_id, payload)`` for every row with a non-NULL payload
+    and emits the tuples it yields as ``schema`` rows, each followed
+    by the row's ``carry`` columns (``(name, type)`` pairs appended to
+    the schema). A NULL payload is skipped before the map: there is
+    nothing to decode, and ``bytes(None)`` would kill the task."""
+    carried = [name for name, _ in carry]
+    schema += "".join(f", {name} {typ}" for name, typ in carry)
+    fields = [field.split() for field in schema.split(",")]
+    names = [name for name, _ in fields]
+    dtypes = {name: _PANDAS_DTYPES[t] for name, t in fields if t in _PANDAS_DTYPES}
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            feats = [fake_features(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "n_bytes": [f[0] for f in feats],
-                    "n_frames": [f[1] for f in feats],
-                    "frame_signature": [f[2] for f in feats],
-                    "mean_byte": [f[3] for f in feats],
-                }
-            )
+            out = [
+                (*row, *extra)
+                for doc_id, payload, *extra in zip(
+                    pdf["doc_id"], pdf["payload"], *(pdf[c] for c in carried)
+                )
+                for row in rows(doc_id, bytes(payload))
+            ]
+            yield pd.DataFrame(out, columns=names).astype(dtypes)
 
-    # A NULL payload has nothing to decode — skip it (empty payloads
-    # b"" are decoded normally). Without this, `len(None)` would kill
-    # the whole task on the first row with a missing payload.
     return (
-        df.select("doc_id", "payload")
+        df.select("doc_id", "payload", *carried)
         .where(F.col("payload").isNotNull())
-        .mapInPandas(batches, schema=FEATURE_SCHEMA)
+        .mapInPandas(batches, schema=schema)
+    )
+
+
+def extract_features(df: DataFrame) -> DataFrame:
+    """documents-with-payload → per-doc feature rows
+    (``fake_features``)."""
+    return _payload_stage(
+        df, FEATURE_SCHEMA, lambda doc_id, payload: [(doc_id, *fake_features(payload))]
     )
 
 
@@ -268,33 +301,12 @@ def sample_frames(
     frame rows continue downstream.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, sizes, md5s = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                n_frames = len(payload) // frame_bytes + 1
-                for idx in range(0, n_frames, every_n):
-                    frame = payload[idx * frame_bytes : (idx + 1) * frame_bytes]
-                    ids.append(doc_id)
-                    idxs.append(idx)
-                    sizes.append(len(frame))
-                    md5s.append(hashlib.md5(frame).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_bytes": pd.Series(sizes, dtype="int32"),
-                    "frame_md5": pd.Series(md5s, dtype="object"),
-                }
-            )
+    def rows(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        for idx in range(0, len(payload) // frame_bytes + 1, every_n):
+            frame = payload[idx * frame_bytes : (idx + 1) * frame_bytes]
+            yield doc_id, idx, len(frame), hashlib.md5(frame).hexdigest()
 
-    # NULL payloads: nothing to frame — skip (see extract_features).
-    return (
-        df.select("doc_id", "payload")
-        .where(F.col("payload").isNotNull())
-        .mapInPandas(batches, schema=FRAME_SCHEMA)
-    )
+    return _payload_stage(df, FRAME_SCHEMA, rows)
 
 
 RESIZE_TARGET_BYTES = 512
@@ -313,31 +325,13 @@ def resize_payload(
     transform with the exact batch shape a real resize has (binary in,
     binary-derived features out, constant output size)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            orig, md5s = [], []
-            for payload in pdf["payload"]:
-                payload = bytes(payload)
-                orig.append(len(payload))
-                resized = payload[:target_bytes].ljust(target_bytes, b"\x00")
-                md5s.append(hashlib.md5(resized).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "orig_bytes": pd.Series(orig, dtype="int32"),
-                    "new_bytes": pd.Series(
-                        [target_bytes] * len(orig), dtype="int32"
-                    ),
-                    "resized_md5": pd.Series(md5s, dtype="object"),
-                }
-            )
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        resized = payload[:target_bytes].ljust(target_bytes, b"\x00")
+        return [
+            (doc_id, len(payload), target_bytes, hashlib.md5(resized).hexdigest())
+        ]
 
-    # NULL payloads: nothing to resize — skip (see extract_features).
-    return (
-        df.select("doc_id", "payload")
-        .where(F.col("payload").isNotNull())
-        .mapInPandas(batches, schema=RESIZE_SCHEMA)
-    )
+    return _payload_stage(df, RESIZE_SCHEMA, rows)
 
 
 WAV_DECODE_SCHEMA = (
@@ -354,31 +348,12 @@ def decode_audio(df: DataFrame) -> DataFrame:
     batch in/out; the exact stage shape a torchaudio-backed pipeline
     has, with a real (if humble) codec in the decode slot."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                {"doc_id": doc_id, **decode_wav(bytes(payload))}
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "mime", "n_channels", "sample_rate",
-                    "n_samples", "mean_sample", "pcm_md5",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64", "n_channels": "int32",
-                    "sample_rate": "int32", "n_samples": "int64",
-                    "mean_sample": "float64",
-                }
-            )
+    keys = _columns(WAV_DECODE_SCHEMA)[1:]
 
-    return (
-        df.select("doc_id", "payload")
-        .where(F.col("payload").isNotNull())
-        .mapInPandas(batches, schema=WAV_DECODE_SCHEMA)
-    )
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        return [(doc_id, *map(decode_wav(payload).get, keys))]
+
+    return _payload_stage(df, WAV_DECODE_SCHEMA, rows)
 
 
 DEFLATE_DECODE_SCHEMA = (
@@ -394,31 +369,17 @@ def decode_deflate(df: DataFrame) -> DataFrame:
     ``decode_payload``'s dispatch. Narrow map; payload never
     shuffles."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                raw, mime = payload, "application/octet-stream"
-                if sniff_mime(payload) == "application/zlib":
-                    try:
-                        raw = zlib.decompress(payload)
-                        mime = "application/zlib"
-                    except zlib.error:
-                        pass  # sniff false positive: fingerprint raw bytes
-                rows.append(
-                    (doc_id, mime, len(raw), hashlib.md5(raw).hexdigest())
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "mime", "decoded_bytes", "decoded_md5"],
-            ).astype({"doc_id": "int64", "decoded_bytes": "int64"})
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        raw, mime = payload, "application/octet-stream"
+        if sniff_mime(payload) == "application/zlib":
+            try:
+                raw = zlib.decompress(payload)
+                mime = "application/zlib"
+            except zlib.error:
+                pass  # sniff false positive: fingerprint raw bytes
+        return [(doc_id, mime, len(raw), hashlib.md5(raw).hexdigest())]
 
-    return (
-        df.select("doc_id", "payload")
-        .where(F.col("payload").isNotNull())
-        .mapInPandas(batches, schema=DEFLATE_DECODE_SCHEMA)
-    )
+    return _payload_stage(df, DEFLATE_DECODE_SCHEMA, rows)
 
 
 def _with_payload(
@@ -465,6 +426,19 @@ def with_wav_payload(docs: DataFrame, pcm_from: str = "text", spread: bool = Tru
     return _with_payload(docs, pcm_from, spread, build_wav)
 
 
+def _centered_pcm8(payload: bytes, stage: str) -> np.ndarray:
+    """The centered samples (byte - 128) of an 8-bit WAV payload. Loud,
+    not wrong: treating 16/24/32-bit PCM bytes as samples would frame
+    interleaved half-words into garbage energies (the BMP
+    sniff/decode-agreement lesson applied here)."""
+    params, pcm = wav_pcm(payload)
+    if params.sampwidth != 1:
+        raise ValueError(
+            f"{stage} expects 8-bit PCM, got sample width {params.sampwidth}"
+        )
+    return np.frombuffer(pcm, dtype=np.uint8).astype(np.int64) - 128
+
+
 # Analysis frame length for audio feature extraction: 160 samples =
 # 20 ms at the 8 kHz fixture rate — the standard speech frame. The
 # trailing partial frame is KEPT (real feature extractors emit it
@@ -492,65 +466,28 @@ def frame_audio_energy(df: DataFrame) -> DataFrame:
     numpy reshape + einsum over the whole clip, not a Python loop
     per frame."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "frame_idx", "frame_n", "frame_sum", "frame_sq"]
+    def rows(doc_id: int, payload: bytes) -> Iterable[tuple]:
+        s = _centered_pcm8(payload, "frame_audio_energy")
+        n = len(s)
+        if n == 0:
+            return ()
+        n_frames = -(-n // AUDIO_FRAME)
+        padded = np.zeros(n_frames * AUDIO_FRAME, dtype=np.int64)
+        padded[:n] = s  # zero-pad: pads add 0 to sum and sq
+        grid = padded.reshape(n_frames, AUDIO_FRAME)
+        fn = [AUDIO_FRAME] * (n_frames - 1) + [n - (n_frames - 1) * AUDIO_FRAME]
+        return zip(
+            [doc_id] * n_frames,
+            range(n_frames),
+            fn,
+            grid.sum(axis=1).tolist(),
+            np.einsum("ij,ij->i", grid, grid).tolist(),
+        )
 
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                params, pcm = wav_pcm(bytes(payload))
-                if params.sampwidth != 1:
-                    # Loud, not wrong: treating 16/24/32-bit PCM
-                    # bytes as samples would frame interleaved
-                    # half-words into garbage energies (the BMP
-                    # sniff/decode-agreement lesson applied here).
-                    raise ValueError(
-                        "frame_audio_energy expects 8-bit PCM, got "
-                        f"sample width {params.sampwidth}"
-                    )
-                n = len(pcm)
-                if n == 0:
-                    continue
-                s = np.frombuffer(pcm, dtype=np.uint8).astype(np.int64) - 128
-                n_frames = -(-n // AUDIO_FRAME)
-                padded = np.zeros(n_frames * AUDIO_FRAME, dtype=np.int64)
-                padded[:n] = s  # zero-pad: pads add 0 to sum and sq
-                grid = padded.reshape(n_frames, AUDIO_FRAME)
-                fsum = grid.sum(axis=1)
-                fsq = np.einsum("ij,ij->i", grid, grid)
-                fn = np.full(n_frames, AUDIO_FRAME, dtype=np.int64)
-                fn[-1] = n - (n_frames - 1) * AUDIO_FRAME
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": np.full(n_frames, doc_id, dtype=np.int64),
-                            "frame_idx": np.arange(n_frames, dtype=np.int32),
-                            "frame_n": fn.astype(np.int32),
-                            "frame_sum": fsum,
-                            "frame_sq": fsq,
-                        }
-                    )
-                )
-            yield (
-                pd.concat(out, ignore_index=True)
-                if out
-                else pd.DataFrame(columns=cols).astype(
-                    {
-                        "doc_id": "int64",
-                        "frame_idx": "int32",
-                        "frame_n": "int32",
-                        "frame_sum": "int64",
-                        "frame_sq": "int64",
-                    }
-                )
-            )
-
-    frames = df.mapInPandas(
-        batches,
-        schema=(
-            "doc_id bigint, frame_idx int, frame_n int, "
-            "frame_sum bigint, frame_sq bigint"
-        ),
+    frames = _payload_stage(
+        df,
+        "doc_id bigint, frame_idx int, frame_n int, frame_sum bigint, frame_sq bigint",
+        rows,
     )
     return frames.withColumn(
         "rms",
@@ -1117,30 +1054,12 @@ def decode_image(df: DataFrame) -> DataFrame:
     pipeline has, with the three raster codecs the stdlib plus ~80
     lines of LZW can express in the decode slot."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                {"doc_id": doc_id, **_raster_summary(*raster_gray(bytes(payload)))}
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "mime", "width", "height", "bpp",
-                    "n_pixels", "luma_sum", "luma_md5",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64", "width": "int32", "height": "int32",
-                    "bpp": "int32", "n_pixels": "int64", "luma_sum": "int64",
-                }
-            )
+    keys = _columns(BMP_DECODE_SCHEMA)[1:]
 
-    return (
-        df.select("doc_id", "payload")
-        .where(F.col("payload").isNotNull())
-        .mapInPandas(batches, schema=BMP_DECODE_SCHEMA)
-    )
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        return [(doc_id, *map(_raster_summary(*raster_gray(payload)).get, keys))]
+
+    return _payload_stage(df, BMP_DECODE_SCHEMA, rows)
 
 
 def thumbnail_features(df: DataFrame) -> DataFrame:
@@ -1163,50 +1082,22 @@ def thumbnail_features(df: DataFrame) -> DataFrame:
     Narrow Arrow map: payloads never shuffle; the downsample is a
     strided numpy add (four shifted views), no Python per pixel."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, w, h, gray = raster_gray(bytes(payload))
-                h2, w2 = h // 2, w // 2
-                if h2 == 0 or w2 == 0:
-                    continue
-                g = np.frombuffer(gray, dtype=np.uint8).reshape(h, w)
-                g = g[: h2 * 2, : w2 * 2].astype(np.int64)
-                ds = (
-                    g[0::2, 0::2] + g[0::2, 1::2]
-                    + g[1::2, 0::2] + g[1::2, 1::2]
-                ) // 4
-                flat = ds.ravel()
-                weights = np.arange(1, flat.size + 1, dtype=np.int64)
-                rows.append(
-                    (
-                        doc_id,
-                        w2,
-                        h2,
-                        int(flat.sum()),
-                        int((weights * flat).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "out_w", "out_h", "luma_sum", "luma_wsum"],
-            ).astype(
-                {
-                    "doc_id": "int64",
-                    "out_w": "int32",
-                    "out_h": "int32",
-                    "luma_sum": "int64",
-                    "luma_wsum": "int64",
-                }
-            )
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        _, _, w, h, gray = raster_gray(payload)
+        h2, w2 = h // 2, w // 2
+        if h2 == 0 or w2 == 0:
+            return []
+        g = np.frombuffer(gray, dtype=np.uint8).reshape(h, w)
+        g = g[: h2 * 2, : w2 * 2].astype(np.int64)
+        ds = (g[0::2, 0::2] + g[0::2, 1::2] + g[1::2, 0::2] + g[1::2, 1::2]) // 4
+        flat = ds.ravel()
+        weights = np.arange(1, flat.size + 1, dtype=np.int64)
+        return [(doc_id, w2, h2, int(flat.sum()), int((weights * flat).sum()))]
 
-    return df.mapInPandas(
-        batches,
-        schema=(
-            "doc_id bigint, out_w int, out_h int, "
-            "luma_sum bigint, luma_wsum bigint"
-        ),
+    return _payload_stage(
+        df,
+        "doc_id bigint, out_w int, out_h int, luma_sum bigint, luma_wsum bigint",
+        rows,
     )
 
 
@@ -1262,62 +1153,37 @@ def perceptual_hash(
     header bytes.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bit_values = 1 << np.arange(PHASH_SEGMENTS, dtype=np.int64)
+    bit_values = 1 << np.arange(PHASH_SEGMENTS, dtype=np.int64)
 
-        def _phash(arr: np.ndarray) -> int:
-            # One cumsum per payload instead of 60 sliced sums: segment
-            # boundaries (s*n)//SEG are exact integer math, so the
-            # result is bit-identical to the per-segment loop the
-            # oracle replays. Empty segments (n < SEG) contribute bit 0
-            # — 0*n >= total*0 would SET the bit and make all short
-            # payloads look alike, so they are masked out; registered
-            # queries filter length >= SEG and never hit this branch.
-            n = len(arr)
-            seg = np.arange(PHASH_SEGMENTS + 1, dtype=np.int64)
-            bounds = (seg * n) // PHASH_SEGMENTS
-            csum = np.concatenate(([0], np.cumsum(arr)))
-            ssums = csum[bounds[1:]] - csum[bounds[:-1]]
-            slens = bounds[1:] - bounds[:-1]
-            total = int(csum[-1])
-            bits = ((ssums * n) >= (total * slens)) & (slens > 0)
-            return int(bit_values[bits].sum())
+    def _phash(arr: np.ndarray) -> int:
+        # One cumsum per payload instead of 60 sliced sums: segment
+        # boundaries (s*n)//SEG are exact integer math, so the
+        # result is bit-identical to the per-segment loop the
+        # oracle replays. Empty segments (n < SEG) contribute bit 0
+        # — 0*n >= total*0 would SET the bit and make all short
+        # payloads look alike, so they are masked out; registered
+        # queries filter length >= SEG and never hit this branch.
+        n = len(arr)
+        seg = np.arange(PHASH_SEGMENTS + 1, dtype=np.int64)
+        bounds = (seg * n) // PHASH_SEGMENTS
+        csum = np.concatenate(([0], np.cumsum(arr)))
+        ssums = csum[bounds[1:]] - csum[bounds[:-1]]
+        slens = bounds[1:] - bounds[:-1]
+        total = int(csum[-1])
+        bits = ((ssums * n) >= (total * slens)) & (slens > 0)
+        return int(bit_values[bits].sum())
 
-        for pdf in it:
-            ids, hashes = [], []
-            carried: list[list] = [[] for _ in _carry_names]
-            for row_i, (doc_id, payload) in enumerate(
-                zip(pdf["doc_id"], pdf["payload"])
-            ):
-                payload = bytes(payload)
-                if pixel_decode:
-                    *_, payload = raster_gray(payload)
-                arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-                ids.append(doc_id)
-                hashes.append(_phash(arr))
-                reps = 1
-                if noisy_variant:
-                    noisy = arr.copy()
-                    noisy[::PHASH_NOISE_STRIDE] += 1
-                    ids.append(doc_id + PHASH_VARIANT_OFFSET)
-                    hashes.append(_phash(noisy))
-                    reps = 2
-                for ci, cname in enumerate(_carry_names):
-                    carried[ci].extend([pdf[cname].iloc[row_i]] * reps)
-            out = {"doc_id": ids, "phash": hashes}
-            for ci, cname in enumerate(_carry_names):
-                out[cname] = carried[ci]
-            yield pd.DataFrame(out)
+    def rows(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        if pixel_decode:
+            *_, payload = raster_gray(payload)
+        arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
+        yield doc_id, _phash(arr)
+        if noisy_variant:
+            noisy = arr.copy()
+            noisy[::PHASH_NOISE_STRIDE] += 1
+            yield doc_id + PHASH_VARIANT_OFFSET, _phash(noisy)
 
-    _carry_names = tuple(name for name, _ in carry)
-    schema = PHASH_SCHEMA + "".join(
-        f", {name} {typ}" for name, typ in carry
-    )
-    return (
-        docs.select("doc_id", "payload", *_carry_names)
-        .where(F.col("payload").isNotNull())
-        .mapInPandas(batches, schema=schema)
-    )
+    return _payload_stage(docs, PHASH_SCHEMA, rows, carry)
 
 
 # Autocorrelation lags for the periodicity features: samples (not
@@ -1342,35 +1208,17 @@ def audio_autocorr(df: DataFrame) -> DataFrame:
     exact divisions. Narrow Arrow map: one row out per clip, the
     payload never shuffles, per-clip work is numpy dot products."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "n_samples", "r0"] + [f"r{L}" for L in AUTOCORR_LAGS]
-        dtypes = {c: "int64" for c in cols}
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        s = _centered_pcm8(payload, "audio_autocorr")
+        n = len(s)
+        if n == 0:
+            return []
+        lags = (int(np.dot(s[:-L], s[L:])) if n > L else 0 for L in AUTOCORR_LAGS)
+        return [(doc_id, n, int(np.dot(s, s)), *lags)]
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                params, pcm = wav_pcm(bytes(payload))
-                if params.sampwidth != 1:
-                    raise ValueError(
-                        "audio_autocorr expects 8-bit PCM, got "
-                        f"sample width {params.sampwidth}"
-                    )
-                n = len(pcm)
-                if n == 0:
-                    continue
-                s = np.frombuffer(pcm, dtype=np.uint8).astype(np.int64) - 128
-                row = [int(doc_id), n, int(np.dot(s, s))]
-                for L in AUTOCORR_LAGS:
-                    row.append(int(np.dot(s[:-L], s[L:])) if n > L else 0)
-                rows.append(row)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame(columns=cols).astype(dtypes)
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema="doc_id bigint, n_samples bigint, r0 bigint, "
-        + ", ".join(f"r{L} bigint" for L in AUTOCORR_LAGS),
+    return _payload_stage(
+        df,
+        "doc_id bigint, n_samples bigint, r0 bigint"
+        + "".join(f", r{L} bigint" for L in AUTOCORR_LAGS),
+        rows,
     )

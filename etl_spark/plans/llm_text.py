@@ -1238,6 +1238,16 @@ _H16_TOKEN_SQL = " + ".join(
 )
 
 
+def token_bucket(t):
+    """A token's feature-hashing bucket: its md5's 4-hex prefix mod
+    HASH_DIM (the JVM form of ``_H16_TOKEN_SQL``). The one definition
+    shared by the hashing-trick scorer, the trained classifier and its
+    streaming gate, so batch and stream bucket every token alike."""
+    return (
+        F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("bigint") % HASH_DIM
+    ).cast("int")
+
+
 @register(
     "text_hashing_trick_score",
     oracle=f"""
@@ -1280,11 +1290,7 @@ _H16_TOKEN_SQL = " + ".join(
 )
 def text_hashing_trick_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = tokens_col()
-    bucket = lambda t: (  # noqa: E731
-        F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("bigint")
-        % HASH_DIM
-    )
-    weight = lambda t: bucket(t) % 7 - 3  # noqa: E731
+    weight = lambda t: token_bucket(t) % 7 - 3  # noqa: E731
     margin = F.aggregate(
         F.transform(toks, weight), F.lit(0).cast("bigint"), lambda a, x: a + x
     )
@@ -1296,7 +1302,7 @@ def text_hashing_trick_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.array_distinct(toks)).cast("bigint").alias(
                 "n_distinct_tokens"
             ),
-            F.size(F.array_distinct(F.transform(toks, bucket)))
+            F.size(F.array_distinct(F.transform(toks, token_bucket)))
             .cast("bigint")
             .alias("n_distinct_buckets"),
             margin.alias("margin"),

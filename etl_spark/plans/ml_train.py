@@ -76,7 +76,12 @@ from etl_spark.plans.llm_dedup import (
     PREFIX_JACCARD_T,
     SHINGLES_SQL,
 )
-from etl_spark.plans.llm_text import _H16_TOKEN_SQL, HASH_DIM, tokens_col
+from etl_spark.plans.llm_text import (
+    _H16_TOKEN_SQL,
+    HASH_DIM,
+    token_bucket,
+    tokens_col,
+)
 from etl_spark.plans.registry import register
 
 LOGREG_ITERS = 4
@@ -246,13 +251,6 @@ def _train_oracle_sql(
     """
 
 
-def _bucket(t):
-    return (
-        F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("bigint")
-        % HASH_DIM
-    ).cast("int")
-
-
 def dup_label_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup membership LABEL frame — (doc_id, is_dup=1), one
     row per near-dup member — materialized ONCE per (session, sf_dir)
@@ -302,7 +300,7 @@ def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "doc_id",
                 F.size(toks).cast("bigint").alias("dl"),
-                F.transform(toks, _bucket).alias("buckets"),
+                F.transform(toks, token_bucket).alias("buckets"),
                 (h60 % 100 < HOLDOUT_TRAIN_PCT).alias("tr"),
             )
             .join(dup_docs, "doc_id", "left")
@@ -782,7 +780,7 @@ def ml_logreg_top_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .select(F.explode(toks).alias("t"))
         .distinct()
-        .select(_bucket(F.col("t")).cast("bigint").alias("bucket"), "t")
+        .select(token_bucket(F.col("t")).cast("bigint").alias("bucket"), "t")
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tokens"),

@@ -9,11 +9,18 @@ the state store and updates it as events arrive — O(1) state per key,
 O(batch) work per trigger, the incremental shape the reference's
 re-run-batch design approximates from the outside.
 
-Tiebreak contract matches the batch window exactly: later ts wins;
-equal ts → higher event_id wins (the "9.json" vs "10.json" ordering
-fine print generalized, SURVEY.md §2.4 item 1-2). Emission is
-update-mode: every batch that touches a key emits that key's current
-winner; the last snapshot per key is the final answer.
+Tiebreak contract matches the batch window: later ts wins; equal ts
+→ higher event_id wins (the "9.json" vs "10.json" ordering fine print
+generalized, SURVEY.md §2.4 item 1-2). Emission is update-mode: every
+batch that touches a key emits that key's current winner; the last
+snapshot per key is the final answer.
+
+Known divergence from the batch twin: a winner whose value is NaN is
+emitted (and stored) as null here, where the batch window keeps NaN.
+The fix is ROADMAP item 1, a built-in ``max(struct(...))`` streaming
+aggregate as ``streaming/cdc.py`` uses; it waits on a declared change
+to ``perfbench/stream.py:verify``, which reads this state layout
+(``ts_us, event_id, value``).
 """
 
 from __future__ import annotations

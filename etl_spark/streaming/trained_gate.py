@@ -27,15 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_spark.plans.llm_text import HASH_DIM
-
-
-def _bucket(t):
-    # engine-identical token bucket (plans/ml_train.py twin)
-    return (
-        F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("bigint")
-        % HASH_DIM
-    ).cast("int")
+from etl_spark.plans.llm_text import HASH_DIM, token_bucket
 
 
 def score_documents(
@@ -64,7 +56,7 @@ def score_documents(
         F.col("text").isNotNull(), F.size(toks).cast("bigint")
     )  # NULL (not -1) when unscorable
     zraw = F.aggregate(
-        F.transform(toks, lambda t: F.element_at(wlit, _bucket(t) + F.lit(1))),
+        F.transform(toks, lambda t: F.element_at(wlit, token_bucket(t) + F.lit(1))),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )

@@ -1,10 +1,11 @@
 """Stdlib BMP codec fences: the encoder must emit a genuinely
 parseable 24-bit bitmap (header fields, bottom-up rows, 4-byte
-padding), the worker-side twins must byte-match the driver-side
-canonical functions, and the pixel-decode fingerprint must be a
-property of the IMAGE, not its serialization — the same pixels stored
-top-down and bottom-up must fingerprint identically, which the raw
-byte-segment fingerprint cannot do."""
+padding), the Spark stages (which run the same module codecs on the
+workers) must byte-match the driver-side functions, and the
+pixel-decode fingerprint must be a property of the IMAGE, not its
+serialization — the same pixels stored top-down and bottom-up must
+fingerprint identically, which the raw byte-segment fingerprint
+cannot do."""
 
 from __future__ import annotations
 

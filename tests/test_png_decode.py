@@ -4,9 +4,10 @@ tests/test_bmp_decode.py: the encoder must emit a genuinely parseable
 IDAT) with every filter type (None/Sub/Up/Average/Paeth) load-bearing,
 the decoder must reconstruct the exact pixel grid, corruption under a
 true magic must fail LOUDLY (CRC check), valid-but-unsupported shapes
-must fall back rather than crash (the BMP lesson), the worker-side
-twins must byte-match the driver-side canonical functions, and the
-pixel-decode fingerprint must be container-blind: the SAME image as a
+must fall back rather than crash (the BMP lesson), the Spark stages
+(which run the same module codecs on the workers) must byte-match the
+driver-side functions, and the pixel-decode fingerprint must be
+container-blind: the SAME image as a
 BMP and as a PNG must fingerprint identically."""
 
 from __future__ import annotations

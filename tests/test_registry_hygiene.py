@@ -276,3 +276,25 @@ def test_memo_bound_drops_oldest_without_release(spark):
     evict("hygiene_fifo")
     assert sorted(released) == [0] + list(range(3, MEMO_BOUND + 2))
     assert live_caches()["hygiene_fifo"] == 0
+
+
+def test_media_stages_share_one_payload_skeleton():
+    """operators/media.py builds every payload stage through one
+    skeleton (``_payload_stage``: select, NULL-payload filter, Arrow
+    map, typed output frame) and every fixture payload through one
+    helper (``_with_payload``). A second hand-written mapInPandas
+    shell is how the NULL rule drifted before: three stages without
+    the filter died on the first NULL payload."""
+    import ast
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "etl_spark/operators/media.py"
+    sites = [
+        getattr(top, "name", "<module>")
+        for top in ast.parse(path.read_text()).body
+        for n in ast.walk(top)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "mapInPandas"
+    ]
+    assert sorted(sites) == ["_payload_stage", "_with_payload"], sites
