@@ -37,10 +37,11 @@ from __future__ import annotations
 
 import pathlib
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark.etl.pipeline import _read_runs, snapshot_latest, to_records
+from etl_spark.operators.ranking import first_per_key
 
 # Bucket count for the materialized snapshot table. Small here so the
 # tests exercise multi-bucket layouts; at scale this is sized so one
@@ -80,14 +81,9 @@ def latest_wins_merge(
         tagged = current.select(*cols).withColumn(
             "_src", F.lit(0)
         ).unionByName(batch.select(*cols).withColumn("_src", F.lit(1)))
-    w = Window.partitionBy(*keys).orderBy(
-        *[F.col(c).desc() for c in order_cols], F.col("_src").desc()
-    )
-    return (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
+    return first_per_key(
+        tagged, keys, *[F.col(c).desc() for c in order_cols], F.col("_src").desc()
+    ).drop("_src")
 
 
 def load_extraction(

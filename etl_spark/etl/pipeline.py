@@ -6,7 +6,8 @@ DataFrame plan over the whole raw zone:
 
     read every <root>/*/<ts>/runs directory (S12/S13: one multi-root
         scan of the *.json files, partitions recovered from file paths)
-    → latest-snapshot-wins window dedup per (repo, run file) (S14)
+    → latest-snapshot-wins dedup per (repo, run file) (S14), through
+        operators.ranking.first_per_key — the engine's one S14 operator
     → 9-column flatten with nested repository.name (S15/S16)
     → deterministic total order (repo asc, ts desc, filename desc)
     → single-file CSV export, header + null→empty (S17)
@@ -44,12 +45,13 @@ import pathlib
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_spark.etl.ingest import RetryingSession
 from etl_spark.etl.raw_zone import extract_snapshot, utcnow
+from etl_spark.operators.ranking import first_per_key
 
 RUN_SCHEMA = T.StructType(
     [
@@ -134,17 +136,15 @@ def load_workflow_runs(spark: SparkSession, workflows_dir: pathlib.Path) -> Data
 
 
 def snapshot_latest(runs: DataFrame) -> DataFrame:
-    """S14: latest-snapshot-wins dedup.
+    """S14: latest-snapshot-wins dedup — ``first_per_key``, the one
+    S14 operator, ordered by extract_ts desc.
 
     Key (repo_dir, file_id) — the run's file name scoped to its repo
     directory, exactly the reference's seen-set key (main.py:149-157).
     <ts> strings are fixed-width so string-desc == chronological-desc.
     """
-    w = Window.partitionBy("repo_dir", "file_id").orderBy(F.col("extract_ts").desc())
-    return (
-        runs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    return first_per_key(
+        runs, ["repo_dir", "file_id"], F.col("extract_ts").desc()
     )
 
 

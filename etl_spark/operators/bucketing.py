@@ -19,18 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    path: str,
-    key: str,
-    n_buckets: int = 8,
-) -> None:
-    """Persist df as an external bucketed+sorted parquet table."""
+N_BUCKETS = 8
+
+
+def write_bucketed(df: DataFrame, table_name: str, path: str, key: str) -> None:
+    """Persist df as an external table of N_BUCKETS buckets on ``key``,
+    each sorted by ``key``, in parquet."""
     (
         df.write.mode("overwrite")
         .option("path", path)
-        .bucketBy(n_buckets, key)
+        .bucketBy(N_BUCKETS, key)
         .sortBy(key)
         .format("parquet")
         .saveAsTable(table_name)

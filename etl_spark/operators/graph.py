@@ -104,9 +104,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    vertices: DataFrame, edges: DataFrame, max_iterations: int = MAX_ITERATIONS
-) -> DataFrame:
+def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     """Label every vertex with its component's minimum vertex id.
 
     vertices: one column ``id``; edges: columns ``src``, ``dst``
@@ -114,8 +112,6 @@ def connected_components(
     normalized internally; endpoints must be ⊆ vertices).
     Returns (id, component).
     """
-    if max_iterations < 1:
-        raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     e = (
         edges.select(
             F.greatest("src", "dst").alias("child"),
@@ -127,7 +123,7 @@ def connected_components(
     )
     n_edges = e.count()
 
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         nxt = _small_star(_large_star(e)).localCheckpoint(
             eager=True, storageLevel=StorageLevel.DISK_ONLY
         )
@@ -142,9 +138,9 @@ def connected_components(
             break
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
+            f"connected_components did not converge in {MAX_ITERATIONS} "
             f"rounds ({n_edges} edges still moving); the alternation "
-            "bound is O(log n) — raise max_iterations"
+            "bound is O(log n) — raise MAX_ITERATIONS"
         )
     # Structural guarantee before labeling: a fixpoint that is not a
     # star forest (a vertex appearing as BOTH parent and child) would

@@ -167,14 +167,13 @@ def write_zorder_layout(
     path: str,
     cols: list[str],
     n_files: int,
-    bits: int = ZORDER_BITS,
 ) -> None:
     """Rewrite ``df`` as ``n_files`` parquet files clustered on the
     Z-curve of ``cols``: range-partition + sort on the z-value, then
     drop it — readers see the original schema, but every file's
     min/max stats are tight on every z-ordered column at once. One
     range shuffle, same cost shape as write_sorted_layout."""
-    z = zorder_column(df, cols, bits)
+    z = zorder_column(df, cols)
     (
         df.withColumn("__z", z)
         .repartitionByRange(n_files, "__z")

@@ -286,14 +286,10 @@ FRAME_SAMPLE_EVERY = 2
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_bytes int, frame_md5 string"
 
 
-def sample_frames(
-    df: DataFrame,
-    frame_bytes: int = FRAME_BYTES,
-    every_n: int = FRAME_SAMPLE_EVERY,
-) -> DataFrame:
-    """Frame-sampling stage: split each payload into fixed-size frames
-    (the stand-in for video frame extraction) and emit every
-    ``every_n``-th frame as its own row — a 1:N mapInPandas whose
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Frame-sampling stage: split each payload into FRAME_BYTES-sized
+    frames (the stand-in for video frame extraction) and emit every
+    FRAME_SAMPLE_EVERY-th frame as its own row — a 1:N mapInPandas whose
     output batch is LARGER than its input batch, the shape a video
     pipeline needs (decode libs absent; frames are byte chunks).
 
@@ -302,8 +298,8 @@ def sample_frames(
     """
 
     def rows(doc_id: int, payload: bytes) -> Iterator[tuple]:
-        for idx in range(0, len(payload) // frame_bytes + 1, every_n):
-            frame = payload[idx * frame_bytes : (idx + 1) * frame_bytes]
+        for idx in range(0, len(payload) // FRAME_BYTES + 1, FRAME_SAMPLE_EVERY):
+            frame = payload[idx * FRAME_BYTES : (idx + 1) * FRAME_BYTES]
             yield doc_id, idx, len(frame), hashlib.md5(frame).hexdigest()
 
     return _payload_stage(df, FRAME_SCHEMA, rows)
@@ -316,20 +312,16 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_payload(
-    df: DataFrame,
-    target_bytes: int = RESIZE_TARGET_BYTES,
-) -> DataFrame:
+def resize_payload(df: DataFrame) -> DataFrame:
     """Resize stage (stand-in for image resize): truncate payloads over
-    the target, zero-pad payloads under it — a deterministic 1:1
+    RESIZE_TARGET_BYTES, zero-pad payloads under it — a deterministic 1:1
     transform with the exact batch shape a real resize has (binary in,
     binary-derived features out, constant output size)."""
 
     def rows(doc_id: int, payload: bytes) -> list[tuple]:
-        resized = payload[:target_bytes].ljust(target_bytes, b"\x00")
-        return [
-            (doc_id, len(payload), target_bytes, hashlib.md5(resized).hexdigest())
-        ]
+        resized = payload[:RESIZE_TARGET_BYTES].ljust(RESIZE_TARGET_BYTES, b"\x00")
+        md5 = hashlib.md5(resized).hexdigest()
+        return [(doc_id, len(payload), RESIZE_TARGET_BYTES, md5)]
 
     return _payload_stage(df, RESIZE_SCHEMA, rows)
 
@@ -382,48 +374,49 @@ def decode_deflate(df: DataFrame) -> DataFrame:
     return _payload_stage(df, DEFLATE_DECODE_SCHEMA, rows)
 
 
-def _with_payload(
-    docs: DataFrame, src: str, spread: bool, encode: Callable[[bytes], bytes]
-) -> DataFrame:
-    """Fixture-builder skeleton: each non-NULL ``src`` text becomes
-    the payload ``encode(text.encode("utf-8"))``, built in a narrow
-    Arrow map next to its doc_id."""
+def _with_payload(docs: DataFrame, encode: Callable[[bytes], bytes]) -> DataFrame:
+    """Fixture-builder skeleton: each non-NULL ``text`` becomes the
+    payload ``encode(text.encode("utf-8"))``, built in a narrow Arrow
+    map next to its doc_id.
+
+    Single-file scans plateau decode parallelism (one parquet file ->
+    one input partition at bench SFs; SCALING.md's sf1 note), so the
+    TEXT is spread over every core before the payloads are built: the
+    decode map runs everywhere while payloads never cross an Exchange.
+    """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
-                    "payload": [encode(t.encode("utf-8")) for t in pdf[src]],
+                    "payload": [encode(t.encode("utf-8")) for t in pdf["text"]],
                 }
             )
 
-    out = docs.select("doc_id", src).where(F.col(src).isNotNull())
-    if spread:
-        # Single-file scans plateau decode parallelism (one parquet
-        # file -> one input partition at bench SFs; SCALING.md's sf1
-        # note). Spread the TEXT before payload construction so the
-        # decode map runs on every core while payloads still never
-        # cross an Exchange.
-        out = out.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return out.mapInPandas(batches, schema="doc_id bigint, payload binary")
+    return (
+        docs.select("doc_id", "text")
+        .where(F.col("text").isNotNull())
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+        .mapInPandas(batches, schema="doc_id bigint, payload binary")
+    )
 
 
-def with_deflate_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
+def with_deflate_payload(docs: DataFrame) -> DataFrame:
     """Fixture builder: attach a zlib-DEFLATE-compressed payload of
     the document's utf-8 bytes (stdlib zlib encoder, default level —
     a genuine compressed stream, not byte math)."""
-    return _with_payload(docs, src, spread, zlib.compress)
+    return _with_payload(docs, zlib.compress)
 
 
-def with_wav_payload(docs: DataFrame, pcm_from: str = "text", spread: bool = True) -> DataFrame:
+def with_wav_payload(docs: DataFrame) -> DataFrame:
     """Fixture builder: attach a real WAV container whose 8-bit mono
     PCM samples are the document's utf-8 bytes (deterministic, so the
     decoded features replay in SQL from the text). Container bytes are
     assembled by the stdlib ``wave`` ENCODER (``build_wav``) inside the
     batch — the payload column carries genuine WAV files, not byte
     math."""
-    return _with_payload(docs, pcm_from, spread, build_wav)
+    return _with_payload(docs, build_wav)
 
 
 def _centered_pcm8(payload: bytes, stage: str) -> np.ndarray:
@@ -997,30 +990,30 @@ def decode_gif(payload: bytes) -> dict:
     return _raster_summary("image/gif", 8, *gif_gray(payload))
 
 
-def with_bmp_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
+def with_bmp_payload(docs: DataFrame) -> DataFrame:
     """Fixture builder: attach a REAL 24-bit BMP (``build_bmp``) whose
     gray pixel grid is the document's utf-8 bytes, BMP_WIDTH pixels
     per row (trailing partial row dropped by the encoder). Narrow
-    Arrow map; requires ``length(src) >= BMP_WIDTH`` upstream."""
-    return _with_payload(docs, src, spread, build_bmp)
+    Arrow map; requires ``length(text) >= BMP_WIDTH`` upstream."""
+    return _with_payload(docs, build_bmp)
 
 
-def with_png_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
+def with_png_payload(docs: DataFrame) -> DataFrame:
     """Fixture builder: attach a REAL 8-bit grayscale PNG
     (``build_png``) whose pixel grid is the document's utf-8 bytes,
     BMP_WIDTH pixels per row (same grid contract as with_bmp_payload,
     so the two containers hold the SAME image). Narrow Arrow map;
-    requires ``length(src) >= BMP_WIDTH`` upstream."""
-    return _with_payload(docs, src, spread, build_png)
+    requires ``length(text) >= BMP_WIDTH`` upstream."""
+    return _with_payload(docs, build_png)
 
 
-def with_gif_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
+def with_gif_payload(docs: DataFrame) -> DataFrame:
     """Fixture builder: attach a REAL GIF89a (``build_gif``) whose
     pixel grid is the document's utf-8 bytes (same grid contract as
     with_bmp_payload / with_png_payload, so all three containers hold
     the SAME image). Narrow Arrow map; requires
-    ``length(src) >= BMP_WIDTH`` upstream."""
-    return _with_payload(docs, src, spread, build_gif)
+    ``length(text) >= BMP_WIDTH`` upstream."""
+    return _with_payload(docs, build_gif)
 
 
 def raster_gray(payload: bytes) -> tuple[str, int, int, int, bytes]:

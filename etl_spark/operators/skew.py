@@ -2,7 +2,7 @@
 
 A skewed grouping key (one key holding most rows) makes one reducer
 the straggler for the whole stage. Salting splits each key into
-``n_salts`` sub-keys for the first (heavy) aggregation, then merges
+``N_SALTS`` sub-keys for the first (heavy) aggregation, then merges
 the per-salt partials in a second (tiny) aggregation. The pattern is
 only valid for aggregates with a decomposition into partial + merge
 (count→sum, sum→sum, min/max→min/max, ...).
@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
+N_SALTS = 8
 
 
 def salted_aggregate(
@@ -27,7 +28,6 @@ def salted_aggregate(
     keys: Sequence[str],
     partial_aggs: Sequence[Column],
     merge_aggs: Callable[[], Sequence[Column]],
-    n_salts: int = 8,
 ) -> DataFrame:
     """Two-phase grouped aggregation over ``keys``.
 
@@ -37,7 +37,7 @@ def salted_aggregate(
     deterministic within a run and needs no data knowledge.
     """
     salted = df.withColumn(
-        SALT_COL, (F.monotonically_increasing_id() % n_salts).cast("int")
+        SALT_COL, (F.monotonically_increasing_id() % N_SALTS).cast("int")
     )
     partial = salted.groupBy(*keys, SALT_COL).agg(*partial_aggs)
     return partial.groupBy(*keys).agg(*merge_aggs())
@@ -48,15 +48,14 @@ def salted_join(
     dim: DataFrame,
     big_key: str,
     dim_key: str,
-    n_salts: int = 8,
 ) -> DataFrame:
     """Skew-safe equi-join: salt the big side, replicate the dim side.
 
     Each big-side row gets a deterministic salt; the dim side is
-    replicated ``n_salts`` times (one copy per salt value) so every
+    replicated ``N_SALTS`` times (one copy per salt value) so every
     (key, salt) partition finds its match. A hot join key that would
     land on one reducer in a plain shuffle join spreads over
-    ``n_salts`` of them, at the cost of an n_salts-times-larger build
+    ``N_SALTS`` of them, at the cost of an N_SALTS-times-larger build
     side — which is why the pattern only applies when ``dim`` is small
     relative to ``big`` but too large (or the join too constrained)
     to broadcast. AQE's skew-join splitting is the automatic
@@ -66,11 +65,11 @@ def salted_join(
     name-equality on (key, salt) and the output carries one key column.
     """
     salted = big.withColumn(
-        SALT_COL, (F.monotonically_increasing_id() % n_salts).cast("int")
+        SALT_COL, (F.monotonically_increasing_id() % N_SALTS).cast("int")
     )
     replicated = dim.withColumnRenamed(dim_key, big_key).withColumn(
         SALT_COL,
-        F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<int>")),
+        F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1)).cast("array<int>")),
     )
     return salted.join(
         replicated.hint("shuffle_hash"), [big_key, SALT_COL]

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_spark.io import load, register_views
+from etl_spark.operators.skew import N_SALTS
 from etl_spark.plans.registry import register
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -193,9 +194,6 @@ def sql_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-N_SALTS = 8
-
-
 @register(
     "agg_salted_event_counts",
     oracle="""
@@ -229,7 +227,6 @@ def agg_salted_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("_n").alias("n_events"),
             F.sum("_sv").cast("double").alias("sum_value"),
         ],
-        n_salts=N_SALTS,
     )
 
 

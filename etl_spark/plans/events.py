@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_spark.io import load
+from etl_spark.operators.ranking import first_per_key
 from etl_spark.plans.registry import register
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -296,20 +297,17 @@ def events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "dedup", "window"),
 )
 def events_latest_per_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        load(spark, sf_dir, "events")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "event_type",
-            "event_id",
-            F.date_format("ts", TS_FMT_SPARK).alias("event_ts"),
-            "value",
-        )
+    return first_per_key(
+        load(spark, sf_dir, "events"),
+        ["user_id", "event_type"],
+        F.col("ts").desc(),
+        F.col("event_id").desc(),
+    ).select(
+        "user_id",
+        "event_type",
+        "event_id",
+        F.date_format("ts", TS_FMT_SPARK).alias("event_ts"),
+        "value",
     )
 
 
@@ -357,14 +355,11 @@ def events_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type", "event_id", "ts", "value"
     )
     arriving = F.col("event_id") % SNAPSHOT_BATCH_MOD == 0
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    snapshot = (  # the materialized table state before the batch lands
-        ev.filter(~arriving)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+    snapshot = first_per_key(  # the table state before the batch lands
+        ev.filter(~arriving),
+        ["user_id", "event_type"],
+        F.col("ts").desc(),
+        F.col("event_id").desc(),
     )
     merged = latest_wins_merge(
         snapshot,

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from etl_spark.etl.merge import latest_wins_merge
 from etl_spark.io import load
 from etl_spark.operators.caching import session_memo
+from etl_spark.operators.ranking import first_per_key
 from etl_spark.plans.registry import register
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -61,24 +62,12 @@ def cdc_apply_log(log: DataFrame) -> DataFrame:
     ``op == 'U'`` to get the served view.
     """
     arriving = F.col("event_id") % CDC_BATCH_MOD == 0
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
+    order = (F.col("ts").desc(), F.col("event_id").desc())
     # Snapshot state BEFORE the batch lands: latest row per key over
     # history, tombstones kept — a snapshot that drops deletes early
     # cannot tell "deleted" from "never seen" at merge time.
-    snapshot = (
-        log.filter(~arriving)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    batch = (
-        log.filter(arriving)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    snapshot = first_per_key(log.filter(~arriving), ["user_id"], *order)
+    batch = first_per_key(log.filter(arriving), ["user_id"], *order)
     return latest_wins_merge(
         snapshot, batch, keys=["user_id"], order_cols=["ts", "event_id"]
     )
@@ -490,14 +479,13 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
     )
     arriving = F.col("event_id") % CDC_BATCH_MOD == 0
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
 
     def served(df: DataFrame) -> DataFrame:
         return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter((F.col("rn") == 1) & (F.col("op") == "U"))
+            first_per_key(
+                df, ["user_id"], F.col("ts").desc(), F.col("event_id").desc()
+            )
+            .filter(F.col("op") == "U")
             .select("user_id", "event_id", "value")
         )
 
@@ -562,15 +550,10 @@ def _refresh_parts(spark: SparkSession, sf_dir: str) -> dict:
         .alias("op"),
     )
     arriving = F.col("event_id") % CDC_BATCH_MOD == 0
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
 
     def latest(df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
+        return first_per_key(
+            df, ["user_id"], F.col("ts").desc(), F.col("event_id").desc()
         )
 
     # hop 1: stored state (tombstones kept) + batch -> refreshed state

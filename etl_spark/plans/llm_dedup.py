@@ -361,10 +361,8 @@ def ordered_pair_structs(docs, a_name: str = "doc_a", b_name: str = "doc_b"):
     )
 
 
-def pair_common_counts(
-    posting: DataFrame, a_name: str = "doc_a", b_name: str = "doc_b"
-) -> DataFrame:
-    """(a_name, b_name, n_common, na, nb) candidate-pair frame from
+def pair_common_counts(posting: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_common, na, nb) candidate-pair frame from
     struct posting lists: each df-capped list emits its ordered pairs
     map-side, ONE aggregation counts shared shingles per pair, and the
     set sizes ride the pair structs in-row (first() over a constant —
@@ -386,18 +384,16 @@ def pair_common_counts(
         # would be re-evaluated O(len²) times per row.
         .select(sized_docs().alias("zd"))
         .select(
-            F.explode(
-                ordered_pair_structs(F.col("zd"), a_name, b_name)
-            ).alias("p")
+            F.explode(ordered_pair_structs(F.col("zd"))).alias("p")
         )
         .groupBy(
-            F.col(f"p.{a_name}.doc_id").alias(a_name),
-            F.col(f"p.{b_name}.doc_id").alias(b_name),
+            F.col("p.doc_a.doc_id").alias("doc_a"),
+            F.col("p.doc_b.doc_id").alias("doc_b"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_common"),
-            F.first(f"p.{a_name}.n_sh").alias("na"),
-            F.first(f"p.{b_name}.n_sh").alias("nb"),
+            F.first("p.doc_a.n_sh").alias("na"),
+            F.first("p.doc_b.n_sh").alias("nb"),
         )
     )
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from etl_spark.io import adaptive_partitions, load
 from etl_spark.operators.caching import session_cached
+from etl_spark.operators.ranking import first_per_key
 from etl_spark.plans.registry import register
 
 QUANT = 1000
@@ -412,12 +413,12 @@ def _plane_sign_sql(p: int, i: str) -> str:
     )
 
 
-def _bucket_sql(n_planes: int = N_PLANES_MAX) -> str:
-    """Full ``n_planes``-bit bucket; callers modulo down to the
+def _bucket_sql() -> str:
+    """Full N_PLANES_MAX-bit bucket; callers modulo down to the
     effective plane count (bit p is worth 2^p, so ``bucket % 2^k``
     IS the k-plane bucket)."""
     bits = []
-    for p in range(n_planes):
+    for p in range(N_PLANES_MAX):
         proj = (
             f"list_sum(list_transform(generate_series(1, {DIM}), "
             f"i -> q[i] * ({_plane_sign_sql(p, 'i')})))"
@@ -567,13 +568,8 @@ def sim_ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cos_sim"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("nn_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "nn_id", "cos_sim")
+    return first_per_key(
+        scored, ["query_id"], F.col("cos_sim").desc(), F.col("nn_id").asc()
     )
 
 

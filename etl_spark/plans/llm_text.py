@@ -26,9 +26,10 @@ from etl_spark.plans.registry import register
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
 
-def tokens_col(text_col: str = "text"):
-    """Whitespace tokenization as an array column (shared definition)."""
-    return F.split(F.col(text_col), " ")
+def tokens_col():
+    """Whitespace tokenization of ``text`` as an array column (shared
+    definition)."""
+    return F.split(F.col("text"), " ")
 
 
 @register(

@@ -55,6 +55,7 @@ from etl_spark.plans.llm_similarity import (
     quantize,
 )
 from etl_spark.operators.caching import session_cached, session_memo
+from etl_spark.operators.ranking import first_per_key
 from etl_spark.plans.registry import register
 
 K_CLUSTERS = 8
@@ -399,8 +400,6 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ml", "similarity", "statistics"),
 )
 def ml_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", quantize(F.col("embedding")).alias("q")
     )
@@ -440,11 +439,13 @@ def ml_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     own = scored.filter(F.col("label") == F.col("c_label")).select(
         "vec_id", "label", F.col("d2").alias("own_d2")
     )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("c_label"))
     best_other = (
-        scored.filter(F.col("label") != F.col("c_label"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        first_per_key(
+            scored.filter(F.col("label") != F.col("c_label")),
+            ["vec_id"],
+            F.asc("d2"),
+            F.asc("c_label"),
+        )
         .select(
             "vec_id",
             F.col("c_label").cast("int").alias("nearest_other"),

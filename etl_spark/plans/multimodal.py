@@ -1095,9 +1095,12 @@ _MM_CURATE_ORACLE = f"""
         "luminance bytes) to one canonical row with its copy count — "
         "so the same image stored in two different containers dedups "
         "together, which payload-byte hashing (mm_payload_dedup) "
-        "cannot do. Spark shape: narrow Arrow decode map (payloads "
-        "never shuffle), in-row gate, then ONE data shuffle — the "
-        "groupBy on the 32-char image hash. This is the manifest a "
+        "cannot do. Spark shape: the text is spread over every core "
+        "before each container's payloads are built (one round-robin "
+        "Exchange per container), then a narrow Arrow decode map "
+        "(payloads never cross an Exchange), an in-row gate and ONE "
+        "data shuffle of decoded rows — the groupBy on the 32-char "
+        "image hash. This is the manifest a "
         "multimodal training run reads: one row per distinct "
         "qualifying image. Oracle replays decode, gate and collapse "
         "from text because gray pixels make luma the identity.",
@@ -1116,13 +1119,8 @@ def pipeline_curate_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(_ASCII_DOCS)
         .where(F.length("text") >= BMP_WIDTH)
     )
-    # spread=False: this capstone's contract is ONE data shuffle (the
-    # image-hash groupBy); at real scale its input scan is multi-file
-    # and already parallel, so the single-file spread fix is waived.
-    payloads = with_bmp_payload(
-        docs.where(F.col("doc_id") % 2 == 0), spread=False
-    ).unionAll(
-        with_png_payload(docs.where(F.col("doc_id") % 2 == 1), spread=False)
+    payloads = with_bmp_payload(docs.where(F.col("doc_id") % 2 == 0)).unionAll(
+        with_png_payload(docs.where(F.col("doc_id") % 2 == 1))
     )
     decoded = decode_image(payloads)
     kept = decoded.where(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from etl_spark.functions.money import dec
 from etl_spark.io import load
+from etl_spark.operators.ranking import first_per_key
 from etl_spark.plans.registry import register
 
 
@@ -295,12 +296,8 @@ def stats_mode_tax(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = li.groupBy("l_returnflag", "tax_cents").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    w = Window.partitionBy("l_returnflag").orderBy(
-        F.desc("cnt"), F.asc("tax_cents")
-    )
     return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        first_per_key(counts, ["l_returnflag"], F.desc("cnt"), F.asc("tax_cents"))
         .select(
             "l_returnflag",
             (F.col("tax_cents").cast("double") / 100).alias("mode_tax"),

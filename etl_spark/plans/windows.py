@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from etl_spark.functions.money import dec
 from etl_spark.io import load
+from etl_spark.operators.ranking import first_per_key
 from etl_spark.plans.registry import register
 
 
@@ -36,24 +37,22 @@ from etl_spark.plans.registry import register
     WHERE rn = 1
     """,
     doc="Latest row per key — the Spark form of the reference's "
-        "latest-snapshot-wins dedup (reference main.py:149-157, S14): "
+        "latest-snapshot-wins dedup (reference main.py:149-157, S14), "
+        "through operators.ranking.first_per_key: the oracle's "
         "row_number over (partition key ORDER BY recency DESC) = 1.",
     tags=("window", "dedup"),
 )
 def window_latest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
-    return (
-        load(spark, sf_dir, "orders")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-            "o_totalprice",
-        )
+    return first_per_key(
+        load(spark, sf_dir, "orders"),
+        ["o_custkey"],
+        F.col("o_orderdate").desc(),
+        F.col("o_orderkey").desc(),
+    ).select(
+        "o_custkey",
+        "o_orderkey",
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
+        "o_totalprice",
     )
 
 

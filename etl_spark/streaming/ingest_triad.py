@@ -94,7 +94,6 @@ def triad_feature_union(
     shingle_index: DataFrame,
     band_index: DataFrame,
     weights: list[int],
-    threshold: int = 0,
 ) -> DataFrame:
     """The three gate branches as ONE tagged feature stream. Inputs
     are the (possibly watermarked) arriving docs — ``docs_text`` and
@@ -134,9 +133,7 @@ def triad_feature_union(
         )
     )
     ml = _union_schema(
-        score_documents(
-            docs_ml, weights, threshold, keep=("ingest_ts",)
-        ).select(
+        score_documents(docs_ml, weights, keep=("ingest_ts",)).select(
             "doc_id", "ingest_ts", F.lit("ml").alias("kind"), "zraw", "dl"
         )
     )
@@ -144,7 +141,7 @@ def triad_feature_union(
 
 
 def triad_verdicts(
-    union: DataFrame, threshold: int = 0, *group_cols
+    union: DataFrame, *group_cols
 ) -> DataFrame:
     """Fold the tagged feature union into one verdict row per doc —
     the single aggregation (and, streamed, the single state store) of
@@ -169,8 +166,9 @@ def triad_verdicts(
     flag_phash = F.coalesce(
         F.col("best.h") <= PHASH_HAM_MAX, F.lit(False)
     )
+    # The trained gate's z = 0 cut (score_documents' default threshold).
     flag_model = F.coalesce(
-        F.col("zraw") > F.lit(threshold) * F.col("dl"), F.lit(False)
+        F.col("zraw") > F.lit(0) * F.col("dl"), F.lit(False)
     )
     return agg.select(
         "doc_id",
@@ -193,7 +191,6 @@ def ingest_triad(
     shingle_index: DataFrame,
     band_index: DataFrame,
     weights: list[int],
-    threshold: int = 0,
 ) -> DataFrame:
     """Batch form: one verdict row per (doc_id, ingest_ts, text) input
     row — the plan the streaming query extends with a watermark +
@@ -203,9 +200,9 @@ def ingest_triad(
         carry=(("ingest_ts", "timestamp"),),
     )
     union = triad_feature_union(
-        docs, hashed, docs, shingle_index, band_index, weights, threshold
+        docs, hashed, docs, shingle_index, band_index, weights
     )
-    return triad_verdicts(union, threshold)
+    return triad_verdicts(union)
 
 
 def ingest_triad_stream(
@@ -213,7 +210,6 @@ def ingest_triad_stream(
     shingle_index: DataFrame,
     band_index: DataFrame,
     weights: list[int],
-    threshold: int = 0,
 ) -> DataFrame:
     """Streaming form: watermark per branch (the union takes the min
     across inputs), ONE windowed per-doc aggregate for all three
@@ -227,12 +223,8 @@ def ingest_triad_stream(
         doc_stream.withColumn("payload", F.encode("text", "utf-8")),
         carry=(("ingest_ts", "timestamp"),),
     ).withWatermark("ingest_ts", WATERMARK_DELAY)
-    union = triad_feature_union(
-        wm, hashed, wm, shingle_index, band_index, weights, threshold
-    )
-    return triad_verdicts(
-        union, threshold, F.window("ingest_ts", WINDOW).alias("w")
-    )
+    union = triad_feature_union(wm, hashed, wm, shingle_index, band_index, weights)
+    return triad_verdicts(union, F.window("ingest_ts", WINDOW).alias("w"))
 
 
 def run_triad_stream(
@@ -242,15 +234,12 @@ def run_triad_stream(
     band_index: DataFrame,
     weights: list[int],
     name: str,
-    threshold: int = 0,
 ):
     """Drain the composed gate into the in-memory sink (update mode:
     at-ingest flagging semantics) and return the finished query handle
     (lastProgress carries the state-operator receipt)."""
     q = (
-        ingest_triad_stream(
-            doc_stream, shingle_index, band_index, weights, threshold
-        )
+        ingest_triad_stream(doc_stream, shingle_index, band_index, weights)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("update")

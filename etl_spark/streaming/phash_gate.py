@@ -70,11 +70,9 @@ def _bands(hashed: DataFrame) -> DataFrame:
     ).select(*passthrough, F.col("bs.band_idx"), F.col("bs.band_val"))
 
 
-def history_phash_index(
-    spark: SparkSession, sf_dir: str, mod: int = PHASH_GATE_MOD
-) -> DataFrame:
+def history_phash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Static band index of the HISTORICAL corpus (docs outside the
-    ``doc_id % mod == 0`` ingest slice): (band_idx, band_val, hist_id,
+    ``doc_id % PHASH_GATE_MOD == 0`` ingest slice): (band_idx, band_val, hist_id,
     hist_phash). Exact payload dups collapse to one representative
     first — duplicate history rows cannot change a min-Hamming verdict
     and would only inflate band buckets."""
@@ -82,7 +80,7 @@ def history_phash_index(
         load(spark, sf_dir, "documents")
         .where(_ASCII_DOCS)
         .where(F.length("text") >= 60)
-        .filter(F.col("doc_id") % mod != 0)
+        .filter(F.col("doc_id") % PHASH_GATE_MOD != 0)
         .groupBy(F.md5("text").alias("h"))
         .agg(F.min("doc_id").alias("doc_id"), F.min("text").alias("text"))
         .withColumn("payload", F.encode("text", "utf-8"))

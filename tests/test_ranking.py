@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
-from etl_spark.operators.ranking import global_rank, ntile_from_rank
+from etl_spark.operators.ranking import first_per_key, global_rank, ntile_from_rank
 
 
 def _data(spark, n=257):
@@ -170,3 +170,20 @@ def test_multi_fuses_probe_and_offsets_into_fewer_jobs(spark):
 
     assert fused <= single
     assert fused < jobs_of(chained)
+
+
+def test_first_per_key_keeps_first_row_of_each_key(spark):
+    """One row per key, the one ``order`` puts first (the tiebreak
+    decides equal ``v``), the input's columns unchanged, and the
+    window partitioned by the key — an unkeyed call is refused."""
+    df = _data(spark)
+    got = first_per_key(df, ["w"], F.col("v").desc(), F.col("id").asc())
+    assert got.columns == df.columns
+    want = {}
+    for r in sorted(df.collect(), key=lambda r: (-r["v"], r["id"])):
+        want.setdefault(r["w"], tuple(r))
+    assert sorted(tuple(r) for r in got.collect()) == sorted(want.values())
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(w#" in plan
+    with pytest.raises(ValueError, match="at least one key"):
+        first_per_key(df, [], F.col("v").desc())

@@ -298,3 +298,69 @@ def test_media_stages_share_one_payload_skeleton():
         and n.func.attr == "mapInPandas"
     ]
     assert sorted(sites) == ["_payload_stage", "_with_payload"], sites
+
+
+def test_first_row_per_key_lives_in_ranking_only():
+    """Latest-wins (the reference's S14) is one operator,
+    ``operators.ranking.first_per_key``. A ``.filter``/``.where`` that
+    keeps ``row_number() == 1`` anywhere else is a hand-written copy of
+    it — the copies had drifted to three temp-column names. The one
+    exception is ``pipeline_embed_index``'s dedup, which keeps its
+    ``rn`` and reads a ``count`` from the same key group."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "etl_spark"
+    allowed = {("plans/ml.py", "pipeline_embed_index")}
+
+    def is_row_number(node):
+        return any(
+            isinstance(n, ast.Attribute) and n.attr == "row_number"
+            for n in ast.walk(node)
+        )
+
+    def col_name(node):
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "col"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+        ):
+            return node.args[0].value
+        return None
+
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "operators/ranking.py":
+            continue
+        for top in ast.parse(path.read_text()).body:
+            calls = [n for n in ast.walk(top) if isinstance(n, ast.Call)]
+            rn_cols = {
+                c.args[0].value
+                for c in calls
+                if getattr(c.func, "attr", None) == "withColumn"
+                and len(c.args) == 2
+                and isinstance(c.args[0], ast.Constant)
+                and is_row_number(c.args[1])
+            } | {
+                c.args[0].value
+                for c in calls
+                if getattr(c.func, "attr", None) == "alias"
+                and c.args
+                and isinstance(c.args[0], ast.Constant)
+                and is_row_number(c.func.value)
+            }
+            for c in calls:
+                if getattr(c.func, "attr", None) not in ("filter", "where"):
+                    continue
+                for n in (m for a in c.args for m in ast.walk(a)):
+                    if (
+                        isinstance(n, ast.Compare)
+                        and isinstance(n.ops[0], ast.Eq)
+                        and isinstance(n.comparators[0], ast.Constant)
+                        and n.comparators[0].value == 1
+                        and col_name(n.left) in rn_cols
+                    ):
+                        sites.append((rel, getattr(top, "name", "<module>")))
+    assert [s for s in sites if s not in allowed] == [], sites

@@ -184,9 +184,10 @@ AUDIT = [
      "discovery via two O(1)-state running windows per event_type — "
      "no self-join, no range join, integer-only interpolation"),
     ("pipeline_curate_multimodal",
-     "end-to-end multimodal curation: mixed BMP/PNG decode in one "
-     "Arrow stage (payloads stop there), in-row quality gates, then "
-     "ONE data shuffle — the groupBy on the decoded-pixel hash; "
+     "end-to-end multimodal curation: the only Exchanges are the "
+     "pre-payload text spreads (one per container) and the groupBy on "
+     "the decoded-pixel hash; mixed BMP/PNG decode in one Arrow stage "
+     "(payload bytes never cross an Exchange), in-row quality gates; "
      "cross-container exact-dup collapse happens at that hash"),
     ("mm_audio_frame_energy",
      "frame-level audio features: WAV decode + framing + exact "
