@@ -62,10 +62,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.etl.merge import N_MERGE_BUCKETS, _bucketed, latest_wins_merge
+from etl_spark.etl.merge import _BUCKET_COL, _bucketed, latest_wins_merge
 from etl_spark.etl.pipeline import snapshot_latest
 
-_BUCKET_COL = "kb"
 _DATA = "data"
 _MANIFEST = "_manifest"
 _DELETES = "deletes"
@@ -436,13 +435,7 @@ def compact_versioned_deletes(
     # config-bounded collect: at most N_MERGE_BUCKETS distinct ints
     touched = [
         str(r[0])
-        for r in keys.select(
-            F.pmod(
-                F.xxhash64("repo_dir", "file_id"), F.lit(N_MERGE_BUCKETS)
-            ).alias(_BUCKET_COL)
-        )
-        .distinct()
-        .collect()
+        for r in _bucketed(keys).select(_BUCKET_COL).distinct().collect()
     ]
     new_v = current_v + 1
     existing_dirs = [str(table / current[b]) for b in touched if b in current]

@@ -39,6 +39,7 @@ from etl_spark.io import load
 from etl_spark.operators.caching import session_memo
 from etl_spark.operators.ranking import first_per_key
 from etl_spark.plans.registry import register
+from etl_spark.streaming.cdc import events_as_changelog
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
@@ -53,6 +54,35 @@ CDC_DELETE_TYPE = "error"
 CDC_BATCH_MOD = 10
 
 
+def _cdc_log(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``events`` table as a changelog (user_id, event_id, ts,
+    value, op): ``CDC_DELETE_TYPE`` events are tombstones."""
+    return events_as_changelog(load(spark, sf_dir, "events"), CDC_DELETE_TYPE)
+
+
+def _latest_per_user(df: DataFrame) -> DataFrame:
+    """Each user's newest row: latest ts, then highest event_id."""
+    return first_per_key(
+        df, ["user_id"], F.col("ts").desc(), F.col("event_id").desc()
+    )
+
+
+def _cdc_parts(log: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(snapshot, batch, merged)`` of the incremental apply: each
+    user's latest changelog row before the arriving batch
+    (``event_id % CDC_BATCH_MOD == 0``) and within it, both with
+    tombstones kept — a snapshot that drops deletes early cannot tell
+    "deleted" from "never seen" at merge time — and the two merged
+    latest-(ts, event_id)-wins."""
+    arriving = F.col("event_id") % CDC_BATCH_MOD == 0
+    snapshot = _latest_per_user(log.filter(~arriving))
+    batch = _latest_per_user(log.filter(arriving))
+    merged = latest_wins_merge(
+        snapshot, batch, keys=["user_id"], order_cols=["ts", "event_id"]
+    )
+    return snapshot, batch, merged
+
+
 def cdc_apply_log(log: DataFrame) -> DataFrame:
     """Incremental delete-aware apply over a changelog DataFrame with
     columns (user_id, event_id, ts, value, op) — the engine behind
@@ -61,16 +91,7 @@ def cdc_apply_log(log: DataFrame) -> DataFrame:
     Returns the merged state INCLUDING tombstone rows; callers filter
     ``op == 'U'`` to get the served view.
     """
-    arriving = F.col("event_id") % CDC_BATCH_MOD == 0
-    order = (F.col("ts").desc(), F.col("event_id").desc())
-    # Snapshot state BEFORE the batch lands: latest row per key over
-    # history, tombstones kept — a snapshot that drops deletes early
-    # cannot tell "deleted" from "never seen" at merge time.
-    snapshot = first_per_key(log.filter(~arriving), ["user_id"], *order)
-    batch = first_per_key(log.filter(arriving), ["user_id"], *order)
-    return latest_wins_merge(
-        snapshot, batch, keys=["user_id"], order_cols=["ts", "event_id"]
-    )
+    return _cdc_parts(log)[2]
 
 
 @register(
@@ -114,16 +135,7 @@ def cdc_apply_log(log: DataFrame) -> DataFrame:
     tags=("lakehouse", "cdc", "merge", "incremental", "events"),
 )
 def cdc_apply_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    log = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.when(F.col("event_type") == CDC_DELETE_TYPE, F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-    )
-    merged = cdc_apply_log(log)
+    merged = cdc_apply_log(_cdc_log(spark, sf_dir))
     # Serving view: tombstoned keys disappear only AFTER the merge.
     return merged.filter(F.col("op") == "U").select(
         "user_id",
@@ -469,32 +481,19 @@ def events_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("lakehouse", "cdc", "diff", "events"),
 )
 def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    log = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.when(F.col("event_type") == CDC_DELETE_TYPE, F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-    )
-    arriving = F.col("event_id") % CDC_BATCH_MOD == 0
+    log = _cdc_log(spark, sf_dir)
 
-    def served(df: DataFrame) -> DataFrame:
-        return (
-            first_per_key(
-                df, ["user_id"], F.col("ts").desc(), F.col("event_id").desc()
-            )
-            .filter(F.col("op") == "U")
-            .select("user_id", "event_id", "value")
+    def served(state: DataFrame) -> DataFrame:
+        return state.filter(F.col("op") == "U").select(
+            "user_id", "event_id", "value"
         )
 
-    old = served(log.filter(~arriving)).select(
+    old = served(_cdc_parts(log)[0]).select(
         F.col("user_id").alias("o_user"),
         F.col("event_id").alias("old_event_id"),
         F.col("value").alias("old_value"),
     )
-    new = served(log).select(
+    new = served(_latest_per_user(log)).select(
         F.col("user_id").alias("n_user"),
         F.col("event_id").alias("new_event_id"),
         F.col("value").alias("new_value"),
@@ -530,7 +529,7 @@ def _refresh_parts(spark: SparkSession, sf_dir: str) -> dict:
 
     hop 1  snapshot view V1: latest-wins served view, refreshed by
            merging the arriving batch into the stored pre-batch state
-           (cdc_apply_log's shape);
+           (``_cdc_parts``, the apply behind cdc_apply_log);
     hop 2  aggregate view V2 = per-day (count, exact-decimal sum) over
            V1, refreshed by RETRACTION deltas derived from hop 1's own
            change set (old row retracted, new row inserted) — delta
@@ -540,28 +539,8 @@ def _refresh_parts(spark: SparkSession, sf_dir: str) -> dict:
     hop 3  freshness audit over the refreshed snapshot (a 1-row global
            scalar joined back broadcast).
     """
-    log = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.when(F.col("event_type") == CDC_DELETE_TYPE, F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-    )
-    arriving = F.col("event_id") % CDC_BATCH_MOD == 0
-
-    def latest(df: DataFrame) -> DataFrame:
-        return first_per_key(
-            df, ["user_id"], F.col("ts").desc(), F.col("event_id").desc()
-        )
-
     # hop 1: stored state (tombstones kept) + batch -> refreshed state
-    old_state = latest(log.filter(~arriving))
-    batch = latest(log.filter(arriving))
-    new_state = latest_wins_merge(
-        old_state, batch, keys=["user_id"], order_cols=["ts", "event_id"]
-    )
+    old_state, batch, new_state = _cdc_parts(_cdc_log(spark, sf_dir))
     old_v = old_state.filter(F.col("op") == "U")
     new_v = new_state.filter(F.col("op") == "U")
 
@@ -720,8 +699,10 @@ def _memo_table(spark: SparkSession, sf_dir: str, flavor: str, fill):
     build gets a FRESH unique /tmp directory (never an rmtree'd prior
     one): after the memo bound drops an entry, or under xdist workers
     sharing a session, a previously returned LAZY frame may still read
-    the old build's files. Only an explicit ``evict`` removes the
-    directory; a dropped entry's is /tmp debris."""
+    the old build's files. An explicit ``evict`` removes the directory
+    at once; every directory, a dropped entry's included, is removed
+    at interpreter exit, so a process without teardown leaves none."""
+    import atexit
     import hashlib
     import pathlib
     import shutil
@@ -733,6 +714,7 @@ def _memo_table(spark: SparkSession, sf_dir: str, flavor: str, fill):
         table = pathlib.Path(
             tempfile.mkdtemp(prefix=f"etl_spark_{flavor}table_{tag[:12]}_")
         )
+        atexit.register(shutil.rmtree, table, ignore_errors=True)
         fill(table)
         return table
 

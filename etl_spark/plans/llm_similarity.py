@@ -26,12 +26,23 @@ Scale design (100 TB / billions of vectors):
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.group_ops import PandasCogroupedOps
 
 from etl_spark.io import adaptive_partitions, load
 from etl_spark.operators.caching import session_cached
 from etl_spark.operators.ranking import first_per_key
+from etl_spark.operators.vectors import (
+    cell_topk,
+    cosine as cosine_matrix,
+    pq_encode,
+    sq_dist,
+    stage,
+    topk,
+)
 from etl_spark.plans.registry import register
 
 QUANT = 1000
@@ -131,6 +142,49 @@ TOP_K = 5
 NN_CELL_CHUNK = 8192
 
 
+def cell_chunks(
+    corpus: DataFrame, queries: DataFrame, cell: str
+) -> PandasCogroupedOps:
+    """The chunked per-cell exact scan's layout: ``queries`` and
+    ``corpus`` (both ``vec_id, q, <cell>``) cogrouped on (cell, chunk).
+
+    Each cell's candidate side is split into ``ceil(cell_n /
+    NN_CELL_CHUNK)`` hash chunks and the cell's queries are replicated
+    to every chunk, so a cell of m vectors runs on that many tasks with
+    per-task memory of BLOCK × NN_CELL_CHUNK doubles, independent of m;
+    the shuffle is m × n_chunks single-vector rows. The cell-count
+    table is config-sized (one row per cell), a legitimate broadcast.
+    The candidate side carries ``c_``-prefixed names: cogroup on two
+    frames cut from the same lineage trips Spark's ambiguous-self-join
+    check unless every non-key attribute resolves uniquely (keys match
+    by position, so the rename is free). NN_CELL_CHUNK is read here, at
+    build time, so tests can shrink it."""
+    cells = (
+        corpus.groupBy(cell)
+        .agg(F.count(F.lit(1)).alias("cell_n"))
+        .withColumn(
+            "n_chunks",
+            F.greatest(F.lit(1), F.ceil(F.col("cell_n") / NN_CELL_CHUNK)).cast("int"),
+        )
+        .select(cell, "n_chunks")
+    )
+    cands = corpus.join(F.broadcast(cells), cell).select(
+        F.col(cell).alias(f"c_{cell}"),
+        F.pmod(F.xxhash64("vec_id"), F.col("n_chunks")).cast("int").alias("c_chunk_id"),
+        F.col("vec_id").alias("c_vec_id"),
+        F.col("q").alias("c_q"),
+    )
+    probes = queries.join(F.broadcast(cells), cell).select(
+        cell,
+        F.explode(F.sequence(F.lit(0), F.col("n_chunks") - 1)).alias("chunk_id"),
+        "vec_id",
+        "q",
+    )
+    return probes.groupBy(cell, "chunk_id").cogroup(
+        cands.groupBy(f"c_{cell}", "c_chunk_id")
+    )
+
+
 @register(
     "sim_topk_cosine",
     oracle=f"""
@@ -171,49 +225,35 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that surfaces such vectors to the pipeline owner.
     emb = _quantized(spark, sf_dir).filter(dot(F.col("q"), F.col("q")) > 0)
     q_rows = pick_vectors(emb, N_QUERIES)
-    query_ids = [r["vec_id"] for r in q_rows]
-    query_vecs = [r["q"] for r in q_rows]
+    QM = np.array([r["q"] for r in q_rows], dtype=np.float64)
+    qids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
 
-    def score_batches(it):
-        import numpy as np
-        import pandas as pd
+    def score_batches(pdf, C):
+        cos = cosine_matrix(C, QM)
+        cids = pdf["vec_id"].values
+        # Batch-local top-k under the SAME total order the final
+        # window applies (cos desc, neighbor asc; self excluded):
+        # only k rows per query per batch cross the exchange
+        # instead of the full n x nq score matrix — the
+        # "per-partition top-k" the module contract promises
+        # (argmax-prefix associativity: the global top-k is a
+        # subset of the union of batch top-ks, bit-identically,
+        # because cos values are the same float64s in every
+        # batch and topk applies the same tiebreak).
+        for j, qid in enumerate(qids):
+            keep = cids != qid
+            col, ids = cos[keep, j], cids[keep]
+            order = topk(-col, ids, TOP_K)
+            yield pd.DataFrame(
+                {
+                    "query_id": np.full(len(order), qid, dtype=np.int64),
+                    "neighbor_id": ids[order],
+                    "cos_sim": col[order],
+                }
+            )
 
-        QM = np.array(query_vecs, dtype=np.float64)  # (nq, dim), exact ints
-        q_norms = (QM * QM).sum(axis=1)
-        qids = np.array(query_ids, dtype=np.int64)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            C = np.array(pdf["q"].tolist(), dtype=np.float64)
-            c_norms = (C * C).sum(axis=1)
-            cos = (C @ QM.T) / np.sqrt(np.outer(c_norms, q_norms))
-            cids = pdf["vec_id"].values
-            # Batch-local top-k under the SAME total order the final
-            # window applies (cos desc, neighbor asc; self excluded):
-            # only k rows per query per batch cross the exchange
-            # instead of the full n x nq score matrix — the
-            # "per-partition top-k" the module contract promises
-            # (argmax-prefix associativity: the global top-k is a
-            # subset of the union of batch top-ks, bit-identically,
-            # because cos values are the same float64s in every
-            # batch and lexsort applies the same tiebreak).
-            for j, qid in enumerate(qids):
-                col = cos[:, j]
-                keep = cids != qid
-                col, ids = col[keep], cids[keep]
-                if not len(ids):
-                    continue
-                order = np.lexsort((ids, -col))[:TOP_K]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.full(len(order), qid, dtype=np.int64),
-                        "neighbor_id": ids[order],
-                        "cos_sim": col[order],
-                    }
-                )
-
-    scored = emb.mapInPandas(
-        score_batches, schema="query_id bigint, neighbor_id bigint, cos_sim double"
+    scored = stage(
+        emb, "query_id bigint, neighbor_id bigint, cos_sim double", score_batches
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
@@ -252,24 +292,16 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "llm", "ann", "ivf"),
 )
 def sim_nn_within_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Chunked exact scan per IVF cell. The naive shape (one applyInPandas
-    # group per cell) ships the WHOLE cell to one task and builds an m x m
-    # score matrix — at a 100x-scale probe (20k vectors/cell) that was a
-    # 3.2 GB matrix on a single task and the worst timing in the sweep.
-    # Instead: split each cell's CANDIDATE side into hash chunks of
-    # <= CHUNK vectors, replicate the cell's queries to every chunk, and
-    # compute a local argmax per (cell, chunk) with a blocked matmul.
-    # A global max over (cos_sim, nn_id asc) then recovers the exact
-    # per-vector nearest neighbor — argmax is associative, cos values are
-    # bit-identical float64s in every chunk, and the struct max applies
-    # the same tiebreak, so the result is byte-equal to the single-matrix
-    # form (and to the DuckDB oracle).
-    #
-    # Scale accounting per cell of m vectors: parallelism = ceil(m/CHUNK)
-    # tasks instead of 1; per-task memory = BLOCK x CHUNK doubles (~0.5 GB
-    # worst case, independent of m); shuffle = m * n_chunks = m^2/CHUNK
-    # single-vector rows instead of one m-row group (and ~CHUNK x fewer
-    # bytes than the m^2 pair rows a self-join would emit).
+    # Chunked exact scan per IVF cell (layout in cell_chunks). The
+    # naive shape (one group per cell) ships the WHOLE cell to one task
+    # and builds an m x m score matrix — at a 100x-scale probe (20k
+    # vectors/cell) that was a 3.2 GB matrix on a single task and the
+    # worst timing in the sweep. Instead each (cell, chunk) computes a
+    # local argmax, and a global max over (cos_sim, nn_id asc) recovers
+    # the exact per-vector nearest neighbor — argmax is associative,
+    # cos values are bit-identical float64s in every chunk, and the
+    # struct max applies the same tiebreak, so the result is byte-equal
+    # to the single-matrix form (and to the DuckDB oracle).
     emb = (
         load(spark, sf_dir, "embeddings")
         .select("vec_id", "label", quantize(F.col("embedding")).alias("q"))
@@ -278,85 +310,25 @@ def sim_nn_within_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(dot(F.col("q"), F.col("q")) > 0)
     )
 
-    # Cells are the IVF coarse-quantizer's nlist — config-sized (10 here,
-    # a few thousand in a real index), so the per-cell count table is a
-    # legitimate broadcast at any data scale.
-    cells = (
-        emb.groupBy("label")
-        .agg(F.count(F.lit(1)).alias("cell_n"))
-        .withColumn(
-            "n_chunks",
-            F.greatest(F.lit(1), F.ceil(F.col("cell_n") / NN_CELL_CHUNK)).cast("int"),
+    def nn_per_chunk(qpdf, Q, cpdf, C):
+        rows, nbrs, cos = cell_topk(
+            qpdf["vec_id"].to_numpy(), Q, cpdf["c_vec_id"].to_numpy(), C, 1
         )
-        .select("label", "n_chunks")
-    )
-    # The corpus side carries c_-prefixed names: cogroup on two frames
-    # cut from the same lineage trips Spark's ambiguous-self-join check
-    # unless every non-key attribute resolves uniquely. Keys match by
-    # position in cogroup, so the rename is free.
-    corpus = emb.join(F.broadcast(cells), "label").select(
-        F.col("label").alias("c_label"),
-        F.pmod(F.xxhash64("vec_id"), F.col("n_chunks")).cast("int").alias("c_chunk_id"),
-        F.col("vec_id").alias("c_vec_id"),
-        F.col("q").alias("c_q"),
-    )
-    queries = emb.join(F.broadcast(cells), "label").select(
-        "label",
-        F.explode(F.sequence(F.lit(0), F.col("n_chunks") - 1)).alias("chunk_id"),
-        "vec_id",
-        "q",
-    )
-
-    def nn_per_chunk(qpdf, cpdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            columns=["vec_id", "label", "nn_id", "cos_sim"]
-        ).astype(
-            {"vec_id": "int64", "label": "int32", "nn_id": "int64", "cos_sim": "float64"}
+        yield pd.DataFrame(
+            {
+                "vec_id": qpdf["vec_id"].to_numpy()[rows],
+                "label": qpdf["label"].to_numpy()[rows],
+                "nn_id": nbrs,
+                "cos_sim": cos,
+            }
         )
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return empty
-        # Candidates sorted by vec_id so np.argmax's first-max rule
-        # implements the nn_id-ascending tiebreak.
-        cpdf = cpdf.sort_values("c_vec_id").reset_index(drop=True)
-        # vstack over the Arrow-delivered ndarray elements is C-speed;
-        # .tolist() would round-trip through Python ints.
-        C = np.vstack(cpdf["c_q"].to_numpy()).astype(np.float64)
-        c_ids = cpdf["c_vec_id"].to_numpy()
-        c_norm = np.einsum("ij,ij->i", C, C)  # exact: integers < 2^53
-        out = []
-        BLOCK = 2048
-        for lo in range(0, len(qpdf), BLOCK):
-            blk = qpdf.iloc[lo : lo + BLOCK]
-            Q = np.vstack(blk["q"].to_numpy()).astype(np.float64)
-            q_ids = blk["vec_id"].to_numpy()
-            G = Q @ C.T  # exact integer-valued float64 products
-            cos = G / np.sqrt(np.outer(np.einsum("ij,ij->i", Q, Q), c_norm))
-            cos[q_ids[:, None] == c_ids[None, :]] = -np.inf  # mask self
-            nn_idx = np.argmax(cos, axis=1)
-            best = cos[np.arange(len(blk)), nn_idx]
-            keep = np.isfinite(best)  # chunk held only the query itself
-            out.append(
-                pd.DataFrame(
-                    {
-                        "vec_id": q_ids[keep],
-                        "label": blk["label"].to_numpy()[keep],
-                        "nn_id": c_ids[nn_idx[keep]],
-                        "cos_sim": best[keep],
-                    }
-                )
-            )
-        return pd.concat(out, ignore_index=True) if out else empty
 
-    local = (
-        queries.groupBy("label", "chunk_id")
-        .cogroup(corpus.groupBy("c_label", "c_chunk_id"))
-        .applyInPandas(
-            nn_per_chunk,
-            schema="vec_id bigint, label int, nn_id bigint, cos_sim double",
-        )
+    # Cells are the IVF coarse-quantizer's nlist — config-sized (10
+    # here, a few thousand in a real index).
+    local = stage(
+        cell_chunks(emb, emb, "label"),
+        "vec_id bigint, label int, nn_id bigint, cos_sim double",
+        nn_per_chunk,
     )
     # Associative global argmax with the (cos_sim desc, nn_id asc)
     # tiebreak encoded as a struct max; exact because equal float64 cos
@@ -983,8 +955,6 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], out_schema + ", rnk int"
         )
-    import numpy as np
-
     # CB[c, m, :] = codeword c's sub-vector in subspace m.
     CB = np.array([r["q"] for r in seed_rows], dtype=np.int64).reshape(
         len(seed_rows), PQ_M, PQ_SUBDIM
@@ -997,44 +967,22 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     LUT = ((Q[:, None, :, :] - CB[None, :, :, :]) ** 2).sum(axis=3).transpose(0, 2, 1)
     qids = np.array([r["vec_id"] for r in query_rows], dtype=np.int64)
 
-    def encode_score(it):
-        import pandas as pd
-
-        nq = len(qids)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            C = np.array(pdf["q"].tolist(), dtype=np.int64).reshape(
-                -1, PQ_M, PQ_SUBDIM
+    def encode_score(pdf, C):
+        codes = pq_encode(C.reshape(-1, PQ_M, PQ_SUBDIM), CB)
+        # adc[v, qi] = sum over subspaces of LUT[qi, m, codes[v, m]]
+        adc = LUT[:, np.arange(PQ_M)[None, :], codes].sum(axis=2).T
+        vids = pdf["vec_id"].values.astype(np.int64)
+        for qi in range(len(qids)):
+            keep = vids != qids[qi]
+            dv, vv = adc[keep, qi], vids[keep]
+            # Batch-local top-k (ties -> lowest vec_id): the map-side
+            # prune that keeps the shuffle O(batches * nq * k).
+            top = topk(dv, vv, PQ_TOPK)
+            yield pd.DataFrame(
+                {"query_id": qids[qi], "vec_id": vv[top], "adc_d2": dv[top]}
             )
-            n = C.shape[0]
-            vids = pdf["vec_id"].values.astype(np.int64)
-            adc = np.zeros((n, nq), dtype=np.int64)
-            for m in range(PQ_M):
-                # (n, KS) exact distances to subspace-m codewords
-                d = ((C[:, None, m, :] - CB[None, :, m, :]) ** 2).sum(axis=2)
-                codes = d.argmin(axis=1)  # first minimum = lowest c on ties
-                adc += LUT[:, m, codes].T
-            frames = []
-            for qi in range(nq):
-                keep = vids != qids[qi]
-                dv, vv = adc[keep, qi], vids[keep]
-                # Batch-local top-k (ties -> lowest vec_id): the map-side
-                # prune that keeps the shuffle O(batches * nq * k).
-                top = np.lexsort((vv, dv))[:PQ_TOPK]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "vec_id": vv[top],
-                            "adc_d2": dv[top],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
 
-    scored = emb.mapInPandas(encode_score, schema=out_schema)
+    scored = stage(emb, out_schema, encode_score, dtype=np.int64)
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_d2").asc(), F.col("vec_id").asc()
     )
@@ -1140,65 +1088,41 @@ def _jl_oracle_sql() -> str:
 def emb_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _quantized(spark, sf_dir)
     q_rows = pick_vectors(emb, N_QUERIES)
-    query_ids = [r["vec_id"] for r in q_rows]
-    query_vecs = [list(r["q"]) for r in q_rows]
-    signs = [list(row) for row in _JL_SIGNS]
-    jl = JL_DIM
+    S = np.array(_JL_SIGNS, dtype=np.float64)
+    QM = np.array([r["q"] for r in q_rows], dtype=np.float64)
+    PQ = QM @ S.T
+    qids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
 
-    def partials(it):
-        import numpy as np
-        import pandas as pd
-
-        S = np.array(signs, dtype=np.float64)
-        QM = np.array(query_vecs, dtype=np.float64)
-        PQ = QM @ S.T
-        q_norms = (QM * QM).sum(axis=1)
-        pq_norms = (PQ * PQ).sum(axis=1)
-        qids = np.array(query_ids, dtype=np.int64)
-
-        for pdf in it:
-            if not len(pdf):
+    def partials(pdf, C):
+        cids = pdf["vec_id"].values.astype(np.int64)
+        d2 = sq_dist(C, QM)
+        d2p = sq_dist(C @ S.T, PQ)
+        rows = []
+        for qi in range(len(qids)):
+            mask = (cids != qids[qi]) & (d2[:, qi] > 0)
+            if not mask.any():
                 continue
-            C = np.array(pdf["q"].tolist(), dtype=np.float64)
-            PC = C @ S.T
-            cids = pdf["vec_id"].values.astype(np.int64)
-            d2 = (
-                (C * C).sum(axis=1)[:, None]
-                + q_norms[None, :]
-                - 2.0 * (C @ QM.T)
-            )
-            d2p = (
-                (PC * PC).sum(axis=1)[:, None]
-                + pq_norms[None, :]
-                - 2.0 * (PC @ PQ.T)
-            )
-            rows = []
-            for qi in range(len(qids)):
-                mask = (cids != qids[qi]) & (d2[:, qi] > 0)
-                if not mask.any():
-                    continue
-                de, dp = d2[mask, qi], d2p[mask, qi]
-                within = (2.0 * dp >= jl * de) & (dp <= 2.0 * jl * de)
-                ratio = dp / (jl * de)
-                rows.append(
-                    (
-                        int(qids[qi]),
-                        int(mask.sum()),
-                        int(within.sum()),
-                        float(ratio.min()),
-                        float(ratio.max()),
-                    )
+            de, dp = d2[mask, qi], d2p[mask, qi]
+            within = (2.0 * dp >= JL_DIM * de) & (dp <= 2.0 * JL_DIM * de)
+            ratio = dp / (JL_DIM * de)
+            rows.append(
+                (
+                    int(qids[qi]),
+                    int(mask.sum()),
+                    int(within.sum()),
+                    float(ratio.min()),
+                    float(ratio.max()),
                 )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["query_id", "n", "nw", "rmin", "rmax"],
-                )
+            )
+        if rows:
+            yield pd.DataFrame(
+                rows, columns=["query_id", "n", "nw", "rmin", "rmax"]
+            )
 
-    part = emb.mapInPandas(
+    part = stage(
+        emb,
+        "query_id bigint, n bigint, nw bigint, rmin double, rmax double",
         partials,
-        schema="query_id bigint, n bigint, nw bigint,"
-        " rmin double, rmax double",
     )
     return (
         part.groupBy("query_id")

@@ -11,9 +11,12 @@ probes but never trains.
 Spark shape — both queries follow the same scale discipline:
 
 * the per-point assignment step is ONE corpus scan: the k centroids are
-  a config-sized constant (k × dim floats) shipped inside a mapInPandas
+  a config-sized constant (k × dim floats) shipped inside the kernel
   closure, and each Arrow batch is scored against all centroids with a
-  single numpy matmul (no per-pair interpreted lambdas, no join);
+  single numpy matmul (no per-pair interpreted lambdas, no join). The
+  kernels' math (squared distance, cosine, top-k, PQ codes, the chunked
+  cell scan) and the one stage skeleton that runs them live in
+  ``operators/vectors.py``;
 * the centroid-update step is a posexplode → groupBy(cluster, pos)
   partial-aggregated sum — output is k × dim rows regardless of corpus
   size, so the shuffle is dimension-bounded, not data-bounded;
@@ -30,6 +33,8 @@ so Spark and DuckDB agree bit-for-bit on every distance and tie-break.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +54,7 @@ from etl_spark.plans.llm_similarity import (
     _pq_d2_sql,
     _quantized,
     _vec_cte,
+    cell_chunks,
     cosine,
     dot,
     pick_vectors,
@@ -56,6 +62,14 @@ from etl_spark.plans.llm_similarity import (
 )
 from etl_spark.operators.caching import session_cached, session_memo
 from etl_spark.operators.ranking import first_per_key
+from etl_spark.operators.vectors import (
+    cell_topk,
+    cosine as cosine_matrix,
+    pq_encode,
+    sq_dist,
+    stage,
+    topk,
+)
 from etl_spark.plans.registry import register
 
 K_CLUSTERS = 8
@@ -77,35 +91,26 @@ def _assign(
     Arrow kernel costs bytes-per-row in the same pass, while joining
     it back on vec_id afterwards costs a corpus-sized shuffle of both
     sides — pipeline_embed_index dropped that join this way."""
-    cvecs = [list(c) for c in centroids]  # plain lists: closure is self-contained
-    extra = tuple(passthrough)
+    S = np.array(centroids, dtype=np.float64)  # (k, dim)
+    extra = [name for name, _typ in passthrough]
 
-    def score(it):
-        import numpy as np
-        import pandas as pd
-
-        S = np.array(cvecs, dtype=np.float64)  # (k, dim)
-        s_norms = (S * S).sum(axis=1)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            C = np.array(pdf["q"].tolist(), dtype=np.float64)
-            d2 = (C * C).sum(axis=1)[:, None] + s_norms[None, :] - 2.0 * (C @ S.T)
-            cl = d2.argmin(axis=1)
-            out = {
-                "vec_id": pdf["vec_id"].values,
-                "q": pdf["q"],
-                "cluster": cl.astype("int32"),
-                "d2": d2[np.arange(len(cl)), cl],
-            }
-            for name, _typ in extra:
-                out[name] = pdf[name]
-            yield pd.DataFrame(out)
+    def score(pdf, C):
+        d2 = sq_dist(C, S)
+        cl = d2.argmin(axis=1)
+        out = {
+            "vec_id": pdf["vec_id"].values,
+            "q": pdf["q"],
+            "cluster": cl.astype("int32"),
+            "d2": d2[np.arange(len(cl)), cl],
+        }
+        for name in extra:
+            out[name] = pdf[name]
+        yield pd.DataFrame(out)
 
     schema = "vec_id bigint, q array<bigint>, cluster int, d2 double" + "".join(
-        f", {name} {typ}" for name, typ in extra
+        f", {name} {typ}" for name, typ in passthrough
     )
-    return emb.mapInPandas(score, schema=schema)
+    return stage(emb, schema, score)
 
 
 def _assign_partial_sums(
@@ -118,39 +123,30 @@ def _assign_partial_sums(
     Σq). Only batches × k skinny rows leave Python — the corpus-sized
     (vec_id, q, cluster, d2) stream of the unfused shape never crosses
     the Arrow boundary and never shuffles."""
-    cvecs = [list(c) for c in centroids]
+    S = np.array(centroids, dtype=np.float64)  # (k, dim)
 
-    def score(it):
-        import numpy as np
-        import pandas as pd
+    def score(pdf, C):
+        d2 = sq_dist(C, S)
+        cl = d2.argmin(axis=1)
+        best = d2[np.arange(len(cl)), cl]
+        Ci = C.astype(np.int64)  # exact: quantized lattice ints
+        rows = []
+        for c in np.unique(cl):
+            m = cl == c
+            rows.append(
+                {
+                    "cluster": int(c),
+                    "n": int(m.sum()),
+                    # d2 is exact-integer-valued float64 (< 2^53);
+                    # int64 partials keep the corpus total exact.
+                    "sd2": int(best[m].astype(np.int64).sum()),
+                    "sx": Ci[m].sum(axis=0),
+                }
+            )
+        yield pd.DataFrame(rows)
 
-        S = np.array(cvecs, dtype=np.float64)  # (k, dim)
-        s_norms = (S * S).sum(axis=1)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            C = np.array(pdf["q"].tolist(), dtype=np.float64)
-            d2 = (C * C).sum(axis=1)[:, None] + s_norms[None, :] - 2.0 * (C @ S.T)
-            cl = d2.argmin(axis=1)
-            best = d2[np.arange(len(cl)), cl]
-            Ci = C.astype(np.int64)  # exact: quantized lattice ints
-            rows = []
-            for c in np.unique(cl):
-                m = cl == c
-                rows.append(
-                    {
-                        "cluster": int(c),
-                        "n": int(m.sum()),
-                        # d2 is exact-integer-valued float64 (< 2^53);
-                        # int64 partials keep the corpus total exact.
-                        "sd2": int(best[m].astype(np.int64).sum()),
-                        "sx": Ci[m].sum(axis=0),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return emb.mapInPandas(
-        score, schema="cluster int, n bigint, sd2 bigint, sx array<bigint>"
+    return stage(
+        emb, "cluster int, n bigint, sd2 bigint, sx array<bigint>", score
     )
 
 
@@ -787,33 +783,21 @@ def _assign_topn(emb: DataFrame, centroids: list[list[float]], n_probe: int) -> 
     ascending cluster axis, same order as the oracle's
     ``ORDER BY d2, cluster``). Same exact-integer d2 arithmetic as
     ``_assign``; one matmul per Arrow batch."""
-    cvecs = [list(c) for c in centroids]
+    S = np.array(centroids, dtype=np.float64)
+    npb = min(n_probe, len(centroids))
 
-    def score(it):
-        import numpy as np
-        import pandas as pd
+    def score(pdf, C):
+        order = np.argsort(sq_dist(C, S), axis=1, kind="stable")[:, :npb]
+        for r in range(npb):
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"].values,
+                    "q": pdf["q"],
+                    "cluster": order[:, r].astype("int32"),
+                }
+            )
 
-        S = np.array(cvecs, dtype=np.float64)
-        s_norms = (S * S).sum(axis=1)
-        npb = min(n_probe, len(cvecs))
-        for pdf in it:
-            if not len(pdf):
-                continue
-            C = np.array(pdf["q"].tolist(), dtype=np.float64)
-            d2 = (C * C).sum(axis=1)[:, None] + s_norms[None, :] - 2.0 * (C @ S.T)
-            order = np.argsort(d2, axis=1, kind="stable")[:, :npb]
-            for r in range(npb):
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].values,
-                        "q": pdf["q"],
-                        "cluster": order[:, r].astype("int32"),
-                    }
-                )
-
-    return emb.mapInPandas(
-        score, schema="vec_id bigint, q array<bigint>, cluster int"
-    )
+    return stage(emb, "vec_id bigint, q array<bigint>, cluster int", score)
 
 
 _KNN_JOIN_ORACLE = f"""
@@ -917,8 +901,6 @@ _KNN_JOIN_ORACLE = f"""
 def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from etl_spark.plans import llm_similarity as _sim
-
     emb = (
         _quantized(spark, sf_dir)
         .withColumn("norm", dot(F.col("q"), F.col("q")))
@@ -941,94 +923,22 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         b_assigned = _assign(right, cents).select("vec_id", "q", "cluster")
         a_probes = _assign_topn(left, cents, N_PROBE)
 
-        # Per-cell chunking bounds task memory exactly as
-        # sim_nn_within_label: candidate chunks of <= NN_CELL_CHUNK
-        # vectors, queries replicated per chunk. The cell-count table
-        # is k rows (sqrt-bounded) — a legitimate broadcast.
-        chunk_size = _sim.NN_CELL_CHUNK
-        cells = (
-            b_assigned.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("cell_n"))
-            .withColumn(
-                "n_chunks",
-                F.greatest(
-                    F.lit(1), F.ceil(F.col("cell_n") / chunk_size)
-                ).cast("int"),
+        def topk_per_chunk(qpdf, Q, cpdf, C):
+            q_ids = qpdf["vec_id"].to_numpy()
+            rows, nbrs, cos = cell_topk(
+                q_ids, Q, cpdf["c_vec_id"].to_numpy(), C, TOP_K
             )
-            .select("cluster", "n_chunks")
-        )
-        corpus = b_assigned.join(F.broadcast(cells), "cluster").select(
-            F.col("cluster").alias("c_cluster"),
-            F.pmod(F.xxhash64("vec_id"), F.col("n_chunks"))
-            .cast("int")
-            .alias("c_chunk_id"),
-            F.col("vec_id").alias("c_vec_id"),
-            F.col("q").alias("c_q"),
-        )
-        queries = a_probes.join(F.broadcast(cells), "cluster").select(
-            "cluster",
-            F.explode(F.sequence(F.lit(0), F.col("n_chunks") - 1)).alias(
-                "chunk_id"
-            ),
-            "vec_id",
-            "q",
-        )
-
-        top_k = TOP_K
-
-        def topk_per_chunk(qpdf, cpdf):
-            import numpy as np
-            import pandas as pd
-
-            empty = pd.DataFrame(
-                columns=["query_id", "neighbor_id", "cos_sim"]
-            ).astype(
-                {
-                    "query_id": "int64",
-                    "neighbor_id": "int64",
-                    "cos_sim": "float64",
-                }
+            yield pd.DataFrame(
+                {"query_id": q_ids[rows], "neighbor_id": nbrs, "cos_sim": cos}
             )
-            if len(qpdf) == 0 or len(cpdf) == 0:
-                return empty
-            # Candidates sorted by vec_id: a stable argsort of -cos
-            # then implements the neighbor_id-ascending tiebreak.
-            cpdf = cpdf.sort_values("c_vec_id").reset_index(drop=True)
-            C = np.vstack(cpdf["c_q"].to_numpy()).astype(np.float64)
-            c_ids = cpdf["c_vec_id"].to_numpy()
-            c_norm = np.einsum("ij,ij->i", C, C)
-            kk = min(top_k, len(cpdf))
-            out = []
-            BLOCK = 2048
-            for lo in range(0, len(qpdf), BLOCK):
-                blk = qpdf.iloc[lo : lo + BLOCK]
-                Q = np.vstack(blk["q"].to_numpy()).astype(np.float64)
-                q_ids = blk["vec_id"].to_numpy()
-                G = Q @ C.T  # exact integer-valued float64 products
-                cos = G / np.sqrt(
-                    np.outer(np.einsum("ij,ij->i", Q, Q), c_norm)
-                )
-                idx = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.repeat(q_ids, kk),
-                            "neighbor_id": c_ids[idx].ravel(),
-                            "cos_sim": np.take_along_axis(
-                                cos, idx, axis=1
-                            ).ravel(),
-                        }
-                    )
-                )
-            return pd.concat(out, ignore_index=True)
 
-        local = (
-            queries.groupBy("cluster", "chunk_id")
-            .cogroup(corpus.groupBy("c_cluster", "c_chunk_id"))
-            .applyInPandas(
-                topk_per_chunk,
-                schema="query_id bigint, neighbor_id bigint, cos_sim double",
-            )
+        # Per-cell chunks bound task memory exactly as in
+        # sim_nn_within_label; the k-row cell-count table is
+        # sqrt-bounded, a legitimate broadcast.
+        local = stage(
+            cell_chunks(b_assigned, a_probes, "cluster"),
+            "query_id bigint, neighbor_id bigint, cos_sim double",
+            topk_per_chunk,
         )
         # Associative top-k merge: every chunk's local top-k is a
         # superset of the global top-k members from that chunk under
@@ -1038,7 +948,7 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return (
             local.withColumn("rnk", F.row_number().over(w).cast("int"))
-            .filter(F.col("rnk") <= top_k)
+            .filter(F.col("rnk") <= TOP_K)
         )
     finally:
         right.unpersist()
@@ -1088,66 +998,38 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("norm") > 0)
         .select("cluster", "vec_id", "q")
     )
-    # Captured as locals: the closure ships self-contained to
-    # workers (no etl_spark symbols resolved worker-side).
+    # Read at build time: tests shrink it to prove the result is
+    # block-size-invariant.
     block = PAIR_BLOCK_ROWS
-    thresh = COSINE_DUP_THRESHOLD
 
-    def pairs_in_cell(pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "cluster": pd.Series(dtype="int32"),
-                "vec_a": pd.Series(dtype="int64"),
-                "vec_b": pd.Series(dtype="int64"),
-                "cos_sim": pd.Series(dtype="float64"),
-            }
-        )
-        if len(pdf) < 2:
-            return empty
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        ids = pdf["vec_id"].to_numpy()
-        Q = np.array(pdf["q"].tolist(), dtype=np.float64)
-        # Exact: integer-valued sums below 2^53 (quantization proof
-        # at llm_similarity.quantize).
-        norms = (Q * Q).sum(axis=1)
+    def pairs_in_cell(pdf, Q):
+        order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
+        ids, Q = pdf["vec_id"].to_numpy()[order], Q[order]
         col = np.arange(len(ids))
-        out = []
         # Blocked upper-triangle scoring: peak memory is
         # block × |cell| doubles per task, independent of cell size.
-        B = block
-        for s in range(0, len(ids), B):
-            blk = Q[s : s + B]
-            cos = (blk @ Q.T) / np.sqrt(
-                np.outer(norms[s : s + B], norms)
-            )
-            mask = (cos >= thresh) & (
-                col[None, :] > (s + np.arange(len(blk)))[:, None]
+        for s in range(0, len(ids), block):
+            cos = cosine_matrix(Q[s : s + block], Q)
+            mask = (cos >= COSINE_DUP_THRESHOLD) & (
+                col[None, :] > (s + np.arange(len(cos)))[:, None]
             )
             ii, jj = np.nonzero(mask)
             if len(ii):
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "cluster": np.full(
-                                len(ii),
-                                pdf["cluster"].iloc[0],
-                                dtype="int32",
-                            ),
-                            "vec_a": ids[s + ii],
-                            "vec_b": ids[jj],
-                            "cos_sim": cos[ii, jj],
-                        }
-                    )
+                yield pd.DataFrame(
+                    {
+                        "cluster": np.full(
+                            len(ii), pdf["cluster"].iloc[0], dtype="int32"
+                        ),
+                        "vec_a": ids[s + ii],
+                        "vec_b": ids[jj],
+                        "cos_sim": cos[ii, jj],
+                    }
                 )
-        return pd.concat(out) if out else empty
 
-    return assigned.groupBy("cluster").applyInPandas(
+    return stage(
+        assigned.groupBy("cluster"),
+        "cluster int, vec_a bigint, vec_b bigint, cos_sim double",
         pairs_in_cell,
-        schema="cluster int, vec_a bigint, vec_b bigint, "
-               "cos_sim double",
     )
 
 
@@ -1409,16 +1291,12 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str, keep: int) -> DataFrame:
     if not seed_rows or not query_rows:
         return spark.createDataFrame([], out_schema + ", rnk int")
 
-    import numpy as np
-
     CENT = np.array(cents, dtype=np.int64)  # (k, dim), lattice ints
-    cnorm2 = (CENT * CENT).sum(axis=1)
 
-    def _nearest_cells(qv: "np.ndarray", n: int) -> "np.ndarray":
+    def _nearest_cells(qv: np.ndarray, n: int) -> np.ndarray:
         # exact integer d2 to every trained centroid, ties -> lowest
         # cluster id (same as the oracle's ORDER BY d2, cluster)
-        d2 = (qv * qv).sum() + cnorm2 - 2 * (CENT @ qv)
-        return np.lexsort((np.arange(len(d2)), d2))[:n]
+        return topk(sq_dist(qv[None, :], CENT)[0], np.arange(len(CENT)), n)
 
     # Residual codebook: CB[c, m, :] = seed c's residual sub-vector.
     SEED = np.array([r["q"] for r in seed_rows], dtype=np.int64)
@@ -1441,45 +1319,27 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str, keep: int) -> DataFrame:
             lut_rows.append((qi, int(cell), lut))
     qid_arr = np.array(qids, dtype=np.int64)
 
-    def encode_score(it):
-        import pandas as pd
-
-        for pdf in it:
-            if not len(pdf):
+    def encode_score(pdf, V):
+        vids = pdf["vec_id"].values.astype(np.int64)
+        cls = pdf["cluster"].values.astype(np.int64)
+        codes = pq_encode((V - CENT[cls]).reshape(-1, PQ_M, PQ_SUBDIM), CB)
+        for qi, cell, lut in lut_rows:
+            in_cell = (cls == cell) & (vids != qid_arr[qi])
+            if not in_cell.any():
                 continue
-            V = np.array(pdf["q"].tolist(), dtype=np.int64)
-            vids = pdf["vec_id"].values.astype(np.int64)
-            cls = pdf["cluster"].values.astype(np.int64)
-            R = (V - CENT[cls]).reshape(-1, PQ_M, PQ_SUBDIM)
-            codes = np.empty((len(V), PQ_M), dtype=np.int64)
-            for m in range(PQ_M):
-                d = ((R[:, None, m, :] - CB[None, :, m, :]) ** 2).sum(
-                    axis=2
-                )
-                codes[:, m] = d.argmin(axis=1)  # first min = lowest c
-            frames = []
-            for qi, cell, lut in lut_rows:
-                in_cell = (cls == cell) & (vids != qid_arr[qi])
-                if not in_cell.any():
-                    continue
-                cc = codes[in_cell]
-                dv = lut[np.arange(PQ_M)[None, :], cc].sum(axis=1)
-                vv = vids[in_cell]
-                top = np.lexsort((vv, dv))[:keep]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid_arr[qi],
-                            "vec_id": vv[top],
-                            "cell": np.int32(cell),
-                            "adc_d2": dv[top],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            dv = lut[np.arange(PQ_M)[None, :], codes[in_cell]].sum(axis=1)
+            vv = vids[in_cell]
+            top = topk(dv, vv, keep)
+            yield pd.DataFrame(
+                {
+                    "query_id": qid_arr[qi],
+                    "vec_id": vv[top],
+                    "cell": np.int32(cell),
+                    "adc_d2": dv[top],
+                }
+            )
 
-    scored = assigned.mapInPandas(encode_score, schema=out_schema)
+    scored = stage(assigned, out_schema, encode_score, dtype=np.int64)
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_d2").asc(), F.col("vec_id").asc()
     )

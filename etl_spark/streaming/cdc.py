@@ -52,9 +52,10 @@ def cdc_apply_stream(changelog: DataFrame) -> DataFrame:
 
 
 def events_as_changelog(events: DataFrame, delete_type: str) -> DataFrame:
-    """Map the event stream to the generic changelog shape the operator
-    consumes (same rule as the batch query: ``delete_type`` events are
-    tombstones, everything else upserts)."""
+    """Map events (a stream or a batch table) to the generic changelog
+    shape: ``delete_type`` events are tombstones, everything else
+    upserts. The batch CDC queries in ``plans/lakehouse.py`` read the
+    events table through this same projection."""
     return events.select(
         "user_id",
         "event_id",

@@ -75,10 +75,11 @@ ALLOWED: dict[tuple[str, str, str], str] = {
         "bloom position set: DISTINCT xxhash64-mod-BLOOM_M buckets, "
         "<= BLOOM_M (2^16) rows by construction at every dim size — "
         "boundedness independent of the data is the family's point",
-    ("plans/llm_similarity.py", "sim_nn_within_label", "cells"):
-        "IVF per-cell chunk counts: one row per coarse-quantizer cell "
-        "(nlist-sized — 10 here, a few thousand in a real index), "
-        "config-bounded regardless of corpus size",
+    ("plans/llm_similarity.py", "cell_chunks", "cells"):
+        "per-cell chunk counts, one row per cell: sim_nn_within_label's "
+        "label cells (nlist-sized — 10 here, a few thousand in a real "
+        "index) and sim_knn_join's k = floor(sqrt(|B|)) trained cells "
+        "(~30k rows at a billion vectors) — never data-sized",
     # text_langid_ngram's profile broadcast was removed in r10: the
     # config-sized profile is collected and scoring is in-row literals.
     ("plans/ml.py", "sim_ivfpq_rerank", "qvec"):
@@ -99,10 +100,6 @@ ALLOWED: dict[tuple[str, str, str], str] = {
         "k x dim centroid table, config-sized",
     ("plans/ml.py", "sim_ivf_kmeans_probe", "probes"):
         "IVF probe list: N_QUERIES x N_PROBE rows, config-sized",
-    ("plans/ml.py", "sim_knn_join", "cells"):
-        "per-cell chunk counts: k = floor(sqrt(|B|)) rows of two ints "
-        "— sqrt-bounded (~30k rows at a billion vectors), never "
-        "data-sized",
     ("plans/relational.py", "join_broadcast_geo_rollup", "region"):
         "region: constant 5 rows",
     ("plans/relational.py", "join_broadcast_geo_rollup", "nation"):

@@ -364,3 +364,67 @@ def test_first_row_per_key_lives_in_ranking_only():
                     ):
                         sites.append((rel, getattr(top, "name", "<module>")))
     assert [s for s in sites if s not in allowed] == [], sites
+
+
+def test_vector_stages_share_one_skeleton():
+    """The Python stages of ``plans/ml.py`` and
+    ``plans/llm_similarity.py`` run through ``operators/vectors.py``:
+    its ``stage`` is the only ``mapInPandas``/``applyInPandas`` call in
+    the three modules, and no stage builds its matrix with
+    ``np.vstack`` (``vectors.matrix`` is the one conversion). Each
+    hand-written stage had grown its own matrix build, empty-frame
+    fallback and copy of the distance and top-k math."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "etl_spark"
+    sites, vstacks = [], []
+    for rel in ("plans/ml.py", "plans/llm_similarity.py", "operators/vectors.py"):
+        if not (pkg / rel).exists():
+            continue
+        for top in ast.parse((pkg / rel).read_text()).body:
+            for n in ast.walk(top):
+                if not isinstance(n, ast.Attribute):
+                    continue
+                where = (rel, getattr(top, "name", "<module>"))
+                if n.attr in ("mapInPandas", "applyInPandas"):
+                    sites.append(where)
+                elif n.attr == "vstack":
+                    vstacks.append(where)
+    assert set(sites) == {("operators/vectors.py", "stage")}, sites
+    assert vstacks == [], vstacks
+
+
+def test_memo_table_directories_removed_at_exit(tmp_path):
+    """A process that builds a memo table directory and exits without
+    ``evict`` (``__spark_entry__.py`` has no teardown) leaves no
+    directory behind: ``_memo_table`` registers its removal at
+    interpreter exit. A stub session stands in for Spark: the memo
+    reads only its ``applicationId``."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    code = (
+        "import types\n"
+        "from etl_spark.plans.lakehouse import _memo_table\n"
+        "ctx = types.SimpleNamespace(applicationId='atexit-check')\n"
+        "spark = types.SimpleNamespace(sparkContext=ctx)\n"
+        "fill = lambda table: (table / 'part').write_text('x')\n"
+        "table = _memo_table(spark, 'sf', 'atexit', fill)\n"
+        "print(table, (table / 'part').exists())\n"
+    )
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    table = pathlib.Path(out[-2])
+    assert out[-1] == "True", "the subprocess built no table"
+    assert table.parent == tmp_path
+    assert not table.exists(), f"{table} outlived its process"

@@ -88,9 +88,13 @@ AUDIT = [
      "BroadcastHashJoin on the cell key; top-k window partitioned by "
      "query_id — no cartesian, no unpartitioned window"),
     ("dedup_semantic_cluster",
-     "cluster-then-compare dedup: one Exchange on the cell key after "
-     "the assignment scan; per-cell scoring is a blocked Arrow matmul "
-     "(FlatMapGroupsInPandas), never a pair join"),
+     "cluster-then-compare dedup: per-cell scoring is a blocked Arrow "
+     "matmul (FlatMapGroupsInPandas) over the session-cached "
+     "assignment (InMemoryTableScan), never a pair join; the only "
+     "Exchange is the size-derived repartition under the cached "
+     "assignment scan (counted twice: the cached plan prints its "
+     "final and initial form), one partition at sf0.1, so the cells "
+     "need no second shuffle"),
     ("pipeline_embed_index",
      "IVF index build pipeline: dedup via window PARTITIONED by the "
      "vector signature hash; assignment via MapInPandas corpus scan; "
@@ -117,9 +121,10 @@ AUDIT = [
     ("sim_pq_adc",
      "PQ-ADC: ONE MapInPandas stage encodes the corpus to sub-space "
      "codes AND scores them against the per-query integer lookup "
-     "tables, pruning to batch-local top-k — the only Exchange feeds "
-     "the final per-query top-k window; no join, nothing broadcast, "
-     "raw vectors never shuffle"),
+     "tables, pruning to batch-local top-k before the per-query "
+     "top-k window; the only Exchange is the size-derived repartition "
+     "in front of that stage (one partition at sf0.1, which the "
+     "window reuses); no join, nothing broadcast"),
     ("graph_dup_pagerank",
      "integer PageRank: per iteration one equi join of the rank "
      "vector against the cached edge list and one partial+final "
@@ -334,7 +339,8 @@ AUDIT = [
     ("emb_jl_distortion",
      "JL distortion: one corpus scan; the Arrow stage emits partial "
      "(count, in-band, min, max) rows per (query, batch), so the "
-     "only Exchange carries queries x batches rows — never pairs"),
+     "aggregate reads queries x batches rows — never pairs; the only "
+     "Exchange is the size-derived repartition in front of the stage"),
     ("join_bloom_prefilter_revenue",
      "bloom pre-filter: the lineitem scan feeds TWO broadcast "
      "LeftSemi joins on pmod(xxhash64) positions (each build side "
