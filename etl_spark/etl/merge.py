@@ -103,6 +103,14 @@ def _bucketed(records: DataFrame) -> DataFrame:
     )
 
 
+def touched_buckets(batch_records: DataFrame) -> tuple[DataFrame, list[int]]:
+    """A merge's front half: the batch reduced to one bucketed row per
+    key, and the buckets it touches (a config-bounded collect: at most
+    N_MERGE_BUCKETS distinct ints)."""
+    batch = _bucketed(snapshot_latest(batch_records))
+    return batch, [r[0] for r in batch.select(_BUCKET_COL).distinct().collect()]
+
+
 def init_snapshot_table(records: DataFrame, table_path: pathlib.Path) -> None:
     """Materialize the latest-snapshot view as the bucket-partitioned
     table (full build — run once, or to re-seed after schema change)."""
@@ -140,11 +148,7 @@ def merge_into_snapshot_table(
     the overwrite because the write target IS the read source — the
     one self-overwrite hazard of a path-based table.
     """
-    batch = _bucketed(snapshot_latest(batch_records))
-    # Config-bounded collect: at most N_MERGE_BUCKETS distinct ints.
-    touched = [
-        r[0] for r in batch.select(_BUCKET_COL).distinct().collect()
-    ]
+    batch, touched = touched_buckets(batch_records)
     if not touched:
         return
     current = _read_touched(spark, table_path, touched)

@@ -62,7 +62,12 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.etl.merge import _BUCKET_COL, _bucketed, latest_wins_merge
+from etl_spark.etl.merge import (
+    _BUCKET_COL,
+    _bucketed,
+    latest_wins_merge,
+    touched_buckets,
+)
 from etl_spark.etl.pipeline import snapshot_latest
 
 _DATA = "data"
@@ -305,11 +310,8 @@ def merge_versioned_table(
     current = _read_manifest(table, current_v)
     dv = _read_dv(table, current_v)
 
-    batch = _bucketed(snapshot_latest(batch_records))
-    # Config-bounded collect: at most N_MERGE_BUCKETS distinct ints.
-    touched = [
-        str(r[0]) for r in batch.select(_BUCKET_COL).distinct().collect()
-    ]
+    batch, buckets = touched_buckets(batch_records)
+    touched = [str(b) for b in buckets]
     if not touched:
         return current_v
     new_v = current_v + 1
@@ -335,7 +337,7 @@ def merge_versioned_table(
         # additive evolution is part of this table's contract.
         merged = latest_wins_merge(
             _bucketed(cur_rows),
-            batch.filter(batch[_BUCKET_COL].isin([int(b) for b in touched])),
+            batch,
             keys=["repo_dir", "file_id"],
             order_cols=["extract_ts"],
             allow_schema_drift=True,

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_spark.functions.hashing import md5_int, md5_int_sql
 from etl_spark.io import load
 from etl_spark.plans.llm_dedup import SHINGLES_SQL, shingles_df
 from etl_spark.plans.registry import register
@@ -148,11 +149,7 @@ SAMPLE_KEEP_BUCKETS = 32768  # of 65536 → deterministic 50% hash gate
     ),
     sampled AS (
       SELECT doc_id, text, lang FROM quality
-      WHERE (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-          + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-          + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-          + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1)
-          < {SAMPLE_KEEP_BUCKETS}
+      WHERE {md5_int_sql("CAST(doc_id AS VARCHAR)", 4)} < {SAMPLE_KEEP_BUCKETS}
     ),
     toks AS (SELECT doc_id, lang, string_split(text, ' ') AS t FROM sampled)
     SELECT doc_id, lang,
@@ -189,9 +186,7 @@ def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             >= MIN_DISTINCT_RATIO
         )
     )
-    h16 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-    ).cast("bigint")
+    h16 = md5_int(F.col("doc_id").cast("string"), 4)
     sampled = quality.filter(h16 < SAMPLE_KEEP_BUCKETS)
     chunk = F.expr(
         f"""
@@ -419,10 +414,6 @@ CTX_TOKENS = 256
 N_SHARDS = 16
 MIX_ALPHA = 0.7
 
-# md5 hex -> 60-bit int, DuckDB side (no hex->int builtin there);
-# Spark side uses conv(). Same trick as llm_dedup's minhash.
-from etl_spark.plans.llm_dedup import _H60_SQL  # noqa: E402
-
 
 @register(
     "curation_pack_sequences",
@@ -495,9 +486,8 @@ def curation_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH sharded AS (
       SELECT doc_id,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             ({_H60_SQL}) % {N_SHARDS} AS shard_id
-      FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS h
-            FROM documents)
+             {md5_int_sql("CAST(doc_id AS VARCHAR)", 15)} % {N_SHARDS} AS shard_id
+      FROM documents
     )
     SELECT shard_id,
            CAST(COUNT(*) AS BIGINT)      AS n_docs,
@@ -520,9 +510,7 @@ def curation_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def curation_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    h60 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
+    h60 = md5_int(F.col("doc_id").cast("string"), 15)
     sharded = docs.select(
         (h60 % N_SHARDS).alias("shard_id"),
         F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
@@ -803,10 +791,9 @@ TRAIN_PCT = 90  # content-hash split: md5(text) mod 100 < 90 -> train
     WITH labeled AS (
       SELECT doc_id, text,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CASE WHEN ({_H60_SQL}) % 100 < {TRAIN_PCT}
+             CASE WHEN {md5_int_sql("text", 15)} % 100 < {TRAIN_PCT}
                   THEN 'train' ELSE 'val' END AS split
-      FROM (SELECT doc_id, text, md5(text) AS h
-            FROM documents WHERE text IS NOT NULL)
+      FROM documents WHERE text IS NOT NULL
     ),
     doc_stats AS (
       SELECT split, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -870,7 +857,7 @@ def curation_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_spark.plans.llm_dedup import shingles_df
 
     docs = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    h60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
+    h60 = md5_int("text", 15)
     labeled = docs.select(
         "doc_id",
         "text",
@@ -1250,9 +1237,9 @@ MAX_EPOCHS_X1000 = 4000
     sized AS (
       SELECT d.doc_id, d.lang, p.epochs_x1000,
              CAST(p.epochs_x1000 // 1000
-                  + CASE WHEN ({_H60_SQL}) % 1000 < p.epochs_x1000 % 1000
+                  + CASE WHEN {md5_int_sql("d.text", 15)} % 1000 < p.epochs_x1000 % 1000
                          THEN 1 ELSE 0 END AS INTEGER) AS n_copies
-      FROM (SELECT doc_id, lang, md5(text) AS h
+      FROM (SELECT doc_id, lang, text
             FROM documents WHERE text IS NOT NULL) d
       JOIN per_lang p USING (lang)
     )
@@ -1291,7 +1278,7 @@ def curation_epoch_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(1000 * n_max) div n_docs"),
         ).alias("epochs_x1000"),
     )
-    h60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
+    h60 = md5_int("text", 15)
     sized = (
         docs.select("doc_id", "lang", (h60 % 1000).alias("g"))
         .join(F.broadcast(per_lang), "lang")
@@ -1340,9 +1327,9 @@ PACK_STREAMS = 8
     sized AS (
       SELECT d.doc_id, d.lang, d.n_tokens,
              CAST(p.epochs_x1000 // 1000
-                  + CASE WHEN ({_H60_SQL}) % 1000 < p.epochs_x1000 % 1000
+                  + CASE WHEN {md5_int_sql("d.text", 15)} % 1000 < p.epochs_x1000 % 1000
                          THEN 1 ELSE 0 END AS INTEGER) AS n_copies
-      FROM (SELECT doc_id, lang, md5(text) AS h,
+      FROM (SELECT doc_id, lang, text,
                    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
             FROM documents WHERE text IS NOT NULL) d
       JOIN per_lang p USING (lang)
@@ -1354,11 +1341,10 @@ PACK_STREAMS = 8
       FROM sized
     ),
     mixed AS (
-      SELECT doc_id, copy_idx, lang, n_tokens, ({_H60_SQL}) AS mix_key
-      FROM (SELECT e.*,
-                   md5(CAST(doc_id AS VARCHAR) || '#'
-                       || CAST(copy_idx AS VARCHAR)) AS h
-            FROM expanded e)
+      SELECT doc_id, copy_idx, lang, n_tokens,
+             {md5_int_sql("CAST(doc_id AS VARCHAR) || '#' || CAST(copy_idx AS VARCHAR)", 15)}
+               AS mix_key
+      FROM expanded
     ),
     placed AS (
       SELECT doc_id, copy_idx, lang, n_tokens, mix_key,
@@ -1413,9 +1399,7 @@ def pipeline_build_training_mix(
             F.expr("(1000 * n_max) div n_docs"),
         ).alias("epochs_x1000"),
     )
-    h60_text = F.conv(
-        F.substring(F.md5("text"), 1, 15), 16, 10
-    ).cast("bigint")
+    h60_text = md5_int("text", 15)
     sized = (
         docs.select(
             "doc_id",
@@ -1439,19 +1423,12 @@ def pipeline_build_training_mix(
         "doc_id", "lang", "n_tokens",
         F.explode(F.sequence(F.lit(1), F.col("n_copies"))).alias("copy_idx"),
     )
-    mix_key = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "#",
-                    F.col("doc_id").cast("string"),
-                    F.col("copy_idx").cast("string"),
-                )
-            ),
-            1, 15,
+    mix_key = md5_int(
+        F.concat_ws(
+            "#", F.col("doc_id").cast("string"), F.col("copy_idx").cast("string")
         ),
-        16, 10,
-    ).cast("bigint")
+        15,
+    )
     mixed = expanded.select(
         "doc_id", "copy_idx", "lang", "n_tokens",
         mix_key.alias("mix_key"),
@@ -1508,9 +1485,9 @@ _SIG_AGREE_SQL = " + ".join(
 
 _SPLIT_SQL = f"""
     SELECT doc_id,
-           CASE WHEN ({_H60_SQL}) % 100 < {TRAIN_PCT}
+           CASE WHEN {md5_int_sql("text", 15)} % 100 < {TRAIN_PCT}
                 THEN 'train' ELSE 'val' END AS split
-    FROM (SELECT doc_id, md5(text) AS h FROM ({_REP_DOCS_SQL}))
+    FROM ({_REP_DOCS_SQL})
 """
 
 
@@ -1566,7 +1543,7 @@ _SPLIT_SQL = f"""
 def curation_split_leakage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_spark.plans.llm_dedup import rep_docs
 
-    h60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
+    h60 = md5_int("text", 15)
     splits = rep_docs(spark, sf_dir).select(
         "doc_id",
         F.when(h60 % 100 < TRAIN_PCT, "train").otherwise("val").alias("split"),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_spark.etl.merge import latest_wins_merge
+from etl_spark.functions.hashing import md5_int, md5_int_sql
 from etl_spark.io import load
 from etl_spark.operators.caching import session_memo
 from etl_spark.operators.ranking import first_per_key
@@ -747,8 +748,52 @@ def _built_vtable(spark: SparkSession, sf_dir: str):
     return _memo_table(spark, sf_dir, "v", fill)
 
 
+# The canonical row rendering the versioned-table checksums hash, as
+# DuckDB spells it; ``_version_checksums`` renders the same string.
+_CK_ROW_SQL = (
+    "repo_dir || '|' || file_id || '|' || extract_ts"
+    " || '|' || CAST(event_id AS VARCHAR)"
+)
+
+
+def _version_checksums(spark: SparkSession, table, n_versions: int) -> DataFrame:
+    """dq_table_checksum's (COUNT, BIT_XOR, modular-sum) triple over
+    the canonical row rendering, for each of versions ``0 ..
+    n_versions - 1`` of the versioned ``table``."""
+    from functools import reduce
+
+    from etl_spark.etl.versioned import read_versioned_table
+    from etl_spark.plans.quality import _CK_MOD
+
+    h = md5_int(
+        F.concat_ws(
+            "|",
+            F.col("repo_dir"),
+            F.col("file_id"),
+            F.col("extract_ts"),
+            F.col("event_id").cast("string"),
+        ),
+        15,
+    )
+    parts = [
+        read_versioned_table(spark, table, version=v)
+        .select(h.alias("h"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.expr("bit_xor(h)").alias("xor_checksum"),
+            F.sum(F.col("h") % _CK_MOD).alias("modsum_checksum"),
+        )
+        .select(
+            F.lit(v).cast("int").alias("version"),
+            "n_rows", "xor_checksum", "modsum_checksum",
+        )
+        for v in range(n_versions)
+    ]
+    return reduce(DataFrame.unionByName, parts).orderBy("version")
+
+
 def _vt_checksum_oracle_sql() -> str:
-    from etl_spark.plans.quality import _CK_H60_DUCK, _CK_MOD
+    from etl_spark.plans.quality import _CK_MOD
 
     ks = ", ".join(f"({k})" for k in range(VT_VERSIONS))
     return f"""
@@ -772,11 +817,7 @@ def _vt_checksum_oracle_sql() -> str:
       ) WHERE rn = 1
     ),
     hashed AS (
-      SELECT k, ({_CK_H60_DUCK}) AS h FROM (
-        SELECT k, md5(repo_dir || '|' || file_id || '|' || extract_ts
-                      || '|' || CAST(event_id AS VARCHAR)) AS rh
-        FROM snap
-      )
+      SELECT k, {md5_int_sql(_CK_ROW_SQL, 15)} AS h FROM snap
     )
     SELECT CAST(k AS INTEGER) AS version,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -813,36 +854,7 @@ def _vt_checksum_oracle_sql() -> str:
 def lakehouse_time_travel_checksums(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from functools import reduce
-
-    from etl_spark.etl.versioned import read_versioned_table
-    from etl_spark.plans.quality import _CK_MOD
-
-    table = _built_vtable(spark, sf_dir)
-    row_str = F.concat_ws(
-        "|",
-        F.col("repo_dir"),
-        F.col("file_id"),
-        F.col("extract_ts"),
-        F.col("event_id").cast("string"),
-    )
-    h = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("bigint")
-    parts = []
-    for v in range(VT_VERSIONS):
-        parts.append(
-            read_versioned_table(spark, table, version=v)
-            .select(h.alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.expr("bit_xor(h)").alias("xor_checksum"),
-                F.sum(F.col("h") % _CK_MOD).alias("modsum_checksum"),
-            )
-            .select(
-                F.lit(v).cast("int").alias("version"),
-                "n_rows", "xor_checksum", "modsum_checksum",
-            )
-        )
-    return reduce(DataFrame.unionByName, parts).orderBy("version")
+    return _version_checksums(spark, _built_vtable(spark, sf_dir), VT_VERSIONS)
 
 
 # --------------------------------------------------------------------------
@@ -891,7 +903,7 @@ def _built_dv_table(spark: SparkSession, sf_dir: str):
 
 
 def _dv_checksum_oracle_sql() -> str:
-    from etl_spark.plans.quality import _CK_H60_DUCK, _CK_MOD
+    from etl_spark.plans.quality import _CK_MOD
 
     return f"""
     WITH base AS (
@@ -954,12 +966,7 @@ def _dv_checksum_oracle_sql() -> str:
       SELECT 4, repo_dir, file_id, extract_ts, event_id FROM v3
     ),
     hashed AS (
-      SELECT version, ({_CK_H60_DUCK}) AS h FROM (
-        SELECT version,
-               md5(repo_dir || '|' || file_id || '|' || extract_ts
-                   || '|' || CAST(event_id AS VARCHAR)) AS rh
-        FROM versions
-      )
+      SELECT version, {md5_int_sql(_CK_ROW_SQL, 15)} AS h FROM versions
     )
     SELECT CAST(version AS INTEGER) AS version,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -998,36 +1005,7 @@ def _dv_checksum_oracle_sql() -> str:
 def lakehouse_equality_delete_checksums(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from functools import reduce
-
-    from etl_spark.etl.versioned import read_versioned_table
-    from etl_spark.plans.quality import _CK_MOD
-
-    table = _built_dv_table(spark, sf_dir)
-    row_str = F.concat_ws(
-        "|",
-        F.col("repo_dir"),
-        F.col("file_id"),
-        F.col("extract_ts"),
-        F.col("event_id").cast("string"),
-    )
-    h = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("bigint")
-    parts = []
-    for v in range(5):
-        parts.append(
-            read_versioned_table(spark, table, version=v)
-            .select(h.alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.expr("bit_xor(h)").alias("xor_checksum"),
-                F.sum(F.col("h") % _CK_MOD).alias("modsum_checksum"),
-            )
-            .select(
-                F.lit(v).cast("int").alias("version"),
-                "n_rows", "xor_checksum", "modsum_checksum",
-            )
-        )
-    return reduce(DataFrame.unionByName, parts).orderBy("version")
+    return _version_checksums(spark, _built_dv_table(spark, sf_dir), 5)
 
 
 # --------------------------------------------------------------------------
@@ -1045,7 +1023,7 @@ def _built_seq_table(spark: SparkSession, sf_dir: str):
 
 
 def _seq_checksum_oracle_sql() -> str:
-    from etl_spark.plans.quality import _CK_H60_DUCK, _CK_MOD
+    from etl_spark.plans.quality import _CK_MOD
 
     return f"""
     WITH base AS (
@@ -1109,12 +1087,7 @@ def _seq_checksum_oracle_sql() -> str:
       SELECT 4, repo_dir, file_id, extract_ts, event_id FROM v3
     ),
     hashed AS (
-      SELECT version, ({_CK_H60_DUCK}) AS h FROM (
-        SELECT version,
-               md5(repo_dir || '|' || file_id || '|' || extract_ts
-                   || '|' || CAST(event_id AS VARCHAR)) AS rh
-        FROM versions
-      )
+      SELECT version, {md5_int_sql(_CK_ROW_SQL, 15)} AS h FROM versions
     )
     SELECT CAST(version AS INTEGER) AS version,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -1154,33 +1127,4 @@ def _seq_checksum_oracle_sql() -> str:
 def lakehouse_commit_seq_delete_checksums(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from functools import reduce
-
-    from etl_spark.etl.versioned import read_versioned_table
-    from etl_spark.plans.quality import _CK_MOD
-
-    table = _built_seq_table(spark, sf_dir)
-    row_str = F.concat_ws(
-        "|",
-        F.col("repo_dir"),
-        F.col("file_id"),
-        F.col("extract_ts"),
-        F.col("event_id").cast("string"),
-    )
-    h = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("bigint")
-    parts = []
-    for v in range(5):
-        parts.append(
-            read_versioned_table(spark, table, version=v)
-            .select(h.alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.expr("bit_xor(h)").alias("xor_checksum"),
-                F.sum(F.col("h") % _CK_MOD).alias("modsum_checksum"),
-            )
-            .select(
-                F.lit(v).cast("int").alias("version"),
-                "n_rows", "xor_checksum", "modsum_checksum",
-            )
-        )
-    return reduce(DataFrame.unionByName, parts).orderBy("version")
+    return _version_checksums(spark, _built_seq_table(spark, sf_dir), 5)

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from etl_spark.functions.hashing import md5_int, md5_int_sql
 from etl_spark.io import load
 from etl_spark.operators.caching import session_cached
 from etl_spark.operators.graph import triangle_count
@@ -716,15 +717,6 @@ MERSENNE_P = 1_000_000_007
 HASH_A = [(2_654_435_761 * (i + 1) + 1) % MERSENNE_P for i in range(N_HASHES)]
 HASH_B = [(40_503 * (i + 1) * (i + 1) + 7) % MERSENNE_P for i in range(N_HASHES)]
 
-_HEX = "0123456789abcdef"
-# DuckDB has no hex→int conversion; reconstruct the 60-bit value from
-# the first 15 md5 hex chars via strpos arithmetic (exact BIGINT).
-_H60_SQL = " + ".join(
-    f"(strpos('{_HEX}', substr(h, {c}, 1)) - 1) * {16 ** (15 - c)}"
-    for c in range(1, 16)
-)
-
-
 def _minhash_signature_sql() -> str:
     mins = ",\n        ".join(
         f"MIN(({a} * hp + {b}) % {MERSENNE_P}) AS s{i}"
@@ -732,8 +724,8 @@ def _minhash_signature_sql() -> str:
     )
     return f"""SELECT doc_id,
         {mins}
-      FROM (SELECT doc_id, ({_H60_SQL}) % {MERSENNE_P} AS hp
-            FROM (SELECT doc_id, md5(shingle) AS h FROM sh))
+      FROM (SELECT doc_id, {md5_int_sql("shingle", 15)} % {MERSENNE_P} AS hp
+            FROM sh)
       GROUP BY doc_id"""
 
 
@@ -760,10 +752,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplication (occurrences / distinct) at scale.
     """
     posting = posting_lists(spark, sf_dir)
-    hp = (
-        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("bigint")
-        % MERSENNE_P
-    ).alias("hp")
+    hp = (md5_int("shingle", 15) % MERSENNE_P).alias("hp")
     # n_sh comes along for free in the same per-doc aggregate (count
     # of the doc's posting rows == its surviving shingle-set size):
     # dedup_minhash_error reads (na, nb) off its existing signature
@@ -991,13 +980,7 @@ SIMHASH_BITS = 16
 
 
 def _simhash_oracle_sql() -> str:
-    # Portable hex→int: nibble value via strpos in the hex alphabet.
-    nib = (
-        "(strpos('0123456789abcdef', substr(md5(term), {c}, 1)) - 1)"
-    )
-    h16 = " + ".join(
-        f"{nib.format(c=c + 1)} * {16 ** (3 - c)}" for c in range(4)
-    )
+    h16 = md5_int_sql("term", 4)
     votes = ",\n        ".join(
         f"SUM(CASE WHEN (h16 // {2 ** i}) % 2 = 1 THEN 1 ELSE -1 END) AS v{i}"
         for i in range(SIMHASH_BITS)
@@ -1037,7 +1020,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
         .select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     )
-    h16 = F.conv(F.substring(F.md5("term"), 1, 4), 16, 10).cast("bigint")
+    h16 = md5_int("term", 4)
     hashed = terms.select("doc_id", h16.alias("h16"))
     votes = hashed.groupBy("doc_id").agg(
         *[

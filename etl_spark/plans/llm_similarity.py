@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.group_ops import PandasCogroupedOps
 
+from etl_spark.functions.hashing import md5_int_sql
 from etl_spark.io import adaptive_partitions, load
 from etl_spark.operators.caching import session_cached
 from etl_spark.operators.ranking import first_per_key
@@ -76,16 +77,36 @@ EMB_ROWS_PER_PARTITION = 16384
 
 
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings as exact-integer vectors, in size-derived partitions."""
-    return (
-        load(spark, sf_dir, "embeddings")
-        .repartition(
-            adaptive_partitions(
-                spark, sf_dir, "embeddings", EMB_ROWS_PER_PARTITION
+    """The one reader of ``embeddings``: ``(vec_id, label, q, norm)``,
+    ``q`` the exact-integer vector and ``norm`` its ``q·q``, in
+    size-derived partitions. Persisted once per (session, ``sf_dir``),
+    so every similarity and ML builder, and every bounded pass inside
+    one, reads memory instead of re-quantizing parquet. Zero-norm rows
+    are kept for ``emb_norm_stats``; cosine consumers filter
+    ``norm > 0``."""
+
+    def build() -> DataFrame:
+        return (
+            load(spark, sf_dir, "embeddings")
+            .repartition(
+                adaptive_partitions(
+                    spark, sf_dir, "embeddings", EMB_ROWS_PER_PARTITION
+                )
+            )
+            .select("vec_id", "label", quantize(F.col("embedding")).alias("q"))
+            .withColumn(
+                "norm",
+                F.aggregate("q", F.lit(0).cast("bigint"), lambda acc, x: acc + x * x),
             )
         )
-        .select("vec_id", quantize(F.col("embedding")).alias("q"))
-    )
+
+    return session_cached("quantized_embeddings", spark, sf_dir, build)
+
+
+def vec_hash(q) -> Column:
+    """md5 over the canonical ``','``-joined string of a quantized
+    vector: the exact-duplicate signature."""
+    return F.md5(F.array_join(F.transform(q, lambda x: x.cast("string")), ","))
 
 
 def pick_vectors(
@@ -223,7 +244,7 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides (cos is undefined for them; Spark would emit IEEE NaN/Inf
     # where DuckDB nulls the division) — emb_norm_stats is the audit
     # that surfaces such vectors to the pipeline owner.
-    emb = _quantized(spark, sf_dir).filter(dot(F.col("q"), F.col("q")) > 0)
+    emb = _quantized(spark, sf_dir).filter(F.col("norm") > 0)
     q_rows = pick_vectors(emb, N_QUERIES)
     QM = np.array([r["q"] for r in q_rows], dtype=np.float64)
     qids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
@@ -302,13 +323,9 @@ def sim_nn_within_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cos values are bit-identical float64s in every chunk, and the
     # struct max applies the same tiebreak, so the result is byte-equal
     # to the single-matrix form (and to the DuckDB oracle).
-    emb = (
-        load(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", quantize(F.col("embedding")).alias("q"))
-        # Zero-norm vectors excluded from cosine scoring (both sides;
-        # see sim_topk_cosine).
-        .filter(dot(F.col("q"), F.col("q")) > 0)
-    )
+    # Zero-norm vectors excluded from cosine scoring (both sides; see
+    # sim_topk_cosine).
+    emb = _quantized(spark, sf_dir).filter(F.col("norm") > 0)
 
     def nn_per_chunk(qpdf, Q, cpdf, C):
         rows, nbrs, cos = cell_topk(
@@ -378,11 +395,8 @@ _EFF_PLANES_SQL = (
 
 def _plane_sign_sql(p: int, i: str) -> str:
     # +1/-1 pseudo-random sign for plane p, dimension i, from md5 parity.
-    return (
-        f"CASE WHEN (strpos('0123456789abcdef', "
-        f"substr(md5('{p}|' || CAST({i} AS VARCHAR)), 1, 1)) - 1) % 2 = 1 "
-        f"THEN 1 ELSE -1 END"
-    )
+    h = md5_int_sql(f"'{p}|' || CAST({i} AS VARCHAR)", 1)
+    return f"CASE WHEN {h} % 2 = 1 THEN 1 ELSE -1 END"
 
 
 def _bucket_sql() -> str:
@@ -443,7 +457,7 @@ def corpus_planes(spark: SparkSession, sf_dir: str) -> int:
         path = os.path.join(sf_dir, "embeddings.parquet")
         return eff_planes(pq.ParquetFile(path).metadata.num_rows)
     except Exception:
-        return eff_planes(load(spark, sf_dir, "embeddings").count())
+        return eff_planes(_quantized(spark, sf_dir).count())
 
 
 def lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,11 +475,10 @@ def lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         return (
             _quantized(spark, sf_dir)
-            .withColumn("norm", dot(F.col("q"), F.col("q")))
             # Zero-norm vectors excluded from cosine scoring (see
             # sim_topk_cosine).
             .filter(F.col("norm") > 0)
-            .withColumn("bucket", _bucket_column(planes))
+            .select("vec_id", "q", "norm", _bucket_column(planes).alias("bucket"))
         )
 
     return session_cached("lsh_bucketed", spark, sf_dir, build)
@@ -571,18 +584,10 @@ def sim_ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = corpus_planes(spark, sf_dir)
-    emb = (
-        load(spark, sf_dir, "embeddings")
-        .repartition(
-            adaptive_partitions(
-                spark, sf_dir, "embeddings", EMB_ROWS_PER_PARTITION
-            )
-        )
-        .select("vec_id", "label", quantize(F.col("embedding")).alias("q"))
-    )
     # Deterministic ±1 planes via the shared md5-parity derivation.
     return (
-        emb.withColumn("bucket", _bucket_column(planes))
+        _quantized(spark, sf_dir)
+        .withColumn("bucket", _bucket_column(planes))
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
@@ -697,10 +702,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "llm", "statistics"),
 )
 def emb_label_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").select(
-        "label", quantize(F.col("embedding")).alias("q")
-    )
-    dims = emb.select(
+    dims = _quantized(spark, sf_dir).select(
         "label", F.posexplode("q").alias("pos", "v")
     )
     sums = dims.groupBy("label", "pos").agg(
@@ -762,14 +764,10 @@ def emb_label_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "llm", "statistics", "aggregation"),
 )
 def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").select(
-        "label",
-        dot(
-            quantize(F.col("embedding")), quantize(F.col("embedding"))
-        ).alias("norm2"),
-    )
     return (
-        emb.groupBy("label")
+        _quantized(spark, sf_dir)
+        .select("label", F.col("norm").alias("norm2"))
+        .groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
             F.min("norm2").alias("min_norm2"),
@@ -810,17 +808,8 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "llm", "dedup"),
 )
 def emb_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.md5(
-            F.array_join(
-                F.transform(
-                    quantize(F.col("embedding")), lambda x: x.cast("string")
-                ),
-                ",",
-            )
-        ).alias("vec_hash"),
+    emb = _quantized(spark, sf_dir).select(
+        "vec_id", "label", vec_hash(F.col("q")).alias("vec_hash")
     )
     w = Window.partitionBy("vec_hash")
     return (
@@ -924,21 +913,14 @@ def _pq_d2_sql(a: str, b: str) -> str:
     tags=("similarity", "llm", "ann", "pq", "pandas-udf"),
 )
 def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = load(spark, sf_dir, "embeddings").select(
-        "vec_id", quantize(F.col("embedding")).alias("q")
-    )
-    # The repartition exists for the scoring pass's parallelism; the
-    # driver collect below reads the un-shuffled source directly.
-    emb = base.repartition(
-        adaptive_partitions(spark, sf_dir, "embeddings", EMB_ROWS_PER_PARTITION)
-    )
+    emb = _quantized(spark, sf_dir)
     out_schema = "query_id bigint, vec_id bigint, adc_d2 bigint"
-    # ONE config-sized driver collect (<= PQ_KS + 4 rows; vec_id
-    # pushdown reaches the scan), split driver-side — same discipline
+    # ONE config-sized driver collect (<= PQ_KS + 4 rows, off the
+    # cached corpus), split driver-side — same discipline
     # as sim_topk_cosine's query set: codebook and queries ride in the
     # mapInPandas closure; the corpus is never collected.
     picked = sorted(
-        base.filter(
+        emb.filter(
             (F.col("vec_id") < PQ_KS)
             | (
                 (F.col("vec_id") >= PQ_QUERY_LO)

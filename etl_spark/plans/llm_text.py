@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_spark.functions.hashing import md5_int, md5_int_sql
 from etl_spark.io import load
 from etl_spark.plans.registry import register
 
@@ -798,12 +799,7 @@ def text_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # occurrence increments one bucket per row, estimate = min over rows.
 # Hashes reuse the md5->60-bit->universal-mix machinery from the
 # MinHash family, so both engines compute identical integers.
-from etl_spark.plans.llm_dedup import (  # noqa: E402
-    HASH_A,
-    HASH_B,
-    MERSENNE_P,
-    _H60_SQL,
-)
+from etl_spark.plans.llm_dedup import HASH_A, HASH_B, MERSENNE_P  # noqa: E402
 
 CMS_K = 4
 CMS_W = 256
@@ -821,8 +817,7 @@ def _cms_bucket_sql(i: int) -> str:
       SELECT unnest(string_split(text, ' ')) AS term FROM documents
     ),
     hashed AS (
-      SELECT term, ({_H60_SQL}) % {MERSENNE_P} AS hp
-      FROM (SELECT term, md5(term) AS h FROM tok)
+      SELECT term, {md5_int_sql("term", 15)} % {MERSENNE_P} AS hp FROM tok
     ),
     bexp AS (
       {" UNION ALL ".join(f"SELECT term, {i} AS row_i, {_cms_bucket_sql(i)} AS bucket FROM hashed" for i in range(CMS_K))}
@@ -837,8 +832,8 @@ def _cms_bucket_sql(i: int) -> str:
       ORDER BY true_count DESC, term ASC LIMIT {CMS_TOP}
     ),
     top_hashed AS (
-      SELECT term, true_count, ({_H60_SQL}) % {MERSENNE_P} AS hp
-      FROM (SELECT term, true_count, md5(term) AS h FROM top)
+      SELECT term, true_count, {md5_int_sql("term", 15)} % {MERSENNE_P} AS hp
+      FROM top
     ),
     probes AS (
       {" UNION ALL ".join(f"SELECT term, true_count, {i} AS row_i, {_cms_bucket_sql(i)} AS bucket FROM top_hashed" for i in range(CMS_K))}
@@ -865,10 +860,7 @@ def _cms_bucket_sql(i: int) -> str:
 def text_cms_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(F.explode(F.split("text", " ")).alias("term"))
-    hp = (
-        F.conv(F.substring(F.md5("term"), 1, 15), 16, 10).cast("bigint")
-        % MERSENNE_P
-    )
+    hp = md5_int("term", 15) % MERSENNE_P
 
     def bucket(i: int):
         return ((F.lit(HASH_A[i]) * F.col("hp") + F.lit(HASH_B[i])) % MERSENNE_P) % CMS_W
@@ -1232,11 +1224,7 @@ def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # here keeps the oracle closed-form while exercising the identical
 # plan (hash → bucket → weight → margin).
 HASH_DIM = 1024
-_H16_TOKEN_SQL = " + ".join(
-    f"(strpos('0123456789abcdef', substr(md5(t), {c}, 1)) - 1)"
-    f" * {16 ** (4 - c)}"
-    for c in range(1, 5)
-)
+_H16_TOKEN_SQL = md5_int_sql("t", 4)
 
 
 def token_bucket(t):
@@ -1245,7 +1233,7 @@ def token_bucket(t):
     shared by the hashing-trick scorer, the trained classifier and its
     streaming gate, so batch and stream bucket every token alike."""
     return (
-        F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("bigint") % HASH_DIM
+        md5_int(t, 4) % HASH_DIM
     ).cast("int")
 
 

@@ -38,7 +38,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.io import load
 from etl_spark.plans.llm_similarity import (
     COSINE_DUP_THRESHOLD,
     DIM,
@@ -58,7 +57,7 @@ from etl_spark.plans.llm_similarity import (
     cosine,
     dot,
     pick_vectors,
-    quantize,
+    vec_hash,
 )
 from etl_spark.operators.caching import session_cached, session_memo
 from etl_spark.operators.ranking import first_per_key
@@ -296,42 +295,37 @@ def _lloyd_oracle_sql() -> str:
     tags=("ml", "kmeans", "llm", "iterative", "pandas-udf"),
 )
 def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Every iteration rescans the session-cached quantized input.
     emb = _quantized(spark, sf_dir)
-    # Lineage grows per iteration; cache the (small) quantized input so
-    # each pass rescans memory, not parquet.
-    emb.persist()
-    try:
-        centroids = _first_k_seeds(emb)
-        prev_inertia = None
-        n_iter = 0
-        sums = []
-        for _ in range(MAX_ITERS):
-            n_iter += 1
-            sums = _lloyd_sums(emb, centroids)
-            inertia = sum(row["sd2"] for row in sums if row["pos"] == 0)
-            if prev_inertia is not None and inertia >= prev_inertia:
-                break
-            prev_inertia = inertia
-            centroids = _lattice_update(sums, centroids)
-        # The stats of the stopping iteration's assignment are already
-        # in hand: the loop's final `sums` collect IS the per-cluster
-        # (n_members, inertia) table (any pos row carries n; pos==0
-        # carries the cluster's Σd2) — the same numbers the oracle
-        # reads off a{{n_iter}}. The convergence channel stays
-        # config-sized (k × dim rows per iteration), nothing data-sized
-        # reaches the driver.
-        stats = sorted(
-            (
-                (int(r["cluster"]), int(r["n"]), int(r["sd2"]), n_iter)
-                for r in sums
-                if r["pos"] == 0
-            )
+    centroids = _first_k_seeds(emb)
+    prev_inertia = None
+    n_iter = 0
+    sums = []
+    for _ in range(MAX_ITERS):
+        n_iter += 1
+        sums = _lloyd_sums(emb, centroids)
+        inertia = sum(row["sd2"] for row in sums if row["pos"] == 0)
+        if prev_inertia is not None and inertia >= prev_inertia:
+            break
+        prev_inertia = inertia
+        centroids = _lattice_update(sums, centroids)
+    # The stats of the stopping iteration's assignment are already
+    # in hand: the loop's final `sums` collect IS the per-cluster
+    # (n_members, inertia) table (any pos row carries n; pos==0
+    # carries the cluster's Σd2) — the same numbers the oracle
+    # reads off a{{n_iter}}. The convergence channel stays
+    # config-sized (k × dim rows per iteration), nothing data-sized
+    # reaches the driver.
+    stats = sorted(
+        (
+            (int(r["cluster"]), int(r["n"]), int(r["sd2"]), n_iter)
+            for r in sums
+            if r["pos"] == 0
         )
-        return spark.createDataFrame(
-            stats, schema="cluster int, n_members bigint, inertia bigint, n_iter int"
-        )
-    finally:
-        emb.unpersist()
+    )
+    return spark.createDataFrame(
+        stats, schema="cluster int, n_members bigint, inertia bigint, n_iter int"
+    )
 
 
 @register(
@@ -396,18 +390,7 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ml", "similarity", "statistics"),
 )
 def ml_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", quantize(F.col("embedding")).alias("q")
-    )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-
-    vec = emb.withColumn("xx", dot(F.col("q"), F.col("q")))
+    vec = _quantized(spark, sf_dir)
     sums = vec.select("label", F.posexplode("q").alias("pos", "v")).groupBy(
         "label", "pos"
     ).agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("cnt"))
@@ -424,7 +407,7 @@ def ml_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "c_label",
         (
-            F.col("xx").cast("double")
+            F.col("norm").cast("double")
             - (F.lit(2.0) * dot(F.col("q"), F.col("sv")).cast("double"))
             / F.col("n")
             + dot(F.col("sv"), F.col("sv")).cast("double")
@@ -487,21 +470,15 @@ def trained_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     the memo spares each of them the seed collect + assignment scan +
     k×dim update (≈2 corpus passes apiece)."""
 
-    def build() -> list[list[float]]:
-        emb = _quantized(spark, sf_dir)
-        # Two bounded passes share the scan (seed collect + update).
-        emb.persist()
-        try:
-            return _one_step_centroids(emb)
-        finally:
-            emb.unpersist()
-
-    cents = session_memo("ivf_centroids", spark, sf_dir, build)
+    cents = session_memo(
+        "ivf_centroids", spark, sf_dir,
+        lambda: _one_step_centroids(_quantized(spark, sf_dir)),
+    )
     return [list(c) for c in cents]
 
 
 def cached_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached (vec_id, q, cluster) under the session-trained
+    """Session-cached (vec_id, q, norm, cluster) under the session-trained
     coarse quantizer (r10 opt, guide §1.2 "don't compute things you
     throw away"): the IVF probe, the IVF-PQ search/rerank pair and the
     semantic dedup all consume this identical assignment, and each
@@ -511,8 +488,10 @@ def cached_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         return _assign(
-            _quantized(spark, sf_dir), trained_centroids(spark, sf_dir)
-        ).select("vec_id", "q", "cluster")
+            _quantized(spark, sf_dir),
+            trained_centroids(spark, sf_dir),
+            passthrough=(("norm", "bigint"),),
+        ).select("vec_id", "q", "norm", "cluster")
 
     return session_cached("ivf_assigned", spark, sf_dir, build)
 
@@ -701,9 +680,7 @@ def sim_ivf_kmeans_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r10 opt): the probe, the PQ search/rerank pair and semantic
     # dedup all consume the identical training + assignment passes.
     cents = trained_centroids(spark, sf_dir)
-    assigned = cached_assignment(spark, sf_dir).withColumn(
-        "norm", dot(F.col("q"), F.col("q"))
-    )
+    assigned = cached_assignment(spark, sf_dir)
     # Probe selection is driver-side exact-integer arithmetic on a
     # config-sized problem: N_QUERIES vectors × k centroids. The
     # query vectors read off the cached assignment (q rides it), not
@@ -901,57 +878,48 @@ _KNN_JOIN_ORACLE = f"""
 def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    emb = (
-        _quantized(spark, sf_dir)
-        .withColumn("norm", dot(F.col("q"), F.col("q")))
-        .filter(F.col("norm") > 0)
-        .select("vec_id", "q")
-    )
+    emb = _quantized(spark, sf_dir).filter(F.col("norm") > 0).select("vec_id", "q")
     right = emb.filter(F.col("vec_id") % 2 == 1)
     left = emb.filter(F.col("vec_id") % 2 == 0)
-    right.persist()
-    try:
-        # sqrt-bounded driver state: k seed vectors and k x dim sums
-        # (inside _one_step_centroids) — grows as sqrt(corpus), i.e.
-        # ~30k rows at a billion vectors, never data-sized.
-        k = _knn_cells(right.count())
-        seeds = [
-            [float(x) for x in r["q"]] for r in pick_vectors(right, first=k)
-        ]
-        cents = _one_step_centroids(right, seeds=seeds)
+    # sqrt-bounded driver state: k seed vectors and k x dim sums
+    # (inside _one_step_centroids) — grows as sqrt(corpus), i.e.
+    # ~30k rows at a billion vectors, never data-sized.
+    k = _knn_cells(right.count())
+    seeds = [
+        [float(x) for x in r["q"]] for r in pick_vectors(right, first=k)
+    ]
+    cents = _one_step_centroids(right, seeds=seeds)
 
-        b_assigned = _assign(right, cents).select("vec_id", "q", "cluster")
-        a_probes = _assign_topn(left, cents, N_PROBE)
+    b_assigned = _assign(right, cents).select("vec_id", "q", "cluster")
+    a_probes = _assign_topn(left, cents, N_PROBE)
 
-        def topk_per_chunk(qpdf, Q, cpdf, C):
-            q_ids = qpdf["vec_id"].to_numpy()
-            rows, nbrs, cos = cell_topk(
-                q_ids, Q, cpdf["c_vec_id"].to_numpy(), C, TOP_K
-            )
-            yield pd.DataFrame(
-                {"query_id": q_ids[rows], "neighbor_id": nbrs, "cos_sim": cos}
-            )
+    def topk_per_chunk(qpdf, Q, cpdf, C):
+        q_ids = qpdf["vec_id"].to_numpy()
+        rows, nbrs, cos = cell_topk(
+            q_ids, Q, cpdf["c_vec_id"].to_numpy(), C, TOP_K
+        )
+        yield pd.DataFrame(
+            {"query_id": q_ids[rows], "neighbor_id": nbrs, "cos_sim": cos}
+        )
 
-        # Per-cell chunks bound task memory exactly as in
-        # sim_nn_within_label; the k-row cell-count table is
-        # sqrt-bounded, a legitimate broadcast.
-        local = stage(
-            cell_chunks(b_assigned, a_probes, "cluster"),
-            "query_id bigint, neighbor_id bigint, cos_sim double",
-            topk_per_chunk,
-        )
-        # Associative top-k merge: every chunk's local top-k is a
-        # superset of the global top-k members from that chunk under
-        # the SAME total order, so the global window is exact.
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos_sim"), F.asc("neighbor_id")
-        )
-        return (
-            local.withColumn("rnk", F.row_number().over(w).cast("int"))
-            .filter(F.col("rnk") <= TOP_K)
-        )
-    finally:
-        right.unpersist()
+    # Per-cell chunks bound task memory exactly as in
+    # sim_nn_within_label; the k-row cell-count table is
+    # sqrt-bounded, a legitimate broadcast.
+    local = stage(
+        cell_chunks(b_assigned, a_probes, "cluster"),
+        "query_id bigint, neighbor_id bigint, cos_sim double",
+        topk_per_chunk,
+    )
+    # Associative top-k merge: every chunk's local top-k is a
+    # superset of the global top-k members from that chunk under
+    # the SAME total order, so the global window is exact.
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.asc("neighbor_id")
+    )
+    return (
+        local.withColumn("rnk", F.row_number().over(w).cast("int"))
+        .filter(F.col("rnk") <= TOP_K)
+    )
 
 
 @register(
@@ -992,7 +960,6 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = (
         cached_assignment(spark, sf_dir)
-        .withColumn("norm", dot(F.col("q"), F.col("q")))
         # Zero-norm vectors are excluded from cosine scoring
         # engine-wide (see sim_topk_cosine).
         .filter(F.col("norm") > 0)
@@ -1091,11 +1058,7 @@ def pipeline_embed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = _quantized(spark, sf_dir)
-    sig = F.md5(
-        F.array_join(
-            F.transform(F.col("q"), lambda x: x.cast("string")), ","
-        )
-    )
+    sig = vec_hash(F.col("q"))
     w = Window.partitionBy("sig")
     wr = Window.partitionBy("sig").orderBy("vec_id")
     dvec = (
@@ -1109,42 +1072,36 @@ def pipeline_embed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cnt") - 1).cast("bigint").alias("n_dups"),
         )
     )
-    # Three bounded passes (seed collect, training sums, final agg)
-    # share the deduped corpus: persist once.
-    dvec.persist()
-    try:
-        seeds = [
-            [float(x) for x in r["q"]]
-            for r in pick_vectors(dvec, first=K_CLUSTERS)
-        ]
-        if not seeds:
-            return spark.createDataFrame(
-                [],
-                "cluster int, n_vectors bigint, n_dups_dropped bigint, "
-                "inertia bigint, max_d2 bigint",
-            )
-        cents = _one_step_centroids(dvec.select("vec_id", "q"), seeds)
-        # n_dups rides THROUGH the assignment kernel (r10 opt): the
-        # former vec_id join back to dvec just to recover it shuffled
-        # both corpus-sized sides; the passthrough costs 8 bytes/row
-        # in the same Arrow pass and the join (2 Exchanges) is gone.
-        assigned = _assign(
-            dvec.select("vec_id", "q", "n_dups"),
-            cents,
-            passthrough=(("n_dups", "bigint"),),
+    seeds = [
+        [float(x) for x in r["q"]]
+        for r in pick_vectors(dvec, first=K_CLUSTERS)
+    ]
+    if not seeds:
+        return spark.createDataFrame(
+            [],
+            "cluster int, n_vectors bigint, n_dups_dropped bigint, "
+            "inertia bigint, max_d2 bigint",
         )
-        return (
-            assigned.groupBy("cluster")
-            .agg(
-                F.count(F.lit(1)).alias("n_vectors"),
-                F.sum("n_dups").alias("n_dups_dropped"),
-                F.sum(F.col("d2").cast("bigint")).alias("inertia"),
-                F.max(F.col("d2").cast("bigint")).alias("max_d2"),
-            )
-            .orderBy("cluster")
+    cents = _one_step_centroids(dvec.select("vec_id", "q"), seeds)
+    # n_dups rides THROUGH the assignment kernel (r10 opt): the
+    # former vec_id join back to dvec just to recover it shuffled
+    # both corpus-sized sides; the passthrough costs 8 bytes/row
+    # in the same Arrow pass and the join (2 Exchanges) is gone.
+    assigned = _assign(
+        dvec.select("vec_id", "q", "n_dups"),
+        cents,
+        passthrough=(("n_dups", "bigint"),),
+    )
+    return (
+        assigned.groupBy("cluster")
+        .agg(
+            F.count(F.lit(1)).alias("n_vectors"),
+            F.sum("n_dups").alias("n_dups_dropped"),
+            F.sum(F.col("d2").cast("bigint")).alias("inertia"),
+            F.max(F.col("d2").cast("bigint")).alias("max_d2"),
         )
-    finally:
-        dvec.unpersist()
+        .orderBy("cluster")
+    )
 
 
 # --------------------------------------------------------------------------

@@ -71,8 +71,8 @@ from etl_spark.operators.caching import (
     session_checkpointed,
     session_memo,
 )
+from etl_spark.functions.hashing import md5_int, md5_int_sql
 from etl_spark.plans.llm_dedup import (
-    _H60_SQL,
     PREFIX_JACCARD_T,
     SHINGLES_SQL,
 )
@@ -139,7 +139,6 @@ def _logreg_ctes(
     ``lr_schedule`` replaces the constant learning rate with
     per-iteration integer rates (a per-iteration literal — free)."""
     T = LOGREG_ITERS
-    H60 = _H60_SQL
     TPCT = HOLDOUT_TRAIN_PCT
     lrs = lr_schedule or (LOGREG_LR,) * T
     assert len(lrs) == T
@@ -174,9 +173,9 @@ def _logreg_ctes(
       SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl,
              CASE WHEN doc_id IN (SELECT doc_id FROM dd)
                   THEN 1 ELSE 0 END AS y,
-             ({H60}) % 100 < {TPCT} AS tr,
+             {md5_int_sql("text", 15)} % 100 < {TPCT} AS tr,
              ts
-      FROM (SELECT doc_id, string_split(text, ' ') AS ts, md5(text) AS h
+      FROM (SELECT doc_id, text, string_split(text, ' ') AS ts
             FROM documents WHERE text IS NOT NULL)
     ),
     tf AS MATERIALIZED (
@@ -291,9 +290,7 @@ def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         dup_docs = dup_label_frame(spark, sf_dir)
         toks = tokens_col()
-        h60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast(
-            "bigint"
-        )
+        h60 = md5_int("text", 15)
         return (
             load(spark, sf_dir, "documents")
             .filter(F.col("text").isNotNull())

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_spark.functions.hashing import md5_int, md5_int_sql
 from etl_spark.io import load
 from etl_spark.plans.registry import register
 
@@ -296,12 +297,7 @@ def dq_quality_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # group's (n, xor, modsum) triple agrees, with NO sorting and NO row
 # transfer. The 60-bit hash keeps SUM within bigint at any real row
 # count (modsum term is < 2^31, so 2^32 rows fit with headroom).
-_CK_HEX = "0123456789abcdef"
 _CK_MOD = 2147483647  # 2^31 - 1 (Mersenne), like the MinHash mix
-_CK_H60_DUCK = " + ".join(
-    f"(strpos('{_CK_HEX}', substr(rh, {c}, 1)) - 1) * {16 ** (15 - c)}"
-    for c in range(1, 16)
-)
 # Canonical row rendering: every column cast to VARCHAR with an
 # engine-agreed format (decimal keeps its scale: '123.40' in both;
 # timestamps via the shared strftime pattern), joined with '|'.
@@ -321,10 +317,8 @@ _CK_ROW_DUCK = (
            CAST(bit_xor(h) AS BIGINT)    AS xor_checksum,
            CAST(SUM(h % {_CK_MOD}) AS BIGINT) AS modsum_checksum
     FROM (
-      SELECT o_orderstatus, ({_CK_H60_DUCK}) AS h
-      FROM (SELECT o_orderstatus,
-                   md5({_CK_ROW_DUCK}) AS rh
-            FROM orders)
+      SELECT o_orderstatus, {md5_int_sql(_CK_ROW_DUCK, 15)} AS h
+      FROM orders
     )
     GROUP BY o_orderstatus
     ORDER BY o_orderstatus
@@ -354,7 +348,7 @@ def dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy-MM-dd"),
         F.col("o_orderpriority"),
     )
-    h = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("bigint")
+    h = md5_int(row_str, 15)
     return (
         load(spark, sf_dir, "orders")
         .select("o_orderstatus", h.alias("h"))

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_spark.functions.hashing import md5_int, md5_int_sql
 from etl_spark.io import load
 from etl_spark.plans.registry import register
 
@@ -26,14 +27,6 @@ DEFAULT_RATE = 1.0
 # Hash bucket space: first 4 md5 hex chars → [0, 65536).
 _BUCKETS = 16 ** 4
 
-_HEX = "0123456789abcdef"
-# DuckDB-portable hex→int for the 4-char md5 prefix (same derivation
-# as llm_dedup's 60-bit variant).
-_H16_SQL = " + ".join(
-    f"(strpos('{_HEX}', substr(md5(CAST(doc_id AS VARCHAR)), {c}, 1)) - 1)"
-    f" * {16 ** (4 - c)}"
-    for c in range(1, 5)
-)
 
 
 def _rate_case_sql() -> str:
@@ -49,7 +42,8 @@ def _rate_case_sql() -> str:
     oracle=f"""
     SELECT doc_id, lang, source, CAST(h AS BIGINT) AS hash_bucket
     FROM (
-      SELECT doc_id, lang, source, ({_H16_SQL}) AS h
+      SELECT doc_id, lang, source,
+             {md5_int_sql("CAST(doc_id AS VARCHAR)", 4)} AS h
       FROM documents
     )
     WHERE h < ({_rate_case_sql()})
@@ -63,9 +57,7 @@ def _rate_case_sql() -> str:
     tags=("sampling", "llm", "curation"),
 )
 def sample_stratified_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-    ).cast("bigint")
+    h = md5_int(F.col("doc_id").cast("string"), 4)
     threshold = F.lit(int(DEFAULT_RATE * _BUCKETS))
     for lang, rate in reversed(list(LANG_RATES.items())):
         threshold = F.when(

@@ -36,3 +36,25 @@ def test_sliced_drive_is_green_and_leaves_no_temp_tables(tmp_path):
     assert "OK   lakehouse_time_travel_checksums" in done.stdout
     assert done.stdout.rstrip().endswith("ALL GREEN")
     assert sorted(p.name for p in tmp_path.glob("etl_spark_*")) == []
+    assert sorted(p.name for p in tmp_path.glob("duck_spill_*")) == []
+
+
+def test_oracle_connection_is_bounded():
+    """The oracles' DuckDB connection caps its memory at
+    ORACLE_MEM_SHARE of MemTotal (DuckDB's default is 80% of RAM) and
+    spills into a directory of its own."""
+    import re
+
+    from tools.contract_compare import ORACLE_MEM_SHARE, oracle_connection
+
+    con = oracle_connection()
+    limit, spill = con.execute(
+        "SELECT current_setting('memory_limit'), current_setting('temp_directory')"
+    ).fetchone()
+    con.close()
+    num, unit = re.fullmatch(r"([\d.]+) (\w+)", limit).groups()
+    got = float(num) * {"KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40}[unit]
+    want = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") * ORACLE_MEM_SHARE
+    assert abs(got - want) <= 0.05 * want, (limit, want)
+    assert pathlib.Path(spill).name.startswith("duck_spill_")
+    assert pathlib.Path(spill).is_dir()

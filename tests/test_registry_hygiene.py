@@ -428,3 +428,84 @@ def test_memo_table_directories_removed_at_exit(tmp_path):
     assert out[-1] == "True", "the subprocess built no table"
     assert table.parent == tmp_path
     assert not table.exists(), f"{table} outlived its process"
+
+
+def test_one_quantized_embedding_input():
+    """``llm_similarity._quantized`` is the one embedding input of
+    ``plans/``: it alone loads ``embeddings`` and calls ``quantize``;
+    no builder re-derives the norm as ``dot(F.col("q"), F.col("q"))``
+    or keeps a second ``def dot``; and no raw ``.persist()`` /
+    ``.cache()`` is applied to a frame cut from it, since the session
+    cache already holds it. Seven builders used to quantize parquet
+    inline, seven re-derived the norm and two persisted the input by
+    hand."""
+    import ast
+    from pathlib import Path
+
+    plans = Path(__file__).resolve().parent.parent / "etl_spark" / "plans"
+    home = ("llm_similarity.py", "_quantized")
+    readers, norms, persists, dots = [], [], [], []
+    for path in sorted(plans.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        dots += [
+            path.name
+            for n in ast.walk(tree)
+            if isinstance(n, ast.FunctionDef) and n.name == "dot"
+        ]
+        for top in tree.body:
+            where = (path.name, getattr(top, "name", "<module>"))
+            calls = [n for n in ast.walk(top) if isinstance(n, ast.Call)]
+            for c in calls:
+                src = ast.unparse(c)
+                if src.startswith("quantize(") or (
+                    src.startswith("load(") and "'embeddings'" in src
+                ):
+                    readers.append(where)
+                if src == "dot(F.col('q'), F.col('q'))":
+                    norms.append(where)
+            # Names bound (transitively) to a frame cut from _quantized.
+            tainted: set[str] = set()
+
+            def cut(expr) -> bool:
+                return any(
+                    (isinstance(n, ast.Call) and ast.unparse(n.func) == "_quantized")
+                    or (isinstance(n, ast.Name) and n.id in tainted)
+                    for n in ast.walk(expr)
+                )
+
+            assigns = [n for n in ast.walk(top) if isinstance(n, ast.Assign)]
+            grew = True
+            while grew:
+                grew = False
+                for a in assigns:
+                    if cut(a.value):
+                        for t in a.targets:
+                            if isinstance(t, ast.Name) and t.id not in tainted:
+                                tainted.add(t.id)
+                                grew = True
+            persists += [
+                where
+                for c in calls
+                if isinstance(c.func, ast.Attribute)
+                and c.func.attr in ("persist", "cache")
+                and cut(c.func.value)
+            ]
+    assert set(readers) <= {home}, readers
+    assert norms == [], norms
+    assert dots == ["llm_similarity.py"], dots
+    assert persists == [], persists
+
+
+def test_quantized_input_is_one_session_entry(spark):
+    """``_quantized`` hands every caller the same persisted frame and
+    ``evict`` releases it."""
+    from etl_spark.operators.caching import evict, live_caches
+    from etl_spark.plans.llm_similarity import _quantized
+    from tests.conftest import SF_DIR
+
+    first = _quantized(spark, SF_DIR)
+    assert _quantized(spark, SF_DIR) is first
+    assert first.columns == ["vec_id", "label", "q", "norm"]
+    assert live_caches()["quantized_embeddings"] == 1
+    evict("quantized_embeddings")
+    assert live_caches()["quantized_embeddings"] == 0

@@ -5,8 +5,40 @@ names, exact pandas dtypes (the external driver's schema check is
 width-sensitive — int32 vs int64 is a mismatch), and str-formatted
 sorted row tuples (stricter than ==, catches int-vs-float drift). Any
 future change to what counts as a pass lands here once and every
-caller stays in agreement."""
+caller stays in agreement. ``oracle_connection`` is the one DuckDB
+connection the contract drive and the fuzz harness run oracles on."""
 from __future__ import annotations
+
+import atexit
+import os
+import shutil
+import tempfile
+
+#: Share of the host's physical memory (MemTotal) one oracle
+#: connection may hold before DuckDB spills to disk.
+ORACLE_MEM_SHARE = 0.25
+
+
+def oracle_connection():
+    """A UTC DuckDB connection whose ``memory_limit`` is
+    ORACLE_MEM_SHARE of MemTotal and whose operators spill into a
+    fresh temp directory, removed at interpreter exit. DuckDB's own
+    defaults (80% of RAM, spilling into ``.tmp`` under the working
+    directory) let the dedup_semantic_cluster oracle grow the driver
+    to 12.2 GB at /tmp/sf1, where the kernel killed it."""
+    import duckdb
+
+    mem_total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    spill = tempfile.mkdtemp(prefix="duck_spill_")
+    atexit.register(shutil.rmtree, spill, True)
+    con = duckdb.connect(
+        config={
+            "memory_limit": f"{int(mem_total * ORACLE_MEM_SHARE) >> 20}MiB",
+            "temp_directory": spill,
+        }
+    )
+    con.execute("SET TimeZone='UTC'")
+    return con
 
 
 def _row_key(df):

@@ -10,12 +10,11 @@ import os
 import sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as E
 from etl_spark.operators.caching import evict
-from tools.contract_compare import compare_result
+from tools.contract_compare import compare_result, oracle_connection
 
 # Defaults mirror the round driver exactly (local[8], 8 shuffle
 # partitions, default 1g heap). The env overrides exist for the
@@ -49,8 +48,7 @@ else:
 
 # --- correctness at sf0.01, driver-style ---
 SF = os.environ.get("DRIVE_SF_DIR", "/root/testdata/sf0.01")
-con = duckdb.connect()
-con.execute("SET TimeZone='UTC'")
+con = oracle_connection()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     # Driver testdata ships one file per table; Spark-written copies
     # (e.g. make_sfbig output) are directories of part files.

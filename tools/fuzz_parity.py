@@ -32,9 +32,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
-from tools.contract_compare import compare_result  # noqa: E402
+from tools.contract_compare import compare_result, oracle_connection  # noqa: E402
 
 _TBL = re.compile(
     r"\b(region|nation|customer|supplier|part|orders|lineitem|events|"
@@ -387,8 +385,7 @@ def main() -> None:
         for family, queries, build in plan:
             d = tempfile.mkdtemp(prefix=f"fuzz_{family}_{seed}_")
             try:
-                con = duckdb.connect()
-                con.execute("SET TimeZone='UTC'")
+                con = oracle_connection()
                 for table, (rows, schema) in build(rng).items():
                     spark.createDataFrame(rows, schema).coalesce(
                         1
