@@ -17,7 +17,7 @@ help:
 	@echo "roundclose   - pytest at HEAD + contract-all + bench (the close gate)"
 	@echo "bench        - headline 25-query benchmark (one JSON line)"
 	@echo "bench-full   - full-registry timing sweep"
-	@echo "profile      - traced cold sweep of the headline queries -> PROFILE_r12.json"
+	@echo "profile      - traced cold sweep of the headline queries -> stdout (redirect to PROFILE_rNN.json)"
 	@echo "plans        - regenerate PLANS.md executed-plan receipts"
 	@echo "scaling      - regenerate SCALING.md cross-SF probes"
 	@echo "sfbig        - build 10x bench-scale data at /tmp/sf1 (key-shifted replication)"
@@ -79,8 +79,11 @@ bench-full:
 # Per-query layer record (jobs, stages, tasks, CPU, single-task stages,
 # stages with a task over 200 ms, shuffle, spill, skew, JIT/Janino
 # compile) from the Spark event log, for bench.py's 25 HEADLINE queries.
+# Prints the JSON record (the recipe is silent, so stdout is only the
+# record); redirect it to the round's own file, make profile >
+# PROFILE_rNN.json, so no committed receipt is overwritten.
 profile:
-	$(PY) tools/harness.py > PROFILE_r12.json
+	@$(PY) tools/harness.py
 
 fuzz:
 	$(PY) tools/fuzz_parity.py 10

@@ -452,32 +452,51 @@ MIX_ALPHA = 0.7
     tags=("curation", "llm", "window"),
 )
 def curation_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
+    toks = _doc_tokens(load(spark, sf_dir, "documents"))
+    return _packed(toks, "lang", "doc_id").orderBy("lang", "doc_id")
+
+
+def _doc_tokens(docs: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, lang, *keep, n_tokens): whitespace token count per
+    document."""
+    return docs.select(
         "doc_id",
         "lang",
+        *keep,
         F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
     )
+
+
+def _start_offsets(toks: DataFrame, stream: str, *order) -> DataFrame:
+    """``toks`` plus ``start_offset``: the tokens laid before each row
+    when the rows of each ``stream`` are concatenated in ``order``. A
+    window cumsum PARTITIONED by the stream, never a global sort."""
     w = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
+        Window.partitionBy(stream)
+        .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    placed = toks.withColumn(
+    return toks.withColumn(
         "start_offset", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
     )
+
+
+def _packed(toks: DataFrame, stream: str, *order) -> DataFrame:
+    """Concatenate-and-chunk packing: ``toks``' columns, its
+    ``start_offset`` (``_start_offsets``), the CTX_TOKENS-token
+    window it starts in (``pack_id``) and whether it crosses into the
+    next one (``spans_boundary``)."""
+    placed = _start_offsets(toks, stream, *order)
     pack_id = F.expr(f"start_offset div {CTX_TOKENS}")
     last_pack = F.expr(f"(start_offset + n_tokens - 1) div {CTX_TOKENS}")
     return placed.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
+        *toks.columns,
         "start_offset",
         pack_id.alias("pack_id"),
         F.when(pack_id != last_pack, 1).otherwise(0).cast("int").alias(
             "spans_boundary"
         ),
-    ).orderBy("lang", "doc_id")
+    )
 
 
 @register(
@@ -1010,19 +1029,8 @@ _CTX_SWEEP_SQL = ", ".join(str(c) for c in CTX_SWEEP)
 )
 def curation_context_length_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = docs.select(
-        "doc_id",
-        "lang",
-        F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
-    )
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    placed = toks.withColumn(
-        "start_offset", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    )
+    toks = _doc_tokens(docs)
+    placed = _start_offsets(toks, "lang", "doc_id")
     ctx = F.explode(
         F.array(*[F.lit(c).cast("int") for c in CTX_SWEEP])
     ).alias("ctx_len")
@@ -1266,6 +1274,16 @@ MAX_EPOCHS_X1000 = 4000
 )
 def curation_epoch_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    return _epoch_copies(docs)
+
+
+def _epoch_copies(docs: DataFrame, *carry: str) -> DataFrame:
+    """The epoch expansion of a (doc_id, lang, text, *carry) frame: one
+    row per (doc, copy) with ``doc_id``, ``lang``, ``carry``,
+    ``epochs_x1000``, ``n_copies`` and ``copy_idx``. Per-language epochs
+    are the x1000-lattice inverse-frequency factors capped at
+    MAX_EPOCHS_X1000; the fractional part lands as one extra copy for
+    the md5-gated fraction of docs."""
     counts = docs.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )
@@ -1280,11 +1298,12 @@ def curation_epoch_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h60 = md5_int("text", 15)
     sized = (
-        docs.select("doc_id", "lang", (h60 % 1000).alias("g"))
+        docs.select("doc_id", "lang", *carry, (h60 % 1000).alias("g"))
         .join(F.broadcast(per_lang), "lang")
         .select(
             "doc_id",
             "lang",
+            *carry,
             "epochs_x1000",
             (
                 F.expr("epochs_x1000 div 1000")
@@ -1298,10 +1317,7 @@ def curation_epoch_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_copies") >= 1)
     )
     return sized.select(
-        "doc_id",
-        "lang",
-        "epochs_x1000",
-        "n_copies",
+        *sized.columns,
         F.explode(F.sequence(F.lit(1), F.col("n_copies"))).alias("copy_idx"),
     )
 
@@ -1387,41 +1403,8 @@ def pipeline_build_training_mix(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    counts = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    )
-    n_max = counts.agg(F.max("n_docs").alias("n_max"))
-    # broadcast: 1-row global max + |distinct lang| = 5 rows, constant
-    per_lang = counts.crossJoin(F.broadcast(n_max)).select(
-        "lang",
-        F.least(
-            F.lit(MAX_EPOCHS_X1000).cast("bigint"),
-            F.expr("(1000 * n_max) div n_docs"),
-        ).alias("epochs_x1000"),
-    )
-    h60_text = md5_int("text", 15)
-    sized = (
-        docs.select(
-            "doc_id",
-            "lang",
-            F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
-            (h60_text % 1000).alias("g"),
-        )
-        .join(F.broadcast(per_lang), "lang")
-        .select(
-            "doc_id", "lang", "n_tokens",
-            (
-                F.expr("epochs_x1000 div 1000")
-                + F.when(
-                    F.col("g") < F.col("epochs_x1000") % 1000, 1
-                ).otherwise(0)
-            ).cast("int").alias("n_copies"),
-        )
-        .filter(F.col("n_copies") >= 1)  # sequence(1,0) guard
-    )
-    expanded = sized.select(
-        "doc_id", "lang", "n_tokens",
-        F.explode(F.sequence(F.lit(1), F.col("n_copies"))).alias("copy_idx"),
+    expanded = _epoch_copies(_doc_tokens(docs, "text"), "n_tokens").select(
+        "doc_id", "lang", "n_tokens", "copy_idx"
     )
     mix_key = md5_int(
         F.concat_ws(
@@ -1430,31 +1413,13 @@ def pipeline_build_training_mix(
         15,
     )
     mixed = expanded.select(
-        "doc_id", "copy_idx", "lang", "n_tokens",
-        mix_key.alias("mix_key"),
+        "doc_id", "copy_idx", "lang",
         (mix_key % PACK_STREAMS).alias("stream_id"),
-    )
-    w = (
-        Window.partitionBy("stream_id")
-        .orderBy("mix_key", "doc_id", "copy_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    placed = mixed.withColumn(
-        "start_offset", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    )
-    pack_id = F.expr(f"start_offset div {CTX_TOKENS}")
-    last_pack = F.expr(f"(start_offset + n_tokens - 1) div {CTX_TOKENS}")
-    return placed.select(
-        "doc_id",
-        "copy_idx",
-        "lang",
-        "stream_id",
         "n_tokens",
-        "start_offset",
-        pack_id.alias("pack_id"),
-        F.when(pack_id != last_pack, 1).otherwise(0).cast("int").alias(
-            "spans_boundary"
-        ),
+        mix_key.alias("mix_key"),
+    )
+    return _packed(mixed, "stream_id", "mix_key", "doc_id", "copy_idx").drop(
+        "mix_key"
     )
 
 

@@ -194,9 +194,23 @@ def shingle_array(toks):
     ).otherwise(F.array().cast("array<string>"))
 
 
+def exact_reps(docs: DataFrame) -> DataFrame:
+    """Exact-dup representatives of a (doc_id, text) frame: one row per
+    DISTINCT text, doc_id = the group's minimum (dedup_exact's
+    canonical rule). THE collapse every near-dup front end runs —
+    shingle and phash families, batch and streaming history indexes.
+    Callers that restrict the corpus (an ingest slice, a length floor)
+    filter first, so every kept text has its representative inside
+    the slice."""
+    return (
+        docs.groupBy(F.md5("text").alias("_h"))
+        .agg(F.min("doc_id").alias("doc_id"), F.min("text").alias("text"))
+        .drop("_h")
+    )
+
+
 def rep_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-dup representatives: one (doc_id, text) row per DISTINCT
-    text, doc_id = the group's minimum (dedup_exact's canonical rule).
+    """Exact-dup representatives of the whole corpus (``exact_reps``).
 
     Collapsing BEFORE shingling is the load-bearing scale order the
     phash family already follows (plans/multimodal.py) and the one
@@ -212,12 +226,7 @@ def rep_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     governed by content diversity, never by copy counts — exact
     multiplicity is dedup_exact's job.
     """
-    return (
-        load(spark, sf_dir, "documents")
-        .groupBy(F.md5("text").alias("_h"))
-        .agg(F.min("doc_id").alias("doc_id"), F.min("text").alias("text"))
-        .drop("_h")
-    )
+    return exact_reps(load(spark, sf_dir, "documents"))
 
 
 def shingle_explode(docs: DataFrame) -> DataFrame:

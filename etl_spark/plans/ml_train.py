@@ -787,11 +787,14 @@ def ml_logreg_top_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        # broadcast: TOP_FEATS rows, config-sized. Right join mirrors
-        # the oracle's LEFT JOIN: a ranked bucket survives even if no
-        # token maps to it (cannot happen — gradients only flow
-        # through occupied buckets — but the defensive shape matches).
-        vb.join(F.broadcast(top_df), "bucket", "right")
+        # Right join mirrors the oracle's LEFT JOIN: a ranked bucket
+        # survives even if no token maps to it (cannot happen —
+        # gradients only flow through occupied buckets — but the
+        # defensive shape matches). No broadcast hint: Spark cannot
+        # build the preserved side of an outer join, so a hint on
+        # top_df is dropped with a warning; the planner picks the join
+        # by size.
+        vb.join(top_df, "bucket", "right")
         .select(
             "rnk", "bucket", "w_int",
             F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),

@@ -33,8 +33,14 @@ from etl_spark.operators.media import (
     PHASH_SEGMENTS,
     PHASH_VARIANT_OFFSET,
     RESIZE_TARGET_BYTES,
+    decode_image,
+    perceptual_hash,
+    with_bmp_payload,
+    with_gif_payload,
+    with_png_payload,
 )
 from etl_spark.plans.curation import CHUNK_STRIDE, CHUNK_TOKENS
+from etl_spark.plans.llm_dedup import exact_reps
 from etl_spark.plans.registry import register
 
 
@@ -229,6 +235,18 @@ _ASCII_DOCS = "octet_length(encode(text, 'utf-8')) = length(text)"
 _ASCII_DOCS_SQL = "octet_length(encode(text)) = length(text)"
 
 
+def media_docs(
+    spark: SparkSession, sf_dir: str, min_len: int = 0
+) -> DataFrame:
+    """The ASCII media corpus every media and near-dup query reads:
+    ``documents`` on the ``_ASCII_DOCS`` slice, cut to texts of at
+    least ``min_len`` characters when ``min_len`` is set (each payload
+    family has its own floor: a non-empty clip, one or more pixel
+    rows, one byte per fingerprint segment)."""
+    docs = load(spark, sf_dir, "documents").where(_ASCII_DOCS)
+    return docs.where(F.length("text") >= min_len) if min_len else docs
+
+
 @register(
     "mm_extract_features",
     # The fake decode is a pure deterministic function of the payload
@@ -264,7 +282,7 @@ _ASCII_DOCS_SQL = "octet_length(encode(text)) = length(text)"
 def mm_extract_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_spark.operators.media import extract_features, with_payload
 
-    docs = with_payload(load(spark, sf_dir, "documents").where(_ASCII_DOCS))
+    docs = with_payload(media_docs(spark, sf_dir))
     return extract_features(docs)
 
 
@@ -296,7 +314,7 @@ def mm_extract_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_spark.operators.media import sample_frames, with_payload
 
-    docs = with_payload(load(spark, sf_dir, "documents").where(_ASCII_DOCS))
+    docs = with_payload(media_docs(spark, sf_dir))
     return sample_frames(docs)
 
 
@@ -323,7 +341,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_resize_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_spark.operators.media import resize_payload, with_payload
 
-    docs = with_payload(load(spark, sf_dir, "documents").where(_ASCII_DOCS))
+    docs = with_payload(media_docs(spark, sf_dir))
     return resize_payload(docs)
 
 
@@ -413,8 +431,7 @@ def mm_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_spark.operators.media import decode_audio, with_wav_payload
 
-    docs = load(spark, sf_dir, "documents").where(_ASCII_DOCS)
-    return decode_audio(with_wav_payload(docs))
+    return decode_audio(with_wav_payload(media_docs(spark, sf_dir)))
 
 
 @register(
@@ -520,11 +537,7 @@ def mm_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_spark.operators.media import frame_audio_energy, with_wav_payload
 
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") > 0)
-    )
+    docs = media_docs(spark, sf_dir, 1)
     frames = frame_audio_energy(with_wav_payload(docs))
     w = Window.partitionBy("doc_id")
     return (
@@ -566,6 +579,9 @@ PHASH_HAM_MAX = 4
 PHASH_BANDS = PHASH_HAM_MAX + 1
 PHASH_BAND_BITS = PHASH_SEGMENTS // PHASH_BANDS  # 12
 PHASH_BAND_MASK = (1 << PHASH_BAND_BITS) - 1  # 4095
+# Length floor of the byte-segment fingerprint: at least one byte per
+# segment (PHASH_SEGMENTS = 60). The oracles spell it as the literal 60.
+PHASH_MIN_LEN = 60
 # Deterministic ingest-slice convention for the history gate; the
 # streaming twin (streaming/phash_gate.py) imports THIS constant so
 # batch query, oracle and stream stay single-sourced.
@@ -677,25 +693,19 @@ _PHASH_ORACLE = """
     tags=("multimodal", "llm", "dedup", "neardup", "pandas-udf"),
 )
 def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_spark.operators.media import perceptual_hash
-
-    reps = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= 60)
-        .groupBy(F.md5("text").alias("payload_md5"))
-        .agg(F.min("doc_id").alias("doc_id"), F.min("text").alias("text"))
-        .withColumn("payload", F.encode("text", "utf-8"))
+    reps = exact_reps(media_docs(spark, sf_dir, PHASH_MIN_LEN)).withColumn(
+        "payload", F.encode("text", "utf-8")
     )
     return _phash_band_pairs(perceptual_hash(reps, noisy_variant=True))
 
 
-def _phash_band_pairs(hashed: DataFrame) -> DataFrame:
-    """LSH banding + self-join + exact-Hamming confirm over a
-    (doc_id, phash) frame — the shared back half of every phash
-    near-dup query (byte-segment and decoded-pixel fingerprints use
-    identical band geometry; only the fingerprint stage differs)."""
-    band_structs = F.array(
+def _bands(hashed: DataFrame) -> DataFrame:
+    """Explode each fingerprint into one row per LSH band (``band_idx``,
+    ``band_val`` = that band's PHASH_BAND_BITS-bit slice of ``phash``);
+    every other column rides along. THE banding of every phash query:
+    the batch pair join, both sides of the history gate (batch and
+    streaming) and the ingest triad."""
+    structs = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band_idx"),
@@ -707,9 +717,17 @@ def _phash_band_pairs(hashed: DataFrame) -> DataFrame:
             for b in range(PHASH_BANDS)
         ]
     )
-    bands = hashed.select(
-        "doc_id", "phash", F.explode(band_structs).alias("bs")
-    ).select("doc_id", "phash", F.col("bs.band_idx"), F.col("bs.band_val"))
+    return hashed.select(
+        *hashed.columns, F.explode(structs).alias("bs")
+    ).select(*hashed.columns, F.col("bs.band_idx"), F.col("bs.band_val"))
+
+
+def _phash_band_pairs(hashed: DataFrame) -> DataFrame:
+    """LSH banding + self-join + exact-Hamming confirm over a
+    (doc_id, phash) frame — the shared back half of every phash
+    near-dup query (byte-segment and decoded-pixel fingerprints use
+    identical band geometry; only the fingerprint stage differs)."""
+    bands = _bands(hashed)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.hint("merge")
@@ -814,7 +832,6 @@ def mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     from etl_spark.operators.graph import connected_components
-    from etl_spark.operators.media import perceptual_hash
 
     # ONE corpus scan + ONE md5-keyed exchange serve all three
     # consumers (r10 opt, guide §2.4 "remove shuffles outright" /
@@ -830,9 +847,7 @@ def mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # data-sized heap blocks competing with CC's sorts is the measured
     # sf1 OOM (operators/graph.py).
     groups = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= 60)
+        media_docs(spark, sf_dir, PHASH_MIN_LEN)
         .groupBy(F.md5("text").alias("payload_md5"))
         .agg(
             F.min("doc_id").alias("canon"),
@@ -923,14 +938,16 @@ _BMP_DECODE_ORACLE = f"""
     tags=("multimodal", "llm", "decode", "pandas-udf"),
 )
 def mm_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_spark.operators.media import decode_image, with_bmp_payload
+    return _raster_decode(spark, sf_dir, with_bmp_payload)
 
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= BMP_WIDTH)
-    )
-    return decode_image(with_bmp_payload(docs)).orderBy("doc_id")
+
+def _raster_decode(spark: SparkSession, sf_dir: str, container) -> DataFrame:
+    """The raster decode round trip of one container family: every
+    document of at least one pixel row is encoded by ``container``
+    (a ``with_*_payload`` fixture builder) and decoded back by
+    ``decode_image``, which dispatches on magic bytes."""
+    docs = media_docs(spark, sf_dir, BMP_WIDTH)
+    return decode_image(container(docs)).orderBy("doc_id")
 
 
 # Same replay as _PHASH_ORACLE, but the fingerprint input is the
@@ -978,22 +995,28 @@ assert _PHASH_PIXELS_ORACLE != _PHASH_ORACLE  # replace anchored
           "pandas-udf"),
 )
 def mm_phash_pixels_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_spark.operators.media import perceptual_hash, with_bmp_payload
+    return _pixel_phash_pairs(spark, sf_dir, with_bmp_payload)
 
+
+def _pixel_phash_pairs(
+    spark: SparkSession, sf_dir: str, container
+) -> DataFrame:
+    """Phash near-dup pairs over decoded pixel grids of one container
+    family: exact-dup collapse on the pixel grid (the text cut to whole
+    BMP_WIDTH rows), ``container`` (a ``with_*_payload`` fixture
+    builder) encodes each representative, and the fingerprint stage
+    decodes it back before hashing."""
     px = F.expr(
         f"substring(text, 1, "
         f"CAST((length(text) div {BMP_WIDTH}) * {BMP_WIDTH} AS INT))"
     )
-    reps = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= _PIXEL_PHASH_MIN_LEN)
-        .select("doc_id", px.alias("text"))
-        .groupBy(F.md5("text").alias("pixel_md5"))
-        .agg(F.min("doc_id").alias("doc_id"), F.min("text").alias("text"))
+    reps = exact_reps(
+        media_docs(spark, sf_dir, _PIXEL_PHASH_MIN_LEN).select(
+            "doc_id", px.alias("text")
+        )
     )
     hashed = perceptual_hash(
-        with_bmp_payload(reps), noisy_variant=True, pixel_decode=True
+        container(reps), noisy_variant=True, pixel_decode=True
     )
     return _phash_band_pairs(hashed)
 
@@ -1033,14 +1056,7 @@ assert _PNG_DECODE_ORACLE != _BMP_DECODE_ORACLE  # replace anchored
     tags=("multimodal", "llm", "decode", "pandas-udf"),
 )
 def mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_spark.operators.media import decode_image, with_png_payload
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= BMP_WIDTH)
-    )
-    return decode_image(with_png_payload(docs)).orderBy("doc_id")
+    return _raster_decode(spark, sf_dir, with_png_payload)
 
 
 # Multimodal curation gate constants. MIN_PIXELS drops images smaller
@@ -1081,6 +1097,14 @@ _MM_CURATE_ORACLE = f"""
 """
 
 
+def _bmp_png_payloads(docs: DataFrame) -> DataFrame:
+    """The two-container mix of the container-blind queries: even
+    doc_ids arrive as 24-bit BMP, odd ones as filtered+zlib PNG."""
+    return with_bmp_payload(docs.where(F.col("doc_id") % 2 == 0)).unionAll(
+        with_png_payload(docs.where(F.col("doc_id") % 2 == 1))
+    )
+
+
 @register(
     "pipeline_curate_multimodal",
     oracle=_MM_CURATE_ORACLE.format(ascii_docs=_ASCII_DOCS_SQL),
@@ -1108,21 +1132,8 @@ _MM_CURATE_ORACLE = f"""
           "pandas-udf"),
 )
 def pipeline_curate_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_spark.operators.media import (
-        decode_image,
-        with_bmp_payload,
-        with_png_payload,
-    )
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= BMP_WIDTH)
-    )
-    payloads = with_bmp_payload(docs.where(F.col("doc_id") % 2 == 0)).unionAll(
-        with_png_payload(docs.where(F.col("doc_id") % 2 == 1))
-    )
-    decoded = decode_image(payloads)
+    docs = media_docs(spark, sf_dir, BMP_WIDTH)
+    decoded = decode_image(_bmp_png_payloads(docs))
     kept = decoded.where(
         (F.col("n_pixels") >= MM_CURATE_MIN_PIXELS)
         & (F.col("luma_sum") >= MM_CURATE_LUMA_LO * F.col("n_pixels"))
@@ -1200,20 +1211,9 @@ _THUMBNAIL_ORACLE = f"""
     tags=("multimodal", "llm", "transform", "decode", "pandas-udf"),
 )
 def mm_thumbnail_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_spark.operators.media import (
-        thumbnail_features,
-        with_bmp_payload,
-        with_png_payload,
-    )
+    from etl_spark.operators.media import thumbnail_features
 
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= 2 * BMP_WIDTH)
-    )
-    payloads = with_bmp_payload(docs.where(F.col("doc_id") % 2 == 0)).unionAll(
-        with_png_payload(docs.where(F.col("doc_id") % 2 == 1))
-    )
+    payloads = _bmp_png_payloads(media_docs(spark, sf_dir, 2 * BMP_WIDTH))
     return thumbnail_features(payloads).orderBy("doc_id")
 
 
@@ -1241,24 +1241,7 @@ def mm_thumbnail_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_phash_png_pixels_neardup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from etl_spark.operators.media import perceptual_hash, with_png_payload
-
-    px = F.expr(
-        f"substring(text, 1, "
-        f"CAST((length(text) div {BMP_WIDTH}) * {BMP_WIDTH} AS INT))"
-    )
-    reps = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= _PIXEL_PHASH_MIN_LEN)
-        .select("doc_id", px.alias("text"))
-        .groupBy(F.md5("text").alias("pixel_md5"))
-        .agg(F.min("doc_id").alias("doc_id"), F.min("text").alias("text"))
-    )
-    hashed = perceptual_hash(
-        with_png_payload(reps), noisy_variant=True, pixel_decode=True
-    )
-    return _phash_band_pairs(hashed)
+    return _pixel_phash_pairs(spark, sf_dir, with_png_payload)
 
 
 # GIF decode summary: third container, same pixel grid contract —
@@ -1293,14 +1276,7 @@ assert _GIF_DECODE_ORACLE != _PNG_DECODE_ORACLE  # replace anchored
     tags=("multimodal", "llm", "decode", "pandas-udf"),
 )
 def mm_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_spark.operators.media import decode_image, with_gif_payload
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= BMP_WIDTH)
-    )
-    return decode_image(with_gif_payload(docs)).orderBy("doc_id")
+    return _raster_decode(spark, sf_dir, with_gif_payload)
 
 
 @register(
@@ -1324,24 +1300,7 @@ def mm_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_phash_gif_pixels_neardup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from etl_spark.operators.media import perceptual_hash, with_gif_payload
-
-    px = F.expr(
-        f"substring(text, 1, "
-        f"CAST((length(text) div {BMP_WIDTH}) * {BMP_WIDTH} AS INT))"
-    )
-    reps = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= _PIXEL_PHASH_MIN_LEN)
-        .select("doc_id", px.alias("text"))
-        .groupBy(F.md5("text").alias("pixel_md5"))
-        .agg(F.min("doc_id").alias("doc_id"), F.min("text").alias("text"))
-    )
-    hashed = perceptual_hash(
-        with_gif_payload(reps), noisy_variant=True, pixel_decode=True
-    )
-    return _phash_band_pairs(hashed)
+    return _pixel_phash_pairs(spark, sf_dir, with_gif_payload)
 
 
 _PHASH_GATE_ORACLE = """
@@ -1449,9 +1408,7 @@ def mm_phash_history_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     arriving = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= 60)
+        media_docs(spark, sf_dir, PHASH_MIN_LEN)
         .filter(F.col("doc_id") % PHASH_GATE_MOD == 0)
         .select("doc_id", "text")
     )
@@ -1533,11 +1490,7 @@ def mm_audio_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_wav_payload,
     )
 
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") > 0)
-    )
+    docs = media_docs(spark, sf_dir, 1)
     feats = audio_autocorr(with_wav_payload(docs))
     norm = [
         (F.col(f"r{L}").cast("double") / F.col("r0")).alias(f"norm_r{L}")

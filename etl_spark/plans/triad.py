@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.io import load
 from etl_spark.plans.registry import register
 
 def _triad_oracle_sql() -> str:
@@ -188,15 +187,13 @@ def _triad_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Lazy imports: the streaming modules import plan helpers at
         # load time, so module-level imports here would be circular.
         from etl_spark.plans.ml_train import _train
-        from etl_spark.plans.multimodal import _ASCII_DOCS
+        from etl_spark.plans.multimodal import PHASH_MIN_LEN, media_docs
         from etl_spark.streaming.incremental_dedup import history_index
         from etl_spark.streaming.ingest_triad import TRIAD_MOD, ingest_triad
         from etl_spark.streaming.phash_gate import history_phash_index
 
         arriving = (
-            load(spark, sf_dir, "documents")
-            .where(_ASCII_DOCS)
-            .where(F.length("text") >= 60)
+            media_docs(spark, sf_dir, PHASH_MIN_LEN)
             .filter(F.col("doc_id") % TRIAD_MOD == 0)
             .select(
                 "doc_id",

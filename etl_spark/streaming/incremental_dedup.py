@@ -19,6 +19,12 @@ the index is corpus-derived, so we do NOT broadcast it (the same
 discipline as the batch pair joins); Spark plans a per-micro-batch
 shuffled join whose stream side is one micro-batch, not the corpus.
 State = open windows only, reclaimed by the watermark.
+
+The stream contract defined here — ``DOC_SCHEMA``, ``WATERMARK_DELAY``
+and ``WINDOW`` — is the one every ingest gate reads: ``phash_gate``
+and ``ingest_triad`` import it rather than restate it. The historical
+slice collapses exact copies with ``llm_dedup.exact_reps``, the same
+function the batch near-dup and phash families call.
 """
 
 from __future__ import annotations
@@ -27,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark.io import load
-from etl_spark.plans.llm_dedup import shingle_array
+from etl_spark.plans.llm_dedup import exact_reps, shingle_array, shingle_explode
 
 DOC_SCHEMA = "doc_id BIGINT, ingest_ts TIMESTAMP, text STRING"
 WATERMARK_DELAY = "30 minutes"
@@ -59,21 +65,15 @@ def history_index(spark: SparkSession, sf_dir: str, batch_mod: int) -> DataFrame
     template duplicated >cap times historically would score
     containment 0 and be admitted.
 
-    The historical slice is exact-dup-collapsed BEFORE shingling
-    (filter-then-collapse, so every historical text keeps exactly one
+    The historical slice is exact-dup-collapsed (``exact_reps``)
+    BEFORE shingling (filter-then-collapse, so every historical text keeps exactly one
     representative inside the slice): hist_df counts distinct
     historical TEXTS per shingle, not raw copies — a 10^4x-duplicated
     template contributes 1, and the index size is bounded by content
     diversity rather than corpus volume. Presence (what the gate
     actually tests) is unchanged; only the df magnitudes are."""
-    from etl_spark.plans.llm_dedup import shingle_explode
-
-    hist_reps = (
-        load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % batch_mod != 0)
-        .groupBy(F.md5("text").alias("_h"))
-        .agg(F.min("doc_id").alias("doc_id"), F.min("text").alias("text"))
-        .drop("_h")
+    hist_reps = exact_reps(
+        load(spark, sf_dir, "documents").filter(F.col("doc_id") % batch_mod != 0)
     )
     return (
         shingle_explode(hist_reps)

@@ -56,13 +56,12 @@ from pyspark.sql import functions as F
 
 from etl_spark.operators.media import perceptual_hash
 from etl_spark.plans.llm_dedup import shingle_array
-from etl_spark.plans.multimodal import PHASH_HAM_MAX
+from etl_spark.plans.multimodal import PHASH_HAM_MAX, _bands
 from etl_spark.streaming.incremental_dedup import (
     CONTAINMENT_FLAG,
     WATERMARK_DELAY,
     WINDOW,
 )
-from etl_spark.streaming.phash_gate import _bands
 from etl_spark.streaming.trained_gate import score_documents
 
 #: One ingest-slice convention for the composed gate (both component

@@ -8,10 +8,10 @@ Why a separate gate from the text one: the shingle gate measures
 token-level containment and is blind to binary payloads; this gate
 compares 60-bit aHash fingerprints under Hamming distance, so a
 re-compressed image whose bytes share nothing with history under md5
-OR shingling still trips it. Candidate generation is the SAME
-banded-LSH shape the batch near-dup query uses (bands = HAM_MAX + 1,
-pigeonhole-guaranteed recall at the bar), as a stream-static band
-join: the stream side is one micro-batch of (band, fingerprint) rows,
+OR shingling still trips it. Candidate generation is the batch
+near-dup query's banded LSH (bands = HAM_MAX + 1, pigeonhole-
+guaranteed recall at the bar) — one function, ``multimodal._bands``,
+explodes the bands on both sides — as a stream-static band join: the stream side is one micro-batch of (band, fingerprint) rows,
 the static side is the historical band index (in production the
 persisted artifact of the batch pass, refreshed on its own cadence).
 
@@ -25,7 +25,11 @@ candidate rows from multi-band collisions cannot change the answer
 computed by the SAME Arrow mapInPandas stage batch uses (with
 ``carry`` threading the event time through, so no stream-stream
 self-join is ever needed); payload bytes stop at that stage — only
-8-byte fingerprints reach the join.
+8-byte fingerprints reach the join. The history side reads the same
+corpus slice (``media_docs``) and the same exact-dup collapse
+(``exact_reps``) as the batch query, and the stream contract
+(``DOC_SCHEMA``, ``WATERMARK_DELAY``, ``WINDOW``) is the one
+``incremental_dedup`` defines.
 """
 
 from __future__ import annotations
@@ -33,41 +37,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.io import load
 from etl_spark.operators.media import perceptual_hash
+from etl_spark.plans.llm_dedup import exact_reps
 from etl_spark.plans.multimodal import (
-    PHASH_BAND_BITS,
-    PHASH_BAND_MASK,
-    PHASH_BANDS,
     PHASH_GATE_MOD,
     PHASH_HAM_MAX,
-    _ASCII_DOCS,
+    PHASH_MIN_LEN,
+    _bands,
+    media_docs,
 )
-
-DOC_SCHEMA = "doc_id BIGINT, ingest_ts TIMESTAMP, text STRING"
-WATERMARK_DELAY = "30 minutes"
-WINDOW = "1 hour"
-
-
-def _bands(hashed: DataFrame) -> DataFrame:
-    """Explode each fingerprint into one row per LSH band; every
-    column other than phash rides along."""
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.expr(
-                    f"shiftright(phash, {PHASH_BAND_BITS * b})"
-                    f" & {PHASH_BAND_MASK}"
-                ).alias("band_val"),
-            )
-            for b in range(PHASH_BANDS)
-        ]
-    )
-    passthrough = [c for c in hashed.columns]
-    return hashed.select(
-        *passthrough, F.explode(structs).alias("bs")
-    ).select(*passthrough, F.col("bs.band_idx"), F.col("bs.band_val"))
+from etl_spark.streaming.incremental_dedup import (
+    DOC_SCHEMA,  # noqa: F401 - the stream's input schema, read from here too
+    WATERMARK_DELAY,
+    WINDOW,
+)
 
 
 def history_phash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,15 +59,11 @@ def history_phash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist_phash). Exact payload dups collapse to one representative
     first — duplicate history rows cannot change a min-Hamming verdict
     and would only inflate band buckets."""
-    reps = (
-        load(spark, sf_dir, "documents")
-        .where(_ASCII_DOCS)
-        .where(F.length("text") >= 60)
-        .filter(F.col("doc_id") % PHASH_GATE_MOD != 0)
-        .groupBy(F.md5("text").alias("h"))
-        .agg(F.min("doc_id").alias("doc_id"), F.min("text").alias("text"))
-        .withColumn("payload", F.encode("text", "utf-8"))
-    )
+    reps = exact_reps(
+        media_docs(spark, sf_dir, PHASH_MIN_LEN).filter(
+            F.col("doc_id") % PHASH_GATE_MOD != 0
+        )
+    ).withColumn("payload", F.encode("text", "utf-8"))
     return _bands(perceptual_hash(reps)).select(
         "band_idx",
         "band_val",

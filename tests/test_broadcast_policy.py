@@ -43,13 +43,9 @@ ALLOWED: dict[tuple[str, str, str], str] = {
         "per-status sketch values: |distinct o_orderstatus| = 3, constant",
     ("plans/curation.py", "sample_mixture_weights", "tot"):
         "single-row global total",
-    ("plans/curation.py", "curation_epoch_expand", "n_max"):
+    ("plans/curation.py", "_epoch_copies", "n_max"):
         "single-row global max language count",
-    ("plans/curation.py", "curation_epoch_expand", "per_lang"):
-        "per-language epoch factors: |distinct lang| = 5, constant",
-    ("plans/curation.py", "pipeline_build_training_mix", "n_max"):
-        "single-row global max language count",
-    ("plans/curation.py", "pipeline_build_training_mix", "per_lang"):
+    ("plans/curation.py", "_epoch_copies", "per_lang"):
         "per-language epoch factors: |distinct lang| = 5, constant",
     ("plans/curation.py", "sample_mixture_weights", "wsum"):
         "single-row weighted sum",
@@ -126,8 +122,6 @@ ALLOWED: dict[tuple[str, str, str], str] = {
         "per-ctx_len window counts: rows = len(CTX_SWEEP) = 4, constant",
     ("plans/lakehouse.py", "_refresh_parts", "g"):
         "single-row global max-day aggregate",
-    ("plans/ml_train.py", "ml_logreg_top_features", "top_df"):
-        "TOP_FEATS (20) ranked weight rows, config-sized",
     ("plans/bpe.py", "text_bpe_fertility", "seg"):
         "learned-BPE segmentation lengths: one row per word TYPE — "
         "vocab-bounded (Heaps-sublinear in corpus size), the same "

@@ -509,3 +509,65 @@ def test_quantized_input_is_one_session_entry(spark):
     assert live_caches()["quantized_embeddings"] == 1
     evict("quantized_embeddings")
     assert live_caches()["quantized_embeddings"] == 0
+
+
+def test_media_front_end_is_one_copy():
+    """The near-dup and media front end exists once: the md5 exact-dup
+    collapse (``llm_dedup.exact_reps``; ``mm_phash_clusters`` keeps its
+    own aggregate because it also collects the member ids), the ASCII
+    corpus slice (``multimodal.media_docs``), the phash band explode
+    (``multimodal._bands``) and the ingest stream's document schema
+    (``streaming/incremental_dedup.py``). The collapse had seven
+    copies, the slice nineteen and the band explode two, kept alike by
+    hand."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "etl_spark"
+    collapses, slices, bands, schemas = [], [], [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            where = (rel, getattr(top, "name", "<module>"))
+            for n in ast.walk(top):
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute):
+                    args = [ast.unparse(a) for a in n.args]
+                    if n.func.attr == "groupBy" and any(
+                        a.startswith("F.md5('text')") for a in args
+                    ):
+                        collapses.append(where)
+                    if n.func.attr in ("where", "filter") and "_ASCII_DOCS" in args:
+                        slices.append(where)
+                elif (
+                    isinstance(n, ast.Constant)
+                    and isinstance(n.value, str)
+                    and "shiftright(phash" in n.value
+                ):
+                    bands.append(where)
+                elif isinstance(n, (ast.Assign, ast.AnnAssign)) and rel.startswith(
+                    "streaming/"
+                ):
+                    targets = getattr(n, "targets", None) or [n.target]
+                    if "DOC_SCHEMA" in [ast.unparse(t) for t in targets]:
+                        schemas.append(rel)
+    assert sorted(collapses) == [
+        ("plans/llm_dedup.py", "exact_reps"),
+        ("plans/multimodal.py", "mm_phash_clusters"),
+    ], collapses
+    assert slices == [("plans/multimodal.py", "media_docs")], slices
+    assert bands == [("plans/multimodal.py", "_bands")], bands
+    assert schemas == ["streaming/incremental_dedup.py"], schemas
+
+
+def test_exact_reps_keeps_min_doc_id_per_text(spark):
+    from etl_spark.plans.llm_dedup import exact_reps
+
+    docs = spark.createDataFrame(
+        [(5, "a b"), (2, "a b"), (3, "c d"), (7, "e"), (4, "f g h")],
+        "doc_id bigint, text string",
+    )
+    reps = exact_reps(docs)
+    assert reps.columns == ["doc_id", "text"]
+    assert sorted(tuple(r) for r in reps.collect()) == [
+        (2, "a b"), (3, "c d"), (4, "f g h"), (7, "e"),
+    ]

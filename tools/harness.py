@@ -14,7 +14,7 @@ As a script it is the registry profile: one cold traced rep of each
 query (default: bench.py's HEADLINE) at $SPARK_GRAFT_SF_DIR (default:
 bench scale, as bench.py), printed as one JSON document:
 
-    python tools/harness.py > PROFILE_r12.json
+    python tools/harness.py > PROFILE_rNN.json   # the round's own receipt
     SPARK_GRAFT_SF_DIR=<testdata>/sf0.001 python tools/harness.py q1_pricing_summary
 """
 
