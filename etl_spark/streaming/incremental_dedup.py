@@ -33,7 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark.io import load
-from etl_spark.plans.llm_dedup import exact_reps, shingle_array, shingle_explode
+from etl_spark.plans.llm_dedup import (
+    exact_reps,
+    shingle_array,
+    shingle_explode,
+)
 
 DOC_SCHEMA = "doc_id BIGINT, ingest_ts TIMESTAMP, text STRING"
 WATERMARK_DELAY = "30 minutes"
@@ -66,15 +70,15 @@ def history_index(spark: SparkSession, sf_dir: str, batch_mod: int) -> DataFrame
     containment 0 and be admitted.
 
     The historical slice is exact-dup-collapsed (``exact_reps``)
-    BEFORE shingling (filter-then-collapse, so every historical text keeps exactly one
-    representative inside the slice): hist_df counts distinct
-    historical TEXTS per shingle, not raw copies — a 10^4x-duplicated
-    template contributes 1, and the index size is bounded by content
-    diversity rather than corpus volume. Presence (what the gate
-    actually tests) is unchanged; only the df magnitudes are."""
-    hist_reps = exact_reps(
-        load(spark, sf_dir, "documents").filter(F.col("doc_id") % batch_mod != 0)
-    )
+    BEFORE shingling (filter-then-collapse, so every historical text
+    keeps exactly one representative inside the slice): hist_df counts
+    distinct historical TEXTS per shingle, not raw copies — a
+    10^4x-duplicated template contributes 1, and the index size is
+    bounded by content diversity rather than corpus volume. Presence
+    (what the gate actually tests) is unchanged; only the df
+    magnitudes are."""
+    docs = load(spark, sf_dir, "documents")
+    hist_reps = exact_reps(docs.filter(F.col("doc_id") % batch_mod != 0))
     return (
         shingle_explode(hist_reps)
         .groupBy("shingle")

@@ -11,8 +11,9 @@ re-compressed image whose bytes share nothing with history under md5
 OR shingling still trips it. Candidate generation is the batch
 near-dup query's banded LSH (bands = HAM_MAX + 1, pigeonhole-
 guaranteed recall at the bar) — one function, ``multimodal._bands``,
-explodes the bands on both sides — as a stream-static band join: the stream side is one micro-batch of (band, fingerprint) rows,
-the static side is the historical band index (in production the
+explodes the bands on both sides — as a stream-static band join: the
+stream side is one micro-batch of (band, fingerprint) rows, the
+static side is the historical band index (in production the
 persisted artifact of the batch pass, refreshed on its own cadence).
 
 State shape at scale: NO per-pair state — the stream holds only the
