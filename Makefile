@@ -85,13 +85,16 @@ bench-full:
 profile:
 	@$(PY) tools/harness.py
 
+# The fuzz session's driver heap is bounded (SPARK_DRIVER_MEMORY, 4g
+# unless the caller sets it) so a fuzz run fits beside the test suite:
+# get_spark's 16g default let the kernel OOM-kill the fuzz JVM there.
 fuzz:
-	$(PY) tools/fuzz_parity.py 10
+	SPARK_DRIVER_MEMORY=$${SPARK_DRIVER_MEMORY:-4g} $(PY) tools/fuzz_parity.py 10
 
 # Hot-key skew receipt: 12k docs, one template duplicated 10^4x,
 # all document queries vs oracle + the df histogram (SCALING.md).
 fuzz-skew:
-	$(PY) tools/fuzz_parity.py 1 --skew
+	SPARK_DRIVER_MEMORY=$${SPARK_DRIVER_MEMORY:-4g} $(PY) tools/fuzz_parity.py 1 --skew
 
 # Memory-pressure receipt: heaviest queries under a starved execution
 # pool must SPILL (not OOM, not emergency-broadcast) — SCALING.md

@@ -20,12 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_spark.functions.timestamps import TS_FMT_DUCK, TS_FMT_SPARK
 from etl_spark.io import load, register_views
 from etl_spark.operators.skew import N_SALTS
 from etl_spark.plans.registry import register
-
-TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
-TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
 @register(

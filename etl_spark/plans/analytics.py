@@ -20,11 +20,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_spark.functions.money import dec
+from etl_spark.functions.timestamps import TS_FMT_DUCK, TS_FMT_SPARK
 from etl_spark.io import load
 from etl_spark.plans.registry import register
-
-TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
-TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
 @register(
@@ -556,11 +554,11 @@ def agg_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_user_lifecycle",
-    oracle="""
+    oracle=f"""
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS first_seen,
-           strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS last_seen,
+           strftime(MIN(ts), '{TS_FMT_DUCK}') AS first_seen,
+           strftime(MAX(ts), '{TS_FMT_DUCK}') AS last_seen,
            CAST(date_diff('day', MIN(ts), MAX(ts)) AS BIGINT) AS span_days,
            CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS active_days,
            CAST(CAST(COUNT(*) AS DOUBLE)
@@ -585,10 +583,10 @@ def events_user_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias(
+            F.date_format(F.min("ts"), TS_FMT_SPARK).alias(
                 "first_seen"
             ),
-            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias(
+            F.date_format(F.max("ts"), TS_FMT_SPARK).alias(
                 "last_seen"
             ),
             F.datediff(F.max("ts"), F.min("ts")).cast("bigint").alias(

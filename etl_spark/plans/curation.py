@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from etl_spark.functions.hashing import md5_int, md5_int_sql
 from etl_spark.io import load
-from etl_spark.plans.llm_dedup import SHINGLES_SQL, shingles_df
+from etl_spark.plans.llm_dedup import PAIRS_SQL, SHINGLES_SQL, shingles_df
 from etl_spark.plans.registry import register
 
 # Denylist scrub: stand-in for the email/phone/SSN patterns a real
@@ -1089,20 +1089,7 @@ LIFT_NEARDUP_T = 0.5
 @register(
     "curation_quality_lift",
     oracle=f"""
-    WITH sh AS ({{SHINGLES_SQL}}),
-    sized AS (
-      SELECT doc_id, shingle,
-             COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
-      FROM sh
-    ),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             COUNT(*) AS n_common,
-             ANY_VALUE(a.n_sh) AS na, ANY_VALUE(b.n_sh) AS nb
-      FROM sized a JOIN sized b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    {{PAIRS_SQL}},
     dup_docs AS (
       SELECT DISTINCT doc_id FROM (
         SELECT doc_a AS doc_id FROM pairs
@@ -1141,7 +1128,7 @@ LIFT_NEARDUP_T = 0.5
     FROM tiled
     GROUP BY decile
     ORDER BY decile
-    """.format(SHINGLES_SQL=SHINGLES_SQL, T=LIFT_NEARDUP_T,
+    """.format(PAIRS_SQL=PAIRS_SQL, T=LIFT_NEARDUP_T,
                K=LIFT_DECILES),
     doc="Quality-signal lift table — the calibration check run before "
         "trusting a heuristic score as a curation gate: docs are "

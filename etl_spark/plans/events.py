@@ -2,8 +2,10 @@
 
 The reference has no streaming runtime — its incrementality is re-run
 batch over an append-only raw zone (SURVEY.md §2.2 "Streaming") — so
-these are the batch forms; `etl_spark.streaming` re-expresses the
-tumbling aggregate as a real Structured Streaming job with watermarks.
+these are the batch forms; `etl_spark.streaming.windows` runs the
+tumbling and sliding aggregates as real Structured Streaming jobs with
+watermarks, calling the same bodies (`tumbling_hourly`,
+`sliding_1h_30m`) on the watermarked stream.
 
 Hash-stability notes:
 * Window starts are emitted as formatted strings; Spark's window()
@@ -18,12 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_spark.functions.timestamps import TS_FMT_DUCK, TS_FMT_SPARK
 from etl_spark.io import load
 from etl_spark.operators.ranking import first_per_key
 from etl_spark.plans.registry import register
-
-TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
-TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
 @register(
@@ -102,13 +102,20 @@ def events_props_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Tumbling 1-hour event-time window aggregate; window(ts, '1 hour') "
         "in Spark == date_trunc('hour') bucketing with UTC epoch alignment. "
-        "Streaming twin lives in etl_spark.streaming.",
+        "Streaming twin: etl_spark.streaming.windows.hourly_counts_stream "
+        "(the same body over the watermarked stream).",
     tags=("events", "window-agg"),
 )
 def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return tumbling_hourly(load(spark, sf_dir, "events"))
+
+
+def tumbling_hourly(events: DataFrame) -> DataFrame:
+    """Events and decimal-exact value sum per (1-hour window,
+    event_type): the one body of events_tumbling_hourly and of its
+    streaming twin."""
     return (
-        load(spark, sf_dir, "events")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
@@ -147,9 +154,14 @@ def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "window-agg"),
 )
 def events_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sliding_1h_30m(load(spark, sf_dir, "events"))
+
+
+def sliding_1h_30m(events: DataFrame) -> DataFrame:
+    """Events per (1-hour window sliding every 30 minutes, event_type):
+    the one body of events_sliding_1h_30m and of its streaming twin."""
     return (
-        load(spark, sf_dir, "events")
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),

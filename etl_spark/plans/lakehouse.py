@@ -36,14 +36,13 @@ from pyspark.sql import functions as F
 
 from etl_spark.etl.merge import latest_wins_merge
 from etl_spark.functions.hashing import md5_int, md5_int_sql
+from etl_spark.functions.timestamps import TS_FMT_DUCK, TS_FMT_SPARK
 from etl_spark.io import load
 from etl_spark.operators.caching import session_memo
 from etl_spark.operators.ranking import first_per_key
 from etl_spark.plans.registry import register
 from etl_spark.streaming.cdc import events_as_changelog
 
-TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
-TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 # The synthetic CDC op mapping over the events table: an 'error' event
 # retracts the user's record (DELETE tombstone); every other event

@@ -453,12 +453,11 @@ SHINGLES_SQL = f"""
       )
 """
 
-JACCARD_THRESHOLD = 0.05
-
-
-@register(
-    "dedup_jaccard_pairs",
-    oracle=f"""
+# Oracle twin of pair_common_counts: every rep pair (doc_a < doc_b)
+# sharing a kept shingle, with its shared count n_common and both set
+# sizes na/nb — the opening ``sh``, ``sized`` and ``pairs`` CTEs of a
+# WITH list.
+PAIRS_SQL = f"""
     WITH sh AS ({SHINGLES_SQL}),
     sized AS (
       SELECT doc_id, shingle,
@@ -472,7 +471,15 @@ JACCARD_THRESHOLD = 0.05
       FROM sized a JOIN sized b
         ON a.shingle = b.shingle AND a.doc_id < b.doc_id
       GROUP BY a.doc_id, b.doc_id
-    )
+    )"""
+
+JACCARD_THRESHOLD = 0.05
+
+
+@register(
+    "dedup_jaccard_pairs",
+    oracle=f"""
+    {PAIRS_SQL}
     SELECT doc_a, doc_b, n_common,
            CAST(n_common AS DOUBLE) / (na + nb - n_common) AS jaccard
     FROM pairs
@@ -507,20 +514,7 @@ CONTAINMENT_THRESHOLD = 0.8
 @register(
     "dedup_containment_pairs",
     oracle=f"""
-    WITH sh AS ({SHINGLES_SQL}),
-    sized AS (
-      SELECT doc_id, shingle,
-             COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
-      FROM sh
-    ),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             COUNT(*) AS n_common,
-             ANY_VALUE(a.n_sh) AS na, ANY_VALUE(b.n_sh) AS nb
-      FROM sized a JOIN sized b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
+    {PAIRS_SQL}
     SELECT doc_a, doc_b,
            CAST(n_common AS DOUBLE) / LEAST(na, nb) AS containment
     FROM pairs
@@ -1179,20 +1173,7 @@ def dedup_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_dup_triangles",
     oracle=f"""
-    WITH sh AS ({SHINGLES_SQL}),
-    sized AS (
-      SELECT doc_id, shingle,
-             COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
-      FROM sh
-    ),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             COUNT(*) AS n_common,
-             ANY_VALUE(a.n_sh) AS na, ANY_VALUE(b.n_sh) AS nb
-      FROM sized a JOIN sized b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    {PAIRS_SQL},
     edges AS (
       SELECT doc_a, doc_b FROM pairs
       WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common)
@@ -1413,24 +1394,11 @@ _SWEEP_SQL = ", ".join(str(t) for t in DEDUP_THRESHOLD_SWEEP)
 @register(
     "dedup_threshold_sweep",
     oracle=f"""
-    WITH sh AS ({SHINGLES_SQL}),
-    sized AS (
-      SELECT doc_id, shingle,
-             COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
-      FROM sh
-    ),
-    cpairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             COUNT(*) AS n_common,
-             ANY_VALUE(a.n_sh) AS na, ANY_VALUE(b.n_sh) AS nb
-      FROM sized a JOIN sized b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    {PAIRS_SQL},
     jpairs AS (
       SELECT doc_a, doc_b,
              CAST(n_common AS DOUBLE) / (na + nb - n_common) AS jaccard
-      FROM cpairs
+      FROM pairs
       WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common)
             >= {JACCARD_THRESHOLD}
     ),
@@ -1595,26 +1563,13 @@ PREFIX_JACCARD_T = 0.5
 @register(
     "dedup_prefix_filter_pairs",
     oracle=f"""
-    WITH sh AS ({{SHINGLES_SQL}}),
-    sized AS (
-      SELECT doc_id, shingle,
-             COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
-      FROM sh
-    ),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             COUNT(*) AS n_common,
-             ANY_VALUE(a.n_sh) AS na, ANY_VALUE(b.n_sh) AS nb
-      FROM sized a JOIN sized b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
+    {PAIRS_SQL}
     SELECT doc_a, doc_b, n_common,
            CAST(n_common AS DOUBLE) / (na + nb - n_common) AS jaccard
     FROM pairs
     WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common)
           >= {PREFIX_JACCARD_T}
-    """.format(SHINGLES_SQL=SHINGLES_SQL),
+    """,
     doc=f"PPJoin-style prefix-filtered exact similarity join at "
         f"Jaccard ≥ {PREFIX_JACCARD_T}: each rep-doc's shingles are "
         "globally ordered rarest-first (df, then shingle — both "

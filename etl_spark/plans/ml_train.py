@@ -72,10 +72,7 @@ from etl_spark.operators.caching import (
     session_memo,
 )
 from etl_spark.functions.hashing import md5_int, md5_int_sql
-from etl_spark.plans.llm_dedup import (
-    PREFIX_JACCARD_T,
-    SHINGLES_SQL,
-)
+from etl_spark.plans.llm_dedup import PAIRS_SQL, PREFIX_JACCARD_T
 from etl_spark.plans.llm_text import (
     _H16_TOKEN_SQL,
     HASH_DIM,
@@ -144,27 +141,14 @@ def _logreg_ctes(
     assert len(lrs) == T
     NNW = RW = " WHERE tr" if train_only else ""
     parts = [f"""
-    WITH sh AS ({SHINGLES_SQL}),
-    sized AS (
-      SELECT doc_id, shingle,
-             COUNT(*) OVER (PARTITION BY doc_id) AS n_sh
-      FROM sh
-    ),
-    prs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             COUNT(*) AS n_common,
-             ANY_VALUE(a.n_sh) AS na, ANY_VALUE(b.n_sh) AS nb
-      FROM sized a JOIN sized b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    {PAIRS_SQL},
     dd AS MATERIALIZED (
       SELECT DISTINCT doc_id FROM (
-        SELECT doc_a AS doc_id FROM prs
+        SELECT doc_a AS doc_id FROM pairs
         WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common)
               >= {PREFIX_JACCARD_T}
         UNION ALL
-        SELECT doc_b FROM prs
+        SELECT doc_b FROM pairs
         WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common)
               >= {PREFIX_JACCARD_T}
       )

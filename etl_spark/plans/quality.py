@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark.functions.hashing import md5_int, md5_int_sql
+from etl_spark.functions.timestamps import TS_FMT_DUCK, TS_FMT_SPARK
 from etl_spark.io import load
 from etl_spark.plans.registry import register
 
@@ -364,7 +365,7 @@ def dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dq_freshness_by_source",
-    oracle="""
+    oracle=f"""
     WITH per AS (
       SELECT event_type,
              MAX(ts) AS latest_ts,
@@ -373,7 +374,7 @@ def dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     g AS (SELECT MAX(latest_ts) AS global_ts FROM per)
     SELECT per.event_type,
-           strftime(per.latest_ts, '%Y-%m-%d %H:%M:%S') AS latest_ts,
+           strftime(per.latest_ts, '{TS_FMT_DUCK}') AS latest_ts,
            CAST((epoch_us(g.global_ts) - epoch_us(per.latest_ts)) // 60000000
                 AS BIGINT) AS lag_minutes,
            per.n_events
@@ -404,7 +405,7 @@ def dq_freshness_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         per.crossJoin(F.broadcast(g))
         .select(
             "event_type",
-            F.date_format("latest_ts", "yyyy-MM-dd HH:mm:ss").alias(
+            F.date_format("latest_ts", TS_FMT_SPARK).alias(
                 "latest_ts"
             ),
             # integer floor-division on BOTH sides: double division +

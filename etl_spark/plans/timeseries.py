@@ -35,11 +35,10 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_spark.functions.timestamps import TS_FMT_DUCK, TS_FMT_SPARK
 from etl_spark.io import load
 from etl_spark.plans.registry import register
 
-TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
-TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 EWMA_TERMS = 12
 # decay 0.8 = 4/5; scaled by 5^(T-1) every weight is an exact integer.
@@ -333,15 +332,23 @@ def events_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "aggregation", "timeseries", "quality"),
 )
 def events_error_rate_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("hour_ts")).agg(
+    return error_rate_hourly(load(spark, sf_dir, "events")).orderBy("hour")
+
+
+def error_rate_hourly(events: DataFrame) -> DataFrame:
+    """Per-hour event and error counts, error fraction and alert: the
+    one body of events_error_rate_hourly and of its streaming twin.
+    It groups by the 1-hour event-time window, which starts where
+    date_trunc('hour') does in UTC; the window is what lets a
+    watermark evict the stream's state."""
+    hourly = events.groupBy(F.window("ts", "1 hour").alias("w")).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
         .cast("bigint")
         .alias("n_errors"),
     )
     return hourly.select(
-        F.date_format("hour_ts", TS_FMT_SPARK).alias("hour"),
+        F.date_format("w.start", TS_FMT_SPARK).alias("hour"),
         "n_events",
         "n_errors",
         (F.col("n_errors").cast("double") / F.col("n_events"))
@@ -351,4 +358,4 @@ def events_error_rate_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .cast("int")
         .alias("alert"),
-    ).orderBy("hour")
+    )

@@ -25,6 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_spark.functions.timestamps import TS_FMT_SPARK
+from etl_spark.streaming.sinks import drain
+
 
 def cdc_apply_stream(changelog: DataFrame) -> DataFrame:
     """Maintain per-user latest (row, op) over a changelog stream with
@@ -44,7 +47,7 @@ def cdc_apply_stream(changelog: DataFrame) -> DataFrame:
         "user_id",
         "w.event_id",
         "w.ts_us",
-        F.date_format(F.timestamp_micros("w.ts_us"), "yyyy-MM-dd HH:mm:ss")
+        F.date_format(F.timestamp_micros("w.ts_us"), TS_FMT_SPARK)
         .alias("event_ts"),
         "w.value",
         "w.op",
@@ -124,15 +127,13 @@ def run_cdc_stream_to_table(
         merged.write.mode("overwrite").parquet(str(table / f"v{new_v}"))
         _publish_version(table, new_v)
 
-    q = (
-        cdc_apply_stream(changelog)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .foreachBatch(sink)
-        .start()
+    drain(
+        cdc_apply_stream(changelog),
+        "cdc_stream_to_table",
+        "update",
+        sink=sink,
+        checkpoint=checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 _POINTER = "_current.json"

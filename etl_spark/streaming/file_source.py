@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark.etl.pipeline import _PATH_RE, RUN_SCHEMA
+from etl_spark.streaming.sinks import drain
 
 
 def stream_workflow_runs(
@@ -129,17 +130,15 @@ def run_snapshot_stream_to_table(
         else:
             init_snapshot_table(batch_df, table_path)
 
-    q = (
+    drain(
         snapshot_latest_stream(
             stream_workflow_runs(spark, workflows_dir, max_files_per_trigger)
-        )
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .foreachBatch(sink)
-        .start()
+        ),
+        "snapshot_stream_to_table",
+        "update",
+        sink=sink,
+        checkpoint=checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def run_snapshot_stream(
@@ -165,17 +164,15 @@ def run_snapshot_stream(
             (batch_id, [r.asDict() for r in batch_df.collect()])
         )
 
-    q = (
+    drain(
         snapshot_latest_stream(
             stream_workflow_runs(spark, workflows_dir, max_files_per_trigger)
-        )
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .foreachBatch(sink)
-        .start()
+        ),
+        "snapshot_stream",
+        "update",
+        sink=sink,
+        checkpoint=checkpoint_dir,
     )
-    q.awaitTermination()
     snapshot: dict[tuple[str, str], dict] = {}
     for _bid, rows in sorted(emissions, key=lambda e: e[0]):
         for r in rows:

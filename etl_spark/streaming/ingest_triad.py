@@ -51,7 +51,7 @@ Nothing in the composed query holds per-pair or per-history state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_spark.operators.media import perceptual_hash
@@ -224,29 +224,6 @@ def ingest_triad_stream(
     ).withWatermark("ingest_ts", WATERMARK_DELAY)
     union = triad_feature_union(wm, hashed, wm, shingle_index, band_index, weights)
     return triad_verdicts(union, F.window("ingest_ts", WINDOW).alias("w"))
-
-
-def run_triad_stream(
-    spark: SparkSession,
-    doc_stream: DataFrame,
-    shingle_index: DataFrame,
-    band_index: DataFrame,
-    weights: list[int],
-    name: str,
-):
-    """Drain the composed gate into the in-memory sink (update mode:
-    at-ingest flagging semantics) and return the finished query handle
-    (lastProgress carries the state-operator receipt)."""
-    q = (
-        ingest_triad_stream(doc_stream, shingle_index, band_index, weights)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def funnel_summary(verdicts: DataFrame) -> DataFrame:

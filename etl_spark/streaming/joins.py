@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_spark.functions.timestamps import TS_FMT_SPARK
+
 WATERMARK_DELAY = "10 minutes"
 ATTRIBUTION_WINDOW = "1 hour"
 
@@ -68,8 +70,8 @@ def click_purchase_attribution_stream(events: DataFrame) -> DataFrame:
         F.col("c_user_id").alias("user_id"),
         "click_id",
         "purchase_id",
-        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
+        F.date_format("click_ts", TS_FMT_SPARK).alias("click_ts"),
+        F.date_format("purchase_ts", TS_FMT_SPARK).alias("purchase_ts"),
         "purchase_value",
     )
 
@@ -122,23 +124,10 @@ def click_purchase_attribution_left_stream(events: DataFrame) -> DataFrame:
         F.col("c_user_id").alias("user_id"),
         "click_id",
         "purchase_id",
-        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias(
+        F.date_format("click_ts", TS_FMT_SPARK).alias("click_ts"),
+        F.date_format("purchase_ts", TS_FMT_SPARK).alias(
             "purchase_ts"
         ),
         "purchase_value",
     )
 
-
-def run_available_now_append(result: DataFrame, query_name: str):
-    """Drain the backlog into the in-memory sink in APPEND mode (the
-    only output mode stream-stream joins support) and stop."""
-    query = (
-        result.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_spark.functions.timestamps import TS_FMT_SPARK
+
 EVENT_TYPES = ("click", "view", "purchase", "signup", "error")
 
 
@@ -88,7 +90,7 @@ def rate_hourly_counts(events: DataFrame) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
         )
         .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
             "event_type",
             "n_events",
             "sum_value",

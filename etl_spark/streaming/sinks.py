@@ -1,4 +1,14 @@
-"""Exactly-once streaming sinks via foreachBatch + idempotent writes.
+"""The one streaming run path, and exactly-once streaming sinks via
+foreachBatch + idempotent writes.
+
+``drain`` is how every streaming query in the engine runs: the
+availableNow trigger processes whatever input is available in bounded
+micro-batches and stops, and ``drain`` returns the finished query
+(its ``recentProgress`` carries the state-operator receipts, under the
+query's name). It writes either to the in-memory table of that name
+(test harnesses) or through a ``foreachBatch`` callback with a
+checkpoint (the production table sinks of ``file_source``, ``cdc`` and
+``start_idempotent_file_sink``).
 
 Structured Streaming guarantees each micro-batch a stable ``batch_id``
 and replays a batch after failure with the SAME id. A sink is
@@ -19,6 +29,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def drain(result: DataFrame, name: str, mode: str, sink=None, checkpoint=None):
+    """Run the streaming frame ``result`` to the end of its available
+    input (availableNow trigger), in output ``mode``, as the query
+    ``name``, and return the finished query. With no ``sink`` it writes
+    the in-memory table ``name``; with one it calls
+    ``sink(batch_df, batch_id)`` per micro-batch (foreachBatch).
+    ``checkpoint``, when given, is the query's checkpoint location."""
+    writer = result.writeStream.queryName(name).outputMode(mode)
+    if sink is None:
+        writer = writer.format("memory")
+    else:
+        writer = writer.foreachBatch(sink)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", str(checkpoint))
+    query = writer.trigger(availableNow=True).start()
+    query.awaitTermination()
+    return query
+
+
 def write_batch_idempotent(batch_df: DataFrame, batch_id: int, path: str) -> None:
     """foreachBatch callback: land one micro-batch under its own
     batch_id partition, dynamically overwriting on replay."""
@@ -35,12 +64,13 @@ def start_idempotent_file_sink(events: DataFrame, out_path: str, checkpoint: str
     """Stream events to an idempotent partitioned parquet sink,
     draining the current backlog (availableNow) with checkpointing —
     a restart resumes from the checkpoint and never rewrites completed
-    batches except as byte-identical replays."""
-    return (
-        events.writeStream.foreachBatch(
-            lambda df, bid: write_batch_idempotent(df, bid, out_path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    batches except as byte-identical replays. The returned query has
+    already finished, so a caller's ``awaitTermination()`` on it
+    returns at once."""
+    return drain(
+        events,
+        "idempotent_file_sink",
+        "append",
+        sink=lambda df, bid: write_batch_idempotent(df, bid, out_path),
+        checkpoint=checkpoint,
     )

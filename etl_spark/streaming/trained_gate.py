@@ -71,23 +71,3 @@ def score_documents(
         ).alias("gated_positive"),
     )
 
-
-def run_gate_stream(
-    docs_stream: DataFrame,
-    weights: list[int],
-    name: str,
-    threshold: int = 0,
-):
-    """Drain the arriving docs through the frozen-model gate into the
-    in-memory sink (append mode — stateless stage, every row emits
-    exactly once)."""
-    q = (
-        score_documents(docs_stream, weights, threshold)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

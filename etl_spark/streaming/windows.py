@@ -2,21 +2,27 @@
 
 The reference has NO streaming runtime — its incrementality is re-run
 batch over an append-only raw zone (SURVEY.md §2.2 "Streaming"). These
-jobs are the engine's forward-looking extension: the same tumbling
-aggregation as events_tumbling_hourly, expressed as
-readStream → watermark → window → sink, so a deployment can flip the
-events table from nightly batch to continuous without changing the
-query's meaning.
+jobs are the engine's forward-looking extension: the tumbling, sliding
+and error-rate aggregates of events_tumbling_hourly,
+events_sliding_1h_30m and events_error_rate_hourly, expressed as
+readStream → watermark → window → sink. Each twin calls its batch
+query's own body (``plans.events.tumbling_hourly``,
+``plans.events.sliding_1h_30m``, ``plans.timeseries.error_rate_hourly``)
+on the watermarked stream, so a deployment can flip the events table
+from nightly batch to continuous without changing the query's meaning.
 
 Design notes for the 100 TB / continuous case:
 * watermark bounds state: events later than WATERMARK_DELAY past the
   max seen ts are dropped, so the window state store stays O(open
   windows), not O(history).
-* `available_now` trigger processes a backlog in bounded batches and
-  stops — the batch/stream bridge (used by tests; a deployment would
-  use a processingTime trigger).
-* sinks: tests use the in-memory sink; production would writeStream
-  to parquet with checkpointing for exactly-once.
+* trigger: ``sinks.drain`` runs a twin with the availableNow trigger,
+  which processes the backlog in bounded batches and stops — the
+  batch/stream bridge (a deployment would use a processingTime
+  trigger).
+* sinks: ``drain`` writes to the in-memory table of the query's name
+  or, given a ``foreachBatch`` callback and a checkpoint, to a
+  production sink such as ``sinks.start_idempotent_file_sink``'s
+  exactly-once parquet output.
 """
 
 from __future__ import annotations
@@ -24,6 +30,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_spark.functions.timestamps import TS_FMT_SPARK
+from etl_spark.plans.events import sliding_1h_30m, tumbling_hourly
+from etl_spark.plans.timeseries import error_rate_hourly
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -50,57 +60,16 @@ def read_event_stream(spark: SparkSession, source_dir: str) -> DataFrame:
 
 
 def hourly_counts_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin of events_tumbling_hourly: tumbling 1h window
-    per event_type with a late-data watermark."""
-    return (
-        events.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    """Streaming twin of events_tumbling_hourly: its body over the
+    watermarked stream."""
+    return tumbling_hourly(events.withWatermark("ts", WATERMARK_DELAY))
 
 
 def sliding_counts_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin of events_sliding_1h_30m: overlapping 1h windows
-    sliding every 30m — each event lands in exactly two window states;
-    the watermark closes both once event time moves past them."""
-    return (
-        events.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
-def run_available_now(result: DataFrame, query_name: str):
-    """Drain the current backlog into the in-memory sink and stop.
-
-    Complete output mode: every trigger emits the full updated window
-    table (needed because the memory sink has no update semantics for
-    this shape). Returns the StreamingQuery after it has consumed all
-    available input.
-    """
-    query = (
-        result.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    """Streaming twin of events_sliding_1h_30m: each event lands in
+    exactly two window states; the watermark closes both once event
+    time moves past them."""
+    return sliding_1h_30m(events.withWatermark("ts", WATERMARK_DELAY))
 
 
 # Static enrichment dim for the stream-static join: event_type →
@@ -138,7 +107,7 @@ def enriched_category_totals_stream(
             F.sum("weight").alias("total_weight"),
         )
         .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
             "category",
             "n_events",
             "total_weight",
@@ -147,30 +116,8 @@ def enriched_category_totals_stream(
 
 
 def error_rate_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin of events_error_rate_hourly: per-hour error
-    fraction with the same integer cross-multiplied alert (>25%),
-    maintained under a late-data watermark. The conditional-sum
-    aggregate is incrementally mergeable, so the state per open window
-    is two longs — the monitor runs at any event volume."""
-    return (
-        events.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-            .cast("long")
-            .alias("n_errors"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "n_events",
-            "n_errors",
-            (F.col("n_errors").cast("double") / F.col("n_events"))
-            .cast("double")
-            .alias("error_rate"),
-            F.when(F.col("n_errors") * 4 > F.col("n_events"), 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("alert"),
-        )
-    )
+    """Streaming twin of events_error_rate_hourly: its body over the
+    watermarked stream. The conditional-sum aggregate is incrementally
+    mergeable, so the state per open window is two longs — the monitor
+    runs at any event volume."""
+    return error_rate_hourly(events.withWatermark("ts", WATERMARK_DELAY))

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 import duckdb
 import pytest
 
@@ -10,6 +12,27 @@ from etl_spark.operators.caching import evict
 from etl_spark.session import get_spark, tune_session
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def write_event_file(rows, path) -> None:
+    """Write the rows of an events pandas frame to ``path`` as one
+    JSON-lines micro-batch file in the shape of
+    ``etl_spark.streaming.windows.EVENT_SCHEMA``."""
+    with open(path, "w") as f:
+        for _, r in rows.iterrows():
+            f.write(
+                json.dumps(
+                    {
+                        "event_id": int(r.event_id),
+                        "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
+                        "user_id": int(r.user_id),
+                        "event_type": r.event_type,
+                        "value": float(r.value),
+                        "props": r.props,
+                    }
+                )
+                + "\n"
+            )
 
 
 @pytest.fixture(scope="session")

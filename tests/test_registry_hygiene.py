@@ -571,3 +571,54 @@ def test_exact_reps_keeps_min_doc_id_per_text(spark):
     assert sorted(tuple(r) for r in reps.collect()) == [
         (2, "a b"), (3, "c d"), (4, "f g h"), (7, "e"),
     ]
+
+
+def test_streaming_queries_share_one_run_path():
+    """Every streaming query in the engine runs through
+    ``streaming/sinks.drain``: the package holds one
+    ``trigger(availableNow=True)`` and one ``awaitTermination()``, both
+    in ``drain``. The per-module drain wrappers (four, written out per
+    output mode and sink) stay deleted, and the window twins of
+    ``streaming/windows.py`` call their batch queries' bodies instead
+    of restating the aggregate."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "etl_spark"
+    wrappers = {
+        "run_available_now",
+        "run_available_now_append",
+        "run_triad_stream",
+        "run_gate_stream",
+    }
+    twins = {"hourly_counts_stream", "sliding_counts_stream", "error_rate_stream"}
+    triggers, awaits, defined, twin_groupbys, window_defs = [], [], [], [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            where = (rel, getattr(top, "name", "<module>"))
+            for n in ast.walk(top):
+                if isinstance(n, ast.FunctionDef):
+                    if n.name in wrappers:
+                        defined.append((rel, n.name))
+                    if rel == "streaming/windows.py":
+                        window_defs.add(n.name)
+                if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                    continue
+                if n.func.attr == "trigger" and any(
+                    k.arg == "availableNow" for k in n.keywords
+                ):
+                    triggers.append(where)
+                elif n.func.attr == "awaitTermination":
+                    awaits.append(where)
+                elif (
+                    n.func.attr == "groupBy"
+                    and rel == "streaming/windows.py"
+                    and where[1] in twins
+                ):
+                    twin_groupbys.append(where)
+    assert triggers == [("streaming/sinks.py", "drain")], triggers
+    assert awaits == [("streaming/sinks.py", "drain")], awaits
+    assert defined == [], defined
+    assert twin_groupbys == [], twin_groupbys
+    assert twins <= window_defs, twins - window_defs

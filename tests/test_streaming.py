@@ -3,15 +3,10 @@ file source must agree with the batch twin computed on the same data."""
 
 from __future__ import annotations
 
-import json
-
 from etl_spark.io import load
-from etl_spark.streaming.windows import (
-    hourly_counts_stream,
-    read_event_stream,
-    run_available_now,
-)
-from tests.conftest import SF_DIR
+from etl_spark.streaming.sinks import drain
+from etl_spark.streaming.windows import hourly_counts_stream, read_event_stream
+from tests.conftest import SF_DIR, write_event_file
 
 from pyspark.sql import functions as F
 
@@ -24,25 +19,11 @@ def test_streaming_hourly_matches_batch(spark, tmp_path):
     src.mkdir()
     for i, chunk in enumerate(range(0, len(pdf), 250)):
         rows = pdf.iloc[chunk : chunk + 250]
-        with open(src / f"batch_{i}.json", "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
+        write_event_file(rows, src / f"batch_{i}.json")
 
     stream = read_event_stream(spark, str(src))
     assert stream.isStreaming
-    query = run_available_now(hourly_counts_stream(stream), "hourly_test")
+    query = drain(hourly_counts_stream(stream), "hourly_test", "complete")
     try:
         got = {
             (r.window_start, r.event_type): (r.n_events, r.sum_value)
@@ -85,26 +66,12 @@ def test_stream_static_join_matches_batch(spark, tmp_path):
     src.mkdir()
     for i, chunk in enumerate(range(0, len(pdf), 300)):
         rows = pdf.iloc[chunk : chunk + 300]
-        with open(src / f"batch_{i}.json", "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
+        write_event_file(rows, src / f"batch_{i}.json")
 
     dim = event_type_dim(spark)
     stream = read_event_stream(spark, str(src))
-    query = run_available_now(
-        enriched_category_totals_stream(stream, dim), "enrich_test"
+    query = drain(
+        enriched_category_totals_stream(stream, dim), "enrich_test", "complete"
     )
     try:
         got = {

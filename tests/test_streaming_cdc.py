@@ -4,12 +4,11 @@ visibility and redelivery of stale rows after a delete."""
 
 from __future__ import annotations
 
-import json
-
 from etl_spark.plans.lakehouse import CDC_DELETE_TYPE
 from etl_spark.streaming.cdc import cdc_apply_stream, events_as_changelog
+from etl_spark.streaming.sinks import drain
 from etl_spark.streaming.windows import read_event_stream
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_event_file
 
 
 def test_streaming_cdc_matches_batch_replay(spark, duck, tmp_path):
@@ -21,21 +20,7 @@ def test_streaming_cdc_matches_batch_replay(spark, duck, tmp_path):
     src.mkdir()
     for i, chunk in enumerate(range(0, len(pdf), 150)):
         rows = pdf.iloc[chunk : chunk + 150]
-        with open(src / f"b{i:04d}.json", "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
+        write_event_file(rows, src / f"b{i:04d}.json")
     # Redeliver the FIRST batch at the end: stale rows — including
     # upserts for keys deleted SINCE — must not change any key's state.
     (src / "b9999.json").write_text((src / "b0000.json").read_text())
@@ -43,15 +28,7 @@ def test_streaming_cdc_matches_batch_replay(spark, duck, tmp_path):
     changelog = events_as_changelog(
         read_event_stream(spark, str(src)), CDC_DELETE_TYPE
     )
-    q = (
-        cdc_apply_stream(changelog)
-        .writeStream.format("memory")
-        .queryName("cdc_apply")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = drain(cdc_apply_stream(changelog), "cdc_apply", "update")
     try:
         # Update-mode: the final state per key is its newest emission;
         # collect() order isn't guaranteed, so pick by (ts, event_id)
@@ -93,8 +70,6 @@ def test_cdc_table_sink_matches_batch_query(spark, duck, tmp_path):
     """The production table sink: drained stream -> parquet table; the
     served view must equal the batch query, and the raw table must
     RETAIN tombstones (the resurrection precondition)."""
-    import json as _json
-
     from etl_spark.io import load
     from etl_spark.plans.lakehouse import cdc_apply_events
     from etl_spark.streaming.cdc import (
@@ -109,21 +84,7 @@ def test_cdc_table_sink_matches_batch_query(spark, duck, tmp_path):
     src.mkdir()
     for i, chunk in enumerate(range(0, len(pdf), 200)):
         rows = pdf.iloc[chunk : chunk + 200]
-        with open(src / f"b{i:04d}.json", "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    _json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
+        write_event_file(rows, src / f"b{i:04d}.json")
 
     changelog = events_as_changelog(
         read_event_stream(spark, str(src)), CDC_DELETE_TYPE
@@ -150,8 +111,6 @@ def test_cdc_table_vacuum_keeps_published_state(spark, tmp_path):
     """The versioned sink accumulates one immutable table copy per
     batch; vacuum must remove everything below the retention horizon
     while the served view stays byte-identical."""
-    import json as _json
-
     from etl_spark.io import load
     from etl_spark.streaming.cdc import (
         _current_version,
@@ -167,21 +126,7 @@ def test_cdc_table_vacuum_keeps_published_state(spark, tmp_path):
     # 12 files / maxFilesPerTrigger=4 -> 3 micro-batches -> 3 versions
     for i, chunk in enumerate(range(0, len(pdf), 100)):
         rows = pdf.iloc[chunk : chunk + 100]
-        with open(src / f"b{i:04d}.json", "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    _json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
+        write_event_file(rows, src / f"b{i:04d}.json")
     changelog = events_as_changelog(
         read_event_stream(spark, str(src)), CDC_DELETE_TYPE
     )

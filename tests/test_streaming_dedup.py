@@ -3,12 +3,11 @@ must be suppressed; the surviving row set equals the batch distinct."""
 
 from __future__ import annotations
 
-import json
-
 from etl_spark.io import load
 from etl_spark.streaming.dedup import dedup_events_stream
+from etl_spark.streaming.sinks import drain
 from etl_spark.streaming.windows import read_event_stream
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_event_file
 
 
 def test_streaming_dedup_suppresses_redelivery(spark, tmp_path):
@@ -17,42 +16,18 @@ def test_streaming_dedup_suppresses_redelivery(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
 
-    def dump(rows, path):
-        with open(path, "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
-
     # read_event_stream caps 4 files per trigger; 10 files forces at
     # least 3 micro-batches, so the re-delivery files (the last four,
     # repeating events 100-299) land in LATER batches than the
     # originals — exercising cross-batch state, not just intra-batch
     # dedup.
     for i in range(6):
-        dump(pdf.iloc[i * 50 : (i + 1) * 50], src / f"orig_{i}.json")
+        write_event_file(pdf.iloc[i * 50 : (i + 1) * 50], src / f"orig_{i}.json")
     for i in range(4):
-        dump(pdf.iloc[100 + i * 50 : 100 + (i + 1) * 50], src / f"redeliver_{i}.json")
+        write_event_file(pdf.iloc[100 + i * 50 : 100 + (i + 1) * 50], src / f"redeliver_{i}.json")
 
     stream = dedup_events_stream(read_event_stream(spark, str(src)))
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    query = drain(stream, "dedup_stream", "append")
     try:
         got = [
             r["event_id"]

@@ -3,11 +3,10 @@ events_error_rate_hourly result when the stream drains."""
 
 from __future__ import annotations
 
-import json
-
 from etl_spark.plans import REGISTRY
+from etl_spark.streaming.sinks import drain
 from etl_spark.streaming.windows import error_rate_stream, read_event_stream
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_event_file
 
 
 def test_streaming_error_rate_matches_batch(spark, tmp_path):
@@ -19,31 +18,13 @@ def test_streaming_error_rate_matches_batch(spark, tmp_path):
     src.mkdir()
     for i, chunk in enumerate(range(0, len(pdf), 200)):
         rows = pdf.iloc[chunk : chunk + 200]
-        with open(src / f"b{i:04d}.json", "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
+        write_event_file(rows, src / f"b{i:04d}.json")
 
-    q = (
-        error_rate_stream(read_event_stream(spark, str(src)))
-        .writeStream.format("memory")
-        .queryName("stream_error_rate")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    q = drain(
+        error_rate_stream(read_event_stream(spark, str(src))),
+        "stream_error_rate",
+        "complete",
     )
-    q.awaitTermination()
     try:
         got = {
             r["hour"]: (r["n_events"], r["n_errors"], r["error_rate"], r["alert"])

@@ -14,6 +14,7 @@ from etl_spark.streaming.incremental_dedup import (
     history_overlap_stream,
     read_doc_stream,
 )
+from etl_spark.streaming.sinks import drain
 from tests.conftest import SF_DIR
 
 
@@ -52,14 +53,7 @@ def test_stream_matches_batch_history_overlap(spark, tmp_path):
     # append mode would hold every window open forever because no
     # later event ever advances the watermark past window end. The
     # dict comprehension keeps the LAST emission per doc regardless.
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("inc_dedup_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = drain(stream, "inc_dedup_stream", "update")
     try:
         got = {
             r["doc_id"]: (r["n_shingles"], r["n_seen"], r["likely_dup"])

@@ -21,13 +21,14 @@ from etl_spark.streaming.ingest_triad import (
     TRIAD_MOD,
     funnel_summary,
     ingest_triad,
-    run_triad_stream,
+    ingest_triad_stream,
 )
 from etl_spark.streaming.phash_gate import (
     DOC_SCHEMA,
     history_phash_index,
     phash_gate,
 )
+from etl_spark.streaming.sinks import drain
 from etl_spark.streaming.trained_gate import score_documents
 from tests.conftest import SF_DIR
 
@@ -94,8 +95,10 @@ def test_triad_stream_matches_batch_and_standalone_gates(spark, tmp_path):
         .option("maxFilesPerTrigger", 4)
         .json(str(src))
     )
-    q = run_triad_stream(
-        spark, doc_stream, shingle_index, band_index, weights, "triad_sink"
+    q = drain(
+        ingest_triad_stream(doc_stream, shingle_index, band_index, weights),
+        "triad_sink",
+        "update",
     )
     try:
         streamed = {
@@ -188,9 +191,10 @@ def test_funnel_rollup_matches_streamed_triad(spark, tmp_path):
         .option("maxFilesPerTrigger", 4)
         .json(str(src))
     )
-    q = run_triad_stream(
-        spark, doc_stream, shingle_index, band_index, hist[-1],
+    q = drain(
+        ingest_triad_stream(doc_stream, shingle_index, band_index, hist[-1]),
         "triad_funnel_sink",
+        "update",
     )
     try:
         n_batches = sum(

@@ -10,16 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.io import load
-from etl_spark.streaming.joins import (
-    click_purchase_attribution_stream,
-    run_available_now_append,
-)
-from etl_spark.streaming.windows import (
-    read_event_stream,
-    run_available_now,
-    sliding_counts_stream,
-)
-from tests.conftest import SF_DIR
+from etl_spark.streaming.joins import click_purchase_attribution_stream
+from etl_spark.streaming.sinks import drain
+from etl_spark.streaming.windows import read_event_stream, sliding_counts_stream
+from tests.conftest import SF_DIR, write_event_file
 
 
 @pytest.fixture(scope="module")
@@ -29,27 +23,13 @@ def stream_src(spark, tmp_path_factory):
     src = tmp_path_factory.mktemp("stream_join_src")
     for i, chunk in enumerate(range(0, len(pdf), 250)):
         rows = pdf.iloc[chunk : chunk + 250]
-        with open(src / f"batch_{i}.json", "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
+        write_event_file(rows, src / f"batch_{i}.json")
     return src
 
 
 def test_sliding_stream_matches_batch(spark, stream_src):
     stream = read_event_stream(spark, str(stream_src))
-    query = run_available_now(sliding_counts_stream(stream), "sliding_test")
+    query = drain(sliding_counts_stream(stream), "sliding_test", "complete")
     try:
         got = {
             (r.window_start, r.event_type): r.n_events
@@ -75,8 +55,8 @@ def test_sliding_stream_matches_batch(spark, stream_src):
 
 def test_stream_stream_join_matches_batch(spark, stream_src):
     stream = read_event_stream(spark, str(stream_src))
-    query = run_available_now_append(
-        click_purchase_attribution_stream(stream), "attribution_test"
+    query = drain(
+        click_purchase_attribution_stream(stream), "attribution_test", "append"
     )
     try:
         got = {
@@ -173,8 +153,8 @@ def test_stream_stream_left_outer_join_expiry(spark, stream_src, tmp_path):
             )
 
     stream = read_event_stream(spark, str(src))
-    query = run_available_now_append(
-        click_purchase_attribution_left_stream(stream), "left_attr_test"
+    query = drain(
+        click_purchase_attribution_left_stream(stream), "left_attr_test", "append"
     )
     try:
         progresses = query.recentProgress

@@ -25,6 +25,7 @@ from __future__ import annotations
 import json
 import time
 
+from etl_spark.streaming.sinks import drain
 from etl_spark.streaming.windows import EVENT_SCHEMA, hourly_counts_stream
 
 
@@ -64,15 +65,7 @@ def test_late_event_beyond_watermark_is_dropped(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    q = (
-        hourly_counts_stream(events)
-        .writeStream.format("memory")
-        .queryName("late_data_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = drain(hourly_counts_stream(events), "late_data_sink", "append")
     try:
         dropped = sum(
             (p["stateOperators"][0].get("numRowsDroppedByWatermark", 0)

@@ -5,12 +5,11 @@ must NOT displace the newer winner already in state."""
 
 from __future__ import annotations
 
-import json
-
 from etl_spark.plans import REGISTRY
 from etl_spark.streaming.latest_wins import latest_wins_stream
+from etl_spark.streaming.sinks import drain
 from etl_spark.streaming.windows import read_event_stream
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_event_file
 
 
 def test_streaming_latest_wins_matches_batch(spark, tmp_path):
@@ -22,34 +21,13 @@ def test_streaming_latest_wins_matches_batch(spark, tmp_path):
     src.mkdir()
     for i, chunk in enumerate(range(0, len(pdf), 150)):
         rows = pdf.iloc[chunk : chunk + 150]
-        with open(src / f"b{i:04d}.json", "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
+        write_event_file(rows, src / f"b{i:04d}.json")
     # Redeliver the FIRST batch again at the end (at-least-once source):
     # stale versions must not displace newer state.
     (src / "b9999.json").write_text((src / "b0000.json").read_text())
 
     stream = latest_wins_stream(read_event_stream(spark, str(src)))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("latest_wins")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = drain(stream, "latest_wins", "update")
     try:
         final = {
             (r["user_id"], r["event_type"]): (

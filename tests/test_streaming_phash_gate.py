@@ -19,6 +19,7 @@ from etl_spark.streaming.phash_gate import (
     phash_gate,
     phash_gate_stream,
 )
+from etl_spark.streaming.sinks import drain
 from tests.conftest import SF_DIR
 
 
@@ -60,15 +61,7 @@ def test_stream_matches_batch_phash_gate(spark, tmp_path):
         .option("maxFilesPerTrigger", 4)
         .json(str(src))
     )
-    q = (
-        phash_gate_stream(doc_stream, index)
-        .writeStream.format("memory")
-        .queryName("phash_gate_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = drain(phash_gate_stream(doc_stream, index), "phash_gate_stream", "update")
     try:
         got = {
             r["doc_id"]: (r["min_hamming"], r["nearest_hist_id"], r["likely_dup"])

@@ -10,6 +10,7 @@ import json
 import time
 
 from etl_spark.streaming.sessions import sessionize_stream_with_timeout
+from etl_spark.streaming.sinks import drain
 from etl_spark.streaming.windows import EVENT_SCHEMA
 
 
@@ -54,15 +55,7 @@ def test_idle_session_flushes_via_event_time_timeout(spark, tmp_path):
         .json(str(src))
         .withWatermark("ts", "10 minutes")
     )
-    q = (
-        sessionize_stream_with_timeout(events)
-        .writeStream.format("memory")
-        .queryName("timeout_sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = drain(sessionize_stream_with_timeout(events), "timeout_sessions", "append")
     try:
         rows = sorted(
             (

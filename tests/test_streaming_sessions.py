@@ -9,12 +9,11 @@ session_start) is the session's final form.
 
 from __future__ import annotations
 
-import json
-
 from etl_spark.plans import REGISTRY
 from etl_spark.streaming.sessions import sessionize_stream
+from etl_spark.streaming.sinks import drain
 from etl_spark.streaming.windows import read_event_stream
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_event_file
 
 
 def test_streaming_sessions_match_batch(spark, tmp_path):
@@ -26,31 +25,10 @@ def test_streaming_sessions_match_batch(spark, tmp_path):
     src.mkdir()
     for i, chunk in enumerate(range(0, len(pdf), 200)):
         rows = pdf.iloc[chunk : chunk + 200]
-        with open(src / f"b{i:04d}.json", "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
+        write_event_file(rows, src / f"b{i:04d}.json")
 
     stream = sessionize_stream(read_event_stream(spark, str(src)))
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("stream_sessions")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    query = drain(stream, "stream_sessions", "update")
     try:
         final = {
             (r["user_id"], r["session_start"]): (r["session_end"], r["n_events"])

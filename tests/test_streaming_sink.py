@@ -4,8 +4,6 @@ duplicate rows."""
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import functions as F
 
 from etl_spark.io import load
@@ -14,28 +12,14 @@ from etl_spark.streaming.sinks import (
     write_batch_idempotent,
 )
 from etl_spark.streaming.windows import read_event_stream
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_event_file
 
 
 def _land_files(spark, src, n_rows=500):
     pdf = load(spark, SF_DIR, "events").limit(n_rows).toPandas()
     for i, chunk in enumerate(range(0, len(pdf), 100)):
         rows = pdf.iloc[chunk : chunk + 100]
-        with open(src / f"batch_{i}.json", "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
+        write_event_file(rows, src / f"batch_{i}.json")
     return len(pdf)
 
 

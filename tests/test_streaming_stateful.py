@@ -3,14 +3,13 @@ micro-batches and converge to the batch ground truth."""
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import functions as F
 
 from etl_spark.io import load
 from etl_spark.streaming.stateful import running_user_totals
+from etl_spark.streaming.sinks import drain
 from etl_spark.streaming.windows import read_event_stream
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_event_file
 
 
 def test_stateful_running_totals(spark, tmp_path):
@@ -21,31 +20,10 @@ def test_stateful_running_totals(spark, tmp_path):
     # Several files → several micro-batches (maxFilesPerTrigger=4).
     for i, chunk in enumerate(range(0, len(pdf), 100)):
         rows = pdf.iloc[chunk : chunk + 100]
-        with open(src / f"b{i}.json", "w") as f:
-            for _, r in rows.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": int(r.event_id),
-                            "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                            "user_id": int(r.user_id),
-                            "event_type": r.event_type,
-                            "value": float(r.value),
-                            "props": r.props,
-                        }
-                    )
-                    + "\n"
-                )
+        write_event_file(rows, src / f"b{i}.json")
 
     stream = running_user_totals(read_event_stream(spark, str(src)))
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("user_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    query = drain(stream, "user_totals", "update")
     try:
         # Update-mode memory sink appends one row per (user, batch);
         # the running counter is monotonic, so max(n_events) is final.

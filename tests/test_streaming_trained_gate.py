@@ -16,10 +16,8 @@ from pyspark.sql.types import (
 
 from etl_spark.io import load
 from etl_spark.plans.ml_train import _train
-from etl_spark.streaming.trained_gate import (
-    run_gate_stream,
-    score_documents,
-)
+from etl_spark.streaming.sinks import drain
+from etl_spark.streaming.trained_gate import score_documents
 from tests.conftest import SF_DIR
 
 DOC_SCHEMA = StructType(
@@ -63,8 +61,8 @@ def test_streamed_gate_matches_batch_scoring(spark, tmp_path):
         .option("maxFilesPerTrigger", 2)
         .json(str(src))
     )
-    query = run_gate_stream(
-        stream, weights, "trained_gate_test", threshold
+    query = drain(
+        score_documents(stream, weights, threshold), "trained_gate_test", "append"
     )
     try:
         got = {

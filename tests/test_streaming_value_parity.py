@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from etl_spark.plans.lakehouse import CDC_DELETE_TYPE, cdc_apply_log
 from etl_spark.streaming.cdc import cdc_apply_stream, events_as_changelog
 from etl_spark.streaming.stateful import running_user_totals
+from etl_spark.streaming.sinks import drain
 from etl_spark.streaming.windows import EVENT_SCHEMA, read_event_stream
 
 # (event_id, user_id, second, value): user 1's winner is NaN, user 2's
@@ -35,14 +36,7 @@ def _norm(v):
 def _drain(df, name, order):
     """Run an update-mode stream to the memory sink and return each
     user's last emission, picked by the monotonic column ``order``."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = drain(df, name, "update")
     try:
         progress = q.recentProgress
         rows = df.sparkSession.sql(f"SELECT * FROM {name}").collect()
